@@ -78,10 +78,11 @@ class IndexReader(
       .toMap
 
   /** Batch df lookup for all terms of a query — one pushed-down scan of the
-    * term-sorted per-segment stats, summed over live segments and collected
-    * driver-side (idf becomes a plan literal, like tantivy's per-query
-    * Weight). Deleted docs intentionally still count toward df until merged
-    * out (tantivy semantics).
+    * term-sorted per-segment stats; the matching rows (at most #segments ×
+    * #terms) are collected and summed over live segments on the driver, so
+    * the probe is one job with no Exchange (idf becomes a plan literal, like
+    * tantivy's per-query Weight). Deleted docs intentionally still count
+    * toward df until merged out (tantivy semantics).
     */
   def termDfs(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
     if (pairs.isEmpty) return Map.empty
@@ -91,10 +92,8 @@ class IndexReader(
       .reduce(_ || _)
     termStatsDf
       .filter(cond)
-      .groupBy("field", "term")
-      .agg(sum("df").as("df"))
+      .select("field", "term", "df")
       .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
+      .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getLong(2))(_ + _)
   }
 }

@@ -487,34 +487,36 @@ class Searcher(
   }
 
   /** Top-k by BM25 with the reference tie-break (score desc, then doc
-    * address asc — `fruit_extractors.rs:101-122`); Spark plans this as
-    * TakeOrderedAndProject (per-partition top-k + driver merge, the exact
-    * shape of the reference's per-segment collect + merge_fruits).
+    * address asc — `fruit_extractors.rs:101-122`). The exhaustive route
+    * plans as TakeOrderedAndProject (per-partition top-k + driver merge);
+    * the WAND route merges on the driver in the same single pass, the
+    * reference's per-segment collect + merge_fruits.
     */
   def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
-    // route same-field term bags (should-only, must+should(+mustNot), and
-    // term dismax since r6) through the block-max WAND pruned scan
-    // (a pure optimization: result-identical, verified in tests)
-    val top = WandTopK.eligible(rq) match {
-      // raw stored fields skip WAND: the docs-scan fast path in termHits is
-      // already a pruned column filter, cheaper than the posting block walk
+    WandTopK.eligible(rq) match {
+      // same-field term bags and term dismax take block-max WAND: one job
+      // collects the bag's posting blocks, the driver prunes, scores and
+      // pages them, and the hits come back as a local relation (a pure
+      // optimization: result-identical, verified in tests). Raw stored
+      // fields skip it: the docs-scan fast path in termHits is already a
+      // pruned column filter, cheaper than the posting block walk
       case Some(bag) if reader.deletes.isEmpty && fieldnorms && fastTermCi(bag.field).isEmpty =>
-        WandTopK.topK(this, bag, offset + limit)
+        WandTopK.run(this, bag, offset + limit).toDF(spark, offset)
       case _ =>
-        search(rq)
+        val top = search(rq)
           .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
           .limit(offset + limit)
-    }
-    if (offset == 0) top
-    else {
-      // the window only ever sees offset+limit rows (post-TakeOrdered)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
-      top
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") > offset)
-        .drop("__rn")
+        if (offset == 0) top
+        else {
+          // the window only ever sees offset+limit rows (post-TakeOrdered)
+          val w = org.apache.spark.sql.expressions.Window
+            .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
+          top
+            .withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") > offset)
+            .drop("__rn")
+        }
     }
   }
 

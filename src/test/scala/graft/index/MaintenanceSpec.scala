@@ -65,6 +65,38 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(m.getSeq[String](m.fieldIndex("parent_segments")).map(_.toInt).sorted == live0.take(2).sorted)
   }
 
+  /** Σ doc_count over each sampled term's live posting blocks, and termstats
+    * df summed over live segments: the WAND route takes df from the former.
+    */
+  private def assertBlockDfsMatchStats(dir: String, terms: Seq[String]): Unit = {
+    val r = new IndexReader(spark, dir)
+    def dfs(table: org.apache.spark.sql.DataFrame, c: String): Map[String, Long] =
+      table.filter(col("field") === "text" && col("term").isin(terms: _*))
+        .groupBy("term").agg(sum(c).cast("long"))
+        .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+    val fromBlocks = dfs(r.postings, "doc_count")
+    assert(fromBlocks.nonEmpty)
+    assert(fromBlocks == dfs(r.termStatsDf, "df"))
+  }
+
+  test("df identity: live posting blocks' doc_count sums equal termstats df") {
+    val dir = Files.createTempDirectory("graft-dfid").toString
+    val sample = vocab :+ "nosuchterm"
+    val conf = IndexBuilder.BuildConf(numSegments = 3, blockBits = 4)
+    IndexBuilder.build(spark, corpus(200, 11).toDF("doc_id", "text"), schema, dir, "b0", conf)
+    assertBlockDfsMatchStats(dir, sample)
+
+    // an upsert that replaces some keys and adds new ones
+    val batch = corpus(260, 12).drop(150).toDF("doc_id", "text")
+    Maintenance.addDocuments(spark, dir, schema, batch, "up1",
+      Maintenance.ConflictStrategy.Overwrite, conf.copy(numSegments = 1))
+    assertBlockDfsMatchStats(dir, sample)
+
+    Maintenance.mergeSegments(spark, dir, schema, Snapshots.latest(spark, dir).get.segments, "m1", conf)
+    assert(Snapshots.latest(spark, dir).get.segments.size == 1)
+    assertBlockDfsMatchStats(dir, sample)
+  }
+
   test("delete-by-query tombstones, then merge bakes them in") {
     val dir = Files.createTempDirectory("graft-del").toString
     val df = corpus(100, 5).toDF("doc_id", "text")

@@ -3,6 +3,7 @@ package graft.search
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, sum}
 
 import graft.TestSpark
 import graft.analysis.Analyzers
@@ -410,5 +411,18 @@ class FastTermSpec extends AnyFunSuite {
     assert(top.collect().length == 10)
     // unknown term on the raw field: empty, not a docs-scan false positive
     assert(searcher.search(TermQuery("lang", "nope")).collect().isEmpty)
+  }
+
+  test("termDfs: driver-summed dfs equal a Spark-side groupBy over termstats") {
+    val reader = new IndexReader(spark, indexDir)
+    val pairs = Seq(("text", "spark"), ("text", "merge"), ("text", "no_such_term"),
+      ("lang", "en"), ("lang", "de"), ("lang", "no_such_term"))
+    val want = reader.termStatsDf
+      .filter(pairs.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _))
+      .groupBy("field", "term").agg(sum("df"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(want.keySet.map(_._1) == Set("text", "lang"))
+    assert(reader.termDfs(pairs) == want)
+    assert(!reader.termDfs(pairs).contains(("text", "no_such_term")))
   }
 }

@@ -1,8 +1,12 @@
 package graft.search
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -183,5 +187,71 @@ class WandSpec extends AnyFunSuite {
       (Occur.Must, TermQuery("text", "w0")),
       (Occur.Should, TermQuery("text", "nosuchterm"))))
     assertSame(viaWand(qDrop, 10), exhaustive(qDrop, 10))
+  }
+
+  test("unknown field or k = 0: the WAND route returns no hits, like the exhaustive plan") {
+    val q = TermQuery("nosuchfield", "x")
+    assert(WandTopK.eligible(q).nonEmpty)
+    assert(searcher.topDocs(q, 10).collect().isEmpty)
+    assert(searcher.search(q).count() == 0 && searcher.count(q) == 0)
+    assert(searcher.topDocs(TermQuery("text", "w0"), 0).collect().isEmpty)
+  }
+
+  /** Stage count of every job `body` starts, seen by a listener scoped to a
+    * job group; a marker job in a second group flushes the listener queue.
+    */
+  private def jobStages(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"wand-shape-${System.nanoTime()}"
+    val stages = new ConcurrentLinkedQueue[Integer]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => stages.add(e.stageInfos.size)
+          case Some(g) if g == s"$group-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "wand route shape")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener flush job never seen")
+    } finally sc.removeSparkListener(listener)
+    stages.asScala.map(_.intValue).toSeq
+  }
+
+  test("routed shapes run as one job with no shuffle-map stage") {
+    val shapes = Seq[Query](
+      TermQuery("text", "w0"),
+      BooleanQuery(Seq(
+        (Occur.Should, TermQuery("text", "w0")),
+        (Occur.Should, TermQuery("text", "w3")),
+        (Occur.Should, TermQuery("text", "w9")))),
+      BooleanQuery(Seq(
+        (Occur.Must, TermQuery("text", "w2")),
+        (Occur.Should, TermQuery("text", "w7")),
+        (Occur.MustNot, TermQuery("text", "w15")))),
+      DisjunctionMaxQuery(Seq(TermQuery("text", "w0"), TermQuery("text", "w5")), 0.3))
+    for (q <- shapes) {
+      assert(WandTopK.eligible(q).nonEmpty)
+      searcher.topDocs(q, 10).collect() // first use reads the stats and lists files
+      val stages = jobStages { searcher.topDocs(q, 10).collect(); () }
+      // one job whose only stage is its result stage: no Exchange anywhere
+      assert(stages == Seq(1), s"$q: stages per job $stages")
+    }
+  }
+
+  test("block-max bound prunes block groups on a skewed should-bag") {
+    val bag = WandTopK.TermBag("text", Nil, Seq("w0", "w25"), Nil, None)
+    val r = WandTopK.run(searcher, bag, 3)
+    assert(r.groupsDecoded < r.groupsSeen, s"decoded ${r.groupsDecoded} of ${r.groupsSeen} groups")
+    assert(r.groupsDecoded > 0)
+    val q = BooleanQuery(bag.should.map(t => (Occur.Should, TermQuery("text", t): Query)))
+    assertSame(r.toDF(spark).collect().map(x => (x.getInt(0), x.getInt(1), x.getDouble(2))),
+      exhaustive(q, 3))
   }
 }
