@@ -1,5 +1,7 @@
 package graft.search
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -35,46 +37,60 @@ object BlockJoin {
   /** One phrase match: alignment count (phrase tf) + first term's norm. */
   final case class PhraseMatch(doc_id: Int, tf: Int, norm_id: Int)
 
+  /** Every doc present in all k sorted doc-id lists, in doc order: calls
+    * `f(i0, cursor)` with the doc's index `i0` in the lead list and
+    * `cursor(j)` its index in list j (`cursor(0) == i0`). Lists are sorted
+    * (pack order), so a single forward cursor per list suffices.
+    */
+  def intersect(ids: Array[Array[Int]])(f: (Int, Array[Int]) => Unit): Unit = {
+    val k = ids.length
+    val cursor = new Array[Int](k)
+    val lead = ids(0)
+    var i0 = 0
+    while (i0 < lead.length) {
+      val d = lead(i0)
+      var all = true
+      var j = 1
+      while (all && j < k) {
+        val a = ids(j)
+        var c = cursor(j)
+        while (c < a.length && a(c) < d) c += 1
+        cursor(j) = c
+        all = c < a.length && a(c) == d
+        j += 1
+      }
+      if (all) { cursor(0) = i0; f(i0, cursor) }
+      i0 += 1
+    }
+  }
+
+  /** Decode k positional posting blocks of one (segment, block) and call
+    * `f(doc_id, i0, positionsPerTerm)` for every doc present in all k lists
+    * (`i0` indexes the first term's block).
+    */
+  def phraseDocs(ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ps: Seq[Array[Byte]], ns: Seq[Int])(
+      f: (Int, Int, Seq[Seq[Int]]) => Unit): Unit = {
+    val k = ns.length
+    val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
+    val poss = Array.tabulate(k)(i =>
+      PostingCodec.unpackPositions(ps(i), PostingCodec.unpackVarInts(ts(i), ns(i))))
+    intersect(ids) { (i0, cursor) =>
+      f(ids(0)(i0), i0, Seq.tabulate(k)(t => ArraySeq.unsafeWrapArray(poss(t)(cursor(t)))))
+    }
+  }
+
   /** Intersect k packed doc-id lists of one (segment, block); emit the
-    * per-term (tf, norm) ints of every doc present in all k lists. Lists are
-    * sorted (pack order), so a single forward cursor per list suffices.
+    * per-term (tf, norm) ints of every doc present in all k lists.
     */
   val intersectUdf: UserDefinedFunction =
     udf((ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ms: Seq[Array[Byte]], ns: Seq[Int]) => {
       val k = ns.length
       val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
       val tfs = Array.tabulate(k)(i => PostingCodec.unpackVarInts(ts(i), ns(i)))
-      val cursor = new Array[Int](k)
       val out = Seq.newBuilder[MustMatch]
-      val lead = ids(0)
-      var i0 = 0
-      while (i0 < lead.length) {
-        val d = lead(i0)
-        var all = true
-        var j = 1
-        while (all && j < k) {
-          val a = ids(j)
-          var c = cursor(j)
-          while (c < a.length && a(c) < d) c += 1
-          cursor(j) = c
-          all = c < a.length && a(c) == d
-          j += 1
-        }
-        if (all) {
-          val tfOut = new Array[Int](k)
-          val nmOut = new Array[Int](k)
-          tfOut(0) = tfs(0)(i0)
-          nmOut(0) = ms(0)(i0) & 0xFF
-          var j2 = 1
-          while (j2 < k) {
-            val c = cursor(j2)
-            tfOut(j2) = tfs(j2)(c)
-            nmOut(j2) = ms(j2)(c) & 0xFF
-            j2 += 1
-          }
-          out += MustMatch(d, tfOut.toIndexedSeq, nmOut.toIndexedSeq)
-        }
-        i0 += 1
+      intersect(ids) { (i0, cursor) =>
+        out += MustMatch(ids(0)(i0), IndexedSeq.tabulate(k)(j => tfs(j)(cursor(j))),
+          IndexedSeq.tabulate(k)(j => ms(j)(cursor(j)) & 0xFF))
       }
       out.result()
     })
@@ -89,35 +105,10 @@ object BlockJoin {
   val phraseUdf7: UserDefinedFunction =
     udf((ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ps: Seq[Array[Byte]], m0: Array[Byte],
          ns: Seq[Int], offsets: Seq[Int], slop: Int) => {
-      val k = ns.length
-      val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
-      val tfs = Array.tabulate(k)(i => PostingCodec.unpackVarInts(ts(i), ns(i)))
-      val poss = Array.tabulate(k)(i => PostingCodec.unpackPositions(ps(i), tfs(i)))
-      val cursor = new Array[Int](k)
       val out = Seq.newBuilder[PhraseMatch]
-      val lead = ids(0)
-      var i0 = 0
-      while (i0 < lead.length) {
-        val d = lead(i0)
-        var all = true
-        var j = 1
-        while (all && j < k) {
-          val a = ids(j)
-          var c = cursor(j)
-          while (c < a.length && a(c) < d) c += 1
-          cursor(j) = c
-          all = c < a.length && a(c) == d
-          j += 1
-        }
-        if (all) {
-          val positionsPerTerm: Seq[Seq[Int]] = Seq.tabulate(k) { t =>
-            val idx = if (t == 0) i0 else cursor(t)
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(poss(t)(idx))
-          }
-          val ptf = PostingUdfs.phraseTf(positionsPerTerm, offsets, slop)
-          if (ptf > 0) out += PhraseMatch(d, ptf, m0(i0) & 0xFF)
-        }
-        i0 += 1
+      phraseDocs(ds, ts, ps, ns) { (d, i0, pos) =>
+        val ptf = PostingUdfs.phraseTf(pos, offsets, slop)
+        if (ptf > 0) out += PhraseMatch(d, ptf, m0(i0) & 0xFF)
       }
       out.result()
     })
@@ -134,37 +125,10 @@ object BlockJoin {
   val phrasePosUdf7: UserDefinedFunction =
     udf((ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ps: Seq[Array[Byte]], m0: Array[Byte],
          ns: Seq[Int], offsets: Seq[Int], slop: Int) => {
-      val k = ns.length
-      val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
-      val tfs = Array.tabulate(k)(i => PostingCodec.unpackVarInts(ts(i), ns(i)))
-      val poss = Array.tabulate(k)(i => PostingCodec.unpackPositions(ps(i), tfs(i)))
-      val cursor = new Array[Int](k)
       val out = Seq.newBuilder[PhrasePosMatch]
-      val lead = ids(0)
-      var i0 = 0
-      while (i0 < lead.length) {
-        val d = lead(i0)
-        var all = true
-        var j = 1
-        while (all && j < k) {
-          val a = ids(j)
-          var c = cursor(j)
-          while (c < a.length && a(c) < d) c += 1
-          cursor(j) = c
-          all = c < a.length && a(c) == d
-          j += 1
-        }
-        if (all) {
-          val positionsPerTerm: Seq[Seq[Int]] = Seq.tabulate(k) { t =>
-            val idx = if (t == 0) i0 else cursor(t)
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(poss(t)(idx))
-          }
-          val mpos = PostingUdfs.phraseMatchPositions(positionsPerTerm, offsets, slop)
-          if (mpos.nonEmpty)
-            out += PhrasePosMatch(d, m0(i0) & 0xFF,
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(mpos))
-        }
-        i0 += 1
+      phraseDocs(ds, ts, ps, ns) { (d, i0, pos) =>
+        val mpos = PostingUdfs.phraseMatchPositions(pos, offsets, slop)
+        if (mpos.nonEmpty) out += PhrasePosMatch(d, m0(i0) & 0xFF, ArraySeq.unsafeWrapArray(mpos))
       }
       out.result()
     })

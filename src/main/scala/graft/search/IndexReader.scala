@@ -1,7 +1,7 @@
 package graft.search
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.Snapshots
@@ -77,6 +77,12 @@ class IndexReader(
       .map(r => r.getString(0) -> FieldStat(r.getLong(1), r.getLong(2)))
       .toMap
 
+  /** `field = f AND term IN (…)`, OR-ed over the fields of `pairs`. */
+  private[search] def termsFilter(pairs: Seq[(String, String)]): Column =
+    pairs.groupBy(_._1)
+      .map { case (f, ps) => col("field") === f && col("term").isin(ps.map(_._2).distinct: _*) }
+      .reduce(_ || _)
+
   /** Batch df lookup for all terms of a query — one pushed-down scan of the
     * term-sorted per-segment stats; the matching rows (at most #segments ×
     * #terms) are collected and summed over live segments on the driver, so
@@ -86,12 +92,8 @@ class IndexReader(
     */
   def termDfs(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
     if (pairs.isEmpty) return Map.empty
-    val byField = pairs.groupBy(_._1)
-    val cond = byField
-      .map { case (f, ps) => col("field") === f && col("term").isin(ps.map(_._2): _*) }
-      .reduce(_ || _)
     termStatsDf
-      .filter(cond)
+      .filter(termsFilter(pairs))
       .select("field", "term", "df")
       .collect()
       .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getLong(2))(_ + _)

@@ -495,14 +495,16 @@ class Searcher(
   def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
     WandTopK.eligible(rq) match {
-      // same-field term bags and term dismax take block-max WAND: one job
-      // collects the bag's posting blocks, the driver prunes, scores and
-      // pages them, and the hits come back as a local relation (a pure
-      // optimization: result-identical, verified in tests). Raw stored
-      // fields skip it: the docs-scan fast path in termHits is already a
-      // pruned column filter, cheaper than the posting block walk
-      case Some(bag) if reader.deletes.isEmpty && fieldnorms && fastTermCi(bag.field).isEmpty =>
-        WandTopK.run(this, bag, offset + limit).toDF(spark, offset)
+      // term bags (mixed fields too), term dismax and phrases take
+      // block-max WAND: one job collects the plan's posting blocks, the
+      // driver prunes, scores and pages them, and the hits come back as a
+      // local relation (a pure optimization: result-identical, verified in
+      // tests). A plan whose every term is on a raw stored field skips it:
+      // the docs-scan fast path in termHits is already a pruned column
+      // filter, cheaper than the posting block walk
+      case Some(p) if reader.deletes.isEmpty && fieldnorms &&
+          !p.pairs.forall { case (f, _) => fastTermCi(f).isDefined } =>
+        WandTopK.run(this, p, offset + limit).toDF(spark, offset)
       case _ =>
         val top = search(rq)
           .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)

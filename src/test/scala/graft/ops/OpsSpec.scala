@@ -113,6 +113,34 @@ class OpsSpec extends AnyFunSuite {
     sigRows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
+  test("string hash parity outside the BMP: compiled code-point fold == column form") {
+    // 'a' = 97, U+1F600 = 128512 (a surrogate pair in UTF-16), 'b' = 98:
+    // ((97 * 31 + 128512) * 31 + 98) mod HashP; a UTF-16 unit fold differs
+    assert(Dedup.stringHash("a\uD83D\uDE00b") == 4077187L)
+    val colForm = Seq("a\uD83D\uDE00b").toDF("s").select(Dedup.portableStringHash($"s")).head().getLong(0)
+    assert(colForm == 4077187L)
+  }
+
+  test("cosinePairs: dotPair stays out of the nested-loop join condition") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, LessThan, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    val df = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.9f, 0.1f)), (3L, Seq(0.0f, 1.0f))).toDF("id", "vec")
+    val plan = Dedup.cosinePairs(df, "id", "vec", 0.9).queryExecution.optimizedPlan
+    val joins = plan.collect { case j: Join => j }
+    assert(joins.size == 1, plan.toString)
+    // the join condition is only `a.id < b.id`
+    joins.head.condition match {
+      case Some(LessThan(a: AttributeReference, b: AttributeReference)) =>
+        assert(a.name == "id" && b.name == "id", plan.toString)
+      case other => fail(s"join condition is not only id < id: $other\n$plan")
+    }
+    // the dot runs above the join, once per emitted pair
+    def hasUdf(p: LogicalPlan) = p.expressions.exists(_.find(_.isInstanceOf[ScalaUDF]).isDefined)
+    val withUdf = plan.collect { case p if hasUdf(p) => p }
+    assert(withUdf.nonEmpty && !withUdf.exists(_.isInstanceOf[Join]), plan.toString)
+    assert(withUdf.forall(_.find(_.isInstanceOf[Join]).isDefined), plan.toString)
+  }
+
   test("compiled stopwordRatio is bitwise-identical to the column form (r6)") {
     // the pre-r6 column form, verbatim
     def colRatio(text: org.apache.spark.sql.Column) = {

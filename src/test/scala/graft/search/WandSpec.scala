@@ -165,10 +165,12 @@ class WandSpec extends AnyFunSuite {
     assert(WandTopK.eligible(BooleanQuery(Seq(
       (Occur.Must, TermQuery("text", "w0")),
       (Occur.Should, TermQuery("text", "w3"))), Some(1))).isEmpty)
-    // cross-field bag
-    assert(WandTopK.eligible(BooleanQuery(Seq(
+    // cross-field bag: eligible, and identical to the exhaustive plan
+    val crossField = BooleanQuery(Seq(
       (Occur.Must, TermQuery("text", "w0")),
-      (Occur.Should, TermQuery("other", "w3"))))).isEmpty)
+      (Occur.Should, TermQuery("other", "w3"))))
+    assert(WandTopK.eligible(crossField).nonEmpty)
+    assertSame(viaWand(crossField, 10), exhaustive(crossField, 10))
     // non-term clause
     assert(WandTopK.eligible(BooleanQuery(Seq(
       (Occur.Must, TermQuery("text", "w0")),
@@ -235,7 +237,8 @@ class WandSpec extends AnyFunSuite {
         (Occur.Must, TermQuery("text", "w2")),
         (Occur.Should, TermQuery("text", "w7")),
         (Occur.MustNot, TermQuery("text", "w15")))),
-      DisjunctionMaxQuery(Seq(TermQuery("text", "w0"), TermQuery("text", "w5")), 0.3))
+      DisjunctionMaxQuery(Seq(TermQuery("text", "w0"), TermQuery("text", "w5")), 0.3),
+      PhraseQuery("text", Seq((0, "w0"), (1, "w1")), 0))
     for (q <- shapes) {
       assert(WandTopK.eligible(q).nonEmpty)
       searcher.topDocs(q, 10).collect() // first use reads the stats and lists files
@@ -243,6 +246,13 @@ class WandSpec extends AnyFunSuite {
       // one job whose only stage is its result stage: no Exchange anywhere
       assert(stages == Seq(1), s"$q: stages per job $stages")
     }
+    // the head shape: a raw stored field's must term plus a text should term
+    val head = BooleanQuery(Seq(
+      (Occur.Must, TermQuery("lang", "en")), (Occur.Should, TermQuery("text", "w3"))))
+    assert(WandTopK.eligible(head).nonEmpty)
+    langSearcher.topDocs(head, 10).collect()
+    val headStages = jobStages { langSearcher.topDocs(head, 10).collect(); () }
+    assert(headStages == Seq(1), s"$head: stages per job $headStages")
   }
 
   test("block-max bound prunes block groups on a skewed should-bag") {
@@ -250,8 +260,101 @@ class WandSpec extends AnyFunSuite {
     val r = WandTopK.run(searcher, bag, 3)
     assert(r.groupsDecoded < r.groupsSeen, s"decoded ${r.groupsDecoded} of ${r.groupsSeen} groups")
     assert(r.groupsDecoded > 0)
-    val q = BooleanQuery(bag.should.map(t => (Occur.Should, TermQuery("text", t): Query)))
+    val q = BooleanQuery(bag.should.map { case (f, t) => (Occur.Should, TermQuery(f, t): Query) })
     assertSame(r.toDF(spark).collect().map(x => (x.getInt(0), x.getInt(1), x.getDouble(2))),
       exhaustive(q, 3))
+  }
+
+  // ---- phrases ----
+
+  private def phrase(terms: Seq[String], slop: Int): Query =
+    PhraseQuery("text", terms.zipWithIndex.map { case (t, i) => (i, t) }, slop)
+
+  test("phrases: WAND == exhaustive (slop 0 and 1, three terms with slop 2, repeated term)") {
+    for (q <- Seq(phrase(Seq("w0", "w1"), 0), phrase(Seq("w0", "w1"), 1),
+                  phrase(Seq("w2", "w0"), 0), phrase(Seq("w0", "w1", "w2"), 2),
+                  phrase(Seq("w0", "w0"), 0))) {
+      assert(WandTopK.eligible(q).exists(_.isInstanceOf[WandTopK.PhraseBag]), q.toString)
+      val got = viaWand(q, 15)
+      assert(got.nonEmpty, s"$q matches nothing on this corpus")
+      assertSame(got, exhaustive(q, 15))
+      assertSame(searcher.topDocs(q, 15).collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))),
+        exhaustive(q, 15))
+    }
+  }
+
+  test("phrases: an unindexed term gives no hits; a one-term phrase is a term bag; paging") {
+    val missing = phrase(Seq("w0", "nosuchterm"), 0)
+    assert(viaWand(missing, 10).isEmpty && exhaustive(missing, 10).isEmpty)
+    assert(WandTopK.eligible(phrase(Seq("w3"), 0)).contains(
+      WandTopK.TermBag("text", Nil, Seq("w3"), Nil, None)))
+    val q = phrase(Seq("w0", "w1"), 1)
+    val page = searcher.topDocs(q, 10, offset = 5)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+    assertSame(page, exhaustive(q, 15).drop(5))
+  }
+
+  // ---- mixed-field bags: a raw stored `lang` field beside `text` ----
+
+  private val langSchema = IndexSchema(
+    keyField = "doc_id",
+    fields = Seq(FieldDef("text", "summa", "position"), FieldDef("lang", "raw", "basic")),
+    defaultFields = Seq("text"),
+    storedFields = Seq("lang"))
+
+  private lazy val langSearcher: Searcher = {
+    val rnd = new scala.util.Random(41)
+    val vocab = Vector.tabulate(50)(i => s"w$i")
+    def pick(): String = vocab(math.min((math.abs(rnd.nextGaussian()) * 10).toInt, 49))
+    val langs = Vector("en", "en", "de", "fr", "zh")
+    val docs = Vector.tabulate(600)(i =>
+      (i.toLong, Vector.fill(5 + rnd.nextInt(40))(pick()).mkString(" "), langs(rnd.nextInt(langs.size))))
+    val dir = Files.createTempDirectory("graft-wand-lang").toString
+    IndexBuilder.build(spark, docs.toDF("doc_id", "text", "lang"), langSchema, dir, "wandlang",
+      IndexBuilder.BuildConf(numSegments = 3, blockBits = 5))
+    new Searcher(new IndexReader(spark, dir), langSchema)
+  }
+
+  private def langExhaustive(q: Query, k: Int) =
+    langSearcher.search(q)
+      .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
+      .limit(k)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+
+  /** `q` through `topDocs`, asserting it took the WAND route (a local relation). */
+  private def langRouted(q: Query, k: Int) = {
+    assert(WandTopK.eligible(q).nonEmpty, s"expected $q to be WAND-eligible")
+    val top = langSearcher.topDocs(q, k)
+    assert(top.queryExecution.executedPlan.toString.contains("LocalTableScan"), s"$q not routed")
+    top.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+  }
+
+  test("head shape (raw must + text should): WAND == exhaustive at k = 10 and 25") {
+    for (t <- Seq("w3", "w30"); k <- Seq(10, 25)) {
+      val q = BooleanQuery(Seq(
+        (Occur.Must, TermQuery("lang", "en")), (Occur.Should, TermQuery("text", t))))
+      val want = langExhaustive(q, k)
+      assert(want.length == k)
+      assertSame(langRouted(q, k), want)
+    }
+  }
+
+  test("mixed-field should-bag, raw mustNot and cross-field dismax: WAND == exhaustive") {
+    val shouldBag = BooleanQuery(Seq(
+      (Occur.Should, TermQuery("lang", "de")),
+      (Occur.Should, TermQuery("text", "w1")),
+      (Occur.Should, TermQuery("text", "w7"))))
+    assertSame(langRouted(shouldBag, 20), langExhaustive(shouldBag, 20))
+    val rawNot = BooleanQuery(Seq(
+      (Occur.Should, TermQuery("text", "w0")),
+      (Occur.Should, TermQuery("text", "w4")),
+      (Occur.MustNot, TermQuery("lang", "en"))))
+    val got = langRouted(rawNot, 20)
+    assertSame(got, langExhaustive(rawNot, 20))
+    // the exclusion bites on this corpus
+    val without = BooleanQuery(rawNot.clauses.filter(_._1 == Occur.Should))
+    assert(got.map(h => (h._1, h._2)).toSet != langExhaustive(without, 20).map(h => (h._1, h._2)).toSet)
+    val dismax = DisjunctionMaxQuery(Seq(TermQuery("lang", "fr"), TermQuery("text", "w2")), 0.3)
+    assertSame(langRouted(dismax, 15), langExhaustive(dismax, 15))
   }
 }
