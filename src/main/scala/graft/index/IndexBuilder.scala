@@ -60,17 +60,6 @@ object IndexBuilder {
   /** Per-segment doc/token totals observed during the docs write. */
   final case class SegStat(segmentId: Int, nDocs: Long, tokensByField: Map[String, Long])
 
-  /** Per-term group inside one document field. `positions` is the doc's
-    * position list pre-packed to the block delta-varint layout
-    * ([[PostingCodec.packDocPositions]]) so shuffles and the columnar cache
-    * move ~1-2 bytes per occurrence, not a boxed int array.
-    */
-  final case class TermGroup(term: String, tf: Int, positions: Array[Byte])
-  /** Analyzed field: token count, quantized fieldnorm id, term groups
-    * (sorted by term).
-    */
-  final case class TokField(len: Int, norm: Int, terms: Array[TermGroup])
-
   /** One caller-provided token for the pre-tokenized input path — the
     * Spark-native shape of a tantivy `PreTokenizedString` entry
     * (`summa_document.rs:150-160`). Byte offsets are not retained: the
@@ -78,10 +67,11 @@ object IndexBuilder {
     */
   final case class PreToken(position: Int, text: String)
 
-  /** The FLAT analyzed-field shape the build pipeline carries: primitive
-    * byte blobs instead of an array of [[TermGroup]] structs. Catalyst
-    * encodes this far faster than the nested shape, and building it directly
-    * from the accumulator map allocates no intermediate TermGroup objects —
+  /** The analyzed-field shape the build pipeline carries for every field
+    * kind (text, json, bytes/ip, pre-tokenized): primitive byte blobs
+    * instead of an array of per-term structs. Catalyst encodes this far
+    * faster than a nested shape, and building it directly from the
+    * accumulator map allocates no intermediate per-term objects —
     * allocation churn is the memory-bandwidth tax the wide build pays
     * hardest. Terms travel as ONE UTF-8 blob + offsets rather than
     * `array<string>`, and ALL int arrays (term offsets, tfs, position
@@ -246,7 +236,7 @@ object IndexBuilder {
     TokFlat(len, norm, blob)
   }
 
-  /** Per-term accumulator for [[analyzeField]]: tf + the delta-varint
+  /** Per-term accumulator for the token groupers: tf + the delta-varint
     * position bytes written INCREMENTALLY (byte-identical to
     * [[PostingCodec.packDocPositions]] over the collected array). Avoids the
     * per-token churn of the naive TreeMap[String, ArrayBuffer[Int]] grouping
@@ -277,40 +267,19 @@ object IndexBuilder {
     }
   }
 
-  /** Tokenize one field value into term groups (deterministic order: terms
-    * sorted by natural String order, positions in token order).
+  /** Group caller-provided tokens, BYPASSING the analyzer — the
+    * pre-tokenized string path (reference `summa_document.rs:150-160`: a
+    * JSON object on a str field parses as a tantivy `PreTokenizedString` and
+    * indexes its given tokens/positions verbatim). Null tokens and tokens
+    * with null text carry no term and are dropped; fieldnorm = the count of
+    * the tokens kept, exactly like the analyzed path.
     */
-  def analyzeField(analyzerName: String, value: String): TokField = {
-    if (value == null) return TokField(0, 0, Array.empty)
-    val toks = Analyzers(analyzerName).tokenize(value)
-    groupTokens(toks.length, i => toks(i).text, i => toks(i).position)
-  }
-
-  /** Group caller-provided tokens into term groups, BYPASSING the analyzer —
-    * the pre-tokenized string path (reference `summa_document.rs:150-160`:
-    * a JSON object on a str field parses as a tantivy `PreTokenizedString`
-    * and indexes its given tokens/positions verbatim). Fieldnorm = token
-    * count, exactly like the analyzed path.
-    */
-  def analyzePreTokenized(toks: Seq[PreToken]): TokField = {
+  def analyzePreTokenized(toks: Seq[PreToken]): TokFlat = {
     // the position delta-varint accumulator requires non-decreasing
     // positions per term; tokens normally arrive in position order (tantivy
     // contract) but caller input is sorted defensively
-    val arr = toks.sortBy(_.position).toIndexedSeq
-    groupTokens(arr.length, i => arr(i).text, i => arr(i).position)
-  }
-
-  private def groupTokens(n: Int, text: Int => String, pos: Int => Int): TokField = {
-    val m = accumulate(n, text, pos)
-    val terms = sortedTerms(m)
-    val groups = new Array[TermGroup](terms.length)
-    var i = 0
-    while (i < terms.length) {
-      val acc = m.get(terms(i))
-      groups(i) = TermGroup(terms(i), acc.tf, java.util.Arrays.copyOf(acc.buf, acc.len))
-      i += 1
-    }
-    TokField(n, FieldNorm.encode(n.toLong), groups)
+    val arr = toks.filter(t => t != null && t.text != null).sortBy(_.position).toIndexedSeq
+    groupTokensFlat(arr.length, i => arr(i).text, i => arr(i).position)
   }
 
   private def accumulate(
@@ -333,12 +302,22 @@ object IndexBuilder {
     terms
   }
 
-  private val EmptyTokFlat =
+  private[index] val EmptyTokFlat =
     mkTokFlat(0, 0, Array.empty, Array.empty, Array.empty, Array(0))
 
+  /** A single-term field (len 1, the term at position 0) — raw fields and
+    * typed `bytes`/`ip` values; `None` is the empty field.
+    */
+  def singleTermFlat(term: Option[String]): TokFlat = term match {
+    // single token at position 0: packed position delta-varint = [0x00]
+    case Some(t) =>
+      mkTokFlat(1, FieldNorm.encode(1L), Array(t), Array(1), Array(0.toByte), Array(0, 1))
+    case None => EmptyTokFlat
+  }
+
   /** Flat-shape tokenize for the build's hot path: same grouping semantics
-    * as [[analyzeField]] (term-sorted, positions in token order, byte-
-    * identical packed deltas) with zero intermediate group objects.
+    * as [[analyzeFieldFlatLegacy]] (positions in token order, byte-identical
+    * packed deltas) with zero intermediate group objects.
     *
     * Word-run analyzers stream through the [[graft.analysis.FusedTokenize]] /
     * [[FusedAcc]] pair (no Token objects, no filter-chain Vector copies, a
@@ -357,12 +336,7 @@ object IndexBuilder {
         acc.result()
       case None if analyzerName == "raw" || analyzerName == "raw_ci" =>
         if (value.isEmpty) EmptyTokFlat
-        else {
-          val term = if (analyzerName == "raw_ci") value.toLowerCase else value
-          // single token at position 0: packed position delta-varint = [0x00]
-          mkTokFlat(1, FieldNorm.encode(1L),
-            Array(term), Array(1), Array(0.toByte), Array(0, 1))
-        }
+        else singleTermFlat(Some(if (analyzerName == "raw_ci") value.toLowerCase else value))
       case None => analyzeFieldFlatLegacy(analyzerName, value)
     }
   }
@@ -720,7 +694,11 @@ object IndexBuilder {
     }
   }
 
-  private def groupTokensFlat(n: Int, text: Int => String, pos: Int => Int): TokFlat = {
+  /** The sorted reference grouper for every non-fused producer (legacy
+    * analyzer chain, pre-tokenized input, json path terms): `n` tokens,
+    * terms in `String` order, positions in token order, fieldnorm over `n`.
+    */
+  private[index] def groupTokensFlat(n: Int, text: Int => String, pos: Int => Int): TokFlat = {
     val m = accumulate(n, text, pos)
     val terms = sortedTerms(m)
     val k = terms.length
@@ -744,33 +722,6 @@ object IndexBuilder {
       i += 1
     }
     mkTokFlat(n, FieldNorm.encode(n.toLong), terms, tfs, posFlat, posOff)
-  }
-
-  /** Nested → flat conversion for the cold token paths (json / bytes / ip
-    * analyzers return the nested shape).
-    */
-  def toFlat(tf: TokField): TokFlat = {
-    val k = tf.terms.length
-    val terms = new Array[String](k)
-    val tfs = new Array[Int](k)
-    val posOff = new Array[Int](k + 1)
-    var total = 0
-    var i = 0
-    while (i < k) {
-      terms(i) = tf.terms(i).term
-      tfs(i) = tf.terms(i).tf
-      posOff(i) = total
-      total += tf.terms(i).positions.length
-      i += 1
-    }
-    posOff(k) = total
-    val posFlat = new Array[Byte](total)
-    i = 0
-    while (i < k) {
-      System.arraycopy(tf.terms(i).positions, 0, posFlat, posOff(i), tf.terms(i).positions.length)
-      i += 1
-    }
-    mkTokFlat(tf.len, tf.norm, terms, tfs, posFlat, posOff)
   }
 
   /** The canonical doc-order shuffle feeding [[assignDocIds]]: range
@@ -1418,16 +1369,16 @@ object IndexBuilder {
     val tokCols: Map[String, org.apache.spark.sql.Column] = schema.fields.map { f =>
       val an = f.analyzer
       val expr = f.fieldType match {
-        case "json"  => udf((s: String) => toFlat(JsonField.analyzeJson(an, s))).apply(col(f.name).cast(StringType))
-        case "bytes" => udf((s: String) => toFlat(TypedFields.singleTok(Option(s).flatMap(TypedFields.bytesTerm)))).apply(col(f.name).cast(StringType))
-        case "ip"    => udf((s: String) => toFlat(TypedFields.singleTok(TypedFields.ipTerm(s)))).apply(col(f.name).cast(StringType))
+        case "json"  => udf((s: String) => JsonField.analyzeJson(an, s)).apply(col(f.name).cast(StringType))
+        case "bytes" => udf((s: String) => singleTermFlat(Option(s).flatMap(TypedFields.bytesTerm))).apply(col(f.name).cast(StringType))
+        case "ip"    => udf((s: String) => singleTermFlat(TypedFields.ipTerm(s))).apply(col(f.name).cast(StringType))
         case _ =>
           pages.schema.find(_.name == f.name).map(_.dataType) match {
             case Some(st: StructType)
                 if st.fieldNames.contains("text") && st.fieldNames.contains("tokens") =>
               udf((text: String, toks: Seq[PreToken]) =>
                 if (toks == null) analyzeFieldFlat(an, text)
-                else toFlat(analyzePreTokenized(toks)))
+                else analyzePreTokenized(toks))
                 .apply(col(s"${f.name}.text"), col(s"${f.name}.tokens"))
             case _ =>
               // native expression: tokenizes the UTF8String in place (ASCII

@@ -115,23 +115,22 @@ object JsonField {
   }
 
   /** Index-side analysis of one json document value into the builder's
-    * TokField shape (same as text fields: per-term tf + positions + a
-    * quantized fieldnorm over the total token count).
+    * [[IndexBuilder.TokFlat]] shape (same as text fields: per-term tf +
+    * positions + a quantized fieldnorm over the total token count).
     */
-  def analyzeJson(analyzerName: String, json: String): IndexBuilder.TokField = {
-    if (json == null || json.isEmpty)
-      return IndexBuilder.TokField(0, 0, Array.empty)
+  def analyzeJson(analyzerName: String, json: String): IndexBuilder.TokFlat = {
+    if (json == null || json.isEmpty) return IndexBuilder.EmptyTokFlat
     val node =
       try mapper.readTree(json)
-      catch { case _: Exception => return IndexBuilder.TokField(0, 0, Array.empty) }
+      catch { case _: Exception => return IndexBuilder.EmptyTokFlat }
     val analyzer = Analyzers(analyzerName)
-    val terms = new java.util.TreeMap[String, mutable.ArrayBuffer[Int]]()
+    val terms = mutable.ArrayBuffer.empty[String]
+    val positions = mutable.ArrayBuffer.empty[Int]
     val pathPos = mutable.Map.empty[String, Int] // per-path position offset
-    var totalTokens = 0
 
     def add(term: String, pos: Int): Unit = {
-      terms.computeIfAbsent(term, _ => new mutable.ArrayBuffer[Int]) += pos
-      totalTokens += 1
+      terms += term
+      positions += pos
     }
 
     def walk(n: JsonNode, path: String): Unit = {
@@ -170,13 +169,6 @@ object JsonField {
     }
 
     walk(node, "")
-    val groups = new Array[IndexBuilder.TermGroup](terms.size)
-    var i = 0
-    terms.forEach { (term, ps) =>
-      groups(i) = IndexBuilder.TermGroup(
-        term, ps.length, PostingCodec.packDocPositions(ps.toArray))
-      i += 1
-    }
-    IndexBuilder.TokField(totalTokens, FieldNorm.encode(totalTokens.toLong), groups)
+    IndexBuilder.groupTokensFlat(terms.length, terms, positions)
   }
 }

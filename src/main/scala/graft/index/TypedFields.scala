@@ -63,12 +63,4 @@ object TypedFields {
       } catch { case _: java.net.UnknownHostException => None }
     } else None
   }
-
-  /** Single-term TokField for a typed value (len 1, like a raw field). */
-  def singleTok(term: Option[String]): IndexBuilder.TokField = term match {
-    case Some(t) =>
-      IndexBuilder.TokField(1, FieldNorm.encode(1L),
-        Array(IndexBuilder.TermGroup(t, 1, PostingCodec.packDocPositions(Array(0)))))
-    case None => IndexBuilder.TokField(0, 0, Array.empty)
-  }
 }

@@ -52,8 +52,8 @@ class JsonFieldSpec extends AnyFunSuite {
   test("analyzeJson flattens nested objects/arrays into typed path terms") {
     val tok = JsonField.analyzeJson(
       "summa", """{"id": 7, "tags": ["red fox", "fox"], "meta": {"year": 2020, "ok": true}}""")
-    val terms = tok.terms.map(g =>
-      g.term -> ((g.tf, PostingCodec.unpackPositions(g.positions, Array(g.tf)).head.toSeq))).toMap
+    val terms = (0 until tok.termCount).map(i =>
+      tok.term(i) -> ((tok.tf(i), PostingCodec.unpackPositions(tok.posSlice(i), Array(tok.tf(i))).head.toSeq))).toMap
     assert(terms.contains(JsonField.i64Term("id", 7L)))
     assert(terms.contains(JsonField.i64Term("meta.year", 2020L)))
     assert(terms.contains(JsonField.boolTerm("meta.ok", true)))
@@ -62,6 +62,14 @@ class JsonFieldSpec extends AnyFunSuite {
     assert(terms(JsonField.strTerm("tags", "fox")) == ((2, Seq(1, 2))))
     // total tokens: id(1) + red,fox,fox(3) + year(1) + ok(1) = 6
     assert(tok.len == 6)
+    // byte-level golden of the grouped blob (term-sorted, packed positions)
+    assert(tok.norm == 6)
+    assert(TypedFields.toHex(tok.blob) ==
+      "104b051401010a01011b010109020209010169640169383030303030303030303030303030376d6574612e6f6b" +
+        "0162746d6574612e79656172016938303030303030303030303030376534746167730173666f78746167730173" +
+        "726564000000010100")
+    val empty = JsonField.analyzeJson("summa", "{}")
+    assert((empty.len, empty.norm, TypedFields.toHex(empty.blob)) == ((0, 0, "010000")))
   }
 
   // ---------------------------------------- reference parser goldens (1040-1060)

@@ -27,18 +27,28 @@ class PreTokenizedSpec extends AnyFunSuite {
       IndexBuilder.PreToken(5, "Hello"))) // gap positions preserved
     assert(tf.len == 3)
     assert(tf.norm == FieldNorm.encode(3L))
-    assert(tf.terms.map(_.term).toSeq == Seq("Hello", "world")) // term-sorted
-    val hello = tf.terms.find(_.term == "Hello").get
-    assert(hello.tf == 2)
-    assert(PostingCodec.unpackPositions(hello.positions, Array(2)).head.toSeq == Seq(0, 5))
+    assert(tf.termsDecoded.toSeq == Seq("Hello", "world")) // term-sorted
+    val hello = tf.termsDecoded.indexOf("Hello")
+    assert(tf.tf(hello) == 2)
+    assert(PostingCodec.unpackPositions(tf.posSlice(hello), Array(2)).head.toSeq == Seq(0, 5))
     // equivalence with the analyzed path when tokens match what the
     // analyzer would emit
-    val analyzed = IndexBuilder.analyzeField("summa", "hello world")
+    val analyzed = IndexBuilder.analyzeFieldFlatLegacy("summa", "hello world")
     val pre = IndexBuilder.analyzePreTokenized(Seq(
       IndexBuilder.PreToken(0, "hello"), IndexBuilder.PreToken(1, "world")))
     assert(pre.len == analyzed.len && pre.norm == analyzed.norm)
-    assert(pre.terms.map(t => (t.term, t.tf)).toSeq ==
-      analyzed.terms.map(t => (t.term, t.tf)).toSeq)
+    assert((0 until pre.termCount).map(i => (pre.term(i), pre.tf(i))) ==
+      (0 until analyzed.termCount).map(i => (analyzed.term(i), analyzed.tf(i))))
+    // byte-level golden of the grouped blob: unsorted input, a repeated term
+    val golden = IndexBuilder.analyzePreTokenized(Seq(
+      IndexBuilder.PreToken(5, "b"), IndexBuilder.PreToken(0, "a"), IndexBuilder.PreToken(1, "b")))
+    assert(golden.len == 3)
+    assert(TypedFields.toHex(golden.blob) == "0702020101010102026162000104")
+    // null tokens and null-text tokens carry no term: dropped, not counted
+    val sparse = IndexBuilder.analyzePreTokenized(Seq(
+      IndexBuilder.PreToken(0, "a"), IndexBuilder.PreToken(1, null), null))
+    assert(sparse.len == 1 && sparse.norm == FieldNorm.encode(1L))
+    assert(sparse.termsDecoded.toSeq == Seq("a"))
   }
 
   test("build round-trip: struct<text, tokens> column bypasses the analyzer, positions survive") {
@@ -47,10 +57,12 @@ class PreTokenizedSpec extends AnyFunSuite {
     //        (the raw text would tokenize to completely different terms)
     // doc 2: pre-tokenized with NULL tokens — falls back to analyzing text
     // doc 3: phrase-positioned tokens with a stop-word-style gap (0, 2)
+    // doc 4: a null-text token between two real ones — dropped, the rest indexed
     val rows = Seq(
       (1L, ("ignored raw text", Seq((0, "spark"), (1, "window")))),
       (2L, ("merge table", null: Seq[(Int, String)])),
-      (3L, ("also ignored", Seq((0, "spark"), (2, "window"))))
+      (3L, ("also ignored", Seq((0, "spark"), (2, "window")))),
+      (4L, ("ignored too", Seq((0, "delta"), (1, null), (2, "epsilon"))))
     ).toDF("doc_id", "text")
       .selectExpr("doc_id",
         "named_struct('text', text._1, 'tokens', " +
@@ -69,5 +81,8 @@ class PreTokenizedSpec extends AnyFunSuite {
     // positions: doc 1 has the exact phrase, doc 3 only at slop >= 1
     assert(ids(PhraseQuery("text", Seq((0, "spark"), (1, "window")), 0)) == Set(1L))
     assert(ids(PhraseQuery("text", Seq((0, "spark"), (1, "window")), 1)) == Set(1L, 3L))
+    // the row with a null-text token built; its other tokens keep their positions
+    assert(ids(TermQuery("text", "epsilon")) == Set(4L))
+    assert(ids(PhraseQuery("text", Seq((0, "delta"), (2, "epsilon")), 0)) == Set(4L))
   }
 }

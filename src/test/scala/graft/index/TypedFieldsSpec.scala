@@ -36,6 +36,11 @@ class TypedFieldsSpec extends AnyFunSuite {
     val b = java.util.Base64.getEncoder.encodeToString(Array[Byte](1, 2, -1))
     assert(TypedFields.bytesTerm(b).contains("0102ff"))
     assert(TypedFields.bytesTerm("!!!").isEmpty)
+    // a typed value indexes as one term, byte-identical to a raw field
+    val typed = IndexBuilder.singleTermFlat(Some("en"))
+    val raw = IndexBuilder.analyzeFieldFlat("raw", "en")
+    assert(typed.len == raw.len && typed.norm == raw.norm && (typed.blob sameElements raw.blob))
+    assert(TypedFields.toHex(typed.blob) == "040201020101656e00")
   }
 
   test("SummaQL parses quoted ip terms and ranges against typed fields") {

@@ -282,19 +282,19 @@ class SearchSpec extends AnyFunSuite {
 
   test("analyzeField: sorted terms, position bytes identical to the codec pack") {
     import graft.index.PostingCodec
-    val tf = IndexBuilder.analyzeField("summa", "spark window spark the merge spark window")
-    val terms = tf.terms.map(_.term).toSeq
+    val tf = IndexBuilder.analyzeFieldFlatLegacy("summa", "spark window spark the merge spark window")
+    val terms = tf.termsDecoded.toSeq
     assert(terms == terms.sorted)
-    val byTerm = tf.terms.map(g => g.term -> g).toMap
+    val byTerm = terms.zipWithIndex.toMap
     // positions are pre-filter ordinals ('the' is a stop word but keeps its slot)
-    assert(byTerm("spark").tf == 3)
-    assert(byTerm("spark").positions sameElements PostingCodec.packDocPositions(Array(0, 2, 5)))
-    assert(byTerm("window").positions sameElements PostingCodec.packDocPositions(Array(1, 6)))
-    assert(byTerm("merge").positions sameElements PostingCodec.packDocPositions(Array(4)))
+    assert(tf.tf(byTerm("spark")) == 3)
+    assert(tf.posSlice(byTerm("spark")) sameElements PostingCodec.packDocPositions(Array(0, 2, 5)))
+    assert(tf.posSlice(byTerm("window")) sameElements PostingCodec.packDocPositions(Array(1, 6)))
+    assert(tf.posSlice(byTerm("merge")) sameElements PostingCodec.packDocPositions(Array(4)))
     assert(!byTerm.contains("the"))
     // large positions exercise multi-byte varints
-    val big = IndexBuilder.analyzeField("summa", ("w " * 200) + "rare")
-    assert(big.terms.find(_.term == "rare").get.positions
+    val big = IndexBuilder.analyzeFieldFlatLegacy("summa", ("w " * 200) + "rare")
+    assert(big.posSlice(big.termsDecoded.indexOf("rare"))
       sameElements PostingCodec.packDocPositions(Array(200)))
   }
 
