@@ -49,7 +49,9 @@ class IndexReader(
   lazy val termStatsDf: DataFrame = liveFilter(spark.read.parquet(s"$indexDir/termstats"))
   lazy val metrics: DataFrame = spark.read.parquet(s"$indexDir/metrics")
 
-  /** Tombstones, if any deletes were issued since the segments were built. */
+  /** Tombstones `(segment_id, doc_id)` as written, if any deletes were
+    * issued since the segments were built.
+    */
   lazy val deletes: Option[DataFrame] = {
     val p = new Path(s"$indexDir/deletes")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -58,12 +60,24 @@ class IndexReader(
     // as tombstone-free
     if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("segment_id=")))
       Some(spark.read.parquet(s"$indexDir/deletes")
-        .select(col("segment_id").cast("int").as("segment_id"), col("doc_id"))
-        .distinct())
+        .select(col("segment_id").cast("int").as("segment_id"), col("doc_id")))
     else None
   }
 
-  /** Anti-join tombstones out of a (segment_id, doc_id, …) doc-set. */
+  /** Tombstoned doc ids per segment (empty when there are none), collected
+    * once per reader in one job with no shuffle — the alive bitsets the
+    * block route's top-k walk checks its hits against.
+    */
+  lazy val tombstones: Map[Int, java.util.BitSet] =
+    deletes.fold(Map.empty[Int, java.util.BitSet]) { d =>
+      val bits = scala.collection.mutable.HashMap[Int, java.util.BitSet]()
+      d.collect().foreach(r => bits.getOrElseUpdate(r.getInt(0), new java.util.BitSet).set(r.getInt(1)))
+      bits.toMap
+    }
+
+  /** Anti-join tombstones out of a (segment_id, doc_id, …) doc-set (a
+    * repeated tombstone changes nothing, so none are deduplicated).
+    */
   def applyDeletes(hits: DataFrame): DataFrame = deletes match {
     case Some(d) => hits.join(broadcast(d), Seq("segment_id", "doc_id"), "left_anti")
     case None    => hits

@@ -10,7 +10,6 @@ import graft.index.{IndexSchema, PostingCodec}
 /** Posting-block decoders exposed to Spark plans. */
 object PostingUdfs {
   final case class PEntry(doc_id: Int, tf: Int, norm_id: Int)
-  final case class PEntryPos(doc_id: Int, tf: Int, norm_id: Int, positions: Array[Int])
 
   val unpack: UserDefinedFunction =
     udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], n: Int) => {
@@ -28,14 +27,6 @@ object PostingUdfs {
   val unpackIds: UserDefinedFunction =
     udf((docIds: Array[Byte], n: Int) => PostingCodec.unpackDocIds(docIds, n))
 
-  val unpackPos: UserDefinedFunction =
-    udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], pos: Array[Byte], n: Int) => {
-      val ids = PostingCodec.unpackDocIds(docIds, n)
-      val tf = PostingCodec.unpackVarInts(tfs, n)
-      val ps = PostingCodec.unpackPositions(pos, tf)
-      Array.tabulate(n)(i => PEntryPos(ids(i), tf(i), norms(i) & 0xFF, ps(i)))
-    })
-
   /** Count phrase matches. slop=0 is exact adjacency of normalized positions
     * (`pos_i - offset_i` all equal). slop>0 uses move-based slop: a base
     * (first-term) occurrence matches iff there EXISTS one occurrence per
@@ -46,73 +37,55 @@ object PostingUdfs {
     * consistent with the slop=0 count of exact alignments.
     */
   def phraseTf(positionsPerTerm: Seq[Seq[Int]], offsets: Seq[Int], slop: Int): Int = {
-    val first = positionsPerTerm.head
-    val base0 = offsets.head
-    if (slop == 0) {
-      val rest = positionsPerTerm.tail.zip(offsets.tail)
-      first.count { p0 =>
-        val base = p0 - base0
-        rest.forall { case (ps, off) =>
-          java.util.Arrays.binarySearch(ps.toArray, base + off) >= 0
-        }
-      }
-    } else {
-      // normalized, sorted positions per non-base term
-      val normed: Seq[Array[Int]] = positionsPerTerm.tail.zip(offsets.tail).map {
-        case (ps, off) => ps.map(_ - off).toArray.sorted
-      }
-      def hasInWindow(ns: Array[Int], lo: Int, hi: Int): Boolean = {
-        val idx = java.util.Arrays.binarySearch(ns, lo)
-        val ins = if (idx >= 0) idx else -idx - 1
-        ins < ns.length && ns(ins) <= hi
-      }
-      first.count { p0 =>
-        val n0 = p0 - base0
-        // spread <= slop  ⟺  some length-slop window [w, w+slop] containing
-        // n0 covers one normalized position of every term
-        (n0 - slop to n0).exists(w => normed.forall(ns => hasInWindow(ns, w, w + slop)))
-      }
-    }
+    var n = 0
+    foreachPhraseMatch(positionsPerTerm, offsets, slop)(_ => n += 1)
+    n
   }
 
-  val phraseTfUdf: UserDefinedFunction =
-    udf((pos: Seq[Seq[Int]], offsets: Seq[Int], slop: Int) => phraseTf(pos, offsets, slop))
-
   /** The matched base-term positions (pre-filter ordinals) — the phrase's
-    * alignment windows, for per-hit explain. Same match predicate as
-    * [[phraseTf]] (result length == phraseTf); kept separate so the per-doc
-    * scoring path stays allocation-free while this runs only over the k
-    * explained hits.
+    * alignment windows, for per-hit explain. Same matcher as [[phraseTf]]
+    * (result length == phraseTf).
     */
   def phraseMatchPositions(
       positionsPerTerm: Seq[Seq[Int]], offsets: Seq[Int], slop: Int): Array[Int] = {
-    val first = positionsPerTerm.head
-    val base0 = offsets.head
-    if (slop == 0) {
-      val rest = positionsPerTerm.tail.zip(offsets.tail).map { case (ps, off) => (ps.toArray, off) }
-      first.iterator.filter { p0 =>
-        val base = p0 - base0
-        rest.forall { case (ps, off) => java.util.Arrays.binarySearch(ps, base + off) >= 0 }
-      }.toArray
-    } else {
-      val normed: Seq[Array[Int]] = positionsPerTerm.tail.zip(offsets.tail).map {
-        case (ps, off) => ps.map(_ - off).toArray.sorted
-      }
-      def hasInWindow(ns: Array[Int], lo: Int, hi: Int): Boolean = {
-        val idx = java.util.Arrays.binarySearch(ns, lo)
-        val ins = if (idx >= 0) idx else -idx - 1
-        ins < ns.length && ns(ins) <= hi
-      }
-      first.iterator.filter { p0 =>
-        val n0 = p0 - base0
-        (n0 - slop to n0).exists(w => normed.forall(ns => hasInWindow(ns, w, w + slop)))
-      }.toArray
-    }
+    val out = Array.newBuilder[Int]
+    foreachPhraseMatch(positionsPerTerm, offsets, slop)(out += _)
+    out.result()
   }
 
-  val phraseMatchPositionsUdf: UserDefinedFunction =
-    udf((pos: Seq[Seq[Int]], offsets: Seq[Int], slop: Int) =>
-      phraseMatchPositions(pos, offsets, slop))
+  /** Call `f` with each base position that starts a match (see
+    * [[phraseTf]]). Each non-base term's positions (ascending, as decoded)
+    * are normalized into an array once; a base occurrence at normalized n0
+    * matches iff some window [w, w + slop] with n0 - slop <= w <= n0 holds
+    * one normalized position of every term — for slop 0, n0 itself.
+    */
+  private def foreachPhraseMatch(positionsPerTerm: Seq[Seq[Int]], offsets: Seq[Int], slop: Int)(
+      f: Int => Unit): Unit = {
+    val base0 = offsets.head
+    val normed = Array.tabulate(positionsPerTerm.size - 1) { j =>
+      val ns = positionsPerTerm(j + 1).toArray // a copy
+      val off = offsets(j + 1)
+      var i = 0
+      while (i < ns.length) { ns(i) -= off; i += 1 }
+      ns
+    }
+    def hasInWindow(ns: Array[Int], lo: Int, hi: Int): Boolean = {
+      val idx = java.util.Arrays.binarySearch(ns, lo)
+      val ins = if (idx >= 0) idx else -idx - 1
+      ins < ns.length && ns(ins) <= hi
+    }
+    def covered(w: Int): Boolean = {
+      var j = 0
+      while (j < normed.length && hasInWindow(normed(j), w, w + slop)) j += 1
+      j == normed.length
+    }
+    positionsPerTerm.head.foreach { p0 =>
+      val n0 = p0 - base0
+      var w = n0 - slop
+      while (w <= n0 && !covered(w)) w += 1
+      if (w <= n0) f(p0)
+    }
+  }
 }
 
 /** Plans a [[Query]] into a DataFrame of `(segment_id, doc_id, score)` and
@@ -282,14 +255,10 @@ class Searcher(
     }
   }
 
-  /** Phrase candidates via the block-aligned join (r6): positional posting
-    * BLOCK rows join on `(segment_id, block_id)` — one row per (term, block)
-    * instead of one per (doc, term) — and the doc intersection + alignment
-    * ([[PostingUdfs.phraseTf]], the same function the exploded plan applied)
-    * runs inside the matched block. Result-identical: a doc holding all
-    * terms sits in the same block in each term's postings, the norm comes
-    * from the first term's row exactly as before, and the score column is
-    * the same [[BM25.scoreCol]] over the same ints.
+  /** Phrase candidates via the block-aligned join ([[BlockJoin]]): the
+    * positional blocks of the terms join on `(segment_id, block_id)` and
+    * [[PostingUdfs.phraseTf]] runs inside each matched block; the score is
+    * the same [[BM25.scoreCol]] over the phrase tf and first term's norm.
     */
   private def phraseHits(pq: PhraseQuery, dfs: Map[(String, String), Long]): DataFrame = {
     val PhraseQuery(field, terms, slop) = pq
@@ -308,19 +277,14 @@ class Searcher(
       )
   }
 
+  /** The per-occurrence plan of a boolean: each clause planned on its own,
+    * joined and aggregated on `(segment_id, doc_id)`. It serves booleans the
+    * block route does not (non-term clauses: phrase, boost, nested, range)
+    * and is the tests' independent oracle for the route.
+    */
   private def boolHits(bq: BooleanQuery, dfs: Map[(String, String), Long]): DataFrame = {
     val shouldDfs = bq.should.map(plan(_, dfs))
     val notDfs = bq.mustNot.map(plan(_, dfs))
-
-    // block-aligned conjunction (r6): when every must clause is a plain
-    // posting-backed term, join the PACKED block rows on (segment_id,
-    // block_id) and intersect inside the block instead of sort-merge-joining
-    // per-occurrence exploded rows — ~blockSpan× less shuffle, same result
-    // (scored with the same BM25.scoreCol columns, summed in clause order).
-    val mustTermSpecs = bq.must.collect {
-      case TermQuery(f, v) if fastTermCi(f).isEmpty => (f, v)
-    }
-    val blockMust = mustTermSpecs.size == bq.must.size && mustTermSpecs.size >= 2
 
     val shouldAgg: Option[DataFrame] =
       if (shouldDfs.isEmpty) None
@@ -335,22 +299,12 @@ class Searcher(
 
     var base: DataFrame =
       if (bq.must.nonEmpty) {
-        val withMust = if (blockMust) {
-          val scoreCols = mustTermSpecs.zipWithIndex.map { case ((f, t), i) =>
-            BM25.scoreCol(
-              element_at(col("tfs"), i + 1), element_at(col("norms"), i + 1),
-              BM25.idf(dfs.getOrElse((f, t), 0L), totalDocs(f)), avgdl(f), fieldnorms)
-          }
-          BlockJoin.mustTerms(reader, mustTermSpecs)
-            .select(col("segment_id"), col("doc_id"), scoreCols.reduce(_ + _).as("score"))
-        } else {
-          val mustDfs = bq.must.map(plan(_, dfs))
-          val joined = mustDfs.zipWithIndex
-            .map { case (d, i) => d.withColumnRenamed("score", s"__s$i") }
-            .reduce((a, b) => a.join(b, keys, "inner"))
-          val total = mustDfs.indices.map(i => col(s"__s$i")).reduce(_ + _)
-          joined.select(col("segment_id"), col("doc_id"), total.as("score"))
-        }
+        val mustDfs = bq.must.map(plan(_, dfs))
+        val withMust = mustDfs.zipWithIndex
+          .map { case (d, i) => d.withColumnRenamed("score", s"__s$i") }
+          .reduce((a, b) => a.join(b, keys, "inner"))
+          .select(col("segment_id"), col("doc_id"),
+            mustDfs.indices.map(i => col(s"__s$i")).reduce(_ + _).as("score"))
         shouldAgg match {
           case Some(sa) =>
             val minMatch = bq.minimumShouldMatch.getOrElse(0)
@@ -382,6 +336,21 @@ class Searcher(
     base
   }
 
+  /** The block route's plan for `q`, if it takes one: a shape
+    * [[WandTopK.eligible]] accepts, unless every term sits on a raw stored
+    * field — the docs-scan fast path in termHits is already a pruned column
+    * filter, cheaper than the posting block walk. [[topDocs]] and [[plan]]
+    * both route on this.
+    */
+  private def blockPlan(q: Query): Option[WandTopK.Plan] =
+    WandTopK.eligible(q).filterNot(_.pairs.forall { case (f, _) => fastTermCi(f).isDefined })
+
+  /** A block-routed term bag's full result: the WAND kernel per block group. */
+  private def bagHits(q: Query, dfs: Map[(String, String), Long]): Option[DataFrame] =
+    blockPlan(q).collect { case bag: WandTopK.TermBag =>
+      WandTopK.hits(this, bag, dfs).getOrElse(emptyHits)
+    }
+
   /** Typed predicate for a fast-field (docs-table) column. */
   private def rangePredicate(rq: RangeQuery): Column = {
     val c = col(rq.field)
@@ -400,18 +369,20 @@ class Searcher(
     case AllQuery            => reader.docs.select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
     case tq: TermQuery       => termHits(tq.field, tq.value, dfs)
     case pq: PhraseQuery     => phraseHits(pq, dfs)
-    case bq: BooleanQuery    => boolHits(bq, dfs)
+    case bq: BooleanQuery    => bagHits(bq, dfs).getOrElse(boolHits(bq, dfs))
     case BoostQuery(c, b)    => plan(c, dfs).withColumn("score", col("score") * lit(b))
-    case DisjunctionMaxQuery(ds, tb) =>
-      if (ds.isEmpty) emptyHits
-      else
-        ds.map(plan(_, dfs))
-          .reduce(_ unionByName _)
-          .groupBy(keys.map(col): _*)
-          .agg(max("score").as("__mx"), sum("score").as("__sm"))
-          .select(
-            col("segment_id"), col("doc_id"),
-            (col("__mx") + lit(tb) * (col("__sm") - col("__mx"))).as("score"))
+    case dq @ DisjunctionMaxQuery(ds, tb) =>
+      bagHits(dq, dfs).getOrElse {
+        if (ds.isEmpty) emptyHits
+        else
+          ds.map(plan(_, dfs))
+            .reduce(_ unionByName _)
+            .groupBy(keys.map(col): _*)
+            .agg(max("score").as("__mx"), sum("score").as("__sm"))
+            .select(
+              col("segment_id"), col("doc_id"),
+              (col("__mx") + lit(tb) * (col("__sm") - col("__mx"))).as("score"))
+      }
     case rq: RangeQuery      => constHits(rangePredicate(rq))
     case TermRangeQuery(f, lo, hi, il, iu) =>
       val t = col("term")
@@ -494,16 +465,13 @@ class Searcher(
     */
   def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
-    WandTopK.eligible(rq) match {
+    blockPlan(rq) match {
       // term bags (mixed fields too), term dismax and phrases take
       // block-max WAND: one job collects the plan's posting blocks, the
-      // driver prunes, scores and pages them, and the hits come back as a
-      // local relation (a pure optimization: result-identical, verified in
-      // tests). A plan whose every term is on a raw stored field skips it:
-      // the docs-scan fast path in termHits is already a pruned column
-      // filter, cheaper than the posting block walk
-      case Some(p) if reader.deletes.isEmpty && fieldnorms &&
-          !p.pairs.forall { case (f, _) => fastTermCi(f).isDefined } =>
+      // driver prunes, scores, drops tombstoned docs and pages them, and
+      // the hits come back as a local relation (a pure optimization:
+      // result-identical, verified in tests)
+      case Some(p) =>
         WandTopK.run(this, p, offset + limit).toDF(spark, offset)
       case _ =>
         val top = search(rq)
@@ -556,7 +524,7 @@ class Searcher(
     * SearchSpec).
     */
   def count(q: Query): Long = resolve(q) match {
-    case TermQuery(f, v) if reader.deletes.isEmpty =>
+    case TermQuery(f, v) if reader.tombstones.isEmpty =>
       reader.termDfs(Seq((f, v))).getOrElse((f, v), 0L)
     case rq =>
       reader.applyDeletes(plan(rq, reader.termDfs(collectTerms(rq).distinct))).count()

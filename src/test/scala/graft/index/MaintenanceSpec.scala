@@ -92,9 +92,21 @@ class MaintenanceSpec extends AnyFunSuite {
       Maintenance.ConflictStrategy.Overwrite, conf.copy(numSegments = 1))
     assertBlockDfsMatchStats(dir, sample)
 
+    // deleted docs still count toward df on both sides until a merge
+    // removes them: the delete-aware block route takes df from the blocks
+    val window = Seq(("text", "window"))
+    val s1 = new Searcher(new IndexReader(spark, dir), schema)
+    val dfBefore = s1.reader.termDfs(window)
+    assert(Maintenance.deleteDocs(spark, dir, s1.search(TermQuery("text", "window")).limit(20)) == 20)
+    val r2 = new IndexReader(spark, dir)
+    assert(r2.tombstones.nonEmpty && r2.termDfs(window) == dfBefore)
+    assertBlockDfsMatchStats(dir, sample)
+    val liveWindow = new Searcher(r2, schema).count(TermQuery("text", "window"))
+
     Maintenance.mergeSegments(spark, dir, schema, Snapshots.latest(spark, dir).get.segments, "m1", conf)
     assert(Snapshots.latest(spark, dir).get.segments.size == 1)
     assertBlockDfsMatchStats(dir, sample)
+    assert(new IndexReader(spark, dir).termDfs(window).values.sum == liveWindow)
   }
 
   test("delete-by-query tombstones, then merge bakes them in") {

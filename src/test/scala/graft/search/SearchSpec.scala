@@ -388,11 +388,12 @@ class FastTermSpec extends AnyFunSuite {
     val slow = new Searcher(reader.reader, schemaFast.copy(storedFields = Nil))
     assert(reader.fastTermCi("lang").contains(false) && slow.fastTermCi("lang").isEmpty)
 
+    // the boolean is planned per occurrence, where its must term is a termHits leaf
     for (q <- Seq[Query](
         TermQuery("lang", "en"),
-        BooleanQuery(Seq(
+        WandSpec.perOccurrence(BooleanQuery(Seq(
           (Occur.Must, TermQuery("lang", "en")),
-          (Occur.Should, TermQuery("text", "spark")))))) {
+          (Occur.Should, TermQuery("text", "spark"))))))) {
       val fast = scores(reader, q)
       val ref = scores(slow, q)
       assert(fast.keySet == ref.keySet, s"doc sets differ for $q")

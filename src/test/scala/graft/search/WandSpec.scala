@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.TestSpark
 import graft.index.{FieldDef, IndexBuilder, IndexSchema}
+import graft.search.WandTopK.TermBag
 
 /** Block-max WAND must be result-identical to the exhaustive plan. */
 class WandSpec extends AnyFunSuite {
@@ -35,11 +36,16 @@ class WandSpec extends AnyFunSuite {
     new Searcher(new IndexReader(spark, dir), schema)
   }
 
-  private def exhaustive(q: Query, k: Int) =
-    searcher.search(q)
+  /** The top `k` of `q` by the per-occurrence plan, which the block route
+    * cannot take (see [[WandSpec.perOccurrence]]).
+    */
+  private def exhaustive(q: Query, k: Int, s: => Searcher = searcher) =
+    s.search(WandSpec.perOccurrence(q))
       .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
       .limit(k)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+
+  private def topK(plan: WandTopK.Plan, k: Int) = WandTopK.run(searcher, plan, k).toDF(spark)
 
   private def assertSame(a: Array[(Int, Int, Double)], b: Array[(Int, Int, Double)]): Unit = {
     assert(a.length == b.length)
@@ -51,7 +57,7 @@ class WandSpec extends AnyFunSuite {
 
   test("single term: WAND == exhaustive (bitwise scores)") {
     for (t <- Seq("w0", "w5", "w20")) {
-      val wand = WandTopK.topK(searcher, "text", Seq(t), 10)
+      val wand = topK(TermBag("text", Nil, Seq(t), Nil, None), 10)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       val base = exhaustive(TermQuery("text", t), 10)
       assert(wand.map(x => (x._1, x._2)).toSeq == base.map(x => (x._1, x._2)).toSeq)
@@ -62,17 +68,17 @@ class WandSpec extends AnyFunSuite {
   test("multi-term should bag: WAND == exhaustive") {
     val terms = Seq("w0", "w1", "w7", "w15")
     val q = BooleanQuery(terms.map(t => (Occur.Should, TermQuery("text", t): Query)))
-    val wand = WandTopK.topK(searcher, "text", terms, 15)
+    val wand = topK(TermBag("text", Nil, terms, Nil, None), 15)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     assertSame(wand, exhaustive(q, 15))
   }
 
   test("k larger than matches; missing terms") {
-    val wand = WandTopK.topK(searcher, "text", Seq("w49", "nosuchterm"), 1000)
+    val wand = topK(TermBag("text", Nil, Seq("w49", "nosuchterm"), Nil, None), 1000)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     val base = exhaustive(TermQuery("text", "w49"), 1000)
     assertSame(wand, base)
-    assert(WandTopK.topK(searcher, "text", Seq("nosuchterm"), 10).count() == 0)
+    assert(topK(TermBag("text", Nil, Seq("nosuchterm"), Nil, None), 10).count() == 0)
   }
 
   test("topDocs auto-routes eligible queries through WAND") {
@@ -96,7 +102,7 @@ class WandSpec extends AnyFunSuite {
   private def viaWand(q: Query, k: Int) = {
     val bag = WandTopK.eligible(q)
     assert(bag.nonEmpty, s"expected $q to be WAND-eligible")
-    WandTopK.topK(searcher, bag.get, k)
+    topK(bag.get, k)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
   }
 
@@ -157,14 +163,16 @@ class WandSpec extends AnyFunSuite {
     assert(WandTopK.eligible(BooleanQuery(Seq(
       (Occur.Should, TermQuery("text", "w0")),
       (Occur.Should, TermQuery("text", "w0"))))).isEmpty)
-    // minimumShouldMatch > 1
-    assert(WandTopK.eligible(BooleanQuery(Seq(
-      (Occur.Should, TermQuery("text", "w0")),
-      (Occur.Should, TermQuery("text", "w3"))), Some(2))).isEmpty)
-    // msm with must present
-    assert(WandTopK.eligible(BooleanQuery(Seq(
-      (Occur.Must, TermQuery("text", "w0")),
-      (Occur.Should, TermQuery("text", "w3"))), Some(1))).isEmpty)
+    // any minimumShouldMatch is eligible, with or without a must clause
+    for (q <- Seq(
+        BooleanQuery(Seq(
+          (Occur.Should, TermQuery("text", "w0")),
+          (Occur.Should, TermQuery("text", "w3"))), Some(2)),
+        BooleanQuery(Seq(
+          (Occur.Must, TermQuery("text", "w0")),
+          (Occur.Should, TermQuery("text", "w3"))), Some(1)))) {
+      assertSame(viaWand(q, 10), exhaustive(q, 10))
+    }
     // cross-field bag: eligible, and identical to the exhaustive plan
     val crossField = BooleanQuery(Seq(
       (Occur.Must, TermQuery("text", "w0")),
@@ -315,11 +323,7 @@ class WandSpec extends AnyFunSuite {
     new Searcher(new IndexReader(spark, dir), langSchema)
   }
 
-  private def langExhaustive(q: Query, k: Int) =
-    langSearcher.search(q)
-      .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
-      .limit(k)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+  private def langExhaustive(q: Query, k: Int) = exhaustive(q, k, langSearcher)
 
   /** `q` through `topDocs`, asserting it took the WAND route (a local relation). */
   private def langRouted(q: Query, k: Int) = {
@@ -356,5 +360,135 @@ class WandSpec extends AnyFunSuite {
     assert(got.map(h => (h._1, h._2)).toSet != langExhaustive(without, 20).map(h => (h._1, h._2)).toSet)
     val dismax = DisjunctionMaxQuery(Seq(TermQuery("lang", "fr"), TermQuery("text", "w2")), 0.3)
     assertSame(langRouted(dismax, 15), langExhaustive(dismax, 15))
+  }
+
+  // ---- one evaluator: full results, tombstones, fieldnorms off ----
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+
+  /** Full `search` of `q` equals the per-occurrence oracle's doc set and scores. */
+  private def assertSameSearch(s: Searcher, q: Query): Unit = {
+    val plan = s.search(q)
+    assert(plan.queryExecution.executedPlan.toString.contains("bag_kernel"), s"$q did not take the kernel")
+    val got = rows(plan).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
+    val want = rows(s.search(WandSpec.perOccurrence(q))).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
+    assert(want.nonEmpty, s"$q matches nothing on this corpus")
+    assert(got.keySet == want.keySet, s"$q: doc sets differ")
+    got.foreach { case (k, sc) => assert(math.abs(sc - want(k)) < 1e-12, s"$q at $k: $sc vs ${want(k)}") }
+  }
+
+  private def bool(cs: (Occur, String)*): BooleanQuery =
+    BooleanQuery(cs.map { case (o, t) => (o, TermQuery("text", t): Query) })
+
+  /** Every bag shape: must, should, must+should, mustNot, msm = 2, dismax. */
+  private val bags: Seq[Query] = Seq(
+    bool((Occur.Must, "w0"), (Occur.Must, "w2")),
+    bool((Occur.Should, "w0"), (Occur.Should, "w4"), (Occur.Should, "w11")),
+    bool((Occur.Must, "w1"), (Occur.Should, "w3"), (Occur.Should, "w8")),
+    bool((Occur.Should, "w0"), (Occur.Should, "w5"), (Occur.MustNot, "w1")),
+    BooleanQuery(bool((Occur.Should, "w0"), (Occur.Should, "w3"), (Occur.Should, "w6")).clauses, Some(2)),
+    DisjunctionMaxQuery(Seq(TermQuery("text", "w0"), TermQuery("text", "w3"), TermQuery("text", "w9")), 0.3))
+
+  test("the per-occurrence oracle never takes the kernel") {
+    for (q <- bags) {
+      assert(WandTopK.eligible(WandSpec.perOccurrence(q)).isEmpty, q.toString)
+      assert(!searcher.search(WandSpec.perOccurrence(q)).queryExecution.executedPlan.toString
+        .contains("bag_kernel"), q.toString)
+    }
+  }
+
+  test("full-result bag plan: one shuffle exchange and no join") {
+    for (q <- bags) {
+      val plan = searcher.plan(q, searcher.reader.termDfs(WandTopK.eligible(q).get.pairs))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("bag_kernel"), s"$q: $plan")
+      assert(plan.split("\n").count(_.contains("Exchange")) == 1, s"$q: $plan")
+      assert(!plan.contains("Join"), s"$q: $plan")
+    }
+  }
+
+  test("full search() of every bag shape equals the per-occurrence oracle") {
+    bags.foreach(assertSameSearch(searcher, _))
+  }
+
+  /** The main corpus again, with tombstones on docs among the would-be top-k
+    * of the bag shapes and on a spread of other docs.
+    */
+  private lazy val tombSearcher: Searcher = {
+    val rnd = new scala.util.Random(33)
+    val vocab = Vector.tabulate(50)(i => s"w$i")
+    def pick(): String = vocab(math.min((math.abs(rnd.nextGaussian()) * 10).toInt, 49))
+    val docs = Vector.tabulate(500)(i =>
+      (i.toLong, Vector.fill(10 + rnd.nextInt(40))(pick()).mkString(" ")))
+    val dir = Files.createTempDirectory("graft-wand-tomb").toString
+    IndexBuilder.build(spark, docs.toDF("doc_id", "text"), schema, dir, "wandtomb",
+      IndexBuilder.BuildConf(numSegments = 3, blockBits = 5))
+    val s0 = new Searcher(new IndexReader(spark, dir), schema)
+    val topHits = bags.flatMap(q => rows(s0.topDocs(q, 12)).zipWithIndex.collect {
+      case ((sg, d, _), i) if i % 2 == 0 => (sg, d)
+    })
+    val spread = rows(s0.search(AllQuery)).collect { case (sg, d, _) if d % 7 == 3 => (sg, d) }
+    graft.index.Maintenance.deleteDocs(spark, dir,
+      (topHits ++ spread).distinct.toDF("segment_id", "doc_id"))
+    new Searcher(new IndexReader(spark, dir), schema)
+  }
+
+  test("tombstones: top-k through topDocs equals the oracle, paging included") {
+    val dead = tombSearcher.reader.tombstones
+    assert(dead.nonEmpty)
+    for (q <- bags) {
+      val top = tombSearcher.topDocs(q, 10)
+      assert(top.queryExecution.executedPlan.toString.contains("LocalTableScan"), s"$q not routed")
+      val want = exhaustive(q, 20, tombSearcher)
+      def isDead(h: (Int, Int, Double)) = dead.get(h._1).exists(_.get(h._2))
+      assert(want.length == 20 && !want.exists(isDead))
+      // deleted docs sit among the would-be top-k
+      val unfiltered = rows(tombSearcher.plan(WandSpec.perOccurrence(q),
+          tombSearcher.reader.termDfs(WandTopK.eligible(q).get.pairs))
+        .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc).limit(10))
+      assert(unfiltered.exists(isDead), s"$q: no tombstone among the top 10")
+      assertSame(rows(top), want.take(10))
+      assertSame(rows(tombSearcher.topDocs(q, 10, offset = 7)), want.slice(7, 17))
+    }
+  }
+
+  test("tombstones: full search() of every bag shape equals the oracle") {
+    bags.foreach(assertSameSearch(tombSearcher, _))
+  }
+
+  test("tombstones: a reader's second top-k request starts exactly 1 job") {
+    val s = new Searcher(new IndexReader(spark, tombSearcher.reader.indexDir), schema)
+    val q = bags(2)
+    s.topDocs(q, 10).collect()
+    val stages = jobStages { s.topDocs(q, 10).collect(); () }
+    assert(stages == Seq(1), s"stages per job $stages")
+  }
+
+  test("fieldnorms off: should and must+should bags equal the oracle via topDocs and search") {
+    val off = new Searcher(searcher.reader, schema, fieldnorms = false)
+    for (q <- Seq(bags(1), bags(2))) {
+      val top = off.topDocs(q, 15)
+      assert(top.queryExecution.executedPlan.toString.contains("LocalTableScan"), s"$q not routed")
+      val want = exhaustive(q, 15, off)
+      assertSame(rows(top), want)
+      assertSameSearch(off, q)
+      // the toggle bites: fieldnorms on ranks or scores differently
+      assert(rows(searcher.topDocs(q, 15)).toSeq != want.toSeq)
+    }
+  }
+}
+
+object WandSpec {
+  /** `q` with every term leaf wrapped in `BoostQuery(_, 1.0)`: the same
+    * scores (× 1.0 is exact), planned per occurrence, since no block-route
+    * shape has a boost clause.
+    */
+  def perOccurrence(q: Query): Query = q match {
+    case t: TermQuery                 => BoostQuery(t, 1.0)
+    case BooleanQuery(cs, msm)        => BooleanQuery(cs.map { case (o, c) => (o, perOccurrence(c)) }, msm)
+    case BoostQuery(c, b)             => BoostQuery(perOccurrence(c), b)
+    case DisjunctionMaxQuery(ds, tb)  => DisjunctionMaxQuery(ds.map(perOccurrence), tb)
+    case other                        => other
   }
 }
