@@ -1,5 +1,7 @@
 package graft.search
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -9,20 +11,8 @@ import graft.index.{IndexSchema, PostingCodec}
 
 /** Posting-block decoders exposed to Spark plans. */
 object PostingUdfs {
-  final case class PEntry(doc_id: Int, tf: Int, norm_id: Int)
-
-  val unpack: UserDefinedFunction =
-    udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], n: Int) => {
-      val ids = PostingCodec.unpackDocIds(docIds, n)
-      val tf = PostingCodec.unpackVarInts(tfs, n)
-      Array.tabulate(n)(i => PEntry(ids(i), tf(i), norms(i) & 0xFF))
-    })
-
-  /** Ids-only decode for unscored membership paths (term-range, regex):
-    * skips the tf/norm varint decodes AND lets Catalyst prune the `tfs` /
-    * `norms` columns out of the parquet scan entirely (guide §2.3 / §6 —
-    * the full `unpack` struct forces all three binary columns to be read
-    * even when only `.doc_id` is consumed).
+  /** Ids-only decode for unscored membership paths (term-range, regex): lets
+    * Catalyst prune the `tfs` / `norms` columns out of the parquet scan.
     */
   val unpackIds: UserDefinedFunction =
     udf((docIds: Array[Byte], n: Int) => PostingCodec.unpackDocIds(docIds, n))
@@ -211,76 +201,38 @@ class Searcher(
         case f if f.analyzer == "raw_ci" => true
       }
 
-  /** Scored postings of one term.
-    *
-    * Single-token-field fast path: a TermQuery on a `raw`/`raw_ci` field
-    * whose value is stored in the docs table is answered from the docs scan
-    * instead of the posting unpack+explode. Score-identical by construction:
-    * a raw field has exactly one token per non-empty value, so tf = 1 and the
-    * quantized fieldnorm length is 1 for every match; df/N/avgdl come from
-    * the same stats tables and the score is the same [[BM25.scoreCol]] op
-    * sequence (SearchSpec pins bitwise equality vs the posting plan). On a
-    * head term (lang:en, ~25% of all docs) this replaces the engine's densest
-    * posting-block scan with a pruned, cache-primed column filter — the
-    * difference between a bandwidth-fragile multi-second scan and a
-    * sub-second probe at 800k pages, compounding at 100x.
+  /** Scored docs of one term on a `raw`/`raw_ci` field whose value is
+    * stored in the docs table ([[fastTermCi]]; [[blockPlan]] takes every
+    * other term): answered from the docs scan, not the posting blocks.
+    * Score-identical by construction: a raw field has exactly one token per
+    * non-empty value, so tf = 1 and the quantized fieldnorm length is 1 for
+    * every match; df/N/avgdl come from the same stats tables and the score is
+    * the same [[BM25.scoreCol]] op sequence (SearchSpec pins bitwise equality
+    * vs the posting plan). On a head term (lang:en, ~25% of all docs) this
+    * replaces the engine's densest posting-block scan with a pruned,
+    * cache-primed column filter — the difference between a
+    * bandwidth-fragile multi-second scan and a sub-second probe at 800k
+    * pages, compounding at 100x.
     */
-  private def termHits(field: String, term: String, dfs: Map[(String, String), Long], boost: Double = 1.0): DataFrame = {
+  private def rawTermHits(field: String, term: String, dfs: Map[(String, String), Long]): DataFrame = {
     val df = dfs.getOrElse((field, term), 0L)
     if (df == 0L) return emptyHits
-    val idf = BM25.idf(df, totalDocs(field))
-    fastTermCi(field) match {
-      case Some(ci) =>
-        // df > 0 guarantees the term was indexed, so matches are exactly the
-        // docs whose (optionally lowercased) stored value equals the term;
-        // null/empty stored values can never equal a non-empty indexed term.
-        val pred = if (ci) lower(col(field)) === term else col(field) === term
-        reader.docs
-          .filter(pred)
-          .select(
-            col("segment_id"),
-            col("doc_id"),
-            (BM25.scoreCol(lit(1), lit(graft.index.FieldNorm.encode(1L)), idf, avgdl(field), fieldnorms) * lit(boost))
-              .as("score")
-          )
-      case None =>
-        reader.postings
-          .filter(col("field") === field && col("term") === term)
-          .select(col("segment_id"), explode(unpack(col("doc_ids"), col("tfs"), col("norms"), col("doc_count"))).as("p"))
-          .select(
-            col("segment_id"),
-            col("p.doc_id").as("doc_id"),
-            (BM25.scoreCol(col("p.tf"), col("p.norm_id"), idf, avgdl(field), fieldnorms) * lit(boost)).as("score")
-          )
-    }
-  }
-
-  /** Phrase candidates via the block-aligned join ([[BlockJoin]]): the
-    * positional blocks of the terms join on `(segment_id, block_id)` and
-    * [[PostingUdfs.phraseTf]] runs inside each matched block; the score is
-    * the same [[BM25.scoreCol]] over the phrase tf and first term's norm.
-    */
-  private def phraseHits(pq: PhraseQuery, dfs: Map[(String, String), Long]): DataFrame = {
-    val PhraseQuery(field, terms, slop) = pq
-    if (terms.isEmpty) return emptyHits
-    if (terms.size == 1) return termHits(field, terms.head._2, dfs)
-    if (terms.exists { case (_, t) => dfs.getOrElse((field, t), 0L) == 0L }) return emptyHits
-    // sum of per-term idfs (Lucene/tantivy multi-term phrase weight)
-    val n = totalDocs(field)
-    val sumIdf = terms.map { case (_, t) => BM25.idf(dfs((field, t)), n) }.sum
-    val offsets = terms.map(_._1)
-    BlockJoin.phraseMatches(reader, field, terms.map(_._2), offsets, slop)
+    // df > 0 guarantees the term was indexed, so matches are exactly the
+    // docs whose (optionally lowercased) stored value equals the term;
+    // null/empty stored values can never equal a non-empty indexed term.
+    val pred = if (fastTermCi(field).contains(true)) lower(col(field)) === term else col(field) === term
+    reader.docs
+      .filter(pred)
       .select(
         col("segment_id"),
         col("doc_id"),
-        BM25.scoreCol(col("phrase_tf"), col("norm_id"), sumIdf, avgdl(field), fieldnorms).as("score")
-      )
+        BM25.scoreCol(lit(1), lit(graft.index.FieldNorm.encode(1L)), BM25.idf(df, totalDocs(field)),
+          avgdl(field), fieldnorms).as("score"))
   }
 
-  /** The per-occurrence plan of a boolean: each clause planned on its own,
-    * joined and aggregated on `(segment_id, doc_id)`. It serves booleans the
-    * block route does not (non-term clauses: phrase, boost, nested, range)
-    * and is the tests' independent oracle for the route.
+  /** The per-occurrence plan of a boolean the block route does not take (a
+    * docs-table clause: range, exists, all, regex, term-range): each clause
+    * planned on its own, joined and aggregated on `(segment_id, doc_id)`.
     */
   private def boolHits(bq: BooleanQuery, dfs: Map[(String, String), Long]): DataFrame = {
     val shouldDfs = bq.should.map(plan(_, dfs))
@@ -336,20 +288,14 @@ class Searcher(
     base
   }
 
-  /** The block route's plan for `q`, if it takes one: a shape
+  /** The block route's plan for `q`, if it takes one: a tree
     * [[WandTopK.eligible]] accepts, unless every term sits on a raw stored
-    * field — the docs-scan fast path in termHits is already a pruned column
+    * field — the docs-scan fast path in rawTermHits is already a pruned column
     * filter, cheaper than the posting block walk. [[topDocs]] and [[plan]]
     * both route on this.
     */
   private def blockPlan(q: Query): Option[WandTopK.Plan] =
     WandTopK.eligible(q).filterNot(_.pairs.forall { case (f, _) => fastTermCi(f).isDefined })
-
-  /** A block-routed term bag's full result: the WAND kernel per block group. */
-  private def bagHits(q: Query, dfs: Map[(String, String), Long]): Option[DataFrame] =
-    blockPlan(q).collect { case bag: WandTopK.TermBag =>
-      WandTopK.hits(this, bag, dfs).getOrElse(emptyHits)
-    }
 
   /** Typed predicate for a fast-field (docs-table) column. */
   private def rangePredicate(rq: RangeQuery): Column = {
@@ -364,15 +310,22 @@ class Searcher(
   private def constHits(pred: Column): DataFrame =
     reader.docs.filter(pred).select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
 
-  def plan(q: Query, dfs: Map[(String, String), Long]): DataFrame = q match {
-    case EmptyQuery          => emptyHits
-    case AllQuery            => reader.docs.select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
-    case tq: TermQuery       => termHits(tq.field, tq.value, dfs)
-    case pq: PhraseQuery     => phraseHits(pq, dfs)
-    case bq: BooleanQuery    => bagHits(bq, dfs).getOrElse(boolHits(bq, dfs))
-    case BoostQuery(c, b)    => plan(c, dfs).withColumn("score", col("score") * lit(b))
-    case dq @ DisjunctionMaxQuery(ds, tb) =>
-      bagHits(dq, dfs).getOrElse {
+  /** `q`'s scored doc set `(segment_id, doc_id, score)`, tombstoned docs
+    * included. A posting-backed tree runs the block kernel
+    * ([[WandTopK.hits]]); a tree with docs-table leaves plans per clause, its
+    * posting-backed subtrees through the kernel.
+    */
+  def plan(q: Query, dfs: Map[(String, String), Long]): DataFrame = blockPlan(q) match {
+    case Some(p) => WandTopK.hits(this, p, dfs)
+    case None => q match {
+      case EmptyQuery          => emptyHits
+      case AllQuery            => reader.docs.select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
+      case TermQuery(f, v)     => rawTermHits(f, v, dfs)
+      case PhraseQuery(f, Seq((_, t)), _) => rawTermHits(f, t, dfs)
+      case pq: PhraseQuery     => WandTopK.eligible(pq).fold(emptyHits)(WandTopK.hits(this, _, dfs))
+      case bq: BooleanQuery    => boolHits(bq, dfs)
+      case BoostQuery(c, b)    => plan(c, dfs).withColumn("score", col("score") * lit(b))
+      case DisjunctionMaxQuery(ds, tb) =>
         if (ds.isEmpty) emptyHits
         else
           ds.map(plan(_, dfs))
@@ -382,31 +335,31 @@ class Searcher(
             .select(
               col("segment_id"), col("doc_id"),
               (col("__mx") + lit(tb) * (col("__sm") - col("__mx"))).as("score"))
-      }
-    case rq: RangeQuery      => constHits(rangePredicate(rq))
-    case TermRangeQuery(f, lo, hi, il, iu) =>
-      val t = col("term")
-      val conds = Seq(Some(col("field") === f),
-        lo.map(v => if (il) t >= v else t > v),
-        hi.map(v => if (iu) t <= v else t < v)).flatten
-      reader.postings
-        .filter(conds.reduce(_ && _))
-        .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-        .distinct()
-        .withColumn("score", lit(1.0))
-    case ExistsQuery(f) =>
-      val docsSchema = reader.docs.schema.fieldNames.toSet
-      if (docsSchema.contains(s"len_$f")) constHits(col(s"len_$f") > 0)
-      else if (docsSchema.contains(f)) constHits(col(f).isNotNull)
-      else emptyHits
-    case RegexQuery(f, pat) =>
-      reader.postings
-        .filter(col("field") === f && col("term").rlike(pat))
-        .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-        .distinct()
-        .withColumn("score", lit(1.0))
-    case mq: MatchQuery         => plan(resolve(mq), dfs)
-    case mlt: MoreLikeThisQuery => plan(resolve(mlt), dfs)
+      case rq: RangeQuery      => constHits(rangePredicate(rq))
+      case TermRangeQuery(f, lo, hi, il, iu) =>
+        val t = col("term")
+        val conds = Seq(Some(col("field") === f),
+          lo.map(v => if (il) t >= v else t > v),
+          hi.map(v => if (iu) t <= v else t < v)).flatten
+        reader.postings
+          .filter(conds.reduce(_ && _))
+          .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
+          .distinct()
+          .withColumn("score", lit(1.0))
+      case ExistsQuery(f) =>
+        val docsSchema = reader.docs.schema.fieldNames.toSet
+        if (docsSchema.contains(s"len_$f")) constHits(col(s"len_$f") > 0)
+        else if (docsSchema.contains(f)) constHits(col(f).isNotNull)
+        else emptyHits
+      case RegexQuery(f, pat) =>
+        reader.postings
+          .filter(col("field") === f && col("term").rlike(pat))
+          .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
+          .distinct()
+          .withColumn("score", lit(1.0))
+      case mq: MatchQuery         => plan(resolve(mq), dfs)
+      case mlt: MoreLikeThisQuery => plan(resolve(mlt), dfs)
+    }
   }
 
   /** Scored doc-set of a query: (segment_id, doc_id, score), tombstoned docs
@@ -466,8 +419,7 @@ class Searcher(
   def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
     blockPlan(rq) match {
-      // term bags (mixed fields too), term dismax and phrases take
-      // block-max WAND: one job collects the plan's posting blocks, the
+      // every tree of terms and phrases takes block-max WAND: one job collects the plan's posting blocks, the
       // driver prunes, scores, drops tombstoned docs and pages them, and
       // the hits come back as a local relation (a pure optimization:
       // result-identical, verified in tests)
@@ -567,127 +519,41 @@ class Searcher(
       case None => Collectors.aggregate(searchWithDocs(q), agg).collect()
     }
 
-  /** Scoring leaves of a resolved query tree, for [[explainTopDocs]]:
-    * term leaves carry (field, term, cumulativeBoost, kind); phrase clauses
-    * stay WHOLE leaves (a phrase scores as one pseudo-term — tf = alignment
-    * count, idf = Σ term idfs — so decomposing it into per-term rows could
-    * never sum to the score). MustNot branches never contribute score. A
-    * single-term phrase plans as a plain term and explains as one.
-    */
-  private sealed trait ExplainLeaf
-  private final case class TermLeaf(field: String, term: String, boost: Double, kind: String)
-      extends ExplainLeaf
-  private final case class PhraseLeaf(pq: PhraseQuery, boost: Double) extends ExplainLeaf
-
-  private def scoreLeaves(q: Query, boost: Double): Seq[ExplainLeaf] =
-    q match {
-      case TermQuery(f, v) => Seq(TermLeaf(f, v, boost, "term"))
-      case PhraseQuery(f, ts, _) if ts.size == 1 =>
-        Seq(TermLeaf(f, ts.head._2, boost, "term"))
-      case pq: PhraseQuery => Seq(PhraseLeaf(pq, boost))
-      case BooleanQuery(cs, _) =>
-        cs.collect { case (o, c) if o != Occur.MustNot => scoreLeaves(c, boost) }.flatten
-      case BoostQuery(c, b)           => scoreLeaves(c, boost * b)
-      case DisjunctionMaxQuery(ds, _) => ds.flatMap(scoreLeaves(_, boost))
-      case _                          => Nil
-    }
-
-  /** One leaf term's per-doc score decomposition: tf, fieldnorm, idf, boost
-    * and the resulting BM25 contribution.
-    */
-  private def termDetail(
-      field: String, term: String, boost: Double, kind: String,
-      dfs: Map[(String, String), Long]): Option[DataFrame] = {
-    val df = dfs.getOrElse((field, term), 0L)
-    if (df == 0L) return None
-    val idf = BM25.idf(df, totalDocs(field))
-    Some(reader.postings
-      .filter(col("field") === field && col("term") === term)
-      .select(col("segment_id"),
-        explode(unpack(col("doc_ids"), col("tfs"), col("norms"), col("doc_count"))).as("p"))
-      .select(
-        col("segment_id"), col("p.doc_id").as("doc_id"),
-        lit(field).as("field"), lit(term).as("term"), lit(kind).as("kind"),
-        col("p.tf").as("tf"), col("p.norm_id").as("norm_id"),
-        lit(idf).as("idf"), lit(boost).as("boost"),
-        (BM25.scoreCol(col("p.tf"), col("p.norm_id"), idf, avgdl(field), fieldnorms) *
-          lit(boost)).as("contribution"),
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType)).as("positions")))
-  }
-
-  /** One phrase leaf's per-doc decomposition: the phrase scores as a single
-    * pseudo-term (tf = number of matching alignment windows, idf = Σ of the
-    * member terms' idfs — `phraseHits` semantics, Lucene/tantivy phrase
-    * weight), so its contribution column is EXACTLY the clause's score and
-    * sums with sibling leaves. `positions` lists the matched base-term
-    * alignment positions (pre-filter ordinals), the reference's matched-
-    * window detail.
-    */
-  private def phraseDetail(
-      pq: PhraseQuery, boost: Double,
-      dfs: Map[(String, String), Long]): Option[DataFrame] = {
-    val PhraseQuery(field, terms, slop) = pq
-    if (terms.isEmpty) return None
-    if (terms.exists { case (_, t) => dfs.getOrElse((field, t), 0L) == 0L }) return None
-    val n = totalDocs(field)
-    val sumIdf = terms.map { case (_, t) => BM25.idf(dfs((field, t)), n) }.sum
-    val offsets = terms.map(_._1)
-    val phraseText =
-      terms.map(_._2).mkString("\"", " ", "\"") + (if (slop > 0) s"~$slop" else "")
-    // block-aligned candidate join (r6) — scoreLeaves guarantees ≥2 terms
-    // here (a single-term phrase explains as a TermLeaf); __mpos comes from
-    // the same phraseMatchPositions function the exploded plan applied
-    Some(BlockJoin.phraseDetailMatches(reader, field, terms.map(_._2), offsets, slop)
-      .select(
-        col("segment_id"), col("doc_id"),
-        lit(field).as("field"), lit(phraseText).as("term"), lit("phrase").as("kind"),
-        size(col("__mpos")).as("tf"), col("norm_id").as("norm_id"),
-        lit(sumIdf).as("idf"), lit(boost).as("boost"),
-        (BM25.scoreCol(size(col("__mpos")), col("norm_id"), sumIdf, avgdl(field), fieldnorms) *
-          lit(boost)).as("contribution"),
-        col("__mpos").as("positions")))
-  }
-
   /** Top-k with a per-hit `explain` JSON column (reference: the
     * `TopDocsCollector.explain` flag, `query.proto:245-246`) — each hit's
-    * score decomposed into leaf-term BM25 contributions `(field, term, tf,
-    * fieldnorm id, idf, boost, contribution)`. `term` leaves sum exactly to
-    * the score for pure term/boolean/boost trees; `phrase-term` and dismax
-    * leaves are informational (the combined score is not their plain sum).
-    * The k-row hit set broadcasts into the detail join, so explain costs one
-    * extra pushed-down scan of the query's terms — not a rescore.
+    * score decomposed into one detail row `(field, term, kind, tf, fieldnorm
+    * id, idf, boost, contribution, positions)` per occurrence of each leaf
+    * whose clause scored the hit, evaluated by the block kernel; the
+    * contributions sum to the score. A phrase is one `phrase` leaf (tf = its
+    * alignment count, idf = Σ term idfs, positions = the matched base-term
+    * positions); under a dismax, the non-best children carry the
+    * tieBreaker in their boost. A posting-backed tree is explained from the
+    * blocks its top-k walk decoded, in that walk's one job. In a tree with
+    * docs-table leaves each such leaf is one `const` row scored by its own
+    * plan.
     */
   def explainTopDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
-    val dfs = reader.termDfs(collectTerms(rq).distinct)
-    val top = topDocs(rq, limit, offset)
-    val details = scoreLeaves(rq, 1.0).distinct.flatMap {
-      case TermLeaf(f, t, b, k) => termDetail(f, t, b, k, dfs)
-      case PhraseLeaf(pq, b)    => phraseDetail(pq, b, dfs)
+    val explained = WandTopK.eligible(rq) match {
+      case Some(p) => WandTopK.explain(this, p, offset + limit).drop(offset)
+      case None =>
+        val dfs = reader.termDfs(collectTerms(rq).distinct)
+        val hits = topDocs(rq, limit, offset).collect().toSeq
+        val hitKeys = broadcast(spark.createDataFrame(hits.asJava, WandTopK.outSchema).select(keys.map(col): _*))
+        val p = WandTopK.tree(rq, q => Some(WandTopK.Opaque(q))).get
+        val opaque = p.nodes.collect { case WandTopK.Opaque(o) => o }.distinct.map { o =>
+          o -> plan(o, dfs).join(hitKeys, keys, "left_semi").select("segment_id", "doc_id", "score")
+            .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+        }.toMap
+        WandTopK.explainHits(this, p, dfs, hits, opaque)
     }
-    if (details.isEmpty)
-      return top.withColumn(
-        "explain",
-        to_json(struct(col("score").as("value"), lit("constant score").as("description"))))
-    val joined = details.reduce(_ unionByName _)
-      .join(broadcast(top.select(keys.map(col): _*)), keys, "inner")
-    top
-      .join(
-        joined
-          .groupBy(keys.map(col): _*)
-          .agg(array_sort(collect_list(struct(
-            col("field"), col("term"), col("kind"), col("tf"), col("norm_id"),
-            col("idf"), col("boost"), col("contribution"), col("positions")))).as("details")),
-        keys, "left")
+    spark.createDataFrame(explained.asJava, WandTopK.explainSchema)
       .select(
         col("segment_id"), col("doc_id"), col("score"),
         to_json(struct(
           col("score").as("value"),
-          lit("sum of leaf contributions (term+phrase exact; dismax informational)")
-            .as("description"),
+          lit("sum of leaf contributions").as("description"),
           col("details"))).as("explain"))
-      .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
   }
 }
 

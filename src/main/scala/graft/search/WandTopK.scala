@@ -1,5 +1,6 @@
 package graft.search
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -9,26 +10,32 @@ import org.apache.spark.sql.types._
 import graft.index.{FieldNorm, PostingCodec}
 
 /** Block-max WAND top-k (`[tantivy, public]`; SURVEY.md §4.2 — the one
-  * genuinely custom physical operator) and the one term-bag evaluator:
+  * genuinely custom physical operator) and the one scored-query evaluator:
   * compute BM25 top-k while *skipping the decode* of posting blocks whose
   * score upper bound cannot beat the running k-th best.
   *
-  * Routed shapes ([[eligible]]) — every `serve` shape:
-  *  - term bags with must / should / must-not clauses, any
-  *    `minimumShouldMatch`, and term disjunction-max, each term a `(field,
-  *    term)` pair scored with its own field's N and avgdl, so mixed-field
-  *    bags (`lang:en` must + `text` should) take the route too. One
-  *    [[BagKernel]] evaluates a bag over one doc-aligned `(segment_id,
-  *    block_id)` group: must clauses prune groups structurally (a group
-  *    missing any must term's block cannot contain a hit), must-not terms
-  *    are decoded for exclusion only, and dismax combines per-term scores
-  *    with the per-occurrence plan's `mx + tb·(sm − mx)` arithmetic;
-  *  - phrases of ≥2 terms: in a group where every term has a positional
-  *    block, the doc ids are intersected and [[PostingUdfs.phraseTf]] runs on
-  *    the positions; the score is `BM25(Σ idf, phrase_tf, first term's
-  *    norm)`. The group's bound is the first term's `BM25(Σ idf,
-  *    block_max_tf, block_min_norm)`: safe, since phrase_tf never exceeds
-  *    the first term's tf and the first term's norm is the one scored.
+  * A query becomes a [[Plan]] tree ([[eligible]]), tantivy's Weight/Scorer
+  * tree (SURVEY §2.6): leaves are terms and phrases of ≥2 terms, nodes are
+  * booleans (must / should with a minimum / mustNot), boosts and
+  * disjunction-max, nested to any depth, each term a `(field, term)` pair
+  * scored with its own field's N and avgdl. One [[Kernel]] evaluates the tree
+  * over one doc-aligned `(segment_id, block_id)` group — every doc of a group
+  * shares its block id in every term's postings — and each node gives
+  * `viable` (can the group hold a hit at all), `bound` (an upper bound on any
+  * hit's score) and its hits:
+  *  - a term scores `BM25(idf, tf, norm)`;
+  *  - a phrase intersects its terms' doc ids and runs
+  *    [[PostingUdfs.phraseTf]] on the positions; it scores `BM25(Σ idf,
+  *    phrase_tf, first term's norm)` and is bounded by the first term's
+  *    `BM25(Σ idf, block_max_tf, block_min_norm)`, safe since phrase_tf never
+  *    exceeds the first term's tf;
+  *  - a boolean sums its must scores (left to right) and the scores of the
+  *    should clauses that match; dismax is `mx + tb·(sm − mx)`; a boost
+  *    multiplies. A bound counts a should clause only above 0, and a negative
+  *    boost leaves its subtree unbounded, so a clause that can lower a score
+  *    never prunes a group that holds a hit.
+  * Scores use the per-occurrence plan's operation order, so they equal it
+  * to the last bits or close to it (verified at 1e-12 in tests).
   * `Searcher` sends a plan here unless every term sits on a raw stored
   * field, whose docs-scan fast path is cheaper than a block walk.
   *
@@ -40,46 +47,57 @@ import graft.index.{FieldNorm, PostingCodec}
   * collect + `merge_fruits` in one pass), decoding a group only if its
   * score bound reaches the running threshold, and never offers a hit whose
   * doc is in the reader's tombstones. The hits return as a local relation,
-  * so collecting them starts no job.
+  * so collecting them starts no job. [[explain]] is the same walk; each hit
+  * is explained from its group's blocks, so it starts no second job.
   *
   * Full results ([[hits]]): the same kernel runs per group inside one
   * aggregation — `postings.filter → group by (segment_id, block_id) →
-  * kernel → explode`, one shuffle and no join. Both are result-identical to
-  * the per-occurrence plan (pruning is a pure optimization), verified in tests.
+  * kernel → explode`, one shuffle and no join; a tree of one `(field, term)`
+  * pair has one block per group and needs no shuffle at all.
   */
 object WandTopK {
 
-  /** A query shape the block-max route serves; `pairs` are the distinct
-    * `(field, term)` pairs whose posting blocks it reads.
-    */
-  sealed trait Plan { def pairs: Seq[(String, String)] }
+  /** A scored-query tree the kernel evaluates. */
+  sealed trait Plan {
+    /** The distinct `(field, term)` pairs whose posting blocks it reads. */
+    lazy val pairs: Seq[(String, String)] = (this match {
+      case Term(f, t)          => Seq((f, t))
+      case Phrase(f, ts, _, _) => ts.map((f, _))
+      case Bool(m, s, n, _)    => (m ++ s ++ n).flatMap(_.pairs)
+      case Boost(c, _)         => c.pairs
+      case DisMax(cs, _)       => cs.flatMap(_.pairs)
+      case Opaque(_)           => Nil
+    }).distinct
 
-  /** A term-bag query of `(field, term)` pairs. `dismax = Some(tb)` means
-    * the `should` terms combine as `mx + tb·(sm − mx)` (must/mustNot empty);
-    * None means BM25 sum. A hit matches every must term, no mustNot term and
-    * at least `minShould` should terms (at least one when there is no must).
-    */
-  final case class TermBag(
-      must: Seq[(String, String)],
-      should: Seq[(String, String)],
-      mustNot: Seq[(String, String)],
-      dismax: Option[Double],
-      minShould: Int = 0) extends Plan {
-    def pairs: Seq[(String, String)] = (must ++ should ++ mustNot).distinct
+    /** Every node of the tree, this one first. */
+    def nodes: Seq[Plan] = this +: (this match {
+      case Bool(m, s, n, _) => (m ++ s ++ n).flatMap(_.nodes)
+      case Boost(c, _)      => c.nodes
+      case DisMax(cs, _)    => cs.flatMap(_.nodes)
+      case _                => Nil
+    })
   }
 
-  object TermBag {
-    /** A bag whose terms all sit on `field`. */
-    def apply(field: String, must: Seq[String], should: Seq[String], mustNot: Seq[String],
-              dismax: Option[Double]): TermBag =
-      TermBag(must.map((field, _)), should.map((field, _)), mustNot.map((field, _)), dismax)
-  }
+  final case class Term(field: String, term: String) extends Plan
 
   /** A phrase of ≥2 terms on `field`, term i at position offset `offsets(i)`. */
-  final case class PhraseBag(field: String, terms: Seq[String], offsets: Seq[Int], slop: Int)
-      extends Plan {
-    def pairs: Seq[(String, String)] = terms.distinct.map((field, _))
-  }
+  final case class Phrase(field: String, terms: Seq[String], offsets: Seq[Int], slop: Int) extends Plan
+
+  /** A hit matches every must child, no mustNot child and at least
+    * `minShould` should children (≥ 1 when there is no must child).
+    */
+  final case class Bool(must: Seq[Plan], should: Seq[Plan], mustNot: Seq[Plan], minShould: Int)
+      extends Plan
+
+  final case class Boost(child: Plan, boost: Double) extends Plan
+
+  /** `mx + tieBreaker·(sm − mx)` over the matching children, tieBreaker in [0, 1]. */
+  final case class DisMax(children: Seq[Plan], tieBreaker: Double) extends Plan
+
+  /** A subtree postings cannot score (a docs-table leaf), for [[explainHits]]
+    * only: its scores for the explained hits come from its own plan.
+    */
+  final case class Opaque(query: Query) extends Plan
 
   /** The k best `(segment_id, doc_id, score)` rows in rank order, and how
     * many doc-aligned block groups the walk saw and how many it decoded
@@ -94,29 +112,19 @@ object WandTopK {
   /** One kernel hit of the full-result plan. */
   final case class DocScore(doc_id: Int, score: Double)
 
-  private val empty = Result(Nil, 0, 0)
-
-  private val outSchema = StructType(Seq(
+  private[search] val outSchema = StructType(Seq(
     StructField("segment_id", IntegerType, false),
     StructField("doc_id", IntegerType, false),
     StructField("score", DoubleType, false)))
 
-  /** Candidate hit ordered by (score desc, segment asc, doc asc). */
-  private final case class Hit(score: Double, seg: Int, doc: Int)
-  private val hitOrd: Ordering[Hit] =
-    Ordering.by((h: Hit) => (-h.score, h.seg, h.doc))
-
-  /** Per-doc accumulator inside one block group. Must scores accumulate in
-    * must-clause order (left-associated, matching the per-occurrence plan's
-    * `__s0 + __s1 + …`), should scores in should-clause order.
-    */
-  private final class Acc {
-    var mustSeen = 0
-    var mustScore = 0.0
-    var shouldSeen = 0
-    var shouldScore = 0.0
-    var mx = Double.NegativeInfinity
-  }
+  /** Explained hits: `outSchema` plus one detail row per scoring leaf. */
+  private[search] val explainSchema = StructType(outSchema.fields :+ StructField("details",
+    ArrayType(StructType(Seq(
+      StructField("field", StringType), StructField("term", StringType),
+      StructField("kind", StringType), StructField("tf", IntegerType),
+      StructField("norm_id", IntegerType), StructField("idf", DoubleType),
+      StructField("boost", DoubleType), StructField("contribution", DoubleType),
+      StructField("positions", ArrayType(IntegerType)))))))
 
   /** A scored term's (or phrase's) idf and its field's avgdl. */
   private final case class Weight(idf: Double, avgdl: Double, fieldnorms: Boolean) {
@@ -128,7 +136,7 @@ object WandTopK {
     }
   }
 
-  /** The per-occurrence plan's weight of term `t` given its df: a field
+  /** The per-occurrence plan's weight of a term given its df: a field
     * without a fieldstats row scores with N = 0 and avgdl = 0.
     */
   private def weight(searcher: Searcher, df: Long, field: String): Weight = {
@@ -136,11 +144,13 @@ object WandTopK {
     Weight(BM25.idf(df, st.nDocs), st.avgdl, searcher.fieldnorms)
   }
 
-  /** The block columns both routes read, in this order. */
+  /** The block columns every route reads, in this order (`positions` last,
+    * and only when a phrase needs it).
+    */
   private val BlockCols = Seq("field", "term", "segment_id", "block_id", "doc_count",
     "block_max_tf", "block_min_norm", "doc_ids", "tfs", "norms")
-  private val Field = 0
-  private val Term = 1
+  private val FieldCol = 0
+  private val TermCol = 1
   private val Seg = 2
   private val Block = 3
   private val Count = 4
@@ -151,274 +161,437 @@ object WandTopK {
   private val Norms = 9
   private val Positions = 10
 
+  private def blockCols(plan: Plan) =
+    (BlockCols ++ (if (plan.nodes.exists(_.isInstanceOf[Phrase])) Seq("positions") else Nil)).map(col)
+
   private type Group = java.util.Map[(String, String), Row]
 
   /** One group's blocks keyed by `(field, term)`. */
   private def group(rows: Iterator[Row]): Group = {
     val byTerm = new java.util.HashMap[(String, String), Row](8)
-    rows.foreach(r => byTerm.put((r.getString(Field), r.getString(Term)), r))
+    rows.foreach(r => byTerm.put((r.getString(FieldCol), r.getString(TermCol)), r))
     byTerm
   }
 
   private def docIds(r: Row): Array[Int] =
     PostingCodec.unpackDocIds(r.getAs[Array[Byte]](DocIds), r.getInt(Count))
 
-  /** The evaluator of one term bag over one `(segment_id, block_id)` group:
-    * must, should (with `minShould`), mustNot and dismax, emitting each
-    * matching doc's `(doc_id, score)` in doc order. `should` holds only
-    * indexed terms; `weight` covers every must and should term.
-    */
-  private final class BagKernel(
-      bag: TermBag, should: Seq[(String, String)], weight: Map[(String, String), Weight])
-      extends Serializable {
-    private val must = bag.must
-    private val nMust = must.size
-
-    /** Can the group hold a hit at all: every must term's block, and at
-      * least `minShould` should terms' blocks.
-      */
-    def viable(byTerm: Group): Boolean =
-      must.forall(byTerm.containsKey) &&
-        (bag.minShould <= 0 || should.count(byTerm.containsKey) >= bag.minShould)
-
-    /** An upper bound on the score of any hit in the group. */
-    def bound(byTerm: Group): Double = {
-      def blockUb(t: (String, String)): Double = {
-        val r = byTerm.get(t)
-        if (r == null) 0.0 else weight(t).score(r.getInt(MaxTf).toDouble, r.getInt(MinNorm))
-      }
-      bag.dismax match {
-        case Some(tb) =>
-          var sm = 0.0; var mx = 0.0
-          should.foreach { t => val u = blockUb(t); sm += u; if (u > mx) mx = u }
-          mx + tb * (sm - mx)
-        case None =>
-          var u = 0.0
-          must.foreach(t => u += blockUb(t))
-          should.foreach(t => u += blockUb(t))
-          u
-      }
-    }
-
-    /** Decode the (viable) group and emit every hit. */
-    def eval(byTerm: Group)(emit: (Int, Double) => Unit): Unit = {
-      val acc = new java.util.TreeMap[Integer, Acc]()
-      def decode(t: (String, String))(f: (Int, Double) => Unit): Unit = {
-        val r = byTerm.get(t)
-        if (r != null) {
-          val cnt = r.getInt(Count)
-          val ids = docIds(r)
-          val tfs = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](Tfs), cnt)
-          val norms = r.getAs[Array[Byte]](Norms)
-          val w = weight(t)
-          var i = 0
-          while (i < cnt) {
-            f(ids(i), w.score(tfs(i).toDouble, norms(i) & 0xFF))
-            i += 1
-          }
-        }
-      }
-      // a doc enters with the first must term (with no must, any should
-      // term); later terms only update docs already there
-      def entry(doc: Int, first: Boolean): Acc =
-        if (first) acc.computeIfAbsent(doc, _ => new Acc) else acc.get(doc)
-      must.zipWithIndex.foreach { case (t, ti) =>
-        decode(t) { (doc, s) =>
-          val a = entry(doc, ti == 0)
-          // enforce the intersection AND the left-associated sum order
-          if (a != null && a.mustSeen == ti) { a.mustScore += s; a.mustSeen = ti + 1 }
-        }
-      }
-      should.foreach { t =>
-        decode(t) { (doc, s) =>
-          val a = entry(doc, nMust == 0)
-          if (a != null) {
-            a.shouldScore += s
-            a.shouldSeen += 1
-            if (s > a.mx) a.mx = s
-          }
-        }
-      }
-      val excluded = new java.util.HashSet[Integer]()
-      bag.mustNot.foreach(t => Option(byTerm.get(t)).foreach(r => docIds(r).foreach(excluded.add(_))))
-      acc.forEach { (doc, a) =>
-        if (a.mustSeen == nMust && a.shouldSeen >= bag.minShould && !excluded.contains(doc)) {
-          val s = bag.dismax match {
-            case Some(tb) => a.mx + tb * (a.shouldScore - a.mx)
-            case None     => if (nMust == 0) a.shouldScore else a.mustScore + a.shouldScore
-          }
-          emit(doc, s)
-        }
-      }
-    }
+  /** One posting block, each column decoded on first use. */
+  private final class Decoded(r: Row) {
+    lazy val ids: Array[Int] = docIds(r)
+    lazy val tfs: Array[Int] = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](Tfs), r.getInt(Count))
+    lazy val positions: Array[Array[Int]] =
+      PostingCodec.unpackPositions(r.getAs[Array[Byte]](Positions), tfs)
+    private val norms = r.getAs[Array[Byte]](Norms)
+    def norm(i: Int): Int = norms(i) & 0xFF
   }
 
-  /** `bag`'s kernel given its terms' dfs, or None when it matches nothing:
-    * an unindexed must term, fewer indexed should terms than `minShould`,
-    * or neither a must nor an indexed should term.
-    */
-  private def kernel(searcher: Searcher, bag: TermBag,
-                     dfs: Map[(String, String), Long]): Option[BagKernel] = {
-    val should = bag.should.filter(dfs.contains)
-    if (bag.must.exists(t => !dfs.contains(t)) || should.size < bag.minShould ||
-        (bag.must.isEmpty && should.isEmpty)) None
-    else {
-      val ws = (bag.must ++ should).distinct.map(t => t -> weight(searcher, dfs(t), t._1)).toMap
-      Some(new BagKernel(bag, should, ws))
-    }
+  /** A node's hits in one group: doc ids ascending, with their scores. */
+  private final class Hits(val docs: Array[Int], val scores: Array[Double]) {
+    def indexOf(doc: Int): Int = java.util.Arrays.binarySearch(docs, doc)
   }
 
-  /** Every hit of `bag` as `(segment_id, doc_id, score)`, tombstoned docs
-    * included (the caller applies deletes), or None when it matches nothing.
-    * `dfs` are the termstats dfs of the bag's terms.
+  private val NoHits = new Hits(Array.emptyIntArray, Array.emptyDoubleArray)
+
+  private final class HitsBuilder {
+    private val docs = Array.newBuilder[Int]
+    private val scores = Array.newBuilder[Double]
+    def add(doc: Int, score: Double): Unit = { docs += doc; scores += score }
+    def result: Hits = new Hits(docs.result(), scores.result())
+  }
+
+  /** The union of clauses' hits over their dense doc range (a group's docs
+    * share one block id): per doc the clause-order score sum, the number of
+    * clauses matched and the best clause score.
     */
-  def hits(searcher: Searcher, bag: TermBag, dfs: Map[(String, String), Long]): Option[DataFrame] =
-    kernel(searcher, bag, dfs).map { k =>
-      val kernelUdf = udf { (blocks: Seq[Row]) =>
-        val out = Seq.newBuilder[DocScore]
-        val byTerm = group(blocks.iterator)
-        if (k.viable(byTerm)) k.eval(byTerm)((doc, s) => out += DocScore(doc, s))
-        out.result()
-      }.withName("bag_kernel")
-      val reader = searcher.reader
-      reader.postings
-        .filter(reader.termsFilter(bag.pairs))
-        .groupBy(col("segment_id"), col("block_id"))
-        .agg(collect_list(struct(BlockCols.map(col): _*)).as("blocks"))
-        .select(col("segment_id"), explode(kernelUdf(col("blocks"))).as("h"))
-        .select(col("segment_id"), col("h.doc_id").as("doc_id"), col("h.score").as("score"))
-    }
-
-  /** One top-k heap over the doc-aligned block groups, in group order;
-    * tombstoned docs are never offered.
-    */
-  private final class TopK(k: Int, tombstones: Map[Int, java.util.BitSet]) {
-    private val heap = new java.util.PriorityQueue[Hit](k, hitOrd.reverse) // worst on top
-    private var dead = NoTombstones
-    var decoded = 0
-
-    def threshold: Double =
-      if (heap.size < k) Double.NegativeInfinity else heap.peek().score
-
-    def offer(seg: Int, doc: Int, score: Double): Unit =
-      if (!dead.get(doc)) {
-        val h = Hit(score, seg, doc)
-        if (heap.size < k) heap.add(h)
-        else if (hitOrd.lt(h, heap.peek())) { heap.poll(); heap.add(h) }
-      }
-
-    /** Visit each `(segment_id, block_id)` group with its blocks keyed by
-      * `(field, term)`, then return the heap in rank order.
-      */
-    def walk(blocks: Array[Row])(visit: (Int, Group) => Unit): Result = {
-      val sorted = blocks.sortBy(r => (r.getInt(Seg), r.getInt(Block)))
-      var seen = 0
+  private final class Union(hs: Seq[Hits]) {
+    private val live = hs.filter(_.docs.nonEmpty)
+    private val lo = if (live.isEmpty) 0 else live.map(_.docs.head).min
+    private val n = if (live.isEmpty) 0 else live.map(_.docs.last).max - lo + 1
+    private val sum = new Array[Double](n)
+    private val cnt = new Array[Int](n)
+    private val mx = Array.fill(n)(Double.NegativeInfinity)
+    live.foreach { h =>
       var i = 0
-      while (i < sorted.length) {
-        val seg = sorted(i).getInt(Seg)
-        val blockId = sorted(i).getInt(Block)
-        var j = i + 1
-        while (j < sorted.length && sorted(j).getInt(Seg) == seg && sorted(j).getInt(Block) == blockId)
-          j += 1
-        dead = tombstones.getOrElse(seg, NoTombstones)
-        seen += 1
-        visit(seg, group(sorted.iterator.slice(i, j)))
-        i = j
+      while (i < h.docs.length) {
+        val j = h.docs(i) - lo
+        val s = h.scores(i)
+        sum(j) += s; cnt(j) += 1
+        if (s > mx(j)) mx(j) = s
+        i += 1
       }
-      val hits = heap.asScala.toSeq.sorted(hitOrd).map(h => Row(h.seg, h.doc, h.score))
-      Result(hits, seen, decoded)
+    }
+    def count(doc: Int): Int = { val j = doc - lo; if (j < 0 || j >= n) 0 else cnt(j) }
+    def sumOf(doc: Int): Double = { val j = doc - lo; if (j < 0 || j >= n) 0.0 else sum(j) }
+
+    /** `f(doc, sum, count, max)` for every doc of the union, in doc order. */
+    def foreach(f: (Int, Double, Int, Double) => Unit): Unit = {
+      var j = 0
+      while (j < n) { if (cnt(j) > 0) f(lo + j, sum(j), cnt(j), mx(j)); j += 1 }
     }
   }
+
+  /** Every doc present in all k sorted doc-id lists, in doc order: calls
+    * `f(i0, cursor)` with the doc's index `i0` in the lead list and
+    * `cursor(j)` its index in list j (`cursor(0) == i0`). Lists are sorted,
+    * so a single forward cursor per list suffices.
+    */
+  private def intersect(ids: Array[Array[Int]])(f: (Int, Array[Int]) => Unit): Unit = {
+    val k = ids.length
+    val cursor = new Array[Int](k)
+    val lead = ids(0)
+    var i0 = 0
+    while (i0 < lead.length) {
+      val d = lead(i0)
+      var all = true
+      var j = 1
+      while (all && j < k) {
+        val a = ids(j)
+        var c = cursor(j)
+        while (c < a.length && a(c) < d) c += 1
+        cursor(j) = c
+        all = c < a.length && a(c) == d
+        j += 1
+      }
+      if (all) { cursor(0) = i0; f(i0, cursor) }
+      i0 += 1
+    }
+  }
+
+  /** The evaluator of `root` over one `(segment_id, block_id)` group.
+    * `weights` holds every term and phrase leaf's weight; `opaque` the
+    * explained hits' scores of each [[Opaque]] leaf by `(segment_id, doc_id)`.
+    */
+  private final class Kernel(
+      val root: Plan, weights: Map[Plan, Weight], opaque: Map[Query, Map[(Int, Int), Double]])
+      extends Serializable {
+
+    /** Can the group hold a hit of `n` at all. */
+    def viable(n: Plan, g: Group): Boolean = n match {
+      case Term(f, t) => g.containsKey((f, t))
+      case Phrase(f, ts, _, _) =>
+        ts.forall { t => val r = g.get((f, t)); r != null && !r.isNullAt(Positions) }
+      case Bool(must, should, _, minShould) =>
+        must.forall(viable(_, g)) && should.count(viable(_, g)) >= minShould
+      case Boost(c, _)   => viable(c, g)
+      case DisMax(cs, _) => cs.exists(viable(_, g))
+      case Opaque(_)     => true
+    }
+
+    /** An upper bound on the score of any hit of the (viable) `n` in the group. */
+    def bound(n: Plan, g: Group): Double = n match {
+      case Term(f, t) =>
+        val r = g.get((f, t))
+        weights(n).score(r.getInt(MaxTf).toDouble, r.getInt(MinNorm))
+      case Phrase(f, ts, _, _) =>
+        val r = g.get((f, ts.head))
+        weights(n).score(r.getInt(MaxTf).toDouble, r.getInt(MinNorm))
+      case Bool(must, should, _, _) =>
+        var u = 0.0
+        must.foreach(c => u += bound(c, g))
+        should.foreach(c => if (viable(c, g)) u += math.max(0.0, bound(c, g)))
+        u
+      case Boost(c, b) =>
+        if (b > 0) b * bound(c, g) else if (b == 0) 0.0 else Double.PositiveInfinity
+      case DisMax(cs, tb) =>
+        var sm = 0.0; var mx = Double.NegativeInfinity
+        cs.foreach { c =>
+          if (viable(c, g)) { val u = bound(c, g); sm += math.max(0.0, u); if (u > mx) mx = u }
+        }
+        if (mx == Double.PositiveInfinity) mx else mx + tb * (sm - mx)
+      case Opaque(_) => Double.PositiveInfinity
+    }
+
+    /** One group's evaluation: each block decoded and each node's hits
+      * computed once. `wanted` are the docs explained, the only ones an
+      * [[Opaque]] leaf knows.
+      */
+    final class Eval(g: Group, seg: Int, wanted: Array[Int] = Array.emptyIntArray) {
+      private val blocks = new java.util.HashMap[(String, String), Decoded]()
+      private val memo = new java.util.HashMap[Plan, Hits]()
+
+      private def block(f: String, t: String): Decoded =
+        blocks.computeIfAbsent((f, t), k => new Decoded(g.get(k)))
+
+      def hits(n: Plan): Hits = {
+        var h = memo.get(n)
+        if (h == null) { h = if (viable(n, g)) compute(n) else NoHits; memo.put(n, h) }
+        h
+      }
+
+      private def positionsAt(bs: Seq[Decoded], cursor: Array[Int]): Seq[Seq[Int]] =
+        Seq.tabulate(bs.size)(t => ArraySeq.unsafeWrapArray(bs(t).positions(cursor(t))))
+
+      private def compute(n: Plan): Hits = n match {
+        case Term(f, t) =>
+          val b = block(f, t)
+          val w = weights(n)
+          new Hits(b.ids, Array.tabulate(b.ids.length)(i => w.score(b.tfs(i).toDouble, b.norm(i))))
+        case Phrase(f, ts, offsets, slop) =>
+          val bs = ts.map(block(f, _))
+          val w = weights(n)
+          val out = new HitsBuilder
+          intersect(bs.map(_.ids).toArray) { (i0, cursor) =>
+            val ptf = PostingUdfs.phraseTf(positionsAt(bs, cursor), offsets, slop)
+            if (ptf > 0) out.add(bs.head.ids(i0), w.score(ptf.toDouble, bs.head.norm(i0)))
+          }
+          out.result
+        case Bool(must, should, mustNot, minShould) =>
+          val sh = new Union(should.map(hits))
+          val not = mustNot.map(hits)
+          def ok(d: Int) = sh.count(d) >= minShould && !not.exists(_.indexOf(d) >= 0)
+          val out = new HitsBuilder
+          if (must.isEmpty) sh.foreach((d, s, _, _) => if (ok(d)) out.add(d, s))
+          else {
+            val mh = must.map(hits).toArray
+            intersect(mh.map(_.docs)) { (i0, cursor) =>
+              val d = mh(0).docs(i0)
+              if (ok(d)) {
+                // the per-occurrence plan's left-associated must sum, then + should
+                var s = mh(0).scores(i0)
+                var j = 1
+                while (j < mh.length) { s += mh(j).scores(cursor(j)); j += 1 }
+                out.add(d, if (should.isEmpty) s else s + sh.sumOf(d))
+              }
+            }
+          }
+          out.result
+        case Boost(c, b) =>
+          val h = hits(c)
+          new Hits(h.docs, h.scores.map(_ * b))
+        case DisMax(cs, tb) =>
+          val out = new HitsBuilder
+          new Union(cs.map(hits)).foreach((d, sm, _, mx) => out.add(d, mx + tb * (sm - mx)))
+          out.result
+        case Opaque(q) =>
+          val scores = opaque.getOrElse(q, Map.empty)
+          val out = new HitsBuilder
+          wanted.foreach(d => scores.get((seg, d)).foreach(out.add(d, _)))
+          out.result
+      }
+
+      /** The detail rows of `doc`, a hit of the root: one per occurrence of
+        * each leaf whose clause scored it, with the cumulative boost. Under a
+        * dismax the best child counts once and the others × tieBreaker, so
+        * the contributions sum to the score.
+        */
+      def details(doc: Int): Seq[Row] = {
+        val out = Seq.newBuilder[Row]
+        def leafRow(n: Plan, boost: Double): Row = n match {
+          case Term(f, t) =>
+            val b = block(f, t)
+            val i = java.util.Arrays.binarySearch(b.ids, doc)
+            val w = weights(n)
+            Row(f, t, "term", b.tfs(i), b.norm(i), w.idf, boost,
+              w.score(b.tfs(i).toDouble, b.norm(i)) * boost, null)
+          case Phrase(f, ts, offsets, slop) =>
+            val bs = ts.map(block(f, _))
+            val cursor = bs.map(b => java.util.Arrays.binarySearch(b.ids, doc)).toArray
+            val mpos = PostingUdfs.phraseMatchPositions(positionsAt(bs, cursor), offsets, slop)
+            val norm = bs.head.norm(cursor(0))
+            val w = weights(n)
+            Row(f, ts.mkString("\"", " ", "\"") + (if (slop > 0) s"~$slop" else ""), "phrase",
+              mpos.length, norm, w.idf, boost, w.score(mpos.length.toDouble, norm) * boost,
+              ArraySeq.unsafeWrapArray(mpos))
+          case Opaque(q) =>
+            Row(null, q.toString, "const", null, null, null, boost, opaque(q)((seg, doc)) * boost, null)
+          case _ => sys.error(s"not a leaf: $n")
+        }
+        def walk(n: Plan, boost: Double): Unit = n match {
+          case Bool(must, should, _, _) =>
+            must.foreach(walk(_, boost))
+            should.foreach(c => if (hits(c).indexOf(doc) >= 0) walk(c, boost))
+          case Boost(c, b) => walk(c, boost * b)
+          case DisMax(cs, tb) =>
+            val matched = cs.indices.flatMap { i =>
+              val h = hits(cs(i)); val j = h.indexOf(doc); if (j >= 0) Some(i -> h.scores(j)) else None
+            }
+            val best = matched.maxBy(_._2)._1
+            matched.foreach { case (i, _) => walk(cs(i), if (i == best) boost else boost * tb) }
+          case leaf => out += leafRow(leaf, boost)
+        }
+        walk(root, 1.0)
+        out.result()
+      }
+    }
+  }
+
+  /** `plan`'s kernel given its terms' dfs (a term without one is in no block). */
+  private def kernel(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long],
+                     opaque: Map[Query, Map[(Int, Int), Double]] = Map.empty): Kernel = {
+    def termWeight(f: String, t: String) = weight(searcher, dfs.getOrElse((f, t), 0L), f)
+    val weights: Map[Plan, Weight] = plan.nodes.collect {
+      case n @ Term(f, t) => n -> termWeight(f, t)
+      case n @ Phrase(f, ts, _, _) =>
+        // Σ idf in term order (Lucene/tantivy phrase weight), as the per-occurrence plan
+        val ws = ts.map(termWeight(f, _))
+        n -> ws.head.copy(idf = ws.map(_.idf).sum)
+    }.toMap
+    new Kernel(plan, weights, opaque)
+  }
+
+  /** Every hit of `plan` as `(segment_id, doc_id, score)`, tombstoned docs
+    * included (the caller applies deletes). `dfs` are the termstats dfs of
+    * the plan's terms.
+    */
+  def hits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): DataFrame = {
+    val k = kernel(searcher, plan, dfs)
+    val kernelUdf = udf { (blocks: Seq[Row]) =>
+      val h = new k.Eval(group(blocks.iterator), blocks.head.getInt(Seg)).hits(k.root)
+      Seq.tabulate(h.docs.length)(i => DocScore(h.docs(i), h.scores(i)))
+    }.withName("block_kernel")
+    val reader = searcher.reader
+    val scan = reader.postings.filter(reader.termsFilter(plan.pairs))
+    val blocks = struct(blockCols(plan): _*)
+    // one (field, term) pair has one block per group: no shuffle
+    val groups =
+      if (plan.pairs.size == 1) scan.select(col("segment_id"), array(blocks).as("blocks"))
+      else scan.groupBy(col("segment_id"), col("block_id")).agg(collect_list(blocks).as("blocks"))
+    groups
+      .select(col("segment_id"), explode(kernelUdf(col("blocks"))).as("h"))
+      .select(col("segment_id"), col("h.doc_id").as("doc_id"), col("h.score").as("score"))
+  }
+
+  /** Candidate hit ordered by (score desc, segment asc, doc asc), with the
+    * evaluation of the group it came from.
+    */
+  private final case class Hit(score: Double, seg: Int, doc: Int, eval: Kernel#Eval)
+  private val hitOrd: Ordering[Hit] =
+    Ordering.by((h: Hit) => (-h.score, h.seg, h.doc))
 
   private val NoTombstones = new java.util.BitSet(0)
 
-  /** Block-max top-k of `plan` in one job (see the object doc). */
-  def run(searcher: Searcher, plan: Plan, k: Int): Result = {
-    if (k <= 0) return empty
+  /** The k best hits of `plan` in rank order, and the groups seen and
+    * decoded: one job collects the plan's live blocks, one top-k heap walks
+    * the doc-aligned groups in order on the driver, offering no tombstoned
+    * doc.
+    */
+  private def walk(searcher: Searcher, plan: Plan, k: Int): (Seq[Hit], Int, Int) = {
+    if (k <= 0) return (Nil, 0, 0)
     val reader = searcher.reader
-    val phrase = plan.isInstanceOf[PhraseBag]
     // the one job: every live block of the plan's terms. Positions are not
     // filtered on: df must cover all of a term's blocks
     val blocks = reader.postings
       .filter(reader.termsFilter(plan.pairs))
-      .select((BlockCols ++ (if (phrase) Seq("positions") else Nil)).map(col): _*)
+      .select(blockCols(plan): _*)
       .collect()
+      .sortBy(r => (r.getInt(Seg), r.getInt(Block)))
     val dfs: Map[(String, String), Long] =
-      blocks.groupMapReduce(r => (r.getString(Field), r.getString(Term)))(_.getInt(Count).toLong)(_ + _)
-    val top = new TopK(k, reader.tombstones)
-    plan match {
-      case bag: TermBag =>
-        kernel(searcher, bag, dfs).fold(empty) { kn =>
-          top.walk(blocks) { (seg, byTerm) =>
-            // decode on ub >= threshold: a block whose bound exactly ties the
-            // kth score may hold a doc that wins the (segment, doc) tiebreak —
-            // prune only on strict inferiority to stay result-identical
-            if (kn.viable(byTerm) && kn.bound(byTerm) >= top.threshold) {
-              top.decoded += 1
-              kn.eval(byTerm)(top.offer(seg, _, _))
-            }
+      blocks.groupMapReduce(r => (r.getString(FieldCol), r.getString(TermCol)))(_.getInt(Count).toLong)(_ + _)
+    val kn = kernel(searcher, plan, dfs)
+    val heap = new java.util.PriorityQueue[Hit](k, hitOrd.reverse) // worst on top
+    def threshold = if (heap.size < k) Double.NegativeInfinity else heap.peek().score
+    var seen = 0
+    var decoded = 0
+    var i = 0
+    while (i < blocks.length) {
+      val seg = blocks(i).getInt(Seg)
+      val blockId = blocks(i).getInt(Block)
+      var j = i + 1
+      while (j < blocks.length && blocks(j).getInt(Seg) == seg && blocks(j).getInt(Block) == blockId)
+        j += 1
+      val g = group(blocks.iterator.slice(i, j))
+      seen += 1
+      // decode on ub >= threshold: a block whose bound exactly ties the kth
+      // score may hold a doc that wins the (segment, doc) tiebreak — prune
+      // only on strict inferiority to stay result-identical
+      if (kn.viable(kn.root, g) && kn.bound(kn.root, g) >= threshold) {
+        decoded += 1
+        val dead = reader.tombstones.getOrElse(seg, NoTombstones)
+        val e = new kn.Eval(g, seg)
+        val h = e.hits(kn.root)
+        var d = 0
+        while (d < h.docs.length) {
+          if (!dead.get(h.docs(d))) {
+            val hit = Hit(h.scores(d), seg, h.docs(d), e)
+            if (heap.size < k) heap.add(hit)
+            else if (hitOrd.lt(hit, heap.peek())) { heap.poll(); heap.add(hit) }
           }
-        }
-      case ph: PhraseBag => phraseTopK(searcher, ph, blocks, dfs, top)
-    }
-  }
-
-  private def phraseTopK(searcher: Searcher, ph: PhraseBag, blocks: Array[Row],
-                         dfs: Map[(String, String), Long], top: TopK): Result = {
-    val PhraseBag(field, terms, offsets, slop) = ph
-    val keys = terms.map((field, _))
-    // an unindexed term: no doc holds the phrase
-    if (keys.exists(t => !dfs.contains(t))) return empty
-    // Σ idf in term order (Lucene/tantivy phrase weight), as the per-occurrence plan
-    val ws = keys.map(t => weight(searcher, dfs(t), field))
-    val w = ws.head.copy(idf = ws.map(_.idf).sum)
-    top.walk(blocks) { (seg, byTerm) =>
-      val rows = keys.map(byTerm.get)
-      if (rows.forall(r => r != null && !r.isNullAt(Positions))) {
-        val r0 = rows.head
-        if (w.score(r0.getInt(MaxTf).toDouble, r0.getInt(MinNorm)) >= top.threshold) {
-          top.decoded += 1
-          val norms0 = r0.getAs[Array[Byte]](Norms)
-          BlockJoin.phraseDocs(rows.map(_.getAs[Array[Byte]](DocIds)), rows.map(_.getAs[Array[Byte]](Tfs)),
-              rows.map(_.getAs[Array[Byte]](Positions)), rows.map(_.getInt(Count))) { (doc, i0, pos) =>
-            val ptf = PostingUdfs.phraseTf(pos, offsets, slop)
-            if (ptf > 0) top.offer(seg, doc, w.score(ptf.toDouble, norms0(i0) & 0xFF))
-          }
+          d += 1
         }
       }
+      i = j
+    }
+    (heap.asScala.toSeq.sorted(hitOrd), seen, decoded)
+  }
+
+  /** Block-max top-k of `plan` in one job (see the object doc). */
+  def run(searcher: Searcher, plan: Plan, k: Int): Result = {
+    val (top, seen, decoded) = walk(searcher, plan, k)
+    Result(top.map(h => Row(h.seg, h.doc, h.score)), seen, decoded)
+  }
+
+  /** [[run]]'s k best hits as `explainSchema` rows, each explained from the
+    * blocks the walk decoded for it: no second job.
+    */
+  def explain(searcher: Searcher, plan: Plan, k: Int): Seq[Row] =
+    walk(searcher, plan, k)._1.map(h => Row(h.seg, h.doc, h.score, h.eval.details(h.doc)))
+
+  /** `hits` (`(segment_id, doc_id, score)` rows of `plan` in rank order) as
+    * `explainSchema` rows. The blocks of `plan`'s terms in the hits'
+    * segments are collected; a hit is explained in the group whose blocks
+    * hold it (or alone, when only [[Opaque]] leaves matched it). `dfs` are
+    * the termstats dfs, `opaque` each Opaque leaf's score per hit.
+    */
+  def explainHits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long], hits: Seq[Row],
+                  opaque: Map[Query, Map[(Int, Int), Double]]): Seq[Row] = {
+    val kn = kernel(searcher, plan, dfs, opaque)
+    val reader = searcher.reader
+    val segs = hits.map(_.getInt(0)).distinct
+    val blocks =
+      if (plan.pairs.isEmpty || hits.isEmpty) Array.empty[Row]
+      else reader.postings
+        .filter(reader.termsFilter(plan.pairs) && col("segment_id").isin(segs: _*))
+        .select(blockCols(plan): _*)
+        .collect()
+    val holders = blocks.map(r => (r.getInt(Seg), r.getInt(Block), docIds(r)))
+    def groupOf(seg: Int, doc: Int): (Int, Int) =
+      holders.collectFirst {
+        case (s, b, ids) if s == seg && java.util.Arrays.binarySearch(ids, doc) >= 0 => (s, b)
+      }.getOrElse((seg, -1 - doc))
+    val byGroup = blocks.groupBy(r => (r.getInt(Seg), r.getInt(Block)))
+    val explained = hits.zipWithIndex.groupBy { case (h, _) => groupOf(h.getInt(0), h.getInt(1)) }
+      .toSeq.flatMap { case (key @ (seg, _), hs) =>
+        val e = new kn.Eval(group(byGroup.getOrElse(key, Array.empty[Row]).iterator), seg,
+          hs.map(_._1.getInt(1)).sorted.toArray)
+        hs.map { case (h, rank) => rank -> Row(seg, h.getInt(1), h.getDouble(2), e.details(h.getInt(1))) }
+      }
+    explained.sortBy(_._1).map(_._2)
+  }
+
+  /** `q` as a kernel tree: terms and phrases of ≥2 terms are its leaves,
+    * booleans, boosts and dismax (tieBreaker in [0, 1]) its nodes, and
+    * `other` maps every other node (None: `q` is no tree). A one-term phrase
+    * is a term.
+    */
+  private[search] def tree(q: Query, other: Query => Option[Plan]): Option[Plan] = {
+    def all(qs: Seq[Query]): Option[Seq[Plan]] = {
+      val ps = qs.map(tree(_, other))
+      if (ps.forall(_.isDefined)) Some(ps.flatten) else None
+    }
+    q match {
+      case TermQuery(f, t)                => Some(Term(f, t))
+      case PhraseQuery(f, Seq((_, t)), _) => Some(Term(f, t))
+      case PhraseQuery(f, ts, slop) if ts.size >= 2 =>
+        Some(Phrase(f, ts.map(_._2), ts.map(_._1), slop))
+      case bq @ BooleanQuery(_, msm) =>
+        for (must <- all(bq.must); should <- all(bq.should); mustNot <- all(bq.mustNot)) yield {
+          // the per-occurrence plan applies msm only with should clauses, and
+          // without a must clause a hit needs at least one should clause
+          val minShould =
+            if (must.isEmpty) math.max(msm.getOrElse(1), 1)
+            else if (should.isEmpty) 0
+            else math.max(msm.getOrElse(0), 0)
+          Bool(must, should, mustNot, minShould)
+        }
+      case BoostQuery(c, b) => tree(c, other).map(Boost(_, b))
+      case DisjunctionMaxQuery(ds, tb) if tb >= 0.0 && tb <= 1.0 => all(ds).map(DisMax(_, tb))
+      case _ => other(q)
     }
   }
 
-  /** Recognize a block-max-eligible query: a single term or a one-term
-    * phrase; a term-bag boolean with a must or a should term, any
-    * minimumShouldMatch; a term dismax with tieBreaker in [0, 1]; or a
-    * phrase of ≥2 terms. Terms may sit on different fields. Duplicate terms
-    * within one occur group fall back to the per-occurrence plan (it sums
-    * the duplicate clause twice; the kernel scores each term once per group).
+  /** Recognize a block-max-eligible query: a tree whose leaves are all
+    * terms or phrases (see [[tree]]) and that reads at least one term.
     */
-  def eligible(q: Query): Option[Plan] = q match {
-    case TermQuery(f, t) => Some(TermBag(Nil, Seq((f, t)), Nil, None))
-    case PhraseQuery(f, Seq((_, t)), _) => Some(TermBag(Nil, Seq((f, t)), Nil, None))
-    case PhraseQuery(f, ts, slop) if ts.size >= 2 =>
-      Some(PhraseBag(f, ts.map(_._2), ts.map(_._1), slop))
-    case BooleanQuery(clauses, msm) =>
-      val termClauses = clauses.collect { case (o, TermQuery(f, t)) => (o, (f, t)) }
-      def occur(o: Occur) = termClauses.collect { case (`o`, t) => t }
-      val must = occur(Occur.Must)
-      val should = occur(Occur.Should)
-      val mustNot = occur(Occur.MustNot)
-      val distinctOk = must.distinct.size == must.size &&
-        should.distinct.size == should.size && mustNot.distinct.size == mustNot.size
-      // the per-occurrence plan applies msm only when there are should clauses
-      val minShould = if (should.isEmpty) 0 else math.max(msm.getOrElse(0), 0)
-      if (termClauses.size == clauses.size && distinctOk && (must.nonEmpty || should.nonEmpty))
-        Some(TermBag(must, should, mustNot, None, minShould))
-      else None
-    case DisjunctionMaxQuery(ds, tb) if tb >= 0.0 && tb <= 1.0 =>
-      val terms = ds.collect { case TermQuery(f, t) => (f, t) }
-      if (terms.size == ds.size && terms.nonEmpty && terms.distinct.size == terms.size)
-        Some(TermBag(Nil, terms, Nil, Some(tb)))
-      else None
-    case _ => None
-  }
+  def eligible(q: Query): Option[Plan] = tree(q, _ => None).filter(_.pairs.nonEmpty)
 }

@@ -345,6 +345,47 @@ class SearchSpec extends AnyFunSuite {
       assert(tfByKind.nonEmpty && tfByKind == positions)
     }
   }
+
+  private def contributions(json: String): Seq[Double] =
+    """"contribution":([-0-9.eE]+)""".r.findAllMatchIn(json).map(_.group(1).toDouble).toSeq
+
+  test("explainTopDocs: a nested should clause that fails for a hit lists none of its leaves") {
+    val nested = BooleanQuery(Seq(
+      (Occur.Must, TermQuery("text", "window")), (Occur.Must, TermQuery("text", "merge"))))
+    val q = BooleanQuery(Seq((Occur.Must, TermQuery("text", "spark")), (Occur.Should, nested)))
+    // hits holding `window` but not `merge`: the nested clause fails for them
+    val failed = searcher.search(BooleanQuery(Seq(
+        (Occur.Must, TermQuery("text", "spark")), (Occur.Must, TermQuery("text", "window")),
+        (Occur.MustNot, TermQuery("text", "merge")))))
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    assert(failed.nonEmpty)
+    val rows = searcher.explainTopDocs(q, 200).collect()
+    assert(rows.length == searcher.search(q).count())
+    assert(rows.exists(r => failed((r.getInt(0), r.getInt(1)))))
+    rows.foreach { r =>
+      val json = r.getString(3)
+      assert(math.abs(contributions(json).sum - r.getDouble(2)) < 1e-9, json)
+      if (failed((r.getInt(0), r.getInt(1)))) {
+        assert(!json.contains("\"term\":\"window\"") && !json.contains("\"term\":\"merge\""), json)
+        assert(contributions(json).size == 1, json)
+      }
+    }
+  }
+
+  test("explainTopDocs: a duplicated should clause is listed per occurrence") {
+    val q = BooleanQuery(Seq(
+      (Occur.Should, TermQuery("text", "spark")), (Occur.Should, TermQuery("text", "spark"))))
+    val single = searcher.search(TermQuery("text", "spark")).collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    val rows = searcher.explainTopDocs(q, 10).collect()
+    assert(rows.length == 10)
+    rows.foreach { r =>
+      val json = r.getString(3)
+      assert(math.abs(r.getDouble(2) - 2 * single((r.getInt(0), r.getInt(1)))) < 1e-9)
+      assert(contributions(json).size == 2, json)
+      assert(math.abs(contributions(json).sum - r.getDouble(2)) < 1e-9, json)
+    }
+  }
 }
 
 /** Single-token-field fast path (docs-scan term query) must be bitwise
@@ -388,12 +429,14 @@ class FastTermSpec extends AnyFunSuite {
     val slow = new Searcher(reader.reader, schemaFast.copy(storedFields = Nil))
     assert(reader.fastTermCi("lang").contains(false) && slow.fastTermCi("lang").isEmpty)
 
-    // the boolean is planned per occurrence, where its must term is a termHits leaf
+    // the boolean is planned per clause (its regex clause is no kernel
+    // leaf), where its must term is a termHits leaf
     for (q <- Seq[Query](
         TermQuery("lang", "en"),
-        WandSpec.perOccurrence(BooleanQuery(Seq(
+        BooleanQuery(Seq(
           (Occur.Must, TermQuery("lang", "en")),
-          (Occur.Should, TermQuery("text", "spark"))))))) {
+          (Occur.Should, TermQuery("text", "spark")),
+          (Occur.MustNot, RegexQuery("text", "zz.*")))))) {
       val fast = scores(reader, q)
       val ref = scores(slow, q)
       assert(fast.keySet == ref.keySet, s"doc sets differ for $q")

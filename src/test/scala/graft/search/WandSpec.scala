@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 
 import graft.TestSpark
 import graft.index.{FieldDef, IndexBuilder, IndexSchema}
-import graft.search.WandTopK.TermBag
 
 /** Block-max WAND must be result-identical to the exhaustive plan. */
 class WandSpec extends AnyFunSuite {
@@ -36,11 +35,11 @@ class WandSpec extends AnyFunSuite {
     new Searcher(new IndexReader(spark, dir), schema)
   }
 
-  /** The top `k` of `q` by the per-occurrence plan, which the block route
-    * cannot take (see [[WandSpec.perOccurrence]]).
+  /** The top `k` of `q` by the per-occurrence oracle, which never runs the
+    * block kernel (see [[PerOccurrence]]).
     */
   private def exhaustive(q: Query, k: Int, s: => Searcher = searcher) =
-    s.search(WandSpec.perOccurrence(q))
+    WandSpec.perOccurrence(s, q)
       .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
       .limit(k)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
@@ -57,7 +56,7 @@ class WandSpec extends AnyFunSuite {
 
   test("single term: WAND == exhaustive (bitwise scores)") {
     for (t <- Seq("w0", "w5", "w20")) {
-      val wand = topK(TermBag("text", Nil, Seq(t), Nil, None), 10)
+      val wand = topK(WandTopK.Term("text", t), 10)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       val base = exhaustive(TermQuery("text", t), 10)
       assert(wand.map(x => (x._1, x._2)).toSeq == base.map(x => (x._1, x._2)).toSeq)
@@ -68,25 +67,25 @@ class WandSpec extends AnyFunSuite {
   test("multi-term should bag: WAND == exhaustive") {
     val terms = Seq("w0", "w1", "w7", "w15")
     val q = BooleanQuery(terms.map(t => (Occur.Should, TermQuery("text", t): Query)))
-    val wand = topK(TermBag("text", Nil, terms, Nil, None), 15)
+    val wand = topK(WandTopK.eligible(q).get, 15)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     assertSame(wand, exhaustive(q, 15))
   }
 
   test("k larger than matches; missing terms") {
-    val wand = topK(TermBag("text", Nil, Seq("w49", "nosuchterm"), Nil, None), 1000)
+    val wand = topK(WandTopK.eligible(bool((Occur.Should, "w49"), (Occur.Should, "nosuchterm"))).get, 1000)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     val base = exhaustive(TermQuery("text", "w49"), 1000)
     assertSame(wand, base)
-    assert(topK(TermBag("text", Nil, Seq("nosuchterm"), Nil, None), 10).count() == 0)
+    assert(topK(WandTopK.Term("text", "nosuchterm"), 10).count() == 0)
   }
 
   test("topDocs auto-routes eligible queries through WAND") {
     val q = BooleanQuery(Seq(
       (Occur.Should, TermQuery("text", "w0")),
       (Occur.Should, TermQuery("text", "w3"))))
-    assert(WandTopK.eligible(q).contains(
-      WandTopK.TermBag("text", Nil, Seq("w0", "w3"), Nil, None)))
+    assert(WandTopK.eligible(q).contains(WandTopK.Bool(
+      Nil, Seq(WandTopK.Term("text", "w0"), WandTopK.Term("text", "w3")), Nil, 1)))
     val viaTopDocs = searcher.topDocs(q, 10)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     assertSame(viaTopDocs, exhaustive(q, 10))
@@ -149,7 +148,7 @@ class WandSpec extends AnyFunSuite {
     val q = DisjunctionMaxQuery(
       Seq(TermQuery("text", "w0"), TermQuery("text", "w3"), TermQuery("text", "w9")), 0.3)
     assert(WandTopK.eligible(q).contains(
-      WandTopK.TermBag("text", Nil, Seq("w0", "w3", "w9"), Nil, Some(0.3))))
+      WandTopK.DisMax(Seq("w0", "w3", "w9").map(WandTopK.Term("text", _)), 0.3)))
     assertSame(viaWand(q, 15), exhaustive(q, 15))
     // tieBreaker 0 (pure max) and 1 (pure sum) edge combiners
     for (tb <- Seq(0.0, 1.0)) {
@@ -159,10 +158,11 @@ class WandSpec extends AnyFunSuite {
   }
 
   test("ineligible shapes still fall back") {
-    // duplicate term in a group
-    assert(WandTopK.eligible(BooleanQuery(Seq(
+    // a duplicate term in a group is eligible: each occurrence scores
+    val dup = BooleanQuery(Seq(
       (Occur.Should, TermQuery("text", "w0")),
-      (Occur.Should, TermQuery("text", "w0"))))).isEmpty)
+      (Occur.Should, TermQuery("text", "w0"))))
+    assertSame(viaWand(dup, 10), exhaustive(dup, 10))
     // any minimumShouldMatch is eligible, with or without a must clause
     for (q <- Seq(
         BooleanQuery(Seq(
@@ -179,10 +179,10 @@ class WandSpec extends AnyFunSuite {
       (Occur.Should, TermQuery("other", "w3"))))
     assert(WandTopK.eligible(crossField).nonEmpty)
     assertSame(viaWand(crossField, 10), exhaustive(crossField, 10))
-    // non-term clause
+    // a docs-table clause
     assert(WandTopK.eligible(BooleanQuery(Seq(
       (Occur.Must, TermQuery("text", "w0")),
-      (Occur.Should, PhraseQuery("text", Seq((0, "w1"), (1, "w2")), 0))))).isEmpty)
+      (Occur.Should, RegexQuery("text", "w1.*"))))).isEmpty)
     // dismax with out-of-range tieBreaker
     assert(WandTopK.eligible(DisjunctionMaxQuery(
       Seq(TermQuery("text", "w0"), TermQuery("text", "w3")), 1.5)).isEmpty)
@@ -264,11 +264,10 @@ class WandSpec extends AnyFunSuite {
   }
 
   test("block-max bound prunes block groups on a skewed should-bag") {
-    val bag = WandTopK.TermBag("text", Nil, Seq("w0", "w25"), Nil, None)
-    val r = WandTopK.run(searcher, bag, 3)
+    val q = bool((Occur.Should, "w0"), (Occur.Should, "w25"))
+    val r = WandTopK.run(searcher, WandTopK.eligible(q).get, 3)
     assert(r.groupsDecoded < r.groupsSeen, s"decoded ${r.groupsDecoded} of ${r.groupsSeen} groups")
     assert(r.groupsDecoded > 0)
-    val q = BooleanQuery(bag.should.map { case (f, t) => (Occur.Should, TermQuery(f, t): Query) })
     assertSame(r.toDF(spark).collect().map(x => (x.getInt(0), x.getInt(1), x.getDouble(2))),
       exhaustive(q, 3))
   }
@@ -282,7 +281,7 @@ class WandSpec extends AnyFunSuite {
     for (q <- Seq(phrase(Seq("w0", "w1"), 0), phrase(Seq("w0", "w1"), 1),
                   phrase(Seq("w2", "w0"), 0), phrase(Seq("w0", "w1", "w2"), 2),
                   phrase(Seq("w0", "w0"), 0))) {
-      assert(WandTopK.eligible(q).exists(_.isInstanceOf[WandTopK.PhraseBag]), q.toString)
+      assert(WandTopK.eligible(q).exists(_.isInstanceOf[WandTopK.Phrase]), q.toString)
       val got = viaWand(q, 15)
       assert(got.nonEmpty, s"$q matches nothing on this corpus")
       assertSame(got, exhaustive(q, 15))
@@ -294,8 +293,7 @@ class WandSpec extends AnyFunSuite {
   test("phrases: an unindexed term gives no hits; a one-term phrase is a term bag; paging") {
     val missing = phrase(Seq("w0", "nosuchterm"), 0)
     assert(viaWand(missing, 10).isEmpty && exhaustive(missing, 10).isEmpty)
-    assert(WandTopK.eligible(phrase(Seq("w3"), 0)).contains(
-      WandTopK.TermBag("text", Nil, Seq("w3"), Nil, None)))
+    assert(WandTopK.eligible(phrase(Seq("w3"), 0)).contains(WandTopK.Term("text", "w3")))
     val q = phrase(Seq("w0", "w1"), 1)
     val page = searcher.topDocs(q, 10, offset = 5)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
@@ -370,9 +368,9 @@ class WandSpec extends AnyFunSuite {
   /** Full `search` of `q` equals the per-occurrence oracle's doc set and scores. */
   private def assertSameSearch(s: Searcher, q: Query): Unit = {
     val plan = s.search(q)
-    assert(plan.queryExecution.executedPlan.toString.contains("bag_kernel"), s"$q did not take the kernel")
+    assert(plan.queryExecution.executedPlan.toString.contains("block_kernel"), s"$q did not take the kernel")
     val got = rows(plan).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
-    val want = rows(s.search(WandSpec.perOccurrence(q))).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
+    val want = rows(WandSpec.perOccurrence(s, q)).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
     assert(want.nonEmpty, s"$q matches nothing on this corpus")
     assert(got.keySet == want.keySet, s"$q: doc sets differ")
     got.foreach { case (k, sc) => assert(math.abs(sc - want(k)) < 1e-12, s"$q at $k: $sc vs ${want(k)}") }
@@ -392,9 +390,8 @@ class WandSpec extends AnyFunSuite {
 
   test("the per-occurrence oracle never takes the kernel") {
     for (q <- bags) {
-      assert(WandTopK.eligible(WandSpec.perOccurrence(q)).isEmpty, q.toString)
-      assert(!searcher.search(WandSpec.perOccurrence(q)).queryExecution.executedPlan.toString
-        .contains("bag_kernel"), q.toString)
+      assert(!WandSpec.perOccurrence(searcher, q).queryExecution.executedPlan.toString
+        .contains("block_kernel"), q.toString)
     }
   }
 
@@ -402,7 +399,7 @@ class WandSpec extends AnyFunSuite {
     for (q <- bags) {
       val plan = searcher.plan(q, searcher.reader.termDfs(WandTopK.eligible(q).get.pairs))
         .queryExecution.executedPlan.toString
-      assert(plan.contains("bag_kernel"), s"$q: $plan")
+      assert(plan.contains("block_kernel"), s"$q: $plan")
       assert(plan.split("\n").count(_.contains("Exchange")) == 1, s"$q: $plan")
       assert(!plan.contains("Join"), s"$q: $plan")
     }
@@ -444,7 +441,7 @@ class WandSpec extends AnyFunSuite {
       def isDead(h: (Int, Int, Double)) = dead.get(h._1).exists(_.get(h._2))
       assert(want.length == 20 && !want.exists(isDead))
       // deleted docs sit among the would-be top-k
-      val unfiltered = rows(tombSearcher.plan(WandSpec.perOccurrence(q),
+      val unfiltered = rows(PerOccurrence.plan(tombSearcher, q,
           tombSearcher.reader.termDfs(WandTopK.eligible(q).get.pairs))
         .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc).limit(10))
       assert(unfiltered.exists(isDead), s"$q: no tombstone among the top 10")
@@ -477,18 +474,110 @@ class WandSpec extends AnyFunSuite {
       assert(rows(searcher.topDocs(q, 15)).toSeq != want.toSeq)
     }
   }
+
+  // ---- one query-tree kernel: phrases, boosts, nesting, dismax, duplicates ----
+
+  private def t(w: String): Query = TermQuery("text", w)
+
+  /** Tree shapes beyond term bags. */
+  private val trees: Seq[Query] = Seq(
+    // phrase in a boolean (the q_bool_phrase_mix shape)
+    BooleanQuery(Seq((Occur.Must, t("w0")), (Occur.Should, phrase(Seq("w1", "w2"), 0)))),
+    // boosted leaves and a boosted nested boolean (the q_boost_compose shape)
+    BooleanQuery(Seq(
+      (Occur.Should, BoostQuery(t("w0"), 2.0)), (Occur.Should, t("w3")),
+      (Occur.Should, BoostQuery(bool((Occur.Must, "w1"), (Occur.Should, "w5")), 0.5)))),
+    // a nested boolean with msm and a mustNot inside a should clause
+    BooleanQuery(Seq((Occur.Must, t("w1")), (Occur.Should, BooleanQuery(Seq(
+      (Occur.Should, t("w0")), (Occur.Should, t("w3")), (Occur.Should, t("w4")),
+      (Occur.MustNot, t("w2"))), Some(2))))),
+    // dismax over a phrase and a boolean
+    DisjunctionMaxQuery(Seq(phrase(Seq("w0", "w1"), 1), bool((Occur.Must, "w2"), (Occur.Should, "w3"))), 0.4),
+    // duplicate clauses
+    bool((Occur.Must, "w2"), (Occur.Must, "w2"), (Occur.Should, "w0"), (Occur.Should, "w0")),
+    // a zero and a negative boost under should clauses
+    BooleanQuery(Seq(
+      (Occur.Should, t("w5")), (Occur.Should, BoostQuery(t("w0"), 0.0)),
+      (Occur.Should, BoostQuery(t("w1"), -1.5)))),
+    // negative scores in the top k: the bound must not prune them
+    BooleanQuery(Seq((Occur.Should, BoostQuery(t("w0"), -1.0)), (Occur.Should, t("w40")))))
+
+  /** `q` through topDocs (k = 10, and k = 10 at offset 5) and search equals the oracle. */
+  private def assertTree(s: Searcher, q: Query): Unit = {
+    val want = exhaustive(q, 15, s)
+    assert(want.length == 15, s"$q: ${want.length} hits")
+    val top = s.topDocs(q, 10)
+    assert(top.queryExecution.executedPlan.toString.contains("LocalTableScan"), s"$q not routed")
+    assertSame(rows(top), want.take(10))
+    assertSame(rows(s.topDocs(q, 10, offset = 5)), want.slice(5, 15))
+    assertSameSearch(s, q)
+  }
+
+  test("trees: topDocs and search equal the per-occurrence oracle") {
+    trees.foreach(assertTree(searcher, _))
+    // the negative boost bites: some top hit scores below 0
+    assert(exhaustive(trees.last, 15).exists(_._3 < 0))
+  }
+
+  test("trees with tombstones: topDocs and search equal the oracle") {
+    trees.foreach(assertTree(tombSearcher, _))
+  }
+
+  test("trees with fieldnorms off: topDocs and search equal the oracle") {
+    val off = new Searcher(searcher.reader, schema, fieldnorms = false)
+    trees.foreach(assertTree(off, _))
+  }
+
+  private def executed(q: Query): String =
+    searcher.plan(q, searcher.reader.termDfs(WandTopK.eligible(q).get.pairs)).queryExecution.executedPlan.toString
+
+  test("full results: a one-pair tree has no Exchange; a phrase has one Exchange and no Join") {
+    for (q <- Seq(t("w0"), bool((Occur.Should, "w3"), (Occur.Should, "w3")), phrase(Seq("w0", "w0"), 0))) {
+      val plan = executed(q)
+      assert(plan.contains("block_kernel") && !plan.contains("Exchange"), s"$q: $plan")
+    }
+    for (q <- Seq(phrase(Seq("w0", "w1"), 0), phrase(Seq("w0", "w1", "w2"), 2))) {
+      val plan = executed(q)
+      assert(plan.contains("block_kernel"), s"$q: $plan")
+      assert(plan.split("\n").count(_.contains("Exchange")) == 1, s"$q: $plan")
+      assert(!plan.contains("Join"), s"$q: $plan")
+    }
+  }
+
+  test("a block-routed explainTopDocs starts exactly 1 job") {
+    for (q <- Seq(trees.head, phrase(Seq("w0", "w1"), 1), bags(2))) {
+      searcher.explainTopDocs(q, 10).collect()
+      val stages = jobStages { searcher.explainTopDocs(q, 10).collect(); () }
+      assert(stages.size == 1, s"$q: stages per job $stages")
+    }
+  }
+
+  test("explain rows equal the per-leaf detail scan where every matching leaf scores") {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val q = BooleanQuery(Seq(
+      (Occur.Must, phrase(Seq("w0", "w1"), 1)), (Occur.Should, BoostQuery(t("w3"), 2.0)),
+      (Occur.Should, t("w5")), (Occur.MustNot, t("w9"))))
+    val json = StructType(Seq(StructField("details", WandTopK.explainSchema("details").dataType)))
+    val explained = searcher.explainTopDocs(q, 10)
+    val got = explained
+      .select(col("segment_id"), col("doc_id"), explode(from_json(col("explain"), json)("details")).as("d"))
+      .select(col("segment_id"), col("doc_id"), col("d.*"))
+    val want = PerOccurrence.details(searcher, q)
+      .join(explained.select("segment_id", "doc_id"), Seq("segment_id", "doc_id"), "left_semi")
+    def keyed(df: org.apache.spark.sql.DataFrame) = df
+      .select("segment_id", "doc_id", "field", "term", "kind", "tf", "norm_id", "idf", "boost", "positions",
+        "contribution")
+      .collect().map(r => r.toSeq.init.map {
+        case s: scala.collection.Seq[_] => s.toList
+        case v => v
+      } -> r.getDouble(10)).toMap
+    val (g, w) = (keyed(got), keyed(want))
+    assert(g.size >= 20 && g.keySet == w.keySet)
+    g.foreach { case (k, c) => assert(math.abs(c - w(k)) < 1e-12, s"$k: $c vs ${w(k)}") }
+  }
 }
 
 object WandSpec {
-  /** `q` with every term leaf wrapped in `BoostQuery(_, 1.0)`: the same
-    * scores (× 1.0 is exact), planned per occurrence, since no block-route
-    * shape has a boost clause.
-    */
-  def perOccurrence(q: Query): Query = q match {
-    case t: TermQuery                 => BoostQuery(t, 1.0)
-    case BooleanQuery(cs, msm)        => BooleanQuery(cs.map { case (o, c) => (o, perOccurrence(c)) }, msm)
-    case BoostQuery(c, b)             => BoostQuery(perOccurrence(c), b)
-    case DisjunctionMaxQuery(ds, tb)  => DisjunctionMaxQuery(ds.map(perOccurrence), tb)
-    case other                        => other
-  }
+  /** `q`'s scored doc set by the per-occurrence oracle, tombstones applied. */
+  def perOccurrence(s: Searcher, q: Query): org.apache.spark.sql.DataFrame = PerOccurrence.search(s, q)
 }
