@@ -57,8 +57,17 @@ object IndexBuilder {
       persist: StorageLevel = StorageLevel.MEMORY_AND_DISK
   )
 
-  /** Per-segment doc/token totals observed during the docs write. */
+  /** Per-segment doc/token totals from the doc-id pass (`assignDocIds`). */
   final case class SegStat(segmentId: Int, nDocs: Long, tokensByField: Map[String, Long])
+
+  /** [[SegStat]]s, by segment id, from [[assignDocIds]]' pass-1 rows when
+    * its `extraAggs` are the per-field token sums, in schema field order.
+    */
+  private[index] def segStats(schema: IndexSchema, segAggs: Map[Int, Row]): Seq[SegStat] =
+    segAggs.toSeq.sortBy(_._1).map { case (seg, r) =>
+      SegStat(seg, r.getLong(0),
+        schema.fields.zipWithIndex.map { case (f, i) => f.name -> r.getLong(1 + i) }.toMap)
+    }
 
   /** One caller-provided token for the pre-tokenized input path — the
     * Spark-native shape of a tantivy `PreTokenizedString` entry
@@ -864,90 +873,35 @@ object IndexBuilder {
     StructField("posting_bytes", LongType, false)
   ))
 
-  /** Pack token rows `(segment_id, doc_id, field, term, tf, norm_id,
-    * positions)` into posting-block rows via ONE range shuffle keyed by
-    * (segment, field, term, block): block keying spreads head terms across
-    * ~(docs/blockSpan) keys (skew salt), range partitioning gives term-sorted
-    * output files (Parquet stats pruning), and the streaming sort-merge pack
-    * replaces an object hash aggregate (no per-group buffers, fully
-    * spillable Tungsten sort). Shared by fresh builds and segment merges.
+  /** One posting-block row of [[packSchema]] from its postings in doc
+    * order: doc ids, tfs, norm bytes and, for position-recording fields,
+    * each doc's packed position run (else null).
     */
-  def packPostings(
-      tokens: DataFrame,
-      blockBits: Int,
-      parts: Int,
-      recordPositions: Map[String, Boolean]
-  ): DataFrame = {
-    val spark = tokens.sparkSession
-    val bcRecPos = spark.sparkContext.broadcast(recordPositions)
-    val parted = tokens
-      .select(
-        col("segment_id"), col("doc_id"), col("field"), col("term"),
-        col("tf"), col("norm_id"), col("positions"))
-      .withColumn("block_id", shiftright(col("doc_id"), blockBits).cast(IntegerType))
-      // hash, not range: RangePartitioning's sampling job would execute the
-      // upstream plan (for merges: the posting unpack + rebase join) twice
-      .repartition(parts, col("segment_id"), col("field"), col("term"), col("block_id"))
-      .sortWithinPartitions("segment_id", "field", "term", "block_id", "doc_id")
-
-    parted.mapPartitions { rows =>
-      val recPos = bcRecPos.value
-      new Iterator[Row] {
-        private val it = rows.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          val head = it.head
-          val seg = head.getInt(0)
-          val field = head.getString(2)
-          val term = head.getString(3)
-          val blockId = head.getInt(7)
-          val docIds = new scala.collection.mutable.ArrayBuffer[Int](64)
-          val tfs = new scala.collection.mutable.ArrayBuffer[Int](64)
-          val norms = new scala.collection.mutable.ArrayBuffer[Int](64)
-          val poss = new scala.collection.mutable.ArrayBuffer[Array[Byte]](64)
-          var posLen = 0
-          val withPos = recPos.getOrElse(field, false)
-          var more = true
-          while (more && it.hasNext) {
-            val r = it.head
-            if (r.getInt(0) == seg && r.getString(2) == field && r.getString(3) == term &&
-                r.getInt(7) == blockId) {
-              it.next()
-              docIds += r.getInt(1)
-              tfs += r.getInt(4)
-              norms += r.getInt(5)
-              if (withPos) {
-                val pb = r.getAs[Array[Byte]](6)
-                poss += pb
-                posLen += pb.length
-              }
-            } else more = false
-          }
-          val docIdsA = docIds.toArray
-          val tfsA = tfs.toArray
-          val docIdsB = PostingCodec.packDocIds(docIdsA)
-          val tfsB = PostingCodec.packVarInts(tfsA)
-          val normsB = norms.map(_.toByte).toArray
-          // block positions = concatenation of the pre-packed per-doc runs
-          // (bit-identical to packing the decoded arrays here)
-          val posB = if (withPos) {
-            val b = new Array[Byte](posLen)
-            var o = 0
-            poss.foreach { pb => System.arraycopy(pb, 0, b, o, pb.length); o += pb.length }
-            b
-          } else null
-          val bytes = docIdsB.length.toLong + tfsB.length + normsB.length +
-            (if (posB == null) 0 else posB.length)
-          Row(
-            field, term, seg, blockId,
-            docIdsA.length, docIdsA.head, docIdsA.last,
-            tfsA.max, norms.min,
-            tfsA.map(_.toLong).sum,
-            docIdsB, tfsB, normsB, posB, bytes
-          )
-        }
-      }
-    }(Encoders.row(packSchema))
+  private[index] def packBlock(
+      field: String, term: String, seg: Int, block: Int,
+      docIds: Array[Int], tfs: Array[Int], norms: Array[Byte], pos: Array[Array[Byte]]
+  ): Row = {
+    val docIdsB = PostingCodec.packDocIds(docIds)
+    val tfsB = PostingCodec.packVarInts(tfs)
+    val posB = if (pos == null) null else {
+      val b = new PostingCodec.ByteVec(pos.map(_.length).sum)
+      pos.foreach(run => b.append(run, 0, run.length))
+      b.toArray
+    }
+    var maxTf = 0
+    var minNorm = 255
+    var sumTf = 0L
+    var i = 0
+    while (i < docIds.length) {
+      if (tfs(i) > maxTf) maxTf = tfs(i)
+      if ((norms(i) & 0xFF) < minNorm) minNorm = norms(i) & 0xFF
+      sumTf += tfs(i)
+      i += 1
+    }
+    val bytes = docIdsB.length.toLong + tfsB.length + norms.length +
+      (if (posB == null) 0 else posB.length)
+    Row(field, term, seg, block, docIds.length, docIds(0), docIds(docIds.length - 1),
+      maxTf, minNorm, sumTf, docIdsB, tfsB, norms, posB, bytes)
   }
 
   /** Growable primitive int buffer — `ArrayBuffer[Int]` boxes every append,
@@ -1091,12 +1045,12 @@ object IndexBuilder {
     * bottleneck at every core count).
     *
     * A block whose docId range straddles an input-partition boundary yields
-    * one fragment per partition; the reduce side merges consecutive
-    * fragments after a range shuffle on (segment, field, term, block) —
-    * fragments never interleave (partitions hold disjoint contiguous doc
-    * ranges), so the merged block bytes are IDENTICAL to a single-pass pack:
-    * only the absolute first docId varint of each later run is rewritten as
-    * a delta.
+    * one fragment per partition; [[reduceFragments]] (the reduce segment
+    * merges share) merges them after a hash shuffle on (segment, field,
+    * term). A build's fragments never interleave (partitions hold disjoint
+    * contiguous doc ranges), so they concatenate into block bytes IDENTICAL
+    * to a single-pass pack: only the absolute first docId varint of each
+    * later run is rewritten as a delta.
     */
   def packFromAnalyzed(
       analyzed: DataFrame,
@@ -1213,14 +1167,22 @@ object IndexBuilder {
       }
     }(Encoders.row(packSchema))
 
-    // reduce: HASH-shuffle the packed fragments on (segment, field, term) and
-    // merge the (rare) partition-boundary splits; single-fragment blocks pass
-    // through with zero decode. Hash, not range: RangePartitioning runs a
-    // sampling job that would EXECUTE THE ENTIRE MAP-SIDE PACK A SECOND TIME
-    // just to pick bounds. Hash keeps all of a term's blocks in one file per
-    // segment, and the within-partition sort below keeps row-group min/max
-    // stats tight for term-predicate pruning — the pruning queries actually
-    // use; only cross-FILE range locality is given up.
+    reduceFragments(fragments, parts)
+  }
+
+  /** The fragment reduce both segment writers share (builds from
+    * [[packFromAnalyzed]], merges from `Maintenance.mergeSegments`):
+    * HASH-shuffle [[packSchema]] fragments on (segment, field, term), sort
+    * each partition by (segment, field, term, block, first_doc), and merge
+    * each run of one (segment, field, term, block) with [[mergeFragments]];
+    * single-fragment blocks pass through with zero decode. Hash, not range:
+    * RangePartitioning runs a sampling job that would EXECUTE THE ENTIRE
+    * MAP SIDE A SECOND TIME just to pick bounds. Hash keeps all of a term's
+    * blocks in one file per segment, and the within-partition sort keeps
+    * row-group min/max stats tight for term-predicate pruning — the pruning
+    * queries actually use; only cross-FILE range locality is given up.
+    */
+  private[index] def reduceFragments(fragments: DataFrame, parts: Int): DataFrame =
     fragments
       .repartition(parts, col("segment_id"), col("field"), col("term"))
       .sortWithinPartitions("segment_id", "field", "term", "block_id", "first_doc")
@@ -1239,18 +1201,21 @@ object IndexBuilder {
           }
         }
       }(Encoders.row(packSchema))
-  }
 
   private def sameKey(a: Row, b: Row): Boolean =
     a.getInt(2) == b.getInt(2) && a.getInt(3) == b.getInt(3) &&
       a.getString(0) == b.getString(0) && a.getString(1) == b.getString(1)
 
   /** Merge fragments of one (segment, field, term, block), ordered by
-    * first_doc: binary runs concatenate; only each later run's leading
-    * absolute docId varint is rewritten as a delta from the previous run's
-    * last docId — yielding bytes identical to a single-pass pack.
+    * first_doc, into bytes identical to a single-pass pack. When each run
+    * starts after the previous run's last doc (a build's partition-boundary
+    * splits), the binary runs concatenate and only each later run's leading
+    * absolute docId varint is rewritten as a delta. Runs that interleave (a
+    * merge's fragments from different old blocks) are decoded, merged by
+    * doc and re-packed.
     */
   private def mergeFragments(run: Seq[Row]): Row = {
+    if (run.sliding(2).exists(p => p(1).getInt(5) <= p(0).getInt(6))) return mergeInterleaved(run)
     var docLen = 0
     var tfLen = 0
     var normLen = 0
@@ -1308,6 +1273,29 @@ object IndexBuilder {
       docB, tfs, norms, pos, bytes)
   }
 
+  private def mergeInterleaved(run: Seq[Row]): Row = {
+    val withPos = run.head.get(13) != null
+    val docs = new IntBuf(64)
+    val tfs = new IntBuf(64)
+    val norms = new PostingCodec.ByteVec(64)
+    val pos = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
+    run.foreach { r =>
+      val n = r.getInt(4)
+      val t = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](11), n)
+      PostingCodec.unpackDocIds(r.getAs[Array[Byte]](10), n).foreach(docs += _)
+      t.foreach(tfs += _)
+      val nb = r.getAs[Array[Byte]](12)
+      norms.append(nb, 0, nb.length)
+      if (withPos) pos ++= PostingCodec.slicePositions(r.getAs[Array[Byte]](13), t)
+    }
+    val (d, t, nm) = (docs.toArray, tfs.toArray, norms.toArray)
+    val order = d.indices.sortBy(d(_)).toArray
+    val h = run.head
+    packBlock(h.getString(0), h.getString(1), h.getInt(2), h.getInt(3),
+      order.map(d(_)), order.map(t(_)), order.map(nm(_)),
+      if (withPos) order.map(pos(_)) else null)
+  }
+
   private val timing = sys.env.get("GRAFT_BUILD_TIMING").contains("1")
   private def timed[A](name: String)(f: => A): A =
     if (!timing) f
@@ -1333,9 +1321,7 @@ object IndexBuilder {
       indexDir: String,
       buildId: String,
       conf: BuildConf = BuildConf(),
-      segOffset: Int = 0,
-      mergeDepth: Int = 0,
-      parentSegments: Seq[Int] = Nil
+      segOffset: Int = 0
   ): Seq[Int] = {
     val parts =
       if (conf.buildPartitions > 0) conf.buildPartitions
@@ -1416,10 +1402,7 @@ object IndexBuilder {
     val lenAggs = schema.fields.map(f => sum(col(s"__len_${f.name}")).as(s"tt_${f.name}"))
     val (analyzed, sortedHandle, totalDocs, segAggs) =
       timed("tokenize+sort+docids")(assignDocIds(sortedTok, parts, conf.persist, lenAggs))
-    val segStats: Seq[SegStat] = segAggs.toSeq.sortBy(_._1).map { case (seg, r) =>
-      SegStat(seg, r.getLong(0),
-        schema.fields.zipWithIndex.map { case (f, i) => f.name -> r.getLong(1 + i) }.toMap)
-    }
+    val segStats = IndexBuilder.segStats(schema, segAggs)
 
     // ---- docs table (doc store + fast fields + fieldnorms) ----
     // written DIRECTLY from the cached (segment, key)-sorted partitions: no
@@ -1439,12 +1422,6 @@ object IndexBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // zstd effort for the bulk index writes: posting payloads are already
-    // entropy-packed varints, so zstd's default level 3 buys ~2% size over
-    // level 1 at ~25% of the write stage's cpu — level 1 is the right
-    // default for the hot build path (callers can override the option via
-    // the standard hadoop conf)
-    val zstdLevel = "parquet.compression.codec.zstd.level"
     // (near-)distinct columns make the parquet dictionary writer hash every
     // value only to overflow its 1 MB page and fall back to plain — the
     // dictionary writers were ~8% of build JFR samples. Disable it for:
@@ -1484,70 +1461,82 @@ object IndexBuilder {
     // failure stays primary, a concurrent docs failure is secondary
     var primary: Throwable = null
     try {
-      timed("postings-pack-write")(
-        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, recordPositions).write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .option(zstdLevel, "1")
-          // the packed posting payloads are unique-per-row binaries: the
-          // dictionary writer hashes every value only to overflow and fall
-          // back to plain anyway (its rehash was a top-10 JFR leaf of the
-          // build) — turn it off for the payload columns, keep it for the
-          // low-cardinality field/term columns
-          .option("parquet.enable.dictionary#doc_ids", "false")
-          .option("parquet.enable.dictionary#tfs", "false")
-          .option("parquet.enable.dictionary#norms", "false")
-          .option("parquet.enable.dictionary#positions", "false")
-          // near-distinct per-block scalars: same overflow-then-fallback
-          // waste as the payloads (doc_count/max_tf/min_norm stay
-          // dictionaried — they live in small value ranges)
-          .option("parquet.enable.dictionary#first_doc", "false")
-          .option("parquet.enable.dictionary#last_doc", "false")
-          .option("parquet.enable.dictionary#sum_tf", "false")
-          .option("parquet.enable.dictionary#posting_bytes", "false")
-          .partitionBy("segment_id")
-          .parquet(s"$indexDir/postings"))
+      timed("postings-pack-write")(writePostings(
+        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, recordPositions),
+        indexDir))
     } catch { case t: Throwable => primary = t; throw t }
     finally {
       try Await.result(docsJob, Duration.Inf)
       catch { case t: Throwable => if (primary == null) throw t else primary.addSuppressed(t) }
     }
 
-    // stats re-read ONLY the narrow stat columns of the written blocks —
-    // column pruning makes this far cheaper than caching the full blocks
-    // (persisting them serialized every posting binary through the columnar
-    // cache, a memory-bandwidth tax the pack stage paid at every core count)
-    val segIds = (segOffset until segOffset + conf.numSegments).toSeq
-    val statCols = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("segment_id").isin(segIds.map(Integer.valueOf): _*))
-      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
-    // termstats is ~vocab-sized, orders of magnitude below docs — 64k-doc
-    // chunks keep its write at a handful of tasks instead of `parts` tiny
-    // ones (24 near-empty tasks measured 4× the run-time of 6)
-    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId, statCols,
-      segStats, mergeDepth, parentSegments))
+    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId, segStats, 0, Nil))
 
     sortedHandle.unpersist()
     segs
   }
 
-  /** Per-segment termstats/fieldstats from the just-built (still cached)
-    * postings/docs DataFrames, plus an append-only metrics lineage row per
-    * segment.
-    *
-    * @return the non-empty segment ids written (from the doc-count agg — no
-    *         extra read of the docs table)
+  // zstd effort for the bulk index writes: posting payloads are already
+  // entropy-packed varints, so zstd's default level 3 buys ~2% size over
+  // level 1 at ~25% of the write stage's cpu — level 1 is the right
+  // default for the hot build path (callers can override the option via
+  // the standard hadoop conf)
+  private val zstdLevel = "parquet.compression.codec.zstd.level"
+
+  /** Write packed [[packSchema]] blocks into the `postings` table, replacing
+    * only the segment partitions present (dynamic partition overwrite).
     */
-  private def writeStats(
+  private[index] def writePostings(blocks: DataFrame, indexDir: String): Unit =
+    blocks.write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option(zstdLevel, "1")
+      // the packed posting payloads are unique-per-row binaries: the
+      // dictionary writer hashes every value only to overflow and fall
+      // back to plain anyway (its rehash was a top-10 JFR leaf of the
+      // build) — turn it off for the payload columns, keep it for the
+      // low-cardinality field/term columns
+      .option("parquet.enable.dictionary#doc_ids", "false")
+      .option("parquet.enable.dictionary#tfs", "false")
+      .option("parquet.enable.dictionary#norms", "false")
+      .option("parquet.enable.dictionary#positions", "false")
+      // near-distinct per-block scalars: same overflow-then-fallback
+      // waste as the payloads (doc_count/max_tf/min_norm stay
+      // dictionaried — they live in small value ranges)
+      .option("parquet.enable.dictionary#first_doc", "false")
+      .option("parquet.enable.dictionary#last_doc", "false")
+      .option("parquet.enable.dictionary#sum_tf", "false")
+      .option("parquet.enable.dictionary#posting_bytes", "false")
+      .partitionBy("segment_id")
+      .parquet(s"$indexDir/postings")
+
+  /** Per-segment termstats from the written posting blocks, fieldstats from
+    * the doc-id pass's piggy-backed aggregates (`segStats`), plus an
+    * append-only metrics lineage row per segment. The stats tail of both
+    * segment writers: builds pass depth 0 and no parents, merges their
+    * parents' depth + 1 and the merged segment ids.
+    *
+    * @return the segment ids of `segStats`, sorted (builds: the non-empty
+    *         segments, from the doc-count agg — no extra read of the docs
+    *         table)
+    */
+  private[index] def writeStats(
       spark: SparkSession,
       schema: IndexSchema,
       indexDir: String,
       buildId: String,
-      postingsRead: DataFrame,
       segStats: Seq[SegStat],
       mergeDepth: Int,
       parentSegments: Seq[Int]
   ): Seq[Int] = {
+    val segIds = segStats.map(_.segmentId)
+    // stats re-read ONLY the narrow stat columns of the written blocks —
+    // column pruning makes this far cheaper than caching the full blocks
+    // (persisting them serialized every posting binary through the columnar
+    // cache, a memory-bandwidth tax the pack stage paid at every core count)
+    val postingsRead = spark.read.parquet(s"$indexDir/postings")
+      .filter(col("segment_id").isin(segIds.map(Integer.valueOf): _*))
+      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
     // ONE pass over the packed blocks feeds both the termstats table and the
     // per-segment metrics aggregates: the metrics sums ride the termstats
     // WRITE job as per-segment observed aggregates (`Observation`), so this
@@ -1565,7 +1554,6 @@ object IndexBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val segIds = segStats.map(_.segmentId)
     val obs = org.apache.spark.sql.Observation(s"seg-metrics-$buildId")
     val obsAggs: Seq[org.apache.spark.sql.Column] = segIds.flatMap(s => Seq(
       sum(when(col("segment_id") === s, col("pb")).otherwise(lit(0L))).as(s"pb_$s"),
@@ -1633,7 +1621,7 @@ object IndexBuilder {
     TinyParquet.appendMetrics(
       spark.sparkContext.hadoopConfiguration, s"$indexDir/metrics", metricRows)
     Await.result(fieldstatsJob, Duration.Inf)
-    segStats.map(_.segmentId).sorted
+    segIds.sorted
   }
 
   /** Fresh full build: build all segments from `pages` and publish snapshot

@@ -1,19 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.search.IndexReader
-
-/** Decoded posting entry with optional positions (top-level: Janino codegen
-  * cannot construct deeply nested case classes — a `Maintenance$FullEntry`
-  * fell back to interpreted projections on every merge). Positions stay in
-  * their per-doc packed byte form ([[PostingCodec.slicePositions]]): docId
-  * rebasing never touches doc-internal positions, so the merge moves them
-  * as opaque bytes.
-  */
-final case class FullEntry(doc_id: Int, tf: Int, norm_id: Int, positions: Array[Byte])
 
 /** Index maintenance: segment merges, merge policies, vacuum, delete-by-set,
   * incremental upsert ingestion — the write-path operators W1–W9 of
@@ -23,22 +14,23 @@ final case class FullEntry(doc_id: Int, tf: Int, norm_id: Int, positions: Array[
   */
 object Maintenance {
 
-  private val unpackFull: UserDefinedFunction =
-    udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], pos: Array[Byte], n: Int) => {
-      val ids = PostingCodec.unpackDocIds(docIds, n)
-      val tf = PostingCodec.unpackVarInts(tfs, n)
-      val ps =
-        if (pos == null) null
-        else PostingCodec.slicePositions(pos, tf)
-      Array.tabulate(n)(i =>
-        FullEntry(ids(i), tf(i), norms(i) & 0xFF, if (ps == null) null else ps(i)))
-    })
-
   /** Merge the given segments into one new segment (W3: `merge_segments`,
-    * `index_writer_holder.rs:403-414`): docIds are rebased to the rank of
-    * the doc key within the merged set, tombstoned docs are dropped, and
-    * postings are re-blocked with the same single-shuffle streaming pack as
-    * fresh builds. Publishes a new snapshot (live − merged + new).
+    * `index_writer_holder.rs:403-414`; tantivy's merger is a doc-id mapping
+    * plus a per-term posting stream merge) with the build's segment writer:
+    *
+    *  1. docs: tombstoned docs drop and the live ones re-rank by key into
+    *     the new segment through [[IndexBuilder.assignDocIds]], whose pass-1
+    *     aggregates give the new segment's doc and token totals;
+    *  2. postings: the assignment becomes one `old_doc → new_doc` array per
+    *     merged segment (−1 for a dropped doc), broadcast to a map side that
+    *     re-blocks every old posting block into fragments of the new blocks
+    *     ([[reblock]]); the build's [[IndexBuilder.reduceFragments]] merges
+    *     them into blocks byte-identical to a single-pass pack, and the
+    *     build's postings write stores them;
+    *  3. stats: the build's [[IndexBuilder.writeStats]], with the parents'
+    *     deepest `merge_depth` + 1 and the merged segment ids as lineage.
+    *
+    * Publishes a new snapshot (live − merged + new).
     *
     * @return the new segment id
     */
@@ -68,12 +60,14 @@ object Maintenance {
       .withColumnRenamed("key", "__key")
       .withColumn("segment_id", lit(newSeg))
     val sorted = IndexBuilder.shardAndSort(oldDocs, parts, oldDocs.columns.toSeq.map(col))
-    val (withIds0, handle, _, _) = IndexBuilder.assignDocIds(sorted, parts, conf.persist)
+    val lenAggs = schema.fields.map(f => sum(col(s"len_${f.name}")).as(s"tt_${f.name}"))
+    val (withIds0, handle, _, segAggs) =
+      IndexBuilder.assignDocIds(sorted, parts, conf.persist, lenAggs)
     // The docs write below OVERWRITES $indexDir/docs — the very path the
     // cached assignment plan reads from. That insert triggers Spark's
     // path-based recache, so a second consumption of the assignment (the
-    // posting-rebase mapping) would silently RECOMPUTE it from the rewritten
-    // table with fresh range-partition sampling — a different key→doc_id
+    // remap arrays) would silently RECOMPUTE it from the rewritten table
+    // with fresh range-partition sampling — a different key→doc_id
     // permutation than the one just written. (Latent since the merge was
     // written; caught by CompactionSpec's 64-segment two-wave stress test:
     // 821/1163 postings landed on wrong doc ids.) An EAGER localCheckpoint
@@ -94,40 +88,25 @@ object Maintenance {
       .partitionBy("segment_id")
       .parquet(s"$indexDir/docs")
 
-    // 2. postings: unpack → remap docIds (inner join drops tombstoned docs)
-    //    → re-block → streaming pack
-    val mapping = withIds.select(
-      col("old_seg"), col("old_doc"), col("doc_id").as("new_doc"))
-    val exploded = reader.postings
-      .filter(segCond)
-      .select(
-        col("field"), col("term"), col("segment_id").as("old_seg"),
-        explode(unpackFull(col("doc_ids"), col("tfs"), col("norms"), col("positions"),
-          col("doc_count"))).as("p"))
-      .select(
-        col("field"), col("term"), col("old_seg"),
-        col("p.doc_id").as("old_doc"), col("p.tf").as("tf"),
-        col("p.norm_id").as("norm_id"), col("p.positions").as("positions"))
-    val remapped = exploded
-      .join(mapping, Seq("old_seg", "old_doc"))
-      .select(
-        lit(newSeg).as("segment_id"), col("new_doc").as("doc_id"),
-        col("field"), col("term"), col("tf"), col("norm_id"), col("positions"))
-
+    // 2. postings: re-block the old blocks through the build's reduce
+    val remap = spark.sparkContext.broadcast(remapArrays(withIds))
     val recordPositions = schema.fields.map(f => f.name -> (f.record == "position")).toMap
-    IndexBuilder.packPostings(remapped, conf.blockBits, parts, recordPositions).write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/postings")
+    IndexBuilder.writePostings(
+      IndexBuilder.reduceFragments(
+        reblock(reader.postings.filter(segCond), remap, newSeg, conf.blockBits, recordPositions),
+        parts),
+      indexDir)
+    remap.destroy()
 
-    // 3. per-segment stats + lineage for the new segment
+    // 3. per-segment stats + lineage for the new segment (no pass-1 row when
+    //    every merged doc was tombstoned: the segment is empty)
     val parentDepth = reader.metrics
       .filter(segCond)
       .agg(max("merge_depth"))
       .collect()(0).getInt(0)
-    writeSegmentStats(spark, indexDir, schema, newSeg, buildId, parentDepth + 1,
-      segIds, parts)
+    val segStat = IndexBuilder.segStats(schema, segAggs).headOption.getOrElse(
+      IndexBuilder.SegStat(newSeg, 0L, schema.fields.map(_.name -> 0L).toMap))
+    IndexBuilder.writeStats(spark, schema, indexDir, buildId, Seq(segStat), parentDepth + 1, segIds)
 
     // 4. atomic publish FIRST: the new snapshot retires the merged segments.
     //    Only then drop their tombstones — if the clear fails or a reader
@@ -149,77 +128,88 @@ object Maintenance {
     newSeg
   }
 
-  private def writeSegmentStats(
-      spark: SparkSession,
-      indexDir: String,
-      schema: IndexSchema,
-      segId: Int,
-      buildId: String,
-      mergeDepth: Int,
-      parents: Seq[Int],
-      parts: Int
-  ): Unit = {
-    import org.apache.spark.sql.types._
-    // one narrow column-pruned scan of the merged segment's blocks drives
-    // termstats AND the per-segment metrics aggregates (same single-pass
-    // shape as the fresh-build stats path)
-    val termLevel = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("segment_id") === segId)
-      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
-      .groupBy("segment_id", "field", "term")
-      .agg(
-        sum("doc_count").cast(LongType).as("df"),
-        sum("sum_tf").as("total_tf"),
-        sum("posting_bytes").as("pb"))
-      .persist()
-    termLevel
-      .select("segment_id", "field", "term", "df", "total_tf")
-      .repartition(math.max(parts / 4, 1), col("field"), col("term"))
-      .sortWithinPartitions("field", "term")
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/termstats")
-
-    val docsRead = spark.read.parquet(s"$indexDir/docs").filter(col("segment_id") === segId)
-    val statAggs = schema.fields.map(f => sum(col(s"len_${f.name}")).as(s"tt_${f.name}"))
-    val statRow = docsRead.agg(count(lit(1)).as("n_docs"), statAggs: _*).collect()(0)
-    val fsRows = schema.fields.map(f =>
-      org.apache.spark.sql.Row(
-        f.name, statRow.getAs[Long]("n_docs"), statRow.getAs[Long](s"tt_${f.name}"), segId))
-    val fsSchema = StructType(Seq(
-      StructField("field", StringType, false),
-      StructField("n_docs", LongType, false),
-      StructField("total_tokens", LongType, true),
-      StructField("segment_id", IntegerType, false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(fsRows, 1), fsSchema)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/fieldstats")
-
-    val segAgg = termLevel
-      .groupBy("segment_id")
-      .agg(sum("pb").as("posting_bytes"), count(lit(1)).as("num_terms"))
-      .collect().headOption
-    termLevel.unpersist()
-    val (pBytes, nTerms) = segAgg.map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
-    val mRow = org.apache.spark.sql.Row(
-      buildId, segId, statRow.getAs[Long]("n_docs"), nTerms, pBytes, mergeDepth,
-      parents.map(_.toString).toArray, new java.sql.Timestamp(System.currentTimeMillis()))
-    val mSchema = StructType(Seq(
-      StructField("build_id", StringType, false),
-      StructField("segment_id", IntegerType, false),
-      StructField("num_docs", LongType, false),
-      StructField("num_terms", LongType, false),
-      StructField("posting_bytes", LongType, false),
-      StructField("merge_depth", IntegerType, false),
-      StructField("parent_segments", ArrayType(StringType, false), false),
-      StructField("created_at", TimestampType, false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(mRow), 1), mSchema)
-      .write.mode("append").parquet(s"$indexDir/metrics")
+  /** `old_doc → new_doc` per merged segment (−1: dropped) from the pinned
+    * assignment `(old_seg, old_doc, doc_id)`. Executors pack each
+    * partition's pairs into one int array per segment, so the driver
+    * collects 8 bytes per merged doc and keeps 4.
+    */
+  private def remapArrays(withIds: DataFrame): Map[Int, Array[Int]] = {
+    import withIds.sparkSession.implicits._
+    val chunks = withIds.select("old_seg", "old_doc", "doc_id").as[(Int, Int, Int)]
+      .mapPartitions { rows =>
+        val bySeg = scala.collection.mutable.HashMap[Int, scala.collection.mutable.ArrayBuilder.ofInt]()
+        rows.foreach { case (seg, oldDoc, newDoc) =>
+          bySeg.getOrElseUpdate(seg, new scala.collection.mutable.ArrayBuilder.ofInt) += oldDoc += newDoc
+        }
+        bySeg.iterator.map { case (seg, b) => (seg, b.result()) }
+      }
+      .collect()
+    chunks.groupBy(_._1).map { case (seg, cs) =>
+      val pairs = cs.flatMap(_._2)
+      var size = 0
+      var i = 0
+      while (i < pairs.length) { size = math.max(size, pairs(i) + 1); i += 2 }
+      val m = Array.fill(size)(-1)
+      i = 0
+      while (i < pairs.length) { m(pairs(i)) = pairs(i + 1); i += 2 }
+      seg -> m
+    }
   }
+
+  /** Map side of the merge's postings: decode each old posting block (doc
+    * ids, tfs, norm bytes, per-doc position runs), remap its docs and drop
+    * the −1s, sort by new doc — duplicate keys tie arbitrarily in the
+    * merged key order, so the remap need not be monotone even inside one
+    * old segment — and emit one [[IndexBuilder.packSchema]] fragment per
+    * new block (`new_doc >>> blockBits`) its docs land in.
+    */
+  private def reblock(
+      oldBlocks: DataFrame,
+      remap: Broadcast[Map[Int, Array[Int]]],
+      newSeg: Int,
+      blockBits: Int,
+      recordPositions: Map[String, Boolean]
+  ): DataFrame =
+    oldBlocks
+      .select("field", "term", "segment_id", "doc_count", "doc_ids", "tfs", "norms", "positions")
+      .mapPartitions { rows =>
+        val remaps = remap.value
+        rows.flatMap { r =>
+          val (field, term, n) = (r.getString(0), r.getString(1), r.getInt(3))
+          val m = remaps.getOrElse(r.getInt(2), Array.emptyIntArray)
+          val olds = PostingCodec.unpackDocIds(r.getAs[Array[Byte]](4), n)
+          val tfs = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](5), n)
+          val norms = r.getAs[Array[Byte]](6)
+          val pos =
+            if (recordPositions.getOrElse(field, false))
+              PostingCodec.slicePositions(r.getAs[Array[Byte]](7), tfs)
+            else null
+          // surviving postings as (new_doc << 32 | index), sorted = new-doc order
+          val keys = new Array[Long](n)
+          var k = 0
+          var i = 0
+          while (i < n) {
+            val d = if (olds(i) < m.length) m(olds(i)) else -1
+            if (d >= 0) { keys(k) = (d.toLong << 32) | i; k += 1 }
+            i += 1
+          }
+          java.util.Arrays.sort(keys, 0, k)
+          val out = Vector.newBuilder[Row]
+          var from = 0
+          while (from < k) {
+            val block = (keys(from) >>> 32).toInt >>> blockBits
+            var until = from + 1
+            while (until < k && ((keys(until) >>> 32).toInt >>> blockBits) == block) until += 1
+            val slice = java.util.Arrays.copyOfRange(keys, from, until)
+            val idx = slice.map(_.toInt)
+            out += IndexBuilder.packBlock(field, term, newSeg, block,
+              slice.map(key => (key >>> 32).toInt), idx.map(tfs(_)), idx.map(norms(_)),
+              if (pos == null) null else idx.map(pos(_)))
+            from = until
+          }
+          out.result()
+        }
+      }(Encoders.row(IndexBuilder.packSchema))
 
   /** Append tombstones for a doc-set (W/S8: delete by query — callers pass
     * `searcher.search(query)` output).

@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Binary codec for posting blocks.
   *
   * A block holds the postings of one `(field, term, segment, block_id)` key,
@@ -20,15 +18,6 @@ import scala.collection.mutable.ArrayBuffer
   *   - positions: per doc, `tf` delta-encoded varint positions, concatenated
   */
 object PostingCodec {
-
-  def writeVarInt(buf: ArrayBuffer[Byte], v0: Int): Unit = {
-    var v = v0
-    while ((v & ~0x7F) != 0) {
-      buf += ((v & 0x7F) | 0x80).toByte
-      v >>>= 7
-    }
-    buf += v.toByte
-  }
 
   /** Growable primitive byte writer for the pack hot paths —
     * `ArrayBuffer[Byte]` is unspecialized (it boxes every appended byte into
@@ -88,9 +77,6 @@ object PostingCodec {
     }
   }
 
-  /** One decoded posting. */
-  final case class Posting(docId: Int, tf: Int, normId: Int, positions: Array[Int])
-
   def packDocIds(sortedDocIds: Array[Int]): Array[Byte] = {
     val buf = new ByteVec(sortedDocIds.length * 2)
     var prev = 0
@@ -148,8 +134,8 @@ object PostingCodec {
   }
 
   /** Split a block's `positions` bytes back into per-doc byte runs (no
-    * decode — varints are only walked to find the boundaries). The merge
-    * path uses this to carry positions through docId rebasing untouched.
+    * decode — varints are only walked to find the boundaries). Segment
+    * merges use this to carry positions through docId rebasing untouched.
     */
   def slicePositions(bytes: Array[Byte], tfs: Array[Int]): Array[Array[Byte]] = {
     val out = new Array[Array[Byte]](tfs.length)

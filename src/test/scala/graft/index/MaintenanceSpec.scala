@@ -109,6 +109,121 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(new IndexReader(spark, dir).termDfs(window).values.sum == liveWindow)
   }
 
+  test("merge re-blocks postings exactly as the per-occurrence oracle: small blocks, tombstones, three record kinds") {
+    // blockBits 4 (16-doc blocks) over 5 segments of ~60 docs: every old
+    // block straddles new blocks, and fragments from different old
+    // segments interleave inside each new block
+    val dir = Files.createTempDirectory("graft-merge-oracle").toString
+    val schema3 = IndexSchema("doc_id", Seq(
+      FieldDef("text", "summa", "position"),
+      FieldDef("title", "summa", "freq"),
+      FieldDef("tag", "raw", "basic")), Seq("text"))
+    val conf = IndexBuilder.BuildConf(numSegments = 5, blockBits = 4)
+    val rnd = new scala.util.Random(21)
+    val df = corpus(300, 21).map { case (id, text) =>
+      (id, text, Vector.fill(1 + rnd.nextInt(4))(vocab(rnd.nextInt(vocab.size))).mkString(" "),
+        s"tag${rnd.nextInt(5)}")
+    }.toDF("doc_id", "text", "title", "tag")
+    IndexBuilder.build(spark, df, schema3, dir, "b0", conf)
+    val r0 = new IndexReader(spark, dir)
+    assert(Maintenance.deleteDocs(spark, dir,
+      r0.docs.filter(pmod(xxhash64(col("key")), lit(3)) === 0)) > 60)
+
+    val r1 = new IndexReader(spark, dir)
+    val segs = r1.snapshot.get.segments.sorted.take(4)
+    val oldLive = MergeCheck.liveDocs(r1, segs)
+    val newSeg = Maintenance.mergeSegments(spark, dir, schema3, segs, "m1", conf)
+    MergeCheck.assertMatchesOracle(spark, dir, schema3, segs, newSeg, oldLive, conf.blockBits)
+  }
+
+  test("merge with duplicate keys: each doc's postings agree with its docs row; counts unchanged") {
+    // keys 0..29 twice inside the build (same key → same segment), and keys
+    // 20..59 again across segments through a DoNothing upsert: the merged
+    // key order ties duplicates arbitrarily, so old → new doc ids need not
+    // be monotone inside one old segment
+    val dir = Files.createTempDirectory("graft-merge-dupkeys").toString
+    val conf = IndexBuilder.BuildConf(numSegments = 3, blockBits = 4)
+    val first = corpus(130, 31).map { case (i, t) => (i % 100, t) }
+    IndexBuilder.build(spark, first.toDF("doc_id", "text"), schema, dir, "b0", conf)
+    val upsert = corpus(40, 32).map { case (i, t) => (i + 20, t) }
+    Maintenance.addDocuments(spark, dir, schema, upsert.toDF("doc_id", "text"), "up1",
+      Maintenance.ConflictStrategy.DoNothing, conf.copy(numSegments = 1))
+
+    val phrases = Seq(("spark", "window"), ("merge", "table"), ("query", "filter"))
+    def counts(): Seq[Long] = {
+      val s = new Searcher(new IndexReader(spark, dir), schema)
+      vocab.map(t => s.count(TermQuery("text", t))) ++
+        phrases.map { case (a, b) => s.count(PhraseQuery("text", Seq((0, a), (1, b)), 0)) }
+    }
+    val before = counts()
+    assert(before.sum > 0)
+    val newSeg = Maintenance.mergeSegments(spark, dir, schema,
+      Snapshots.latest(spark, dir).get.segments, "m1", conf)
+    assert(counts() == before)
+
+    val sumTf = scala.collection.mutable.HashMap[Int, Int]().withDefaultValue(0)
+    val normOf = scala.collection.mutable.HashMap[Int, Int]()
+    spark.read.parquet(s"$dir/postings")
+      .filter(col("segment_id") === newSeg && col("field") === "text")
+      .select("doc_count", "doc_ids", "tfs", "norms").collect().foreach { r =>
+        val n = r.getInt(0)
+        val docs = PostingCodec.unpackDocIds(r.getAs[Array[Byte]](1), n)
+        val tfs = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](2), n)
+        val norms = r.getAs[Array[Byte]](3)
+        docs.indices.foreach { i =>
+          sumTf(docs(i)) += tfs(i)
+          val prev = normOf.put(docs(i), norms(i) & 0xFF)
+          assert(prev.forall(_ == (norms(i) & 0xFF)), s"doc ${docs(i)}: two norm bytes")
+        }
+      }
+    val docRows = spark.read.parquet(s"$dir/docs").filter(col("segment_id") === newSeg)
+      .select("doc_id", "len_text", "norm_text").collect()
+    assert(docRows.length == 130 + 40)
+    docRows.foreach { r =>
+      val d = r.getInt(0)
+      assert(sumTf(d) == r.getInt(1), s"doc $d: Σ tf ${sumTf(d)} != len_text ${r.getInt(1)}")
+      assert(normOf.get(d).contains(r.getInt(2)), s"doc $d: norm ${normOf.get(d)} != ${r.getInt(2)}")
+    }
+  }
+
+  test("merging fully tombstoned segments publishes an empty live segment") {
+    val dir = Files.createTempDirectory("graft-merge-empty").toString
+    val conf = IndexBuilder.BuildConf(numSegments = 3)
+    IndexBuilder.build(spark, corpus(90, 41).toDF("doc_id", "text"), schema, dir, "b0", conf)
+    val r0 = new IndexReader(spark, dir)
+    val segs = r0.snapshot.get.segments.sorted
+    val gone = segs.take(2)
+    val keptDocs = r0.docs.filter(col("segment_id") === segs(2)).count()
+    Maintenance.deleteDocs(spark, dir,
+      r0.docs.filter(col("segment_id").isin(gone.map(Integer.valueOf): _*)))
+
+    val newSeg = Maintenance.mergeSegments(spark, dir, schema, gone, "m1", conf)
+    assert(Snapshots.latest(spark, dir).get.segments.sorted == Seq(segs(2), newSeg))
+    // zero tokens: a null total (the sum over no docs) reads as 0
+    val fs = spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)
+      .select(col("field"), col("n_docs"), coalesce(col("total_tokens"), lit(0L))).collect()
+    assert(fs.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq == Seq(("text", 0L, 0L)))
+    val m = new IndexReader(spark, dir).metrics.filter(col("segment_id") === newSeg).collect()
+    assert(m.length == 1)
+    assert(m.head.getAs[Long]("num_docs") == 0L && m.head.getAs[Long]("num_terms") == 0L &&
+      m.head.getAs[Long]("posting_bytes") == 0L && m.head.getAs[Int]("merge_depth") == 1)
+    assert(Maintenance.liveSegmentStats(spark, dir).map(t => (t._1, t._2)).toMap
+      .get(newSeg).contains(0L))
+
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    assert(s.search(AllQuery).filter(col("segment_id") === newSeg).count() == 0)
+    assert(s.search(TermQuery("text", "spark")).filter(col("segment_id") === newSeg).count() == 0)
+    assert(s.count(AllQuery) == keptDocs)
+    val sparkDocs = s.count(TermQuery("text", "spark"))
+
+    // the empty segment stays an ordinary merge candidate
+    val created = Maintenance.autoCompact(spark, dir, schema, "c", minNumSegments = 2, conf)
+    assert(created.size == 1)
+    assert(Snapshots.latest(spark, dir).get.segments == created)
+    val s2 = new Searcher(new IndexReader(spark, dir), schema)
+    assert(s2.count(AllQuery) == keptDocs && s2.count(TermQuery("text", "spark")) == sparkDocs)
+  }
+
   test("delete-by-query tombstones, then merge bakes them in") {
     val dir = Files.createTempDirectory("graft-del").toString
     val df = corpus(100, 5).toDF("doc_id", "text")
@@ -412,6 +527,7 @@ class CompactionSpec extends org.scalatest.funsuite.AnyFunSuite {
     // round 1: 64 equal-size segments share one log layer -> fixpoint
     val created1 = Maintenance.autoCompact(spark, dir, schema, "c64")
     assert(created1.nonEmpty)
+    MergeCheck.assertCompactionMatchesOracle(spark, dir, schema, created1)
     val live1 = Snapshots.latest(spark, dir).get.segments
     assert(live1.size < 8, s"compaction left ${live1.size} segments")
     val s1 = new Searcher(new IndexReader(spark, dir), schema)
@@ -430,6 +546,7 @@ class CompactionSpec extends org.scalatest.funsuite.AnyFunSuite {
     val phraseMid = keyScores(sMid, phrase)
     val created2 = Maintenance.autoCompact(spark, dir, schema, "c64b")
     assert(created2.nonEmpty)
+    MergeCheck.assertCompactionMatchesOracle(spark, dir, schema, created2)
     val live2 = Snapshots.latest(spark, dir).get.segments
     assert(live2.size < 8)
     val s2 = new Searcher(new IndexReader(spark, dir), schema)
@@ -458,5 +575,84 @@ class CompactionSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(depths.max >= 2, s"expected chained merge_depth >= 2, got ${depths.toSeq}")
     val parents = rows.flatMap(r => r.getSeq[String](r.fieldIndex("parent_segments")).map(_.toInt)).toSet
     assert(created1.exists(parents.contains), "round 2 merge should chain on round 1's output")
+  }
+}
+
+/** Checks a merged segment against [[MergeOracle]], the per-occurrence
+  * merge path: its `postings` rows (every column, binaries as hex), and its
+  * `termstats` and `fieldstats` rows against sums over those rows and over
+  * the merged docs. Keys must be unique among the merged live docs, since
+  * the oracle's `(old_seg, old_doc) → new_doc` mapping is a join on key.
+  */
+private object MergeCheck {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.scalatest.Assertions._
+
+  /** `(old_seg, old_doc, key)` of the given segments' live docs, collected
+    * (tombstones of merged segments are cleared by the merge).
+    */
+  def liveDocs(r: graft.search.IndexReader, segs: Seq[Int]): DataFrame = {
+    val spark = r.spark
+    import spark.implicits._
+    r.applyDeletes(r.docs.filter(col("segment_id").isin(segs.map(Integer.valueOf): _*)))
+      .select(col("segment_id"), col("doc_id"), col("key")).as[(Int, Int, String)]
+      .collect().toSeq.toDF("old_seg", "old_doc", "key")
+  }
+
+  private def hexRows(df: DataFrame): Seq[String] =
+    IndexDigest.rowJson(df, binary = hex).collect().map(_.getString(0)).toSeq.sorted
+
+  def assertMatchesOracle(
+      spark: SparkSession,
+      dir: String,
+      schema: IndexSchema,
+      oldSegs: Seq[Int],
+      newSeg: Int,
+      oldLive: DataFrame,
+      blockBits: Int
+  ): Unit = {
+    val newDocs = spark.read.parquet(s"$dir/docs").filter(col("segment_id") === newSeg)
+    val mapping = oldLive.join(newDocs.select(col("key"), col("doc_id").as("new_doc")), "key")
+      .select("old_seg", "old_doc", "new_doc")
+    val nDocs = newDocs.count()
+    assert(mapping.count() == nDocs, "merged keys must map one to one")
+    val postings = spark.read.parquet(s"$dir/postings")
+    val expected = MergeOracle.postings(
+      postings.filter(col("segment_id").isin(oldSegs.map(Integer.valueOf): _*)),
+      mapping, schema, newSeg, blockBits, 4)
+    val actual = postings.filter(col("segment_id") === newSeg)
+    val (e, a) = (hexRows(expected), hexRows(actual))
+    assert(e.nonEmpty || nDocs == 0)
+    assert(a == e, s"segment $newSeg postings differ from the oracle: " +
+      s"${a.diff(e).take(3)} not expected, ${e.diff(a).take(3)} missing")
+
+    val termstats = expected.groupBy("segment_id", "field", "term").agg(
+      sum("doc_count").cast("long").as("df"), sum("sum_tf").as("total_tf"))
+    assert(IndexDigest(spark.read.parquet(s"$dir/termstats").filter(col("segment_id") === newSeg)) ==
+      IndexDigest(termstats), s"segment $newSeg termstats")
+    val fieldstats = schema.fields.map(f => newDocs.agg(
+      lit(f.name).as("field"), count(lit(1)).as("n_docs"),
+      sum(col(s"len_${f.name}")).cast("long").as("total_tokens"),
+      lit(newSeg).as("segment_id"))).reduce(_ unionByName _)
+    assert(IndexDigest(spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)) ==
+      IndexDigest(fieldstats), s"segment $newSeg fieldstats")
+  }
+
+  /** [[assertMatchesOracle]] for every segment one compaction created, with
+    * parents from its metrics row and their docs read from disk (no
+    * tombstones: every parent doc was live at merge time).
+    */
+  def assertCompactionMatchesOracle(
+      spark: SparkSession, dir: String, schema: IndexSchema, created: Seq[Int]): Unit = {
+    val docs = spark.read.parquet(s"$dir/docs")
+    created.foreach { seg =>
+      val m = spark.read.parquet(s"$dir/metrics").filter(col("segment_id") === seg).collect()
+      assert(m.length == 1)
+      val parents = m.head.getSeq[String](m.head.fieldIndex("parent_segments")).map(_.toInt)
+      val oldLive = docs.filter(col("segment_id").isin(parents.map(Integer.valueOf): _*))
+        .select(col("segment_id").as("old_seg"), col("doc_id").as("old_doc"), col("key"))
+      assertMatchesOracle(spark, dir, schema, parents, seg, oldLive,
+        IndexBuilder.BuildConf().blockBits)
+    }
   }
 }
