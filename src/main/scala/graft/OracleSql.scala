@@ -467,9 +467,10 @@ object OracleSql {
 
   /** SimHash near-dup pairs — mirrors Dedup.simhashPairs with the
     * oracle-portable word-hash family (two char folds mod 4294967291 packed
-    * as the high/low 32 bits). The 64-bit value is never packed here: bit i
-    * is read straight from the appropriate fold (low 32 from h2, high from
-    * h1), chunks and hamming distance are computed from the bit table.
+    * as the high/low 32 bits). Bit i is read straight from the appropriate
+    * fold (low 32 from h2, high from h1); chunks come from the bit table, and
+    * a candidate pair's hamming distance is `bit_count(xor)` of the docs'
+    * 64 bits packed into one UBIGINT each (one row per pair, not 64).
     */
   def simhashPairs(maxHamming: Int): String = {
     val chunks = maxHamming + 1
@@ -507,13 +508,12 @@ object OracleSql {
        |  FROM ck a JOIN ck b
        |    ON a.chunk = b.chunk AND a.cv = b.cv AND a.doc_id < b.doc_id
        |),
+       |sig AS (SELECT doc_id, bit_or(b::UBIGINT << i) AS s FROM db GROUP BY 1),
        |ham AS (
-       |  SELECT c.id_a, c.id_b,
-       |         sum(CASE WHEN x.b <> y.b THEN 1 ELSE 0 END)::INT AS hamming
+       |  SELECT c.id_a, c.id_b, bit_count(xor(x.s, y.s))::INT AS hamming
        |  FROM cand c
-       |  JOIN db x ON x.doc_id = c.id_a
-       |  JOIN db y ON y.doc_id = c.id_b AND y.i = x.i
-       |  GROUP BY 1, 2
+       |  JOIN sig x ON x.doc_id = c.id_a
+       |  JOIN sig y ON y.doc_id = c.id_b
        |)
        |SELECT id_a, id_b, hamming FROM ham
        |WHERE hamming <= $maxHamming

@@ -42,7 +42,7 @@ import graft.analysis.Analyzers
   *   docs/segment_id=N/       one row per doc: key, stored fields, per-field len+norm
   *   postings/segment_id=N/   packed posting blocks, term-sorted
   *   termstats/segment_id=N/  (field, term, df, total_tf) per segment
-  *   fieldstats/segment_id=N/ (field, n_docs, total_tokens) per segment
+  *   fieldstats/segment_id=N/ (field, n_docs, total_tokens, block_bits) per segment
   *   deletes/segment_id=N/    tombstone doc_ids; merges drop whole partitions
   *   metrics/                 append-only lineage: one row per (build_id, segment_id)
   *   _snapshots/vNNNNNN.json  live-segment snapshot versions
@@ -1470,7 +1470,7 @@ object IndexBuilder {
       catch { case t: Throwable => if (primary == null) throw t else primary.addSuppressed(t) }
     }
 
-    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId, segStats, 0, Nil))
+    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId, segStats, conf.blockBits, 0, Nil))
 
     sortedHandle.unpersist()
     segs
@@ -1510,11 +1510,21 @@ object IndexBuilder {
       .partitionBy("segment_id")
       .parquet(s"$indexDir/postings")
 
+  /** The `fieldstats` table's rows, `segment_id` its partition column. */
+  val fieldStatsSchema: StructType = StructType(Seq(
+    StructField("field", StringType, false),
+    StructField("n_docs", LongType, false),
+    StructField("total_tokens", LongType, true),
+    StructField("block_bits", IntegerType, false),
+    StructField("segment_id", IntegerType, false)))
+
   /** Per-segment termstats from the written posting blocks, fieldstats from
-    * the doc-id pass's piggy-backed aggregates (`segStats`), plus an
-    * append-only metrics lineage row per segment. The stats tail of both
-    * segment writers: builds pass depth 0 and no parents, merges their
-    * parents' depth + 1 and the merged segment ids.
+    * the doc-id pass's piggy-backed aggregates (`segStats`) with the
+    * `blockBits` the postings were blocked at (`block_id = doc_id >>>
+    * block_bits`, a fact readers align docs-table rows to posting blocks
+    * with), plus an append-only metrics lineage row per segment. The stats
+    * tail of both segment writers: builds pass depth 0 and no parents, merges
+    * their parents' depth + 1 and the merged segment ids.
     *
     * @return the segment ids of `segStats`, sorted (builds: the non-empty
     *         segments, from the doc-count agg — no extra read of the docs
@@ -1526,6 +1536,7 @@ object IndexBuilder {
       indexDir: String,
       buildId: String,
       segStats: Seq[SegStat],
+      blockBits: Int,
       mergeDepth: Int,
       parentSegments: Seq[Int]
   ): Seq[Int] = {
@@ -1581,16 +1592,11 @@ object IndexBuilder {
     // aggregates — no extra aggregation job
     val fsRows = segStats.flatMap { st =>
       schema.fields.map(f =>
-        Row(f.name, st.nDocs, st.tokensByField(f.name), st.segmentId))
+        Row(f.name, st.nDocs, st.tokensByField(f.name), blockBits, st.segmentId))
     }
-    val fsSchema = StructType(Seq(
-      StructField("field", StringType, false),
-      StructField("n_docs", LongType, false),
-      StructField("total_tokens", LongType, true),
-      StructField("segment_id", IntegerType, false)))
     val fieldstatsJob = Future {
       spark
-        .createDataFrame(spark.sparkContext.parallelize(fsRows.toSeq, 1), fsSchema)
+        .createDataFrame(spark.sparkContext.parallelize(fsRows.toSeq, 1), fieldStatsSchema)
         .write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

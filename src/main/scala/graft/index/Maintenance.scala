@@ -106,7 +106,8 @@ object Maintenance {
       .collect()(0).getInt(0)
     val segStat = IndexBuilder.segStats(schema, segAggs).headOption.getOrElse(
       IndexBuilder.SegStat(newSeg, 0L, schema.fields.map(_.name -> 0L).toMap))
-    IndexBuilder.writeStats(spark, schema, indexDir, buildId, Seq(segStat), parentDepth + 1, segIds)
+    IndexBuilder.writeStats(spark, schema, indexDir, buildId, Seq(segStat), conf.blockBits,
+      parentDepth + 1, segIds)
 
     // 4. atomic publish FIRST: the new snapshot retires the merged segments.
     //    Only then drop their tombstones — if the clear fails or a reader

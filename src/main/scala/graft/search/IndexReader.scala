@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.Snapshots
+import graft.index.{IndexBuilder, Snapshots}
 
 /** Read-side handle on a committed index (reference analog: `IndexHolder`
   * over a tantivy `Searcher`,
@@ -83,13 +83,25 @@ class IndexReader(
     case None    => hits
   }
 
-  lazy val fieldStats: Map[String, FieldStat] =
-    liveFilter(spark.read.parquet(s"$indexDir/fieldstats"))
-      .groupBy("field")
-      .agg(sum("n_docs").as("n"), sum("total_tokens").as("tt"))
+  /** The live segments' fieldstats rows `(segment_id, field, n_docs,
+    * total_tokens, block_bits)`: read with the writer's schema (no inference
+    * job), collected in one job with no Exchange (at most #fields ×
+    * #segments rows) and reduced on the driver.
+    */
+  private lazy val fieldStatRows =
+    liveFilter(spark.read.schema(IndexBuilder.fieldStatsSchema).parquet(s"$indexDir/fieldstats"))
+      .select("segment_id", "field", "n_docs", "total_tokens", "block_bits")
       .collect()
-      .map(r => r.getString(0) -> FieldStat(r.getLong(1), r.getLong(2)))
-      .toMap
+
+  lazy val fieldStats: Map[String, FieldStat] =
+    fieldStatRows.groupMapReduce(_.getString(1))(r =>
+      FieldStat(r.getLong(2), if (r.isNullAt(3)) 0L else r.getLong(3)))((a, b) =>
+      FieldStat(a.nDocs + b.nDocs, a.totalTokens + b.totalTokens))
+
+  /** Each live segment's posting block size as a shift: `block_id = doc_id
+    * >>> blockBits(segment_id)`, as its writer stored it.
+    */
+  lazy val blockBits: Map[Int, Int] = fieldStatRows.map(r => r.getInt(0) -> r.getInt(4)).toMap
 
   /** `field = f AND term IN (…)`, OR-ed over the fields of `pairs`. */
   private[search] def termsFilter(pairs: Seq[(String, String)]): Column =

@@ -179,14 +179,8 @@ class Searcher(
 
   private val keys = Seq("segment_id", "doc_id")
 
-  private def emptyHits: DataFrame = {
-    import org.apache.spark.sql.types._
-    val sch = StructType(Seq(
-      StructField("segment_id", IntegerType),
-      StructField("doc_id", IntegerType),
-      StructField("score", DoubleType)))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-  }
+  private def emptyHits: DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row], WandTopK.outSchema)
 
   /** Is `field` a single-token (`raw`/`raw_ci`) field whose exact value is
     * also stored in the docs table? Some(caseInsensitive) when the docs-scan
@@ -202,8 +196,8 @@ class Searcher(
       }
 
   /** Scored docs of one term on a `raw`/`raw_ci` field whose value is
-    * stored in the docs table ([[fastTermCi]]; [[blockPlan]] takes every
-    * other term): answered from the docs scan, not the posting blocks.
+    * stored in the docs table ([[fastTermCi]]), in a tree whose terms all
+    * are ([[blockPlan]]): answered from the docs scan, not the posting blocks.
     * Score-identical by construction: a raw field has exactly one token per
     * non-empty value, so tf = 1 and the quantized fieldnorm length is 1 for
     * every match; df/N/avgdl come from the same stats tables and the score is
@@ -230,72 +224,24 @@ class Searcher(
           avgdl(field), fieldnorms).as("score"))
   }
 
-  /** The per-occurrence plan of a boolean the block route does not take (a
-    * docs-table clause: range, exists, all, regex, term-range): each clause
-    * planned on its own, joined and aggregated on `(segment_id, doc_id)`.
+  /** `q`'s one routing decision, its kernel tree ([[WandTopK.tree]]):
+    * terms and phrases are posting leaves, every other leaf (range, exists,
+    * all, empty, regex, term-range) is an [[WandTopK.Opaque]] leaf scored by
+    * its own plan ([[leafHits]]) — and so is every term when all of them sit
+    * on raw stored fields, whose docs-scan fast path in rawTermHits is a
+    * pruned column filter, cheaper than the posting block walk. [[topDocs]],
+    * [[plan]] and [[explainTopDocs]] route on it: a bare Opaque leaf runs its
+    * own plan, a [[WandTopK.walkable]] tree the driver walk, and any other
+    * tree the kernel's full-result plan.
     */
-  private def boolHits(bq: BooleanQuery, dfs: Map[(String, String), Long]): DataFrame = {
-    val shouldDfs = bq.should.map(plan(_, dfs))
-    val notDfs = bq.mustNot.map(plan(_, dfs))
-
-    val shouldAgg: Option[DataFrame] =
-      if (shouldDfs.isEmpty) None
-      else
-        Some(
-          shouldDfs
-            .reduce(_ unionByName _)
-            .groupBy(keys.map(col): _*)
-            .agg(sum("score").as("score"),
-                 org.apache.spark.sql.functions.count(lit(1)).as("should_matched"))
-        )
-
-    var base: DataFrame =
-      if (bq.must.nonEmpty) {
-        val mustDfs = bq.must.map(plan(_, dfs))
-        val withMust = mustDfs.zipWithIndex
-          .map { case (d, i) => d.withColumnRenamed("score", s"__s$i") }
-          .reduce((a, b) => a.join(b, keys, "inner"))
-          .select(col("segment_id"), col("doc_id"),
-            mustDfs.indices.map(i => col(s"__s$i")).reduce(_ + _).as("score"))
-        shouldAgg match {
-          case Some(sa) =>
-            val minMatch = bq.minimumShouldMatch.getOrElse(0)
-            val saR = sa.select(
-              col("segment_id"), col("doc_id"),
-              col("score").as("__ss"), col("should_matched"))
-            val j = withMust.join(saR, keys, "left")
-            val filtered =
-              if (minMatch > 0) j.filter(coalesce(col("should_matched"), lit(0L)) >= minMatch) else j
-            filtered.select(
-              col("segment_id"), col("doc_id"),
-              (col("score") + coalesce(col("__ss"), lit(0.0))).as("score"))
-          case None => withMust
-        }
-      } else {
-        shouldAgg match {
-          case Some(sa) =>
-            val minMatch = math.max(bq.minimumShouldMatch.getOrElse(1), 1)
-            sa.filter(col("should_matched") >= minMatch)
-              .select(col("segment_id"), col("doc_id"), col("score"))
-          case None => emptyHits
-        }
-      }
-
-    if (notDfs.nonEmpty) {
-      val excluded = notDfs.reduce(_ unionByName _).select(keys.map(col): _*).distinct()
-      base = base.join(excluded, keys, "left_anti")
-    }
-    base
+  private def blockPlan(q: Query): WandTopK.Plan = {
+    val p = WandTopK.tree(q, WandTopK.postingLeaf)
+    if (p.pairs.isEmpty || !p.pairs.forall { case (f, _) => fastTermCi(f).isDefined }) p
+    else WandTopK.tree(q, leaf => WandTopK.postingLeaf(leaf) match {
+      case WandTopK.Term(f, t) => WandTopK.Opaque(TermQuery(f, t))
+      case other               => other
+    })
   }
-
-  /** The block route's plan for `q`, if it takes one: a tree
-    * [[WandTopK.eligible]] accepts, unless every term sits on a raw stored
-    * field — the docs-scan fast path in rawTermHits is already a pruned column
-    * filter, cheaper than the posting block walk. [[topDocs]] and [[plan]]
-    * both route on this.
-    */
-  private def blockPlan(q: Query): Option[WandTopK.Plan] =
-    WandTopK.eligible(q).filterNot(_.pairs.forall { case (f, _) => fastTermCi(f).isDefined })
 
   /** Typed predicate for a fast-field (docs-table) column. */
   private def rangePredicate(rq: RangeQuery): Column = {
@@ -311,56 +257,46 @@ class Searcher(
     reader.docs.filter(pred).select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
 
   /** `q`'s scored doc set `(segment_id, doc_id, score)`, tombstoned docs
-    * included. A posting-backed tree runs the block kernel
-    * ([[WandTopK.hits]]); a tree with docs-table leaves plans per clause, its
-    * posting-backed subtrees through the kernel.
+    * included: a bare docs-table leaf's own plan ([[leafHits]]), or the block
+    * kernel's ([[WandTopK.hits]]) for every tree (see [[blockPlan]]).
     */
   def plan(q: Query, dfs: Map[(String, String), Long]): DataFrame = blockPlan(q) match {
-    case Some(p) => WandTopK.hits(this, p, dfs)
-    case None => q match {
-      case EmptyQuery          => emptyHits
-      case AllQuery            => reader.docs.select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
-      case TermQuery(f, v)     => rawTermHits(f, v, dfs)
-      case PhraseQuery(f, Seq((_, t)), _) => rawTermHits(f, t, dfs)
-      case pq: PhraseQuery     => WandTopK.eligible(pq).fold(emptyHits)(WandTopK.hits(this, _, dfs))
-      case bq: BooleanQuery    => boolHits(bq, dfs)
-      case BoostQuery(c, b)    => plan(c, dfs).withColumn("score", col("score") * lit(b))
-      case DisjunctionMaxQuery(ds, tb) =>
-        if (ds.isEmpty) emptyHits
-        else
-          ds.map(plan(_, dfs))
-            .reduce(_ unionByName _)
-            .groupBy(keys.map(col): _*)
-            .agg(max("score").as("__mx"), sum("score").as("__sm"))
-            .select(
-              col("segment_id"), col("doc_id"),
-              (col("__mx") + lit(tb) * (col("__sm") - col("__mx"))).as("score"))
-      case rq: RangeQuery      => constHits(rangePredicate(rq))
-      case TermRangeQuery(f, lo, hi, il, iu) =>
-        val t = col("term")
-        val conds = Seq(Some(col("field") === f),
-          lo.map(v => if (il) t >= v else t > v),
-          hi.map(v => if (iu) t <= v else t < v)).flatten
-        reader.postings
-          .filter(conds.reduce(_ && _))
-          .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-          .distinct()
-          .withColumn("score", lit(1.0))
-      case ExistsQuery(f) =>
-        val docsSchema = reader.docs.schema.fieldNames.toSet
-        if (docsSchema.contains(s"len_$f")) constHits(col(s"len_$f") > 0)
-        else if (docsSchema.contains(f)) constHits(col(f).isNotNull)
-        else emptyHits
-      case RegexQuery(f, pat) =>
-        reader.postings
-          .filter(col("field") === f && col("term").rlike(pat))
-          .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-          .distinct()
-          .withColumn("score", lit(1.0))
-      case mq: MatchQuery         => plan(resolve(mq), dfs)
-      case mlt: MoreLikeThisQuery => plan(resolve(mlt), dfs)
-    }
+    case WandTopK.Opaque(leaf)                     => leafHits(leaf, dfs)
+    case p if p.pairs.isEmpty && p.opaques.isEmpty => emptyHits // a tree without leaves
+    case p                                         => WandTopK.hits(this, p, dfs)
   }
+
+  /** The direct plan of a docs-table leaf (a raw term: the docs-scan fast path). */
+  private[search] def leafHits(q: Query, dfs: Map[(String, String), Long]): DataFrame = q match {
+    case AllQuery        => reader.docs.select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
+    case TermQuery(f, v) => rawTermHits(f, v, dfs)
+    case rq: RangeQuery  => constHits(rangePredicate(rq))
+    case TermRangeQuery(f, lo, hi, il, iu) =>
+      val t = col("term")
+      val conds = Seq(Some(col("field") === f),
+        lo.map(v => if (il) t >= v else t > v),
+        hi.map(v => if (iu) t <= v else t < v)).flatten
+      postingDocs(conds.reduce(_ && _))
+    case ExistsQuery(f) =>
+      val docsSchema = reader.docs.schema.fieldNames.toSet
+      if (docsSchema.contains(s"len_$f")) constHits(col(s"len_$f") > 0)
+      else if (docsSchema.contains(f)) constHits(col(f).isNotNull)
+      else emptyHits
+    case RegexQuery(f, pat)     => postingDocs(col("field") === f && col("term").rlike(pat))
+    case mq: MatchQuery         => plan(resolve(mq), dfs)
+    case mlt: MoreLikeThisQuery => plan(resolve(mlt), dfs)
+    case _                      => emptyHits // EmptyQuery, a phrase without terms
+  }
+
+  /** The docs holding any term the `terms` predicate matches, const-scored:
+    * an ids-only posting decode.
+    */
+  private def postingDocs(terms: Column): DataFrame =
+    reader.postings
+      .filter(terms)
+      .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
+      .distinct()
+      .withColumn("score", lit(1.0))
 
   /** Scored doc-set of a query: (segment_id, doc_id, score), tombstoned docs
     * excluded (reference: delete-by-query tombstones,
@@ -419,11 +355,11 @@ class Searcher(
   def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
     blockPlan(rq) match {
-      // every tree of terms and phrases takes block-max WAND: one job collects the plan's posting blocks, the
-      // driver prunes, scores, drops tombstoned docs and pages them, and
-      // the hits come back as a local relation (a pure optimization:
-      // result-identical, verified in tests)
-      case Some(p) =>
+      // a walkable tree takes block-max WAND: one job collects the plan's
+      // posting blocks, the driver prunes, scores, drops tombstoned docs and
+      // pages them, and the hits come back as a local relation (a pure
+      // optimization: result-identical, verified in tests)
+      case p if WandTopK.walkable(p) =>
         WandTopK.run(this, p, offset + limit).toDF(spark, offset)
       case _ =>
         val top = search(rq)
@@ -527,25 +463,19 @@ class Searcher(
     * contributions sum to the score. A phrase is one `phrase` leaf (tf = its
     * alignment count, idf = Σ term idfs, positions = the matched base-term
     * positions); under a dismax, the non-best children carry the
-    * tieBreaker in their boost. A posting-backed tree is explained from the
-    * blocks its top-k walk decoded, in that walk's one job. In a tree with
-    * docs-table leaves each such leaf is one `const` row scored by its own
-    * plan.
+    * tieBreaker in their boost. A docs-table leaf is one `const` row scored
+    * by its own plan (a docs-scan raw term one `term` row). Routed by
+    * [[blockPlan]]: a walkable tree is explained from the blocks its top-k
+    * walk decoded, in that walk's one job; any other query's top-k hits are
+    * explained in their block groups by [[WandTopK.explainHits]].
     */
   def explainTopDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
-    val explained = WandTopK.eligible(rq) match {
-      case Some(p) => WandTopK.explain(this, p, offset + limit).drop(offset)
-      case None =>
-        val dfs = reader.termDfs(collectTerms(rq).distinct)
-        val hits = topDocs(rq, limit, offset).collect().toSeq
-        val hitKeys = broadcast(spark.createDataFrame(hits.asJava, WandTopK.outSchema).select(keys.map(col): _*))
-        val p = WandTopK.tree(rq, q => Some(WandTopK.Opaque(q))).get
-        val opaque = p.nodes.collect { case WandTopK.Opaque(o) => o }.distinct.map { o =>
-          o -> plan(o, dfs).join(hitKeys, keys, "left_semi").select("segment_id", "doc_id", "score")
-            .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-        }.toMap
-        WandTopK.explainHits(this, p, dfs, hits, opaque)
+    val explained = blockPlan(rq) match {
+      case p if WandTopK.walkable(p) => WandTopK.explain(this, p, offset + limit).drop(offset)
+      case p =>
+        WandTopK.explainHits(this, p, reader.termDfs(collectTerms(rq).distinct),
+          topDocs(rq, limit, offset).collect().toSeq)
     }
     spark.createDataFrame(explained.asJava, WandTopK.explainSchema)
       .select(

@@ -14,21 +14,23 @@ import graft.index.{FieldNorm, PostingCodec}
   * compute BM25 top-k while *skipping the decode* of posting blocks whose
   * score upper bound cannot beat the running k-th best.
   *
-  * A query becomes a [[Plan]] tree ([[eligible]]), tantivy's Weight/Scorer
-  * tree (SURVEY §2.6): leaves are terms and phrases of ≥2 terms, nodes are
-  * booleans (must / should with a minimum / mustNot), boosts and
-  * disjunction-max, nested to any depth, each term a `(field, term)` pair
-  * scored with its own field's N and avgdl. One [[Kernel]] evaluates the tree
-  * over one doc-aligned `(segment_id, block_id)` group — every doc of a group
-  * shares its block id in every term's postings — and each node gives
-  * `viable` (can the group hold a hit at all), `bound` (an upper bound on any
-  * hit's score) and its hits:
+  * A query becomes a [[Plan]] tree ([[tree]]), tantivy's Weight/Scorer tree
+  * (SURVEY §2.6): nodes are booleans (must / should with a minimum /
+  * mustNot), boosts and disjunction-max, nested to any depth; leaves are
+  * terms and phrases of ≥2 terms, each term a `(field, term)` pair scored
+  * with its own field's N and avgdl, and [[Opaque]] docs-table leaves. One
+  * [[Kernel]] evaluates the tree over one doc-aligned `(segment_id,
+  * block_id)` group — every doc of a group shares its block id `doc_id >>>
+  * block_bits` in every term's postings and every Opaque leaf's rows — and
+  * each node gives `viable` (can the group hold a hit at all), `bound` (an
+  * upper bound on any hit's score) and its hits:
   *  - a term scores `BM25(idf, tf, norm)`;
   *  - a phrase intersects its terms' doc ids and runs
   *    [[PostingUdfs.phraseTf]] on the positions; it scores `BM25(Σ idf,
   *    phrase_tf, first term's norm)` and is bounded by the first term's
   *    `BM25(Σ idf, block_max_tf, block_min_norm)`, safe since phrase_tf never
   *    exceeds the first term's tf;
+  *  - an Opaque leaf's hits are the rows of its own plan in the group;
   *  - a boolean sums its must scores (left to right) and the scores of the
   *    should clauses that match; dismax is `mx + tb·(sm − mx)`; a boost
   *    multiplies. A bound counts a should clause only above 0, and a negative
@@ -36,24 +38,25 @@ import graft.index.{FieldNorm, PostingCodec}
   *    never prunes a group that holds a hit.
   * Scores use the per-occurrence plan's operation order, so they equal it
   * to the last bits or close to it (verified at 1e-12 in tests).
-  * `Searcher` sends a plan here unless every term sits on a raw stored
-  * field, whose docs-scan fast path is cheaper than a block walk.
   *
-  * Top-k ([[run]]): one job, no Exchange. The plan's live posting blocks
-  * (not postings!) are collected; df is Σ `doc_count` over all of a term's
-  * blocks (with or without positions), the sum every writer stores as
-  * termstats `df` — deleted docs included, until a merge removes them. The
-  * driver walks the groups in order with one top-k heap (per-segment
-  * collect + `merge_fruits` in one pass), decoding a group only if its
-  * score bound reaches the running threshold, and never offers a hit whose
-  * doc is in the reader's tombstones. The hits return as a local relation,
-  * so collecting them starts no job. [[explain]] is the same walk; each hit
-  * is explained from its group's blocks, so it starts no second job.
+  * Top-k ([[run]]) of a [[walkable]] tree: one job, no Exchange. The plan's
+  * live posting blocks (not postings!) are collected; df is Σ `doc_count`
+  * over all of a term's blocks (with or without positions), the sum every
+  * writer stores as termstats `df` — deleted docs included, until a merge
+  * removes them. The driver walks the groups in order with one top-k heap
+  * (per-segment collect + `merge_fruits` in one pass), decoding a group
+  * only if its score bound reaches the running threshold, and never offers
+  * a hit whose doc is in the reader's tombstones. The hits return as a
+  * local relation, so collecting them starts no job. [[explain]] is the
+  * same walk; each hit is explained from its group's blocks, so it starts
+  * no second job.
   *
-  * Full results ([[hits]]): the same kernel runs per group inside one
-  * aggregation — `postings.filter → group by (segment_id, block_id) →
-  * kernel → explode`, one shuffle and no join; a tree of one `(field, term)`
-  * pair has one block per group and needs no shuffle at all.
+  * Full results ([[hits]]) of any tree: the kernel runs per group inside
+  * one aggregation — posting blocks ∪ Opaque leaf rows `→ group by
+  * (segment_id, block_id) → kernel → explode`, one shuffle and no join; a
+  * tree of one `(field, term)` pair has one block per group and needs no
+  * shuffle at all. [[explainHits]] explains any tree's hits from the same
+  * rows.
   */
 object WandTopK {
 
@@ -76,6 +79,9 @@ object WandTopK {
       case DisMax(cs, _)    => cs.flatMap(_.nodes)
       case _                => Nil
     })
+
+    /** The distinct [[Opaque]] leaves, in tree order. */
+    lazy val opaques: Seq[Opaque] = nodes.collect { case o: Opaque => o }.distinct
   }
 
   final case class Term(field: String, term: String) extends Plan
@@ -91,11 +97,11 @@ object WandTopK {
 
   final case class Boost(child: Plan, boost: Double) extends Plan
 
-  /** `mx + tieBreaker·(sm − mx)` over the matching children, tieBreaker in [0, 1]. */
+  /** `mx + tieBreaker·(sm − mx)` over the matching children. */
   final case class DisMax(children: Seq[Plan], tieBreaker: Double) extends Plan
 
-  /** A subtree postings cannot score (a docs-table leaf), for [[explainHits]]
-    * only: its scores for the explained hits come from its own plan.
+  /** A leaf postings do not score (a docs-table leaf): its hits are the rows
+    * of its own plan (`Searcher.leafHits`).
     */
   final case class Opaque(query: Query) extends Plan
 
@@ -136,14 +142,6 @@ object WandTopK {
     }
   }
 
-  /** The per-occurrence plan's weight of a term given its df: a field
-    * without a fieldstats row scores with N = 0 and avgdl = 0.
-    */
-  private def weight(searcher: Searcher, df: Long, field: String): Weight = {
-    val st = searcher.reader.fieldStats.getOrElse(field, FieldStat(0L, 0L))
-    Weight(BM25.idf(df, st.nDocs), st.avgdl, searcher.fieldnorms)
-  }
-
   /** The block columns every route reads, in this order (`positions` last,
     * and only when a phrase needs it).
     */
@@ -164,21 +162,9 @@ object WandTopK {
   private def blockCols(plan: Plan) =
     (BlockCols ++ (if (plan.nodes.exists(_.isInstanceOf[Phrase])) Seq("positions") else Nil)).map(col)
 
-  private type Group = java.util.Map[(String, String), Row]
-
-  /** One group's blocks keyed by `(field, term)`. */
-  private def group(rows: Iterator[Row]): Group = {
-    val byTerm = new java.util.HashMap[(String, String), Row](8)
-    rows.foreach(r => byTerm.put((r.getString(FieldCol), r.getString(TermCol)), r))
-    byTerm
-  }
-
-  private def docIds(r: Row): Array[Int] =
-    PostingCodec.unpackDocIds(r.getAs[Array[Byte]](DocIds), r.getInt(Count))
-
   /** One posting block, each column decoded on first use. */
   private final class Decoded(r: Row) {
-    lazy val ids: Array[Int] = docIds(r)
+    lazy val ids: Array[Int] = PostingCodec.unpackDocIds(r.getAs[Array[Byte]](DocIds), r.getInt(Count))
     lazy val tfs: Array[Int] = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](Tfs), r.getInt(Count))
     lazy val positions: Array[Array[Int]] =
       PostingCodec.unpackPositions(r.getAs[Array[Byte]](Positions), tfs)
@@ -258,33 +244,48 @@ object WandTopK {
     }
   }
 
-  /** The evaluator of `root` over one `(segment_id, block_id)` group.
-    * `weights` holds every term and phrase leaf's weight; `opaque` the
-    * explained hits' scores of each [[Opaque]] leaf by `(segment_id, doc_id)`.
+  /** One `(segment_id, block_id)` group: its posting blocks keyed by
+    * `(field, term)`, and the hits of each [[Opaque]] leaf with rows in it.
     */
-  private final class Kernel(
-      val root: Plan, weights: Map[Plan, Weight], opaque: Map[Query, Map[(Int, Int), Double]])
-      extends Serializable {
+  private final class Group(val blocks: java.util.Map[(String, String), Row], val leaves: Map[Opaque, Hits])
+
+  /** The evaluator of `root` over one `(segment_id, block_id)` group.
+    * `weights` holds every term and phrase leaf's weight, and a raw term
+    * leaf's for its explain row.
+    */
+  private final class Kernel(val root: Plan, weights: Map[Plan, Weight]) extends Serializable {
+    private val opaques = root.opaques.toIndexedSeq
+
+    /** A group of posting `blocks` and Opaque `leaves` rows (see [[groupRows]]). */
+    def group(blocks: Iterator[Row], leaves: Seq[Row]): Group = {
+      val byTerm = new java.util.HashMap[(String, String), Row](8)
+      blocks.foreach(r => byTerm.put((r.getString(FieldCol), r.getString(TermCol)), r))
+      val hits = leaves.groupBy(_.getInt(0)).map { case (i, rs) =>
+        val sorted = rs.sortBy(_.getInt(1))
+        opaques(i) -> new Hits(sorted.map(_.getInt(1)).toArray, sorted.map(_.getDouble(2)).toArray)
+      }
+      new Group(byTerm, hits)
+    }
 
     /** Can the group hold a hit of `n` at all. */
     def viable(n: Plan, g: Group): Boolean = n match {
-      case Term(f, t) => g.containsKey((f, t))
+      case Term(f, t) => g.blocks.containsKey((f, t))
       case Phrase(f, ts, _, _) =>
-        ts.forall { t => val r = g.get((f, t)); r != null && !r.isNullAt(Positions) }
+        ts.forall { t => val r = g.blocks.get((f, t)); r != null && !r.isNullAt(Positions) }
       case Bool(must, should, _, minShould) =>
         must.forall(viable(_, g)) && should.count(viable(_, g)) >= minShould
       case Boost(c, _)   => viable(c, g)
       case DisMax(cs, _) => cs.exists(viable(_, g))
-      case Opaque(_)     => true
+      case o: Opaque     => g.leaves.contains(o)
     }
 
     /** An upper bound on the score of any hit of the (viable) `n` in the group. */
     def bound(n: Plan, g: Group): Double = n match {
       case Term(f, t) =>
-        val r = g.get((f, t))
+        val r = g.blocks.get((f, t))
         weights(n).score(r.getInt(MaxTf).toDouble, r.getInt(MinNorm))
       case Phrase(f, ts, _, _) =>
-        val r = g.get((f, ts.head))
+        val r = g.blocks.get((f, ts.head))
         weights(n).score(r.getInt(MaxTf).toDouble, r.getInt(MinNorm))
       case Bool(must, should, _, _) =>
         var u = 0.0
@@ -303,15 +304,14 @@ object WandTopK {
     }
 
     /** One group's evaluation: each block decoded and each node's hits
-      * computed once. `wanted` are the docs explained, the only ones an
-      * [[Opaque]] leaf knows.
+      * computed once.
       */
-    final class Eval(g: Group, seg: Int, wanted: Array[Int] = Array.emptyIntArray) {
+    final class Eval(g: Group) {
       private val blocks = new java.util.HashMap[(String, String), Decoded]()
       private val memo = new java.util.HashMap[Plan, Hits]()
 
       private def block(f: String, t: String): Decoded =
-        blocks.computeIfAbsent((f, t), k => new Decoded(g.get(k)))
+        blocks.computeIfAbsent((f, t), k => new Decoded(g.blocks.get(k)))
 
       def hits(n: Plan): Hits = {
         var h = memo.get(n)
@@ -363,11 +363,7 @@ object WandTopK {
           val out = new HitsBuilder
           new Union(cs.map(hits)).foreach((d, sm, _, mx) => out.add(d, mx + tb * (sm - mx)))
           out.result
-        case Opaque(q) =>
-          val scores = opaque.getOrElse(q, Map.empty)
-          val out = new HitsBuilder
-          wanted.foreach(d => scores.get((seg, d)).foreach(out.add(d, _)))
-          out.result
+        case o: Opaque => g.leaves(o)
       }
 
       /** The detail rows of `doc`, a hit of the root: one per occurrence of
@@ -393,8 +389,15 @@ object WandTopK {
             Row(f, ts.mkString("\"", " ", "\"") + (if (slop > 0) s"~$slop" else ""), "phrase",
               mpos.length, norm, w.idf, boost, w.score(mpos.length.toDouble, norm) * boost,
               ArraySeq.unsafeWrapArray(mpos))
-          case Opaque(q) =>
-            Row(null, q.toString, "const", null, null, null, boost, opaque(q)((seg, doc)) * boost, null)
+          case o @ Opaque(q) =>
+            val h = hits(o)
+            val contribution = h.scores(h.indexOf(doc)) * boost
+            q match {
+              // a docs-scan raw term: one token, so tf 1 and the norm of length 1
+              case TermQuery(f, t) =>
+                Row(f, t, "term", 1, FieldNorm.encode(1L), weights(o).idf, boost, contribution, null)
+              case _ => Row(null, q.toString, "const", null, null, null, boost, contribution, null)
+            }
           case _ => sys.error(s"not a leaf: $n")
         }
         def walk(n: Plan, boost: Double): Unit = n match {
@@ -417,38 +420,69 @@ object WandTopK {
   }
 
   /** `plan`'s kernel given its terms' dfs (a term without one is in no block). */
-  private def kernel(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long],
-                     opaque: Map[Query, Map[(Int, Int), Double]] = Map.empty): Kernel = {
-    def termWeight(f: String, t: String) = weight(searcher, dfs.getOrElse((f, t), 0L), f)
+  private def kernel(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): Kernel = {
+    // the per-occurrence plan's weight: a field without a fieldstats row
+    // scores with N = 0 and avgdl = 0
+    def termWeight(f: String, t: String) = {
+      val st = searcher.reader.fieldStats.getOrElse(f, FieldStat(0L, 0L))
+      Weight(BM25.idf(dfs.getOrElse((f, t), 0L), st.nDocs), st.avgdl, searcher.fieldnorms)
+    }
     val weights: Map[Plan, Weight] = plan.nodes.collect {
-      case n @ Term(f, t) => n -> termWeight(f, t)
+      case n @ Term(f, t)                => n -> termWeight(f, t)
+      case n @ Opaque(TermQuery(f, t))   => n -> termWeight(f, t)
       case n @ Phrase(f, ts, _, _) =>
         // Σ idf in term order (Lucene/tantivy phrase weight), as the per-occurrence plan
         val ws = ts.map(termWeight(f, _))
         n -> ws.head.copy(idf = ws.map(_.idf).sum)
     }.toMap
-    new Kernel(plan, weights, opaque)
+    new Kernel(plan, weights)
   }
 
-  /** Every hit of `plan` as `(segment_id, doc_id, score)`, tombstoned docs
-    * included (the caller applies deletes). `dfs` are the termstats dfs of
-    * the plan's terms.
+  /** The rows of `plan`'s groups, `(segment_id, block_id, block, leaf)`:
+    * each posting block of its terms as `block`, and each row of an Opaque
+    * leaf's own plan as `leaf` = `(index in Plan.opaques, doc_id, score)` in
+    * block `doc_id >>> block_bits`. A column no row has is left out.
+    */
+  private def groupRows(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): DataFrame = {
+    val reader = searcher.reader
+    val blocks = if (plan.pairs.isEmpty) None else Some(reader.postings
+      .filter(reader.termsFilter(plan.pairs))
+      .select(col("segment_id"), col("block_id"), struct(blockCols(plan): _*).as("block")))
+    val bits = typedLit(reader.blockBits)
+    val leaves = plan.opaques.zipWithIndex.map { case (o, i) =>
+      searcher.leafHits(o.query, dfs).select(col("segment_id"),
+        call_function("shiftrightunsigned", col("doc_id"), bits(col("segment_id"))).as("block_id"),
+        struct(lit(i).as("leaf"), col("doc_id"), col("score")).as("leaf"))
+    }
+    (blocks ++ leaves).reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** Every hit of `plan` (any tree with a leaf) as `(segment_id, doc_id,
+    * score)`, tombstoned docs included (the caller applies deletes). `dfs`
+    * are the termstats dfs of the plan's terms.
     */
   def hits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): DataFrame = {
     val k = kernel(searcher, plan, dfs)
-    val kernelUdf = udf { (blocks: Seq[Row]) =>
-      val h = new k.Eval(group(blocks.iterator), blocks.head.getInt(Seg)).hits(k.root)
+    val kernelUdf = udf { (blocks: Seq[Row], leaves: Seq[Row]) =>
+      val g = k.group(Option(blocks).fold(Iterator.empty[Row])(_.iterator), Option(leaves).getOrElse(Nil))
+      val h = new k.Eval(g).hits(k.root)
       Seq.tabulate(h.docs.length)(i => DocScore(h.docs(i), h.scores(i)))
     }.withName("block_kernel")
-    val reader = searcher.reader
-    val scan = reader.postings.filter(reader.termsFilter(plan.pairs))
-    val blocks = struct(blockCols(plan): _*)
-    // one (field, term) pair has one block per group: no shuffle
+    val rows = groupRows(searcher, plan, dfs)
     val groups =
-      if (plan.pairs.size == 1) scan.select(col("segment_id"), array(blocks).as("blocks"))
-      else scan.groupBy(col("segment_id"), col("block_id")).agg(collect_list(blocks).as("blocks"))
+      // one (field, term) pair has one block per group: no shuffle
+      if (plan.pairs.size == 1 && plan.opaques.isEmpty)
+        rows.select(col("segment_id"), array(col("block")).as("blocks"))
+      else {
+        val lists = rows.columns.toSeq.collect {
+          case "block" => collect_list("block").as("blocks")
+          case "leaf"  => collect_list("leaf").as("leaves")
+        }
+        rows.groupBy(col("segment_id"), col("block_id")).agg(lists.head, lists.tail: _*)
+      }
+    def arg(c: String) = if (groups.columns.contains(c)) col(c) else lit(null)
     groups
-      .select(col("segment_id"), explode(kernelUdf(col("blocks"))).as("h"))
+      .select(col("segment_id"), explode(kernelUdf(arg("blocks"), arg("leaves"))).as("h"))
       .select(col("segment_id"), col("h.doc_id").as("doc_id"), col("h.score").as("score"))
   }
 
@@ -490,7 +524,7 @@ object WandTopK {
       var j = i + 1
       while (j < blocks.length && blocks(j).getInt(Seg) == seg && blocks(j).getInt(Block) == blockId)
         j += 1
-      val g = group(blocks.iterator.slice(i, j))
+      val g = kn.group(blocks.iterator.slice(i, j), Nil)
       seen += 1
       // decode on ub >= threshold: a block whose bound exactly ties the kth
       // score may hold a doc that wins the (segment, doc) tiebreak — prune
@@ -498,7 +532,7 @@ object WandTopK {
       if (kn.viable(kn.root, g) && kn.bound(kn.root, g) >= threshold) {
         decoded += 1
         val dead = reader.tombstones.getOrElse(seg, NoTombstones)
-        val e = new kn.Eval(g, seg)
+        val e = new kn.Eval(g)
         val h = e.hits(kn.root)
         var d = 0
         while (d < h.docs.length) {
@@ -528,70 +562,73 @@ object WandTopK {
     walk(searcher, plan, k)._1.map(h => Row(h.seg, h.doc, h.score, h.eval.details(h.doc)))
 
   /** `hits` (`(segment_id, doc_id, score)` rows of `plan` in rank order) as
-    * `explainSchema` rows. The blocks of `plan`'s terms in the hits'
-    * segments are collected; a hit is explained in the group whose blocks
-    * hold it (or alone, when only [[Opaque]] leaves matched it). `dfs` are
-    * the termstats dfs, `opaque` each Opaque leaf's score per hit.
+    * `explainSchema` rows, each explained in its group `(segment_id, doc_id
+    * >>> block_bits)`: one job collects the [[groupRows]] of the hits'
+    * groups. `dfs` are the termstats dfs of the plan's terms.
     */
-  def explainHits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long], hits: Seq[Row],
-                  opaque: Map[Query, Map[(Int, Int), Double]]): Seq[Row] = {
-    val kn = kernel(searcher, plan, dfs, opaque)
-    val reader = searcher.reader
-    val segs = hits.map(_.getInt(0)).distinct
-    val blocks =
-      if (plan.pairs.isEmpty || hits.isEmpty) Array.empty[Row]
-      else reader.postings
-        .filter(reader.termsFilter(plan.pairs) && col("segment_id").isin(segs: _*))
-        .select(blockCols(plan): _*)
-        .collect()
-    val holders = blocks.map(r => (r.getInt(Seg), r.getInt(Block), docIds(r)))
-    def groupOf(seg: Int, doc: Int): (Int, Int) =
-      holders.collectFirst {
-        case (s, b, ids) if s == seg && java.util.Arrays.binarySearch(ids, doc) >= 0 => (s, b)
-      }.getOrElse((seg, -1 - doc))
-    val byGroup = blocks.groupBy(r => (r.getInt(Seg), r.getInt(Block)))
-    val explained = hits.zipWithIndex.groupBy { case (h, _) => groupOf(h.getInt(0), h.getInt(1)) }
-      .toSeq.flatMap { case (key @ (seg, _), hs) =>
-        val e = new kn.Eval(group(byGroup.getOrElse(key, Array.empty[Row]).iterator), seg,
-          hs.map(_._1.getInt(1)).sorted.toArray)
-        hs.map { case (h, rank) => rank -> Row(seg, h.getInt(1), h.getDouble(2), e.details(h.getInt(1))) }
-      }
-    explained.sortBy(_._1).map(_._2)
+  def explainHits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long], hits: Seq[Row]): Seq[Row] = {
+    if (hits.isEmpty) return Nil
+    val kn = kernel(searcher, plan, dfs)
+    val bits = searcher.reader.blockBits
+    def groupOf(h: Row): (Int, Int) = (h.getInt(0), h.getInt(1) >>> bits(h.getInt(0)))
+    val wanted = hits.map(groupOf)
+    val rows = groupRows(searcher, plan, dfs)
+    val collected = rows
+      .filter(col("segment_id").isin(wanted.map(_._1): _*) &&
+        (shiftleft(col("segment_id").cast(LongType), 32) + col("block_id"))
+          .isin(wanted.map { case (sg, b) => (sg.toLong << 32) + b }: _*))
+      .collect()
+    def structs(rs: Array[Row], c: String): Seq[Row] = {
+      val i = rows.columns.indexOf(c)
+      if (i < 0) Nil else rs.toSeq.collect { case r if !r.isNullAt(i) => r.getStruct(i) }
+    }
+    val evals = collected.groupBy(r => (r.getInt(0), r.getInt(1))).map { case (g, rs) =>
+      g -> new kn.Eval(kn.group(structs(rs, "block").iterator, structs(rs, "leaf")))
+    }
+    hits.map(h => Row(h.getInt(0), h.getInt(1), h.getDouble(2), evals(groupOf(h)).details(h.getInt(1))))
   }
 
-  /** `q` as a kernel tree: terms and phrases of ≥2 terms are its leaves,
-    * booleans, boosts and dismax (tieBreaker in [0, 1]) its nodes, and
-    * `other` maps every other node (None: `q` is no tree). A one-term phrase
-    * is a term.
+  /** `q` as a kernel tree: booleans, boosts and dismax are its nodes, and
+    * `leaf` maps every other query.
     */
-  private[search] def tree(q: Query, other: Query => Option[Plan]): Option[Plan] = {
-    def all(qs: Seq[Query]): Option[Seq[Plan]] = {
-      val ps = qs.map(tree(_, other))
-      if (ps.forall(_.isDefined)) Some(ps.flatten) else None
-    }
-    q match {
-      case TermQuery(f, t)                => Some(Term(f, t))
-      case PhraseQuery(f, Seq((_, t)), _) => Some(Term(f, t))
-      case PhraseQuery(f, ts, slop) if ts.size >= 2 =>
-        Some(Phrase(f, ts.map(_._2), ts.map(_._1), slop))
-      case bq @ BooleanQuery(_, msm) =>
-        for (must <- all(bq.must); should <- all(bq.should); mustNot <- all(bq.mustNot)) yield {
-          // the per-occurrence plan applies msm only with should clauses, and
-          // without a must clause a hit needs at least one should clause
-          val minShould =
-            if (must.isEmpty) math.max(msm.getOrElse(1), 1)
-            else if (should.isEmpty) 0
-            else math.max(msm.getOrElse(0), 0)
-          Bool(must, should, mustNot, minShould)
-        }
-      case BoostQuery(c, b) => tree(c, other).map(Boost(_, b))
-      case DisjunctionMaxQuery(ds, tb) if tb >= 0.0 && tb <= 1.0 => all(ds).map(DisMax(_, tb))
-      case _ => other(q)
-    }
+  private[search] def tree(q: Query, leaf: Query => Plan): Plan = q match {
+    case bq @ BooleanQuery(_, msm) =>
+      def sub(qs: Seq[Query]) = qs.map(tree(_, leaf))
+      val (must, should, mustNot) = (sub(bq.must), sub(bq.should), sub(bq.mustNot))
+      // the per-occurrence plan applies msm only with should clauses, and
+      // without a must clause a hit needs at least one should clause
+      val minShould =
+        if (must.isEmpty) math.max(msm.getOrElse(1), 1)
+        else if (should.isEmpty) 0
+        else math.max(msm.getOrElse(0), 0)
+      Bool(must, should, mustNot, minShould)
+    case BoostQuery(c, b)            => Boost(tree(c, leaf), b)
+    case DisjunctionMaxQuery(ds, tb) => DisMax(ds.map(tree(_, leaf)), tb)
+    case _                           => leaf(q)
   }
 
-  /** Recognize a block-max-eligible query: a tree whose leaves are all
-    * terms or phrases (see [[tree]]) and that reads at least one term.
+  /** Terms and phrases of ≥2 terms as posting leaves (a one-term phrase is a
+    * term), every other leaf [[Opaque]].
     */
-  def eligible(q: Query): Option[Plan] = tree(q, _ => None).filter(_.pairs.nonEmpty)
+  private[search] def postingLeaf(q: Query): Plan = q match {
+    case TermQuery(f, t)                => Term(f, t)
+    case PhraseQuery(f, Seq((_, t)), _) => Term(f, t)
+    case PhraseQuery(f, ts, slop) if ts.size >= 2 => Phrase(f, ts.map(_._2), ts.map(_._1), slop)
+    case _                              => Opaque(q)
+  }
+
+  /** Can the driver walk ([[run]], [[explain]]) take `plan`: it reads a
+    * term, has no [[Opaque]] leaf and every dismax tieBreaker lies in [0, 1],
+    * so every node's bound is safe.
+    */
+  def walkable(plan: Plan): Boolean = plan.pairs.nonEmpty && plan.nodes.forall {
+    case Opaque(_)     => false
+    case DisMax(_, tb) => tb >= 0.0 && tb <= 1.0
+    case _             => true
+  }
+
+  /** Recognize a block-max-eligible query: its tree of posting leaves, when
+    * [[walkable]].
+    */
+  def eligible(q: Query): Option[Plan] = Some(tree(q, postingLeaf)).filter(walkable)
 }

@@ -633,7 +633,7 @@ private object MergeCheck {
     val fieldstats = schema.fields.map(f => newDocs.agg(
       lit(f.name).as("field"), count(lit(1)).as("n_docs"),
       sum(col(s"len_${f.name}")).cast("long").as("total_tokens"),
-      lit(newSeg).as("segment_id"))).reduce(_ unionByName _)
+      lit(blockBits).as("block_bits"), lit(newSeg).as("segment_id"))).reduce(_ unionByName _)
     assert(IndexDigest(spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)) ==
       IndexDigest(fieldstats), s"segment $newSeg fieldstats")
   }

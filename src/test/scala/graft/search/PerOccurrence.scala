@@ -12,11 +12,12 @@ import graft.index.PostingCodec
 /** The tests' per-occurrence oracle: every scored query planned without the
   * block kernel. A term explodes its posting blocks into one row per
   * occurrence, a phrase joins its terms' positional blocks on `(segment_id,
-  * block_id)` ([[BlockJoin]]), and booleans, dismax and boosts combine the
-  * clause plans with joins and aggregations on `(segment_id, doc_id)`.
-  * Docs-table leaves (range, exists, all, regex, term-range) plan through
-  * [[Searcher.plan]], which has no kernel for them either. [[details]] is
-  * the per-leaf explain scan the kernel's explain replaced.
+  * block_id)` ([[BlockJoin]]), and booleans, dismax (any tieBreaker) and
+  * boosts combine the clause plans with joins and aggregations on
+  * `(segment_id, doc_id)` — the per-clause plan `src/main` no longer has.
+  * A bare docs-table leaf (range, exists, all, empty, regex, term-range)
+  * plans through [[Searcher.plan]], whose bare-leaf plans run no kernel.
+  * [[details]] is the per-leaf explain scan the kernel's explain replaced.
   */
 object PerOccurrence {
   final case class PEntry(doc_id: Int, tf: Int, norm_id: Int)

@@ -429,14 +429,15 @@ class FastTermSpec extends AnyFunSuite {
     val slow = new Searcher(reader.reader, schemaFast.copy(storedFields = Nil))
     assert(reader.fastTermCi("lang").contains(false) && slow.fastTermCi("lang").isEmpty)
 
-    // the boolean is planned per clause (its regex clause is no kernel
-    // leaf), where its must term is a termHits leaf
+    // a bare raw term; a tree with a regex leaf, whose raw must term is a
+    // posting leaf; and an all-raw tree, whose terms are docs-scan leaves
     for (q <- Seq[Query](
         TermQuery("lang", "en"),
         BooleanQuery(Seq(
           (Occur.Must, TermQuery("lang", "en")),
           (Occur.Should, TermQuery("text", "spark")),
-          (Occur.MustNot, RegexQuery("text", "zz.*")))))) {
+          (Occur.MustNot, RegexQuery("text", "zz.*")))),
+        BooleanQuery(Seq((Occur.Should, TermQuery("lang", "en")), (Occur.Should, TermQuery("lang", "de")))))) {
       val fast = scores(reader, q)
       val ref = scores(slow, q)
       assert(fast.keySet == ref.keySet, s"doc sets differ for $q")
@@ -444,6 +445,9 @@ class FastTermSpec extends AnyFunSuite {
         assert(s == ref(k), s"score not bitwise-equal for $k: $s vs ${ref(k)}") // exact, no epsilon
       }
     }
+    // the all-raw tree's docs-scan terms explain as the posting plan's term rows
+    val allRaw = BooleanQuery(Seq((Occur.Should, TermQuery("lang", "en")), (Occur.Should, TermQuery("lang", "de"))))
+    assert(reader.explainTopDocs(allRaw, 10).collect().toSeq == slow.explainTopDocs(allRaw, 10).collect().toSeq)
   }
 
   test("fast path never scans postings; topDocs skips WAND for raw fields") {

@@ -22,15 +22,20 @@ class WandSpec extends AnyFunSuite {
     fields = Seq(FieldDef("text", "summa", "position")),
     defaultFields = Seq("text"))
 
-  private lazy val searcher: Searcher = {
+  /** The main corpus: 500 docs over a zipfian-ish vocab, so some terms are
+    * dense (WAND-prunable).
+    */
+  private def corpus = {
     val rnd = new scala.util.Random(33)
-    // zipfian-ish vocab so some terms are dense (WAND-prunable)
     val vocab = Vector.tabulate(50)(i => s"w$i")
     def pick(): String = vocab(math.min((math.abs(rnd.nextGaussian()) * 10).toInt, 49))
-    val docs = Vector.tabulate(500)(i =>
-      (i.toLong, Vector.fill(10 + rnd.nextInt(40))(pick()).mkString(" ")))
+    Vector.tabulate(500)(i => (i.toLong, Vector.fill(10 + rnd.nextInt(40))(pick()).mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  private lazy val searcher: Searcher = {
     val dir = Files.createTempDirectory("graft-wand").toString
-    IndexBuilder.build(spark, docs.toDF("doc_id", "text"), schema, dir, "wand",
+    IndexBuilder.build(spark, corpus, schema, dir, "wand",
       IndexBuilder.BuildConf(numSegments = 3, blockBits = 5))
     new Searcher(new IndexReader(spark, dir), schema)
   }
@@ -413,13 +418,8 @@ class WandSpec extends AnyFunSuite {
     * of the bag shapes and on a spread of other docs.
     */
   private lazy val tombSearcher: Searcher = {
-    val rnd = new scala.util.Random(33)
-    val vocab = Vector.tabulate(50)(i => s"w$i")
-    def pick(): String = vocab(math.min((math.abs(rnd.nextGaussian()) * 10).toInt, 49))
-    val docs = Vector.tabulate(500)(i =>
-      (i.toLong, Vector.fill(10 + rnd.nextInt(40))(pick()).mkString(" ")))
     val dir = Files.createTempDirectory("graft-wand-tomb").toString
-    IndexBuilder.build(spark, docs.toDF("doc_id", "text"), schema, dir, "wandtomb",
+    IndexBuilder.build(spark, corpus, schema, dir, "wandtomb",
       IndexBuilder.BuildConf(numSegments = 3, blockBits = 5))
     val s0 = new Searcher(new IndexReader(spark, dir), schema)
     val topHits = bags.flatMap(q => rows(s0.topDocs(q, 12)).zipWithIndex.collect {
@@ -574,6 +574,133 @@ class WandSpec extends AnyFunSuite {
     val (g, w) = (keyed(got), keyed(want))
     assert(g.size >= 20 && g.keySet == w.keySet)
     g.foreach { case (k, c) => assert(math.abs(c - w(k)) < 1e-12, s"$k: $c vs ${w(k)}") }
+  }
+
+  // ---- docs-table leaves (range, exists, all, regex, term-range) in trees ----
+
+  private def lenRange(lo: Option[String], hi: Option[String]): Query = RangeQuery("len_text", lo, hi)
+
+  /** Trees holding at least one docs-table leaf, or a dismax whose tieBreaker
+    * lies outside [0, 1].
+    */
+  private val docsTrees: Seq[Query] = Seq(
+    // must term + should range
+    BooleanQuery(Seq((Occur.Must, t("w0")), (Occur.Should, lenRange(Some("20"), Some("35"))))),
+    // should term + should regex
+    BooleanQuery(Seq((Occur.Should, t("w3")), (Occur.Should, RegexQuery("text", "w1[0-9]")))),
+    // must exists + mustNot term
+    BooleanQuery(Seq((Occur.Must, ExistsQuery("text")), (Occur.MustNot, t("w0")))),
+    // must all + mustNot phrase
+    BooleanQuery(Seq((Occur.Must, AllQuery), (Occur.MustNot, phrase(Seq("w0", "w1"), 0)))),
+    // dismax over a term-range and a phrase
+    DisjunctionMaxQuery(Seq(TermRangeQuery("text", Some("w30"), Some("w35")), phrase(Seq("w0", "w1"), 1)), 0.3),
+    // a boosted range and two terms, msm 2
+    BooleanQuery(Seq(
+      (Occur.Should, BoostQuery(lenRange(Some("30"), None), 2.5)),
+      (Occur.Should, t("w2")), (Occur.Should, t("w5"))), Some(2)),
+    // a regex inside a nested should clause
+    BooleanQuery(Seq((Occur.Must, t("w1")), (Occur.Should, BooleanQuery(Seq(
+      (Occur.Must, t("w3")), (Occur.Should, RegexQuery("text", "w2[0-9]"))))))),
+    // a pure docs tree
+    BooleanQuery(Seq((Occur.Must, lenRange(Some("15"), Some("40"))), (Occur.MustNot, RegexQuery("text", "w4[0-9]")))),
+    // a two-term dismax with tieBreaker 1.5
+    DisjunctionMaxQuery(Seq(t("w0"), t("w3")), 1.5))
+
+  /** `q` through topDocs (k = 10, and k = 10 at offset 5) and search equals
+    * the oracle, whatever route it takes.
+    */
+  private def assertDocsTree(s: Searcher, q: Query): Unit = {
+    val want = exhaustive(q, 15, s)
+    assert(want.length == 15, s"$q: ${want.length} hits")
+    assertSame(rows(s.topDocs(q, 10)), want.take(10))
+    assertSame(rows(s.topDocs(q, 10, offset = 5)), want.slice(5, 15))
+    val got = rows(s.search(q)).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
+    val all = rows(WandSpec.perOccurrence(s, q)).map { case (sg, d, sc) => (sg, d) -> sc }.toMap
+    assert(got.keySet == all.keySet, s"$q: doc sets differ")
+    got.foreach { case (k, sc) => assert(math.abs(sc - all(k)) < 1e-12, s"$q at $k: $sc vs ${all(k)}") }
+  }
+
+  test("docs-leaf trees: topDocs and search equal the per-occurrence oracle") {
+    docsTrees.foreach(assertDocsTree(searcher, _))
+  }
+
+  test("docs-leaf trees with tombstones: topDocs and search equal the oracle") {
+    docsTrees.foreach(assertDocsTree(tombSearcher, _))
+  }
+
+  test("docs-leaf trees with fieldnorms off: topDocs and search equal the oracle") {
+    val off = new Searcher(searcher.reader, schema, fieldnorms = false)
+    docsTrees.foreach(assertDocsTree(off, _))
+  }
+
+  test("docs-leaf trees take the kernel; a term + range tree plans one Exchange and no Join") {
+    docsTrees.foreach(assertSameSearch(searcher, _))
+    val plan = searcher.plan(docsTrees.head, searcher.reader.termDfs(Seq(("text", "w0"))))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("block_kernel"), plan)
+    assert(plan.split("\n").count(_.contains("Exchange")) == 1, plan)
+    assert(!plan.contains("Join"), plan)
+  }
+
+  test("mixed block_bits: a blockBits 6 merge over a blockBits 4 build; docs-leaf trees equal the oracle") {
+    val dir = Files.createTempDirectory("graft-wand-mixed").toString
+    IndexBuilder.build(spark, corpus, schema, dir, "wandmixed",
+      IndexBuilder.BuildConf(numSegments = 3, blockBits = 4))
+    val segs = graft.index.Snapshots.latest(spark, dir).get.segments.sorted
+    val merged = graft.index.Maintenance.mergeSegments(spark, dir, schema, segs.take(2), "wandmixed-m",
+      IndexBuilder.BuildConf(blockBits = 6))
+    val want = Map(segs(2) -> 4, merged -> 6)
+    val written = spark.read.parquet(s"$dir/fieldstats")
+      .filter(col("segment_id").isin(want.keys.toSeq.map(Integer.valueOf): _*))
+      .select("segment_id", "block_bits").collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(written.length == want.size * schema.fields.size && written.toMap == want)
+    // opening a reader and reading its field stats: one job, no Exchange
+    assert(jobStages { new IndexReader(spark, dir).fieldStats; () } == Seq(1))
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    assert(s.reader.blockBits == want)
+    docsTrees.foreach { q => assertDocsTree(s, q); assertSameSearch(s, q) }
+  }
+
+  test("docs-leaf explain: one const row per matched docs leaf; contributions sum to the score") {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val json = StructType(Seq(StructField("details", WandTopK.explainSchema("details").dataType)))
+    // shapes where every matching leaf's clause scores a hit
+    for ((q, docsLeaves) <- Seq(
+        docsTrees.head -> Seq(lenRange(Some("20"), Some("35")) -> 1.0),
+        docsTrees(5) -> Seq(lenRange(Some("30"), None) -> 2.5))) {
+      val explained = searcher.explainTopDocs(q, 10)
+      val hits = rows(explained)
+      assertSame(hits, exhaustive(q, 10))
+      val got = explained
+        .select(col("segment_id"), col("doc_id"), col("score"),
+          explode(from_json(col("explain"), json)("details")).as("d"))
+        .select(col("segment_id"), col("doc_id"), col("score"), col("d.*"))
+      val sums = got.groupBy("segment_id", "doc_id", "score").agg(sum("contribution").as("c")).collect()
+      assert(sums.length == 10)
+      sums.foreach(r => assert(math.abs(r.getDouble(3) - r.getDouble(2)) < 1e-12, r.toString))
+      // posting leaves: the per-leaf detail scan; docs leaves: one const row
+      // (score × boost) per hit the leaf's own plan matches
+      val hitKeys = explained.select("segment_id", "doc_id")
+      val termRows = PerOccurrence.details(searcher, q).join(hitKeys, Seq("segment_id", "doc_id"), "left_semi")
+      val constRows = docsLeaves.map { case (leaf, b) =>
+        WandSpec.perOccurrence(searcher, leaf).join(hitKeys, Seq("segment_id", "doc_id"), "left_semi")
+          .select(col("segment_id"), col("doc_id"), lit(null).cast("string").as("field"),
+            lit(leaf.toString).as("term"), lit("const").as("kind"), lit(null).cast("int").as("tf"),
+            lit(null).cast("int").as("norm_id"), lit(null).cast("double").as("idf"), lit(b).as("boost"),
+            (col("score") * b).as("contribution"), lit(null).cast("array<int>").as("positions"))
+      }
+      def keyed(df: org.apache.spark.sql.DataFrame) = df
+        .select("segment_id", "doc_id", "field", "term", "kind", "tf", "norm_id", "idf", "boost", "positions",
+          "contribution")
+        .collect().map(r => r.toSeq.init.map {
+          case s: scala.collection.Seq[_] => s.toList
+          case v => v
+        } -> r.getDouble(10)).toMap
+      val (g, w) = (keyed(got.drop("score")), keyed((termRows +: constRows).reduce(_ unionByName _)))
+      assert(g.keySet == w.keySet, s"$q: detail rows differ")
+      assert(g.keys.count(_(4) == "const") > 0, s"$q: no const row")
+      g.foreach { case (k, c) => assert(math.abs(c - w(k)) < 1e-12, s"$k: $c vs ${w(k)}") }
+    }
   }
 }
 
