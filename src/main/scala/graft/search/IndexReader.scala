@@ -1,7 +1,7 @@
 package graft.search
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexBuilder, Snapshots}
@@ -109,19 +109,51 @@ class IndexReader(
       .map { case (f, ps) => col("field") === f && col("term").isin(ps.map(_._2).distinct: _*) }
       .reduce(_ || _)
 
-  /** Batch df lookup for all terms of a query — one pushed-down scan of the
-    * term-sorted per-segment stats; the matching rows (at most #segments ×
-    * #terms) are collected and summed over live segments on the driver, so
-    * the probe is one job with no Exchange (idf becomes a plan literal, like
-    * tantivy's per-query Weight). Deleted docs intentionally still count
-    * toward df until merged out (tantivy semantics).
+  /** The term-addressed block store of a primed reader (`Reflection.prime`
+    * sets it, `unprime` releases it); None on a fresh reader.
     */
-  def termDfs(pairs: Seq[(String, String)]): Map[(String, String), Long] = {
-    if (pairs.isEmpty) return Map.empty
-    termStatsDf
-      .filter(termsFilter(pairs))
-      .select("field", "term", "df")
-      .collect()
-      .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getLong(2))(_ + _)
-  }
+  @transient @volatile private[search] var store: Option[BlockStore] = None
+
+  /** The live posting blocks of `pairs` as [[IndexReader.blockCols]] rows,
+    * in no particular order: on a primed reader one lookup job over just the
+    * store partitions of `pairs`, else a filter of the posting table.
+    */
+  private[search] def postingBlocks(pairs: Seq[(String, String)], withPositions: Boolean): Array[Row] =
+    if (pairs.isEmpty) Array.empty
+    else store match {
+      case Some(s) => s.blocks(pairs, withPositions)
+      case None =>
+        postings.filter(termsFilter(pairs)).select(IndexReader.blockCols(withPositions).map(col): _*).collect()
+    }
+
+  /** Batch df lookup for all terms of a query, summed over live segments;
+    * an absent term has no entry. Deleted docs intentionally still count
+    * toward df until merged out (tantivy semantics). On a primed reader it
+    * is Σ `doc_count` over each term's stored blocks (the sum every writer
+    * stores as termstats df), one lookup job; on a fresh reader one
+    * pushed-down scan of the term-sorted per-segment stats whose matching
+    * rows (at most #segments × #terms) are collected and summed on the
+    * driver, one job with no Exchange. Either way idf becomes a plan
+    * literal, like tantivy's per-query Weight.
+    */
+  def termDfs(pairs: Seq[(String, String)]): Map[(String, String), Long] =
+    if (pairs.isEmpty) Map.empty
+    else store match {
+      case Some(s) => s.dfs(pairs)
+      case None =>
+        termStatsDf
+          .filter(termsFilter(pairs))
+          .select("field", "term", "df")
+          .collect()
+          .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getLong(2))(_ + _)
+    }
+}
+
+object IndexReader {
+  /** The posting-block columns a block lookup returns, in this order;
+    * `positions` last, and only when asked for.
+    */
+  def blockCols(withPositions: Boolean): Seq[String] =
+    Seq("field", "term", "segment_id", "block_id", "doc_count", "block_max_tf", "block_min_norm",
+      "doc_ids", "tfs", "norms") ++ (if (withPositions) Seq("positions") else Nil)
 }

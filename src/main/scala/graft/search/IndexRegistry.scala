@@ -132,34 +132,39 @@ object Reflection {
   /** Hotcache-style priming (reference: the mmap'd hotcache keeps index
     * components resident so first queries don't fault them in,
     * `summa-core/src/components/segment_attributes.rs` sibling cache layer).
-    * Spark analog: persist the reader's postings/docs/termstats DataFrames
-    * in the block-manager columnar cache and materialize them. Spark's
-    * CacheManager matches PLAN FRAGMENTS, so every subsequent query built on
-    * this reader (term filters, topDocs, aggregations) automatically scans
-    * the InMemoryRelation instead of parquet — no query-side change needed.
+    * Spark analog: persist the reader's postings and docs DataFrames in the
+    * block-manager columnar cache and materialize them. Spark's CacheManager
+    * matches PLAN FRAGMENTS, so every subsequent query built on this reader
+    * (term filters, full results, aggregations) automatically scans the
+    * InMemoryRelation instead of parquet — no query-side change needed. The
+    * same pass that fills the postings cache builds the reader's
+    * term-addressed [[BlockStore]] (one partition per default-parallelism
+    * slot), which the top-k walk and `termDfs` then look terms up in; so
+    * termstats, which only `termDfs` read on the query path, stay on disk.
     * MEMORY_AND_DISK keeps cold segments spillable; `unprime` releases.
     */
   def prime(reader: IndexReader): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     reader.postings.persist(lvl)
     reader.docs.persist(lvl)
-    reader.termStatsDf.persist(lvl)
     // materialize concurrently (independent jobs, same discipline as the
-    // build-path stat writes)
+    // build-path stat writes); the store's job reads the postings through
+    // their columnar cache and so fills it
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val jobs = Seq(reader.postings, reader.docs, reader.termStatsDf)
-      .map(df => Future { df.count() })
-    jobs.foreach(Await.result(_, Duration.Inf))
-    reader.fieldStats
-    ()
+    val store = Future {
+      BlockStore.build(reader.postings, reader.spark.sparkContext.defaultParallelism, lvl)
+    }
+    Seq(Future(reader.docs.count()), Future(reader.fieldStats)).foreach(Await.result(_, Duration.Inf))
+    reader.store = Some(Await.result(store, Duration.Inf))
   }
 
   def unprime(reader: IndexReader): Unit = {
+    reader.store.foreach(_.release())
+    reader.store = None
     reader.postings.unpersist()
     reader.docs.unpersist()
-    reader.termStatsDf.unpersist()
     ()
   }
 }

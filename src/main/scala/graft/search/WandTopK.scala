@@ -142,11 +142,7 @@ object WandTopK {
     }
   }
 
-  /** The block columns every route reads, in this order (`positions` last,
-    * and only when a phrase needs it).
-    */
-  private val BlockCols = Seq("field", "term", "segment_id", "block_id", "doc_count",
-    "block_max_tf", "block_min_norm", "doc_ids", "tfs", "norms")
+  // the columns of IndexReader.blockCols, the block layout every route reads
   private val FieldCol = 0
   private val TermCol = 1
   private val Seg = 2
@@ -159,8 +155,8 @@ object WandTopK {
   private val Norms = 9
   private val Positions = 10
 
-  private def blockCols(plan: Plan) =
-    (BlockCols ++ (if (plan.nodes.exists(_.isInstanceOf[Phrase])) Seq("positions") else Nil)).map(col)
+  /** Does `plan` read positions (`positions` is a block column only then). */
+  private def withPositions(plan: Plan): Boolean = plan.nodes.exists(_.isInstanceOf[Phrase])
 
   /** One posting block, each column decoded on first use. */
   private final class Decoded(r: Row) {
@@ -447,7 +443,8 @@ object WandTopK {
     val reader = searcher.reader
     val blocks = if (plan.pairs.isEmpty) None else Some(reader.postings
       .filter(reader.termsFilter(plan.pairs))
-      .select(col("segment_id"), col("block_id"), struct(blockCols(plan): _*).as("block")))
+      .select(col("segment_id"), col("block_id"),
+        struct(IndexReader.blockCols(withPositions(plan)).map(col): _*).as("block")))
     val bits = typedLit(reader.blockBits)
     val leaves = plan.opaques.zipWithIndex.map { case (o, i) =>
       searcher.leafHits(o.query, dfs).select(col("segment_id"),
@@ -496,19 +493,17 @@ object WandTopK {
   private val NoTombstones = new java.util.BitSet(0)
 
   /** The k best hits of `plan` in rank order, and the groups seen and
-    * decoded: one job collects the plan's live blocks, one top-k heap walks
-    * the doc-aligned groups in order on the driver, offering no tombstoned
-    * doc.
+    * decoded: one job collects the plan's live blocks
+    * ([[IndexReader.postingBlocks]]: a store lookup on a primed reader, a
+    * posting-table filter on a fresh one), one top-k heap walks the
+    * doc-aligned groups in order on the driver, offering no tombstoned doc.
     */
   private def walk(searcher: Searcher, plan: Plan, k: Int): (Seq[Hit], Int, Int) = {
     if (k <= 0) return (Nil, 0, 0)
     val reader = searcher.reader
     // the one job: every live block of the plan's terms. Positions are not
     // filtered on: df must cover all of a term's blocks
-    val blocks = reader.postings
-      .filter(reader.termsFilter(plan.pairs))
-      .select(blockCols(plan): _*)
-      .collect()
+    val blocks = reader.postingBlocks(plan.pairs, withPositions(plan))
       .sortBy(r => (r.getInt(Seg), r.getInt(Block)))
     val dfs: Map[(String, String), Long] =
       blocks.groupMapReduce(r => (r.getString(FieldCol), r.getString(TermCol)))(_.getInt(Count).toLong)(_ + _)

@@ -1,7 +1,12 @@
 package graft.search
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -49,6 +54,43 @@ class RegistrySpec extends AnyFunSuite {
     Reflection.warmup(a.reader) // smoke: no exceptions
   }
 
+  /** The jobs, tasks and SQL executions `body` starts, seen by a listener
+    * scoped to a job group (SQL executions are counted from any thread); a
+    * marker job in a second group flushes the listener queue.
+    */
+  private def traffic(body: => Unit): (Int, Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"prime-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
+    val sql = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      private def inGroup(p: java.util.Properties) =
+        Option(p).map(_.getProperty("spark.jobGroup.id")).contains(group)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e.properties)) jobs.incrementAndGet()
+        else if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(s"$group-flush"))
+          flushed.countDown()
+      // a submitted stage runs its tasks; a skipped one is never submitted
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (inGroup(e.properties)) tasks.addAndGet(e.stageInfo.numTasks)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sql.incrementAndGet()
+        case _                                 =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "prime route")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener flush job never seen")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, tasks.get, sql.get)
+  }
+
   test("prime: queries scan the columnar cache, unprime releases it") {
     val dir = Files.createTempDirectory("graft-reg-prime").toString
     IndexBuilder.build(spark,
@@ -60,16 +102,35 @@ class RegistrySpec extends AnyFunSuite {
     def physical(q: Query): String =
       s.search(q).queryExecution.executedPlan.toString
 
+    val walked = Seq[Query](TermQuery("text", "spark"),
+      BooleanQuery(Seq((Occur.Must, TermQuery("text", "spark")), (Occur.Should, TermQuery("text", "scan")),
+        (Occur.Should, TermQuery("text", "table")))))
+    def top(q: Query) = s.topDocs(q, 10).collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
+
     assert(!physical(TermQuery("text", "spark")).contains("InMemoryTableScan"))
     Reflection.prime(s.reader)
-    try {
+    val storeRdd = s.reader.store.get.rdd
+    val primedTop = try {
       // CacheManager fragment-matching: the SAME query plan now scans the
       // in-memory relation without any query-side change
       assert(physical(TermQuery("text", "spark")).contains("InMemoryTableScan"))
       val hits = s.search(TermQuery("text", "spark")).collect()
       assert(hits.length == 2)
+      // a walkable top-k is one store lookup: one job, no SQL execution, one
+      // task per store partition its terms hash to
+      assert(spark.sparkContext.getPersistentRDDs.contains(storeRdd.id))
+      walked.map { q =>
+        val parts = new HashPartitioner(storeRdd.getNumPartitions)
+        val wanted = WandTopK.eligible(q).get.pairs.map(parts.getPartition).distinct.size
+        val (jobs, tasks, sql) = traffic { s.topDocs(q, 10); () }
+        assert(jobs == 1 && sql == 0 && tasks <= wanted, s"$q: $jobs jobs, $tasks tasks ($wanted wanted), $sql SQL")
+        top(q)
+      }
     } finally Reflection.unprime(s.reader)
     assert(!physical(TermQuery("text", "spark")).contains("InMemoryTableScan"))
+    assert(s.reader.store.isEmpty && !spark.sparkContext.getPersistentRDDs.contains(storeRdd.id))
+    // the posting-table route returns the same rows
+    assert(walked.map(top) == primedTop && primedTop.head.size == 2)
   }
 
   test("exportNamedJson: multi_fields render as arrays, others collapse (golden)") {

@@ -642,14 +642,22 @@ class WandSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), plan)
   }
 
-  test("mixed block_bits: a blockBits 6 merge over a blockBits 4 build; docs-leaf trees equal the oracle") {
+  /** The main corpus built at blockBits 4 in 3 segments, two of them then
+    * merged at blockBits 6: `(index dir, the unmerged segment, the merged one)`.
+    */
+  private lazy val mixed: (String, Int, Int) = {
     val dir = Files.createTempDirectory("graft-wand-mixed").toString
     IndexBuilder.build(spark, corpus, schema, dir, "wandmixed",
       IndexBuilder.BuildConf(numSegments = 3, blockBits = 4))
     val segs = graft.index.Snapshots.latest(spark, dir).get.segments.sorted
     val merged = graft.index.Maintenance.mergeSegments(spark, dir, schema, segs.take(2), "wandmixed-m",
       IndexBuilder.BuildConf(blockBits = 6))
-    val want = Map(segs(2) -> 4, merged -> 6)
+    (dir, segs(2), merged)
+  }
+
+  test("mixed block_bits: a blockBits 6 merge over a blockBits 4 build; docs-leaf trees equal the oracle") {
+    val (dir, built, merged) = mixed
+    val want = Map(built -> 4, merged -> 6)
     val written = spark.read.parquet(s"$dir/fieldstats")
       .filter(col("segment_id").isin(want.keys.toSeq.map(Integer.valueOf): _*))
       .select("segment_id", "block_bits").collect().map(r => (r.getInt(0), r.getInt(1)))
@@ -700,6 +708,92 @@ class WandSpec extends AnyFunSuite {
       assert(g.keySet == w.keySet, s"$q: detail rows differ")
       assert(g.keys.count(_(4) == "const") > 0, s"$q: no const row")
       g.foreach { case (k, c) => assert(math.abs(c - w(k)) < 1e-12, s"$k: $c vs ${w(k)}") }
+    }
+  }
+
+  // ---- primed readers: the block store route equals the posting-table route ----
+
+  /** `(segment_id, doc_id, raw score bits)` of each row, in order. */
+  private def bits(df: org.apache.spark.sql.DataFrame) =
+    rows(df).map { case (sg, d, sc) => (sg, d, java.lang.Double.doubleToRawLongBits(sc)) }.toSeq
+
+  /** `body(fresh, primed)`: two new searchers over `s`'s index with its
+    * schema and fieldnorms toggle, the second primed for the call.
+    */
+  private def withPrimed(s: Searcher)(body: (Searcher, Searcher) => Unit): Unit = {
+    def open() = new Searcher(new IndexReader(spark, s.reader.indexDir), s.schema, s.fieldnorms)
+    val (fresh, primed) = (open(), open())
+    Reflection.prime(primed.reader)
+    try {
+      assert(primed.reader.store.nonEmpty && fresh.reader.store.isEmpty)
+      body(fresh, primed)
+    } finally Reflection.unprime(primed.reader)
+  }
+
+  /** Walkable `q` gives the same top-k (k = 10, offset 5, k = 0), explain
+    * and term dfs on a primed reader as on a fresh one, scores as raw bits.
+    */
+  private def assertPrimedSame(fresh: Searcher, primed: Searcher, q: Query): Unit = {
+    val plan = WandTopK.eligible(primed.resolve(q))
+    assert(plan.nonEmpty, s"expected $q to be walkable")
+    for ((k, offset) <- Seq((10, 0), (10, 5), (0, 0)))
+      assert(bits(primed.topDocs(q, k, offset)) == bits(fresh.topDocs(q, k, offset)), s"$q at k $k offset $offset")
+    def explained(s: Searcher) = s.explainTopDocs(q, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getString(3))).toSeq
+    assert(explained(primed) == explained(fresh), s"$q: explain differs")
+    val pairs = plan.get.pairs :+ ("text", "nosuchterm")
+    assert(primed.reader.termDfs(pairs) == fresh.reader.termDfs(pairs), s"$q: dfs differ")
+  }
+
+  /** The walkable shapes of the text-only corpus, the edge cases included. */
+  private val walkedShapes: Seq[Query] = Seq[Query](
+    t("w0"),
+    bool((Occur.Must, "w1"), (Occur.Should, "w3")),
+    phrase(Seq("w0", "w1"), 1),
+    phrase(Seq("w0", "w1", "w2"), 2),
+    DisjunctionMaxQuery(Seq(t("w0"), t("w3"), t("w9")), 0.3),
+    BooleanQuery(bool((Occur.Should, "w0"), (Occur.Should, "w3"), (Occur.Should, "w6")).clauses, Some(2)),
+    bool((Occur.Should, "w0"), (Occur.Should, "w5"), (Occur.MustNot, "w1")),
+    TermQuery("nosuchfield", "x"),
+    t("nosuchterm"),
+    phrase(Seq("w0", "nosuchterm"), 0)) ++ bags ++ trees
+
+  test("primed reader: every walkable shape equals the fresh reader, bit for bit") {
+    withPrimed(searcher)((fresh, primed) => walkedShapes.foreach(assertPrimedSame(fresh, primed, _)))
+  }
+
+  test("primed reader: cross-field head, raw mustNot and dismax equal the fresh reader") {
+    val shapes = Seq[Query](
+      BooleanQuery(Seq((Occur.Must, TermQuery("lang", "en")), (Occur.Should, t("w3")))),
+      BooleanQuery(Seq((Occur.Should, t("w0")), (Occur.Should, t("w4")), (Occur.MustNot, TermQuery("lang", "en")))),
+      DisjunctionMaxQuery(Seq(TermQuery("lang", "fr"), t("w2")), 0.3))
+    withPrimed(langSearcher)((fresh, primed) => shapes.foreach(assertPrimedSame(fresh, primed, _)))
+  }
+
+  test("primed reader with tombstones, fieldnorms off and mixed block_bits equals the fresh reader") {
+    val off = new Searcher(searcher.reader, schema, fieldnorms = false)
+    val mixedSearcher = new Searcher(new IndexReader(spark, mixed._1), schema)
+    for (s <- Seq(tombSearcher, off, mixedSearcher))
+      withPrimed(s)((fresh, primed) => walkedShapes.foreach(assertPrimedSame(fresh, primed, _)))
+  }
+
+  test("primed reader: four threads' top-k answers equal the serial answers") {
+    withPrimed(searcher) { (_, primed) =>
+      val queries = walkedShapes.take(7) ++ bags ++ trees
+      val serial = queries.map(q => bits(primed.topDocs(q, 10)))
+      val errors = new ConcurrentLinkedQueue[String]()
+      val threads = (0 until 4).map { i =>
+        val th = new Thread(() =>
+          for (round <- 0 until 3; j <- queries.indices) {
+            // each thread walks the list from its own starting point
+            val k = (j + i * 5 + round) % queries.size
+            val got = scala.util.Try(bits(primed.topDocs(queries(k), 10)))
+            if (!got.toOption.contains(serial(k))) errors.add(s"thread $i, ${queries(k)}: $got")
+          })
+        th.start(); th
+      }
+      threads.foreach(_.join())
+      assert(errors.isEmpty, errors.asScala.take(3).mkString("; "))
     }
   }
 }
