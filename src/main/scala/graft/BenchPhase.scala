@@ -29,8 +29,7 @@ object BenchPhase {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("GRAFT_BENCH_CODEC", "zstd"))
+      .config("spark.sql.parquet.compression.codec", "zstd")
       // shuffle/spill files live next to the index (tmpfs when the caller
       // put the workdir there) — host-disk I/O noise otherwise dominates
       // single-build variance
@@ -50,17 +49,12 @@ object BenchPhase {
       spark, spark.read.parquet(pagesDir).limit(10000), IndexSchema.pages,
       s"$indexDir-warm", "warm", IndexBuilder.BuildConf(numSegments = 8))
 
-    // oversubscribe tasks per core so stage-tail skew doesn't idle cores —
-    // the multi-executor analog of spark's 2-3 tasks-per-slot guidance
-    val partsFactor = sys.env.getOrElse("GRAFT_BUILD_PARTS_FACTOR", "3").toInt
-    val blockBits = sys.env.getOrElse("GRAFT_BLOCK_BITS", "10").toInt
     // task-time accounting: executor run-time vs cpu-time split shows
     // whether extra per-core time at higher parallelism is compute
     // inflation (contention) or waiting (bandwidth/GC stalls)
     val runTime = new java.util.concurrent.atomic.AtomicLong
     val cpuTime = new java.util.concurrent.atomic.AtomicLong
     val gcTime = new java.util.concurrent.atomic.AtomicLong
-    val stageMetrics = sys.env.get("GRAFT_STAGE_METRICS").contains("1")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
@@ -71,19 +65,6 @@ object BenchPhase {
           ()
         }
       }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageMetrics) {
-          val i = s.stageInfo
-          val m = i.taskMetrics
-          System.err.println(
-            f"[stage] id=${i.stageId} tasks=${i.numTasks} name=${i.name.takeWhile(_ != '\n').take(60)} " +
-              f"run=${m.executorRunTime / 1000.0}%.1f cpu=${m.executorCpuTime / 1e9}%.1f " +
-              f"gc=${m.jvmGCTime / 1000.0}%.1f " +
-              f"in=${m.inputMetrics.bytesRead / 1e6}%.0fMB out=${m.outputMetrics.bytesWritten / 1e6}%.0fMB " +
-              f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e6}%.0fMB sw=${m.shuffleWriteMetrics.bytesWritten / 1e6}%.0fMB " +
-              f"spill=${m.diskBytesSpilled / 1e6}%.0fMB")
-        }
     })
 
     val times = (1 to reps).map { i =>
@@ -91,8 +72,10 @@ object BenchPhase {
       IndexBuilder.build(
         spark, spark.read.parquet(pagesDir), IndexSchema.pages,
         s"$indexDir-r$i", s"bench-$cpus-r$i",
-        IndexBuilder.BuildConf(
-          numSegments = 8, blockBits = blockBits, buildPartitions = cpus * partsFactor))
+        // oversubscribe tasks per core so stage-tail skew doesn't idle
+        // cores — the multi-executor analog of spark's 2-3 tasks-per-slot
+        // guidance
+        IndexBuilder.BuildConf(numSegments = 8, buildPartitions = cpus * 3))
       (System.nanoTime() - t0) / 1e9
     }
     // keep the LAST rep's index at the caller-visible path (queries run on it)

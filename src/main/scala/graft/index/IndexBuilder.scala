@@ -53,9 +53,13 @@ object IndexBuilder {
   final case class BuildConf(
       numSegments: Int = 8,
       blockBits: Int = 10,
-      buildPartitions: Int = 0, // 0 = spark.sql.shuffle.partitions
-      persist: StorageLevel = StorageLevel.MEMORY_AND_DISK
-  )
+      buildPartitions: Int = 0 // 0 = spark.sql.shuffle.partitions
+  ) {
+    /** The shuffle partition count of a build or merge in `spark`. */
+    def partitions(spark: SparkSession): Int =
+      if (buildPartitions > 0) buildPartitions
+      else spark.sessionState.conf.numShufflePartitions
+  }
 
   /** Per-segment doc/token totals from the doc-id pass (`assignDocIds`). */
   final case class SegStat(segmentId: Int, nDocs: Long, tokensByField: Map[String, Long])
@@ -403,11 +407,7 @@ object IndexBuilder {
         val acc = fusedAccFor(analyzerName, spec)
         acc.reset()
         if (graft.analysis.FusedTokenize.runAscii(buf, n, spec.kind, acc)) acc.result()
-        else {
-          acc.reset()
-          graft.analysis.FusedTokenize.run(spec.kind, value.toString, acc)
-          acc.result()
-        }
+        else analyzeFieldFlat(analyzerName, value.toString)
       case None => analyzeFieldFlat(analyzerName, value.toString)
     }
   }
@@ -451,157 +451,41 @@ object IndexBuilder {
       copy(child = newChild)
   }
 
-  /** Streaming token accumulator: an open-addressed, generation-stamped
-    * (term → [[TermAcc]]) table fed directly by [[graft.analysis
-    * .FusedTokenize]]. Per steady-state document it allocates ONLY the
-    * output blob: term keys live as byte slices in a reused pool (a String
-    * key per first-seen distinct term plus its UTF-8 re-encode in the blob
-    * assembler were a measured ~13% of build allocation volume — JFR
-    * `accFor`/`mkTokFlat` sites — and allocation churn is the memory-
-    * bandwidth tax the wide build pays hardest), so the table, the TermAcc
-    * pool, the key pool and the lowercase/stop filters all run on reused
-    * buffers.
+  /** Streaming token accumulator fed directly by [[graft.analysis
+    * .FusedTokenize]]: term ids come from a [[SliceIds]] table reused across
+    * documents, and `accs(id)` is term `id`'s [[TermAcc]] (the array is also
+    * the TermAcc pool). Per steady-state document it allocates ONLY the
+    * output blob: term keys live as byte slices in the table's reused pool (a
+    * String key per first-seen distinct term plus its UTF-8 re-encode in the
+    * blob assembler were a measured ~13% of build allocation volume, and
+    * allocation churn is the memory-bandwidth tax the wide build pays
+    * hardest).
     *
     * ASCII tokens lowercase in place (exactly `String.toLowerCase` for
-    * ASCII input under any non-Turkic default locale — guarded below);
-    * non-ASCII tokens fall back to the String-based chain, preserving
-    * locale/special-casing semantics bit-for-bit with the legacy path.
-    * Both paths key the SAME table: hashes follow the `String.hashCode`
-    * convention over (byte & 0xFF), which coincides with the char-slice
-    * hash for ASCII — so a term reachable via both routes (e.g. Kelvin-sign
-    * K lowercasing to ASCII `k`) lands in one accumulator, and the ASCII
-    * hot path's table layout (hence blob term order) is bit-identical to
-    * the former String-keyed table's.
+    * ASCII input under any non-Turkic default locale — guarded below) and
+    * take the ASCII char lookup; non-ASCII tokens fall back to the
+    * String-based chain, preserving locale/special-casing semantics
+    * bit-for-bit with the legacy path, and take the byte lookup. Both
+    * lookups key the same table, so a term reachable via both routes (e.g.
+    * Kelvin-sign K lowercasing to ASCII `k`) lands in one accumulator.
     */
   private final class FusedAcc(spec: Analyzers.FusedSpec) extends graft.analysis.TokenSink {
     import graft.analysis.FusedTokenize.StopChars
 
-    private var cap = 256
-    private var mask = cap - 1
-    private var offs = new Array[Int](cap)
-    private var lens = new Array[Int](cap)
-    private var hs = new Array[Int](cap)
-    private var accs = new Array[TermAcc](cap)
-    private var gens = new Array[Int](cap)
-    private var gen = 0
-    private var size = 0
+    private val ids = new SliceIds
+    private var accs = new Array[TermAcc](256)
+    private var live = 0 // accs(0 until live) are armed for this document
     private var survivors = 0
 
-    // per-doc UTF-8 key bytes (reset rewinds, capacity kept across docs)
-    private var termPool = new Array[Byte](1 << 12)
-    private var poolEnd = 0
-    // live-slot scratch for result()'s emit pass
-    private var emit = new Array[Int](256)
+    def reset(): Unit = { ids.clear(); live = 0; survivors = 0 }
 
-    private var pool = new Array[TermAcc](64)
-    private var poolN = 0
-    private var poolUsed = 0
-
-    def reset(): Unit = { gen += 1; size = 0; survivors = 0; poolUsed = 0; poolEnd = 0 }
-
-    private def takeAcc(): TermAcc = {
-      if (poolUsed < poolN) { val a = pool(poolUsed); poolUsed += 1; a.reset(); a }
-      else {
-        if (poolN == pool.length) pool = java.util.Arrays.copyOf(pool, poolN * 2)
-        val a = new TermAcc
-        pool(poolN) = a; poolN += 1; poolUsed += 1
-        a
+    private def add(id: Int, pos: Int): Unit = {
+      if (id == live) { // ids are dense: a new term takes the next id
+        if (id == accs.length) accs = java.util.Arrays.copyOf(accs, id * 2)
+        if (accs(id) == null) accs(id) = new TermAcc else accs(id).reset()
+        live += 1
       }
-    }
-
-    @inline private def spread(h: Int): Int = h ^ (h >>> 16)
-
-    private def grow(): Unit = {
-      val oldOffs = offs; val oldLens = lens; val oldHs = hs
-      val oldAccs = accs; val oldGens = gens; val oldCap = cap
-      cap *= 2; mask = cap - 1
-      offs = new Array[Int](cap); lens = new Array[Int](cap); hs = new Array[Int](cap)
-      accs = new Array[TermAcc](cap); gens = new Array[Int](cap)
-      // fresh gens array is all-0; live entries must carry the CURRENT gen,
-      // which may be 0 only before any reset — bump to keep 0 meaning empty
-      if (gen == 0) gen = 1
-      var i = 0
-      while (i < oldCap) {
-        if (oldAccs(i) != null && oldGens(i) == gen) {
-          var j = spread(oldHs(i)) & mask
-          while (accs(j) != null && gens(j) == gen) j = (j + 1) & mask
-          offs(j) = oldOffs(i); lens(j) = oldLens(i); hs(j) = oldHs(i)
-          accs(j) = oldAccs(i); gens(j) = gen
-        }
-        i += 1
-      }
-    }
-
-    private def growPool(need: Int): Unit = {
-      var n = termPool.length
-      while (n < need) n *= 2
-      termPool = java.util.Arrays.copyOf(termPool, n)
-    }
-
-    /** Lookup-or-insert by ASCII char slice (hash pre-computed,
-      * String.hashCode convention — equals the byte-slice hash for ASCII).
-      */
-    private def accFor(buf: Array[Char], len: Int, h: Int): TermAcc = {
-      var i = spread(h) & mask
-      while (true) {
-        if (accs(i) == null || gens(i) != gen) {
-          if ((size + 1) * 10 > cap * 7) { grow(); return accFor(buf, len, h) }
-          val a = takeAcc()
-          if (poolEnd + len > termPool.length) growPool(poolEnd + len)
-          var j = 0
-          while (j < len) { termPool(poolEnd + j) = buf(j).toByte; j += 1 }
-          offs(i) = poolEnd; lens(i) = len; hs(i) = h
-          poolEnd += len
-          accs(i) = a; gens(i) = gen; size += 1
-          return a
-        }
-        if (hs(i) == h && lens(i) == len) {
-          val o = offs(i)
-          var j = 0
-          // a non-ASCII pool byte masks to >= 0x80 and can never equal an
-          // ASCII char, so cross-route probes mismatch correctly
-          while (j < len && (termPool(o + j) & 0xFF) == buf(j).toInt) j += 1
-          if (j == len) return accs(i)
-        }
-        i = (i + 1) & mask
-      }
-      null // unreachable
-    }
-
-    /** Lookup-or-insert by UTF-8 byte array (the non-ASCII fallback route). */
-    private def accForBytes(b: Array[Byte], h: Int): TermAcc = {
-      val len = b.length
-      var i = spread(h) & mask
-      while (true) {
-        if (accs(i) == null || gens(i) != gen) {
-          if ((size + 1) * 10 > cap * 7) { grow(); return accForBytes(b, h) }
-          val a = takeAcc()
-          if (poolEnd + len > termPool.length) growPool(poolEnd + len)
-          System.arraycopy(b, 0, termPool, poolEnd, len)
-          offs(i) = poolEnd; lens(i) = len; hs(i) = h
-          poolEnd += len
-          accs(i) = a; gens(i) = gen; size += 1
-          return a
-        }
-        if (hs(i) == h && lens(i) == len) {
-          val o = offs(i)
-          var j = 0
-          while (j < len && termPool(o + j) == b(j)) j += 1
-          if (j == len) return accs(i)
-        }
-        i = (i + 1) & mask
-      }
-      null // unreachable
-    }
-
-    /** String.hashCode convention over (byte & 0xFF) — coincides with the
-      * char-slice hash for ASCII content.
-      */
-    private def hashBytes(b: Array[Byte]): Int = {
-      var h = 0
-      var i = 0
-      while (i < b.length) { h = 31 * h + (b(i) & 0xFF); i += 1 }
-      h
+      accs(id).addPos(pos)
     }
 
     override def token(buf: Array[Char], len: Int, rawBytes: Int, pos: Int, ascii: Boolean): Unit = {
@@ -618,49 +502,45 @@ object IndexBuilder {
         val h = StopChars.hashOf(buf, len)
         if (spec.stop && StopChars.contains(buf, len, h)) return
         survivors += 1
-        accFor(buf, len, h).addPos(pos)
+        add(ids.idAscii(buf, len, h), pos)
       } else {
         var s = new String(buf, 0, len)
         if (spec.lower) s = s.toLowerCase
         if (spec.stop && graft.analysis.StopWords.All.contains(s)) return
         survivors += 1
         val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        accForBytes(b, hashBytes(b)).addPos(pos)
+        add(ids.id(b, 0, b.length), pos)
       }
     }
 
-    /** Assemble the TokFlat in hash-table scan order — deliberately NOT
-      * term-sorted. Per-doc term order is free here: the pack phase keys a
-      * hash [[FragMap]] by term slice (doc-arrival order fixes each frag's
-      * posting content) and the posting table is globally re-sorted on its
-      * unique (segment, field, term, block, first_doc) key afterward, so the
-      * final index bytes are identical either way; termstats/fieldstats are
-      * order-free aggregates. Skipping the per-doc `Arrays.sort` +
-      * sorted-order re-probe was a measured ~6% of build task cpu.
-      * FusedAnalyzeSpec pins semantic equality with the (sorted) legacy
-      * chain via canonicalized compare.
+    /** Assemble the TokFlat in term-id (first-seen) order — deliberately
+      * NOT term-sorted. Per-doc term order is free here: the pack phase
+      * keys its own [[SliceIds]] table by term slice (doc-arrival order
+      * fixes each fragment's posting content) and the posting table is
+      * globally re-sorted on its unique (segment, field, term, block,
+      * first_doc) key afterward, so the final index bytes are identical
+      * either way; termstats/fieldstats are order-free aggregates. Skipping
+      * the per-doc `Arrays.sort` + sorted-order re-probe was a measured ~6%
+      * of build task cpu. FusedAnalyzeSpec pins semantic equality with the
+      * (sorted) legacy chain via canonicalized compare.
       */
     def result(): TokFlat = {
-      val k = size
+      val k = ids.size
       if (k == 0) return mkTokFlat(survivors, FieldNorm.encode(survivors.toLong),
         Array.empty, Array.empty, Array.empty, Array(0))
-      if (emit.length < k) emit = new Array[Int](math.max(k, emit.length * 2))
-      // pass 1: gather live slots in table-scan order and size every blob
-      // section — the blob below is the ONE allocation of a steady-state doc
+      // pass 1: size every blob section — the blob below is the ONE
+      // allocation of a steady-state doc
       var metaLen = varIntLen(k)
-      var termsLen = 0
       var posLen = 0
-      var i = 0; var t = 0
-      while (i < cap) {
-        if (accs(i) != null && gens(i) == gen) {
-          emit(t) = i; t += 1
-          val acc = accs(i)
-          metaLen += varIntLen(lens(i)) + varIntLen(acc.tf) + varIntLen(acc.len)
-          termsLen += lens(i)
-          posLen += acc.len
-        }
+      var i = 0
+      while (i < k) {
+        val acc = accs(i)
+        metaLen += varIntLen(ids.keyLen(i)) + varIntLen(acc.tf) + varIntLen(acc.len)
+        posLen += acc.len
         i += 1
       }
+      // keys sit back to back in id order: the term section is one copy
+      val termsLen = ids.keyOff(k - 1) + ids.keyLen(k - 1)
       val blob = new Array[Byte](
         varIntLen(metaLen) + varIntLen(termsLen) + metaLen + termsLen + posLen)
       var p = putVarInt(blob, 0, metaLen)
@@ -668,22 +548,16 @@ object IndexBuilder {
       p = putVarInt(blob, p, k)
       i = 0
       while (i < k) {
-        val s = emit(i)
-        p = putVarInt(blob, p, lens(s))
-        p = putVarInt(blob, p, accs(s).tf)
-        p = putVarInt(blob, p, accs(s).len)
+        p = putVarInt(blob, p, ids.keyLen(i))
+        p = putVarInt(blob, p, accs(i).tf)
+        p = putVarInt(blob, p, accs(i).len)
         i += 1
       }
+      System.arraycopy(ids.bytes, 0, blob, p, termsLen)
+      p += termsLen
       i = 0
       while (i < k) {
-        val s = emit(i)
-        System.arraycopy(termPool, offs(s), blob, p, lens(s))
-        p += lens(s)
-        i += 1
-      }
-      i = 0
-      while (i < k) {
-        val a = accs(emit(i))
+        val a = accs(i)
         System.arraycopy(a.buf, 0, blob, p, a.len)
         p += a.len
         i += 1
@@ -779,14 +653,13 @@ object IndexBuilder {
   def assignDocIds(
       df: DataFrame,
       parts: Int,
-      level: StorageLevel,
       extraAggs: Seq[org.apache.spark.sql.Column] = Nil
   ): (DataFrame, DataFrame, Long, Map[Int, Row]) = {
     val spark = df.sparkSession
     // the partition id is stamped as a column at materialization time — a
     // TaskContext-based id would be wrong when this plan is later embedded
     // under a union (task partition ids shift per branch)
-    val sorted = df.withColumn("__pid", spark_partition_id()).persist(level)
+    val sorted = df.withColumn("__pid", spark_partition_id()).persist(StorageLevel.MEMORY_AND_DISK)
 
     // pass 1: rows per (physical partition, segment) — small driver table
     val pass1 = sorted
@@ -875,19 +748,16 @@ object IndexBuilder {
 
   /** One posting-block row of [[packSchema]] from its postings in doc
     * order: doc ids, tfs, norm bytes and, for position-recording fields,
-    * each doc's packed position run (else null).
+    * the docs' packed position runs back to back (else null). The block
+    * assembler of both segment writers: the build's pack and the merge's
+    * re-blocking.
     */
   private[index] def packBlock(
       field: String, term: String, seg: Int, block: Int,
-      docIds: Array[Int], tfs: Array[Int], norms: Array[Byte], pos: Array[Array[Byte]]
+      docIds: Array[Int], tfs: Array[Int], norms: Array[Byte], pos: Array[Byte]
   ): Row = {
     val docIdsB = PostingCodec.packDocIds(docIds)
     val tfsB = PostingCodec.packVarInts(tfs)
-    val posB = if (pos == null) null else {
-      val b = new PostingCodec.ByteVec(pos.map(_.length).sum)
-      pos.foreach(run => b.append(run, 0, run.length))
-      b.toArray
-    }
     var maxTf = 0
     var minNorm = 255
     var sumTf = 0L
@@ -899,9 +769,9 @@ object IndexBuilder {
       i += 1
     }
     val bytes = docIdsB.length.toLong + tfsB.length + norms.length +
-      (if (posB == null) 0 else posB.length)
+      (if (pos == null) 0 else pos.length)
     Row(field, term, seg, block, docIds.length, docIds(0), docIds(docIds.length - 1),
-      maxTf, minNorm, sumTf, docIdsB, tfsB, norms, posB, bytes)
+      maxTf, minNorm, sumTf, docIdsB, tfsB, norms, pos, bytes)
   }
 
   /** Growable primitive int buffer — `ArrayBuffer[Int]` boxes every append,
@@ -922,7 +792,7 @@ object IndexBuilder {
 
   /** One in-progress posting fragment: the postings of one (field, term)
     * within the current (segment, block) of one input partition. Pooled and
-    * reused across blocks by [[FragMap]] (buffer capacity is retained).
+    * reused across blocks by the pack (buffer capacity is retained).
     * norms/pos are [[PostingCodec.ByteVec]]s (primitive, bulk-append with an
     * inline short-copy fast path — position slices copy straight in, no
     * boxed `ArrayBuffer[Byte]` and no per-posting chunk array).
@@ -932,104 +802,9 @@ object IndexBuilder {
     val tfs = new IntBuf(8)
     val norms = new PostingCodec.ByteVec(8)
     val pos: PostingCodec.ByteVec = if (withPos) new PostingCodec.ByteVec(16) else null
-    var maxTf = 0
-    var minNorm = 255
-    var sumTf = 0L
     def reset(): Unit = {
       docIds.clear(); tfs.clear(); norms.clear()
       if (pos != null) pos.clear()
-      maxTf = 0; minNorm = 255; sumTf = 0L
-    }
-  }
-
-  /** Open-addressed (term-bytes → [[Frag]]) table for the map-side pack,
-    * addressable by a slice of a document's term blob — no String (or key
-    * copy) is allocated per posting occurrence, only one copied byte-array
-    * key + one pooled Frag per distinct term per (segment, block). Cleared
-    * per block via a generation stamp (no array zeroing); Frags are pooled
-    * with retained buffer capacity, so steady-state blocks allocate almost
-    * nothing but the emitted output rows.
-    */
-  private final class FragMap(withPos: Boolean) {
-    private var cap = 512
-    private var mask = cap - 1
-    private var keys = new Array[Array[Byte]](cap)
-    private var frags = new Array[Frag](cap)
-    private var gens = new Array[Int](cap)
-    private var gen = 0
-    private var size = 0
-    private var pool = new Array[Frag](64)
-    private var poolN = 0
-    private var poolUsed = 0
-
-    def clear(): Unit = { gen += 1; size = 0; poolUsed = 0 }
-
-    @inline private def spread(h: Int): Int = h ^ (h >>> 16)
-
-    private def hashBytes(a: Array[Byte], from: Int, until: Int): Int = {
-      var h = 0
-      var i = from
-      while (i < until) { h = 31 * h + a(i); i += 1 }
-      h
-    }
-
-    private def takeFrag(): Frag = {
-      if (poolUsed < poolN) { val f = pool(poolUsed); poolUsed += 1; f.reset(); f }
-      else {
-        if (poolN == pool.length) pool = java.util.Arrays.copyOf(pool, poolN * 2)
-        val f = new Frag(withPos)
-        pool(poolN) = f; poolN += 1; poolUsed += 1
-        f
-      }
-    }
-
-    private def grow(): Unit = {
-      val oldKeys = keys; val oldFrags = frags; val oldGens = gens; val oldCap = cap
-      cap *= 2; mask = cap - 1
-      keys = new Array[Array[Byte]](cap); frags = new Array[Frag](cap); gens = new Array[Int](cap)
-      if (gen == 0) gen = 1
-      var i = 0
-      while (i < oldCap) {
-        if (oldKeys(i) != null && oldGens(i) == gen) {
-          var j = spread(hashBytes(oldKeys(i), 0, oldKeys(i).length)) & mask
-          while (keys(j) != null && gens(j) == gen) j = (j + 1) & mask
-          keys(j) = oldKeys(i); frags(j) = oldFrags(i); gens(j) = gen
-        }
-        i += 1
-      }
-    }
-
-    /** Lookup-or-insert by blob slice. */
-    def fragFor(blob: Array[Byte], from: Int, until: Int): Frag = {
-      val h = hashBytes(blob, from, until)
-      val len = until - from
-      var i = spread(h) & mask
-      while (true) {
-        val k = keys(i)
-        if (k == null || gens(i) != gen) {
-          if ((size + 1) * 10 > cap * 7) { grow(); return fragFor(blob, from, until) }
-          keys(i) = java.util.Arrays.copyOfRange(blob, from, until)
-          val f = takeFrag()
-          frags(i) = f; gens(i) = gen; size += 1
-          return f
-        }
-        if (k.length == len) {
-          var j = 0
-          while (j < len && k(j) == blob(from + j)) j += 1
-          if (j == len) return frags(i)
-        }
-        i = (i + 1) & mask
-      }
-      null // unreachable
-    }
-
-    /** Iterate live entries (order arbitrary — the fragment shuffle sorts). */
-    def forEach(f: (Array[Byte], Frag) => Unit): Unit = {
-      var i = 0
-      while (i < cap) {
-        if (keys(i) != null && gens(i) == gen) f(keys(i), frags(i))
-        i += 1
-      }
     }
   }
 
@@ -1070,32 +845,39 @@ object IndexBuilder {
     val fragments = analyzed.mapPartitions { rows =>
       new Iterator[Row] {
         private val pending = new java.util.ArrayDeque[Row]()
-        private val maps = withPosArr.map(new FragMap(_))
+        // per field: the current block's term ids, and frags(fi)(id) the
+        // fragment of term id (the array is also the Frag pool)
+        private val terms = Array.fill(nFields)(new SliceIds)
+        private val frags = Array.fill(nFields)(new Array[Frag](256))
         private val metaReader = new MetaReader
         private var curSeg = Int.MinValue
         private var curBlock = Int.MinValue
         private var finalFlushDone = false
 
-        private def emit(fi: Int, term: Array[Byte], f: Frag, seg: Int, block: Int): Row = {
-          val docIdsA = f.docIds.toArray
-          val docIdsB = PostingCodec.packDocIds(docIdsA)
-          val tfsB = PostingCodec.packVarInts(f.tfs.toArray)
-          val normsB = f.norms.toArray
-          val posB = if (f.pos == null) null else f.pos.toArray
-          val bytes = docIdsB.length.toLong + tfsB.length + normsB.length +
-            (if (posB == null) 0 else posB.length)
-          Row(fieldNames(fi), new String(term, java.nio.charset.StandardCharsets.UTF_8),
-            seg, block,
-            docIdsA.length, docIdsA(0), docIdsA(docIdsA.length - 1),
-            f.maxTf, f.minNorm, f.sumTf,
-            docIdsB, tfsB, normsB, posB, bytes)
+        private def fragOf(fi: Int, id: Int): Frag = {
+          var fs = frags(fi)
+          if (id == fs.length) { fs = java.util.Arrays.copyOf(fs, id * 2); frags(fi) = fs }
+          var f = fs(id)
+          if (f == null) { f = new Frag(withPosArr(fi)); fs(id) = f }
+          f
         }
 
         private def flushAll(seg: Int, block: Int): Unit = {
           var fi = 0
           while (fi < nFields) {
-            maps(fi).forEach((term, frag) => { pending.add(emit(fi, term, frag, seg, block)); () })
-            maps(fi).clear()
+            val ids = terms(fi)
+            var id = 0
+            while (id < ids.size) {
+              val f = frags(fi)(id)
+              pending.add(packBlock(fieldNames(fi),
+                new String(ids.bytes, ids.keyOff(id), ids.keyLen(id),
+                  java.nio.charset.StandardCharsets.UTF_8),
+                seg, block, f.docIds.toArray, f.tfs.toArray, f.norms.toArray,
+                if (f.pos == null) null else f.pos.toArray))
+              f.reset()
+              id += 1
+            }
+            ids.clear()
             fi += 1
           }
         }
@@ -1127,7 +909,7 @@ object IndexBuilder {
               // section bases, so the walk stays one-pass.
               val blob = tok.getAs[Array[Byte]](2)
               val withPos = withPosArr(fi)
-              val m = maps(fi)
+              val ids = terms(fi)
               metaReader.reset(blob)
               val metaLen = metaReader.next()
               val termsLen = metaReader.next()
@@ -1140,15 +922,11 @@ object IndexBuilder {
                 val termUntil = termFrom + metaReader.next()
                 val tf = metaReader.next()
                 val posUntil = posFrom + metaReader.next()
-                val frag = m.fragFor(blob, termFrom, termUntil)
+                val frag = fragOf(fi, ids.id(blob, termFrom, termUntil))
                 termFrom = termUntil
                 frag.docIds += doc
                 frag.tfs += tf
                 frag.norms += norm
-                if (tf > frag.maxTf) frag.maxTf = tf
-                val ni = norm & 0xFF
-                if (ni < frag.minNorm) frag.minNorm = ni
-                frag.sumTf += tf
                 if (withPos) frag.pos.append(blob, posFrom, posUntil)
                 posFrom = posUntil
                 gi += 1
@@ -1293,7 +1071,7 @@ object IndexBuilder {
     val h = run.head
     packBlock(h.getString(0), h.getString(1), h.getInt(2), h.getInt(3),
       order.map(d(_)), order.map(t(_)), order.map(nm(_)),
-      if (withPos) order.map(pos(_)) else null)
+      if (withPos) Array.concat(order.map(pos(_)).toSeq: _*) else null)
   }
 
   private val timing = sys.env.get("GRAFT_BUILD_TIMING").contains("1")
@@ -1323,9 +1101,7 @@ object IndexBuilder {
       conf: BuildConf = BuildConf(),
       segOffset: Int = 0
   ): Seq[Int] = {
-    val parts =
-      if (conf.buildPartitions > 0) conf.buildPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val parts = conf.partitions(spark)
 
     // project early: key + indexed + stored columns only (column pruning
     // reaches the source scan); the original key column is dropped so the
@@ -1401,7 +1177,7 @@ object IndexBuilder {
     // is needed (both showed up as the worst-scaling serial tail)
     val lenAggs = schema.fields.map(f => sum(col(s"__len_${f.name}")).as(s"tt_${f.name}"))
     val (analyzed, sortedHandle, totalDocs, segAggs) =
-      timed("tokenize+sort+docids")(assignDocIds(sortedTok, parts, conf.persist, lenAggs))
+      timed("tokenize+sort+docids")(assignDocIds(sortedTok, parts, lenAggs))
     val segStats = IndexBuilder.segStats(schema, segAggs)
 
     // ---- docs table (doc store + fast fields + fieldnorms) ----
@@ -1422,39 +1198,9 @@ object IndexBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // (near-)distinct columns make the parquet dictionary writer hash every
-    // value only to overflow its 1 MB page and fall back to plain — the
-    // dictionary writers were ~8% of build JFR samples. Disable it for:
-    // doc_id (sequential, all-distinct), the doc key, analyzed-text stored
-    // columns, and temporal/long/double stored columns (timestamps and
-    // measures are near-distinct in practice; INT96 timestamps dictionary
-    // as fixed-len byte arrays, the costliest hash). Keep it for raw fields
-    // (lang/label-like low-cardinality fast fields, where the dictionary
-    // also speeds predicate reads) and small-int len/norm columns.
-    val analyzedStored = schema.storedFields.filter(n =>
-      schema.field(n).exists(f => f.analyzer != "raw" && f.analyzer != "raw_ci"))
-    val wideStored = docsDf.schema.fields.collect {
-      case f if schema.storedFields.contains(f.name) &&
-          (f.dataType == org.apache.spark.sql.types.TimestampType ||
-            f.dataType == org.apache.spark.sql.types.LongType ||
-            f.dataType == org.apache.spark.sql.types.DoubleType) => f.name
-    }.toSeq
-    val noDictCols = ("key" +: "doc_id" +: (analyzedStored ++ wideStored)).distinct
-      .map(n => s"parquet.enable.dictionary#$n" -> "false").toMap
-    val docsJob = Future {
-      timed("docs-write")(docsDf
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option(zstdLevel, "1")
-        .options(noDictCols)
-        .partitionBy("segment_id")
-        .parquet(s"$indexDir/docs"))
-    }
+    val docsJob = Future(timed("docs-write")(writeDocs(docsDf, schema, indexDir)))
 
     // ---- posting blocks (map-side pack + fragment-merge shuffle) ----
-    val recordPositions = schema.fields.map(f => f.name -> (f.record == "position")).toMap
-
     // the docs future is ALWAYS awaited before leaving this scope: if the
     // postings write throws, the detached docs job must not keep writing to
     // $indexDir/docs behind the caller's cleanup/retry — the postings
@@ -1462,7 +1208,7 @@ object IndexBuilder {
     var primary: Throwable = null
     try {
       timed("postings-pack-write")(writePostings(
-        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, recordPositions),
+        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, schema.recordPositions),
         indexDir))
     } catch { case t: Throwable => primary = t; throw t }
     finally {
@@ -1482,6 +1228,39 @@ object IndexBuilder {
   // default for the hot build path (callers can override the option via
   // the standard hadoop conf)
   private val zstdLevel = "parquet.compression.codec.zstd.level"
+
+  /** Write docs-table rows (`segment_id`, `doc_id`, `key`, stored columns,
+    * `len_`/`norm_` per field) into the `docs` table, replacing only the
+    * segment partitions present (dynamic partition overwrite) — the docs
+    * write of both segment writers.
+    *
+    * (Near-)distinct columns make the parquet dictionary writer hash every
+    * value only to overflow its 1 MB page and fall back to plain — the
+    * dictionary writers were ~8% of build JFR samples. It is off for:
+    * doc_id (sequential, all-distinct), the doc key, analyzed-text stored
+    * columns, and temporal/long/double stored columns (timestamps and
+    * measures are near-distinct in practice; INT96 timestamps dictionary
+    * as fixed-len byte arrays, the costliest hash). It stays on for raw
+    * fields (lang/label-like low-cardinality fast fields, where the
+    * dictionary also speeds predicate reads) and small-int len/norm columns.
+    */
+  private[index] def writeDocs(docs: DataFrame, schema: IndexSchema, indexDir: String): Unit = {
+    val analyzedStored = schema.storedFields.filter(n =>
+      schema.field(n).exists(f => f.analyzer != "raw" && f.analyzer != "raw_ci"))
+    val wideStored = docs.schema.fields.collect {
+      case f if schema.storedFields.contains(f.name) &&
+          (f.dataType == TimestampType || f.dataType == LongType || f.dataType == DoubleType) => f.name
+    }.toSeq
+    val noDictCols = ("key" +: "doc_id" +: (analyzedStored ++ wideStored)).distinct
+      .map(n => s"parquet.enable.dictionary#$n" -> "false").toMap
+    docs.write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option(zstdLevel, "1")
+      .options(noDictCols)
+      .partitionBy("segment_id")
+      .parquet(s"$indexDir/docs")
+  }
 
   /** Write packed [[packSchema]] blocks into the `postings` table, replacing
     * only the segment partitions present (dynamic partition overwrite).

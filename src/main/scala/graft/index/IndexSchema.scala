@@ -21,6 +21,10 @@ final case class IndexSchema(
 ) {
   def field(name: String): Option[FieldDef] = fields.find(_.name == name)
 
+  /** Indexed field name → whether its postings record positions. */
+  def recordPositions: Map[String, Boolean] =
+    fields.map(f => f.name -> (f.record == "position")).toMap
+
   /** Dotted-path key fields (`unique_fields: ["metadata.id"]`,
     * reference `index_holder.rs:1040-1111`) extract a TYPED leaf value from
     * the json column; plain column keys cast to string.

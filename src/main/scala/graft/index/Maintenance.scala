@@ -48,9 +48,7 @@ object Maintenance {
       sys.error("mergeSegments requires a snapshot-committed index"))
     require(segIds.forall(live.contains), s"segments not live: ${segIds.filterNot(live.contains)}")
     val newSeg = live.max + 1
-    val parts =
-      if (conf.buildPartitions > 0) conf.buildPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val parts = conf.partitions(spark)
     val segCond = col("segment_id").isin(segIds.map(Integer.valueOf): _*)
 
     // 1. merged docs: drop tombstones, re-rank keys into the new segment
@@ -62,7 +60,7 @@ object Maintenance {
     val sorted = IndexBuilder.shardAndSort(oldDocs, parts, oldDocs.columns.toSeq.map(col))
     val lenAggs = schema.fields.map(f => sum(col(s"len_${f.name}")).as(s"tt_${f.name}"))
     val (withIds0, handle, _, segAggs) =
-      IndexBuilder.assignDocIds(sorted, parts, conf.persist, lenAggs)
+      IndexBuilder.assignDocIds(sorted, parts, lenAggs)
     // The docs write below OVERWRITES $indexDir/docs — the very path the
     // cached assignment plan reads from. That insert triggers Spark's
     // path-based recache, so a second consumption of the assignment (the
@@ -77,23 +75,20 @@ object Maintenance {
     val withIds = withIds0.localCheckpoint()
     handle.unpersist()
 
-    withIds
-      .drop("old_seg", "old_doc")
-      .withColumnRenamed("__key", "key")
-      .repartitionByRange(math.max(parts / 4, 1), col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/docs")
+    IndexBuilder.writeDocs(
+      withIds
+        .drop("old_seg", "old_doc")
+        .withColumnRenamed("__key", "key")
+        .repartitionByRange(math.max(parts / 4, 1), col("doc_id"))
+        .sortWithinPartitions("doc_id"),
+      schema, indexDir)
 
     // 2. postings: re-block the old blocks through the build's reduce
     val remap = spark.sparkContext.broadcast(remapArrays(withIds))
-    val recordPositions = schema.fields.map(f => f.name -> (f.record == "position")).toMap
     IndexBuilder.writePostings(
       IndexBuilder.reduceFragments(
-        reblock(reader.postings.filter(segCond), remap, newSeg, conf.blockBits, recordPositions),
+        reblock(reader.postings.filter(segCond), remap, newSeg, conf.blockBits,
+          schema.recordPositions),
         parts),
       indexDir)
     remap.destroy()
@@ -205,7 +200,7 @@ object Maintenance {
             val idx = slice.map(_.toInt)
             out += IndexBuilder.packBlock(field, term, newSeg, block,
               slice.map(key => (key >>> 32).toInt), idx.map(tfs(_)), idx.map(norms(_)),
-              if (pos == null) null else idx.map(pos(_)))
+              if (pos == null) null else Array.concat(idx.map(pos(_)).toSeq: _*))
             from = until
           }
           out.result()

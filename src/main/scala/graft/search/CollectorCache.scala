@@ -91,8 +91,8 @@ final class CollectorCache(maxEntries: Int = 128, ttlMillis: Long = 120000L) {
     */
   def topDocs(searcher: Searcher, q: Query, limit: Int, offset: Int = 0): (Array[Row], Boolean) = {
     if (!isCacheable(limit, offset)) {
-      val rows = searcher.topDocs(q, limit + 1, offset).collect()
-      return (rows.take(limit), rows.length > limit)
+      val page = Collectors.topDocs(searcher, q, limit, offset)
+      return (page.rows, page.hasNext)
     }
     val blockStart = offset - offset % BlockSize
     val k = key(searcher, q, BlockSize, blockStart)
@@ -101,9 +101,9 @@ final class CollectorCache(maxEntries: Int = 128, ttlMillis: Long = 120000L) {
     } match {
       case Some(e) => e
       case None =>
-        // fetch the whole block (+1 row to learn block-level has_next)
-        val rows = searcher.topDocs(q, BlockSize + 1, blockStart).collect()
-        val e = Entry(rows.take(BlockSize), rows.length > BlockSize, now())
+        // fetch the whole block and its block-level has_next
+        val page = Collectors.topDocs(searcher, q, BlockSize, blockStart)
+        val e = Entry(page.rows, page.hasNext, now())
         synchronized { cache.put(k, e); () }
         e
     }

@@ -387,8 +387,8 @@ class Searcher(
     collectorCache match {
       case Some(c) => c.topDocs(this, q, limit, offset)
       case None =>
-        val rows = topDocs(q, limit + 1, offset).collect()
-        (rows.take(limit), rows.length > limit)
+        val page = Collectors.topDocs(this, q, limit, offset)
+        (page.rows, page.hasNext)
     }
 
   /** Top-k joined back to the doc store (broadcast lookup join — reference

@@ -46,7 +46,10 @@ class FusedAnalyzeSpec extends AnyFunSuite {
     // ASCII tokens flushed into the sink BEFORE the first non-ASCII byte:
     // the utf8 byte path must reset its partially-filled accumulator and
     // re-run the String route without cross-contamination
-    "alpha beta the café gamma alpha"
+    "alpha beta the café gamma alpha",
+    // the Kelvin sign lowercases to ASCII `k`: one term, `kelvin`, reached
+    // through both the ASCII and the non-ASCII lookup of one table
+    "\u212Aelvin kelvin KELVIN \u212Aelvin"
   ) ++ (0 until 200).map(i => graft.gen.PageGen.page(i.toLong).text)
 
   /** Canonical shape: (term → tf, packed position deltas) sorted by term.

@@ -9,9 +9,9 @@ OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.la
 WORK=/dev/shm/graft-profile
 if [ ! -d "$WORK/pages_$PAGES" ]; then
   mkdir -p $WORK
-  java $OPENS -Xmx8g -Dspark.ui.enabled=false -cp "$CP" graft.tools.GenPages $PAGES $WORK/pages_$PAGES 2>/dev/null
+  java $OPENS -Xmx8g -Dspark.ui.enabled=false -cp "$CP" graft.gen.PageGen $WORK/pages_$PAGES $PAGES 2>/dev/null
 fi
 for C in $CPUS_LIST; do
   rm -rf $WORK/idx_$C $WORK/idx_$C-scratch $WORK/idx_$C-warm
-  GRAFT_BUILD_TIMING=1 taskset -c 0-$((C-1)) java -Xms8g -Xmx8g -XX:+AlwaysPreTouch -XX:+UseParallelGC $OPENS -cp "$CP" graft.BenchPhase $WORK/pages_$PAGES $WORK/idx_$C $C 1 2>&1 | grep -E "build-timing|BUILD_SECONDS|TASK_TIME|\[stage\]"
+  GRAFT_BUILD_TIMING=1 taskset -c 0-$((C-1)) java -Xms8g -Xmx8g -XX:+AlwaysPreTouch -XX:+UseParallelGC $OPENS -cp "$CP" graft.BenchPhase $WORK/pages_$PAGES $WORK/idx_$C $C 1 2>&1 | grep -E "build-timing|BUILD_SECONDS|TASK_TIME"
 done
