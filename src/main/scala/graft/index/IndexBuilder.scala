@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
 import graft.analysis.Analyzers
 
@@ -41,7 +42,6 @@ import graft.analysis.Analyzers
   * {{{
   *   docs/segment_id=N/       one row per doc: key, stored fields, per-field len+norm
   *   postings/segment_id=N/   packed posting blocks, term-sorted
-  *   termstats/segment_id=N/  (field, term, df, total_tf) per segment
   *   fieldstats/segment_id=N/ (field, n_docs, total_tokens, block_bits) per segment
   *   deletes/segment_id=N/    tombstone doc_ids; merges drop whole partitions
   *   metrics/                 append-only lineage: one row per (build_id, segment_id)
@@ -519,7 +519,7 @@ object IndexBuilder {
       * fixes each fragment's posting content) and the posting table is
       * globally re-sorted on its unique (segment, field, term, block,
       * first_doc) key afterward, so the final index bytes are identical
-      * either way; termstats/fieldstats are order-free aggregates. Skipping
+      * either way; fieldstats and metrics are order-free aggregates. Skipping
       * the per-doc `Arrays.sort` + sorted-order re-probe was a measured ~6%
       * of build task cpu. FusedAnalyzeSpec pins semantic equality with the
       * (sorted) legacy chain via canonicalized compare.
@@ -820,18 +820,17 @@ object IndexBuilder {
     * bottleneck at every core count).
     *
     * A block whose docId range straddles an input-partition boundary yields
-    * one fragment per partition; [[reduceFragments]] (the reduce segment
-    * merges share) merges them after a hash shuffle on (segment, field,
-    * term). A build's fragments never interleave (partitions hold disjoint
-    * contiguous doc ranges), so they concatenate into block bytes IDENTICAL
-    * to a single-pass pack: only the absolute first docId varint of each
-    * later run is rewritten as a delta.
+    * one fragment per partition; [[writePostings]] merges them through
+    * [[reduceFragments]] (the reduce segment merges share) after a hash
+    * shuffle on (segment, field, term). A build's fragments never interleave
+    * (partitions hold disjoint contiguous doc ranges), so they concatenate
+    * into block bytes IDENTICAL to a single-pass pack: only the absolute
+    * first docId varint of each later run is rewritten as a delta.
     */
   def packFromAnalyzed(
       analyzed: DataFrame,
       fields: Seq[FieldDef],
       blockBits: Int,
-      parts: Int,
       recordPositions: Map[String, Boolean]
   ): DataFrame = {
     val inSchema = analyzed.schema
@@ -842,7 +841,7 @@ object IndexBuilder {
     val withPosArr = fieldNames.map(n => recordPositions.getOrElse(n, false))
     val nFields = fieldNames.length
 
-    val fragments = analyzed.mapPartitions { rows =>
+    analyzed.mapPartitions { rows =>
       new Iterator[Row] {
         private val pending = new java.util.ArrayDeque[Row]()
         // per field: the current block's term ids, and frags(fi)(id) the
@@ -944,8 +943,6 @@ object IndexBuilder {
         def next(): Row = { fill(); pending.poll() }
       }
     }(Encoders.row(packSchema))
-
-    reduceFragments(fragments, parts)
   }
 
   /** The fragment reduce both segment writers share (builds from
@@ -959,30 +956,44 @@ object IndexBuilder {
     * blocks in one file per segment, and the within-partition sort keeps
     * row-group min/max stats tight for term-predicate pruning — the pruning
     * queries actually use; only cross-FILE range locality is given up.
+    *
+    * Each output block adds its `posting_bytes` to its segment's `totals`
+    * and, when it is the first block of its (segment, field, term) run (the
+    * block after a change of term, in the sorted order), one term.
     */
-  private[index] def reduceFragments(fragments: DataFrame, parts: Int): DataFrame =
+  private[index] def reduceFragments(
+      fragments: DataFrame, parts: Int, totals: Map[Int, (LongAccumulator, LongAccumulator)]): DataFrame =
     fragments
       .repartition(parts, col("segment_id"), col("field"), col("term"))
       .sortWithinPartitions("segment_id", "field", "term", "block_id", "first_doc")
       .mapPartitions { rows =>
         val it = rows.buffered
         new Iterator[Row] {
+          private var prev: Row = null
           def hasNext: Boolean = it.hasNext
           def next(): Row = {
             val head = it.next()
-            if (!it.hasNext || !sameKey(head, it.head)) head
-            else {
-              val run = scala.collection.mutable.ArrayBuffer(head)
-              while (it.hasNext && sameKey(head, it.head)) run += it.next()
-              mergeFragments(run.toSeq)
-            }
+            val block =
+              if (!it.hasNext || !sameKey(head, it.head)) head
+              else {
+                val run = scala.collection.mutable.ArrayBuffer(head)
+                while (it.hasNext && sameKey(head, it.head)) run += it.next()
+                mergeFragments(run.toSeq)
+              }
+            val (terms, bytes) = totals(block.getInt(2))
+            if (prev == null || !sameTerm(prev, head)) terms.add(1)
+            bytes.add(block.getLong(14))
+            prev = head
+            block
           }
         }
       }(Encoders.row(packSchema))
 
+  private def sameTerm(a: Row, b: Row): Boolean =
+    a.getInt(2) == b.getInt(2) && a.getString(0) == b.getString(0) && a.getString(1) == b.getString(1)
+
   private def sameKey(a: Row, b: Row): Boolean =
-    a.getInt(2) == b.getInt(2) && a.getInt(3) == b.getInt(3) &&
-      a.getString(0) == b.getString(0) && a.getString(1) == b.getString(1)
+    sameTerm(a, b) && a.getInt(3) == b.getInt(3)
 
   /** Merge fragments of one (segment, field, term, block), ordered by
     * first_doc, into bytes identical to a single-pass pack. When each run
@@ -1084,7 +1095,7 @@ object IndexBuilder {
       r
     }
 
-  /** Write per-segment artifacts (docs, postings, termstats, fieldstats,
+  /** Write per-segment artifacts (docs, postings, fieldstats,
     * metrics) for the built segments + metrics lineage. Does NOT publish a
     * snapshot — callers compose segment builds into atomic commits.
     * Segment dirs are replaced with dynamic partition overwrite, so existing
@@ -1206,17 +1217,18 @@ object IndexBuilder {
     // $indexDir/docs behind the caller's cleanup/retry — the postings
     // failure stays primary, a concurrent docs failure is secondary
     var primary: Throwable = null
-    try {
+    val totals = try {
       timed("postings-pack-write")(writePostings(
-        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, schema.recordPositions),
-        indexDir))
+        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, schema.recordPositions),
+        parts, indexDir, segStats.map(_.segmentId)))
     } catch { case t: Throwable => primary = t; throw t }
     finally {
       try Await.result(docsJob, Duration.Inf)
       catch { case t: Throwable => if (primary == null) throw t else primary.addSuppressed(t) }
     }
 
-    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId, segStats, conf.blockBits, 0, Nil))
+    val segs = timed("stats+metrics")(
+      writeStats(spark, schema, indexDir, buildId, segStats, conf.blockBits, totals, 0, Nil))
 
     sortedHandle.unpersist()
     segs
@@ -1262,11 +1274,27 @@ object IndexBuilder {
       .parquet(s"$indexDir/docs")
   }
 
-  /** Write packed [[packSchema]] blocks into the `postings` table, replacing
-    * only the segment partitions present (dynamic partition overwrite).
+  /** A segment's distinct `(field, term)` count and summed `posting_bytes`. */
+  private[index] final case class PostingTotals(numTerms: Long, postingBytes: Long)
+
+  /** Merge packed [[packSchema]] fragments into blocks ([[reduceFragments]])
+    * and write them into the `postings` table, replacing only the segment
+    * partitions present (dynamic partition overwrite). The [[PostingTotals]]
+    * of each of `segIds` are counted by the write's own tasks in
+    * accumulators: the reduce runs in the write's result stage, so each
+    * partition counts once and the counts are whole when the write
+    * returns; nothing reads the blocks back.
     */
-  private[index] def writePostings(blocks: DataFrame, indexDir: String): Unit =
-    blocks.write
+  private[index] def writePostings(
+      fragments: DataFrame,
+      parts: Int,
+      indexDir: String,
+      segIds: Seq[Int]
+  ): Map[Int, PostingTotals] = {
+    val sc = fragments.sparkSession.sparkContext
+    val totals = segIds.map(s => s -> (sc.longAccumulator, sc.longAccumulator)).toMap
+    reduceFragments(fragments, parts, totals)
+      .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option(zstdLevel, "1")
@@ -1288,6 +1316,8 @@ object IndexBuilder {
       .option("parquet.enable.dictionary#posting_bytes", "false")
       .partitionBy("segment_id")
       .parquet(s"$indexDir/postings")
+    totals.map { case (s, (terms, bytes)) => s -> PostingTotals(terms.value, bytes.value) }
+  }
 
   /** The `fieldstats` table's rows, `segment_id` its partition column. */
   val fieldStatsSchema: StructType = StructType(Seq(
@@ -1297,13 +1327,16 @@ object IndexBuilder {
     StructField("block_bits", IntegerType, false),
     StructField("segment_id", IntegerType, false)))
 
-  /** Per-segment termstats from the written posting blocks, fieldstats from
-    * the doc-id pass's piggy-backed aggregates (`segStats`) with the
+  /** The stats tail of both segment writers, with no Spark job: fieldstats
+    * from the doc-id pass's piggy-backed aggregates (`segStats`) with the
     * `blockBits` the postings were blocked at (`block_id = doc_id >>>
     * block_bits`, a fact readers align docs-table rows to posting blocks
-    * with), plus an append-only metrics lineage row per segment. The stats
-    * tail of both segment writers: builds pass depth 0 and no parents, merges
-    * their parents' depth + 1 and the merged segment ids.
+    * with), and an append-only metrics lineage row per segment from the
+    * postings write's `totals`. Both are a few rows per segment,
+    * written by the driver ([[TinyParquet]]). Builds pass depth 0 and no
+    * parents, merges their parents' depth + 1 and the merged segment ids.
+    * Term statistics are no table of their own: `IndexReader.termStatsDf`
+    * derives them from the posting blocks.
     *
     * @return the segment ids of `segStats`, sorted (builds: the non-empty
     *         segments, from the doc-count agg — no extra read of the docs
@@ -1316,97 +1349,22 @@ object IndexBuilder {
       buildId: String,
       segStats: Seq[SegStat],
       blockBits: Int,
+      totals: Map[Int, PostingTotals],
       mergeDepth: Int,
       parentSegments: Seq[Int]
   ): Seq[Int] = {
-    val segIds = segStats.map(_.segmentId)
-    // stats re-read ONLY the narrow stat columns of the written blocks —
-    // column pruning makes this far cheaper than caching the full blocks
-    // (persisting them serialized every posting binary through the columnar
-    // cache, a memory-bandwidth tax the pack stage paid at every core count)
-    val postingsRead = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("segment_id").isin(segIds.map(Integer.valueOf): _*))
-      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
-    // ONE pass over the packed blocks feeds both the termstats table and the
-    // per-segment metrics aggregates: the metrics sums ride the termstats
-    // WRITE job as per-segment observed aggregates (`Observation`), so this
-    // driver-coordinated tail pays exactly two job latencies (termstats,
-    // fieldstats — concurrent) plus the tiny metrics append, with no
-    // persist/unpersist round-trip of the term-level table (it was the
-    // worst-scaling phase: a fixed ~1-2 s tail both core counts pay)
-    val termLevel = postingsRead
-      .groupBy("segment_id", "field", "term")
-      .agg(
-        sum("doc_count").cast(LongType).as("df"),
-        sum("sum_tf").as("total_tf"),
-        sum("posting_bytes").as("pb"))
-
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val obs = org.apache.spark.sql.Observation(s"seg-metrics-$buildId")
-    val obsAggs: Seq[org.apache.spark.sql.Column] = segIds.flatMap(s => Seq(
-      sum(when(col("segment_id") === s, col("pb")).otherwise(lit(0L))).as(s"pb_$s"),
-      sum(when(col("segment_id") === s, lit(1L)).otherwise(lit(0L))).as(s"nt_$s")))
-    // no explicit repartition before the write: the output inherits the
-    // aggregation's hash partitioning (same distribution an explicit
-    // repartition on the full key gave) and AQE coalesces the vocab-sized
-    // shuffle to data-proportional tasks — the former repartition(statParts)
-    // both forced a second exchange of the table AND pinned the partition
-    // count against AQE. Within-file (field, term) ordering is preserved by
-    // the sort, so parquet row-group stats still prune term lookups.
-    val termstatsJob = Future {
-      termLevel
-        .observe(obs, obsAggs.head, obsAggs.tail: _*)
-        .select("segment_id", "field", "term", "df", "total_tf")
-        .sortWithinPartitions("segment_id", "field", "term")
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("segment_id")
-        .parquet(s"$indexDir/termstats")
+    val conf = spark.sparkContext.hadoopConfiguration
+    segStats.foreach { st =>
+      TinyParquet.replacePartition(conf, s"$indexDir/fieldstats", st.segmentId, TinyParquet.fieldStats,
+        schema.fields.map(f => Seq(f.name, st.nDocs, st.tokensByField(f.name), blockBits)))
     }
-
-    // fieldstats rows assemble driver-side from the pass-1 piggy-backed
-    // aggregates — no extra aggregation job
-    val fsRows = segStats.flatMap { st =>
-      schema.fields.map(f =>
-        Row(f.name, st.nDocs, st.tokensByField(f.name), blockBits, st.segmentId))
-    }
-    val fieldstatsJob = Future {
-      spark
-        .createDataFrame(spark.sparkContext.parallelize(fsRows.toSeq, 1), fieldStatsSchema)
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("segment_id")
-        .parquet(s"$indexDir/fieldstats")
-    }
-
-    // ---- per-segment metrics (north-rule lineage table) ----
-    // assembled driver-side from the aggregates OBSERVED during the
-    // termstats write — no second scan of the term-level table, no extra
-    // aggregation job, and the handful-of-rows append goes through a plain
-    // parquet-mr writer instead of a Spark job (a job's scheduling
-    // round-trip is pure fixed build tail at every core count)
-    Await.result(termstatsJob, Duration.Inf)
-    val observed = obs.get
-    // an all-empty term table observes nulls (SQL sum over zero rows)
-    def obsLong(k: String): Long = observed.get(k) match {
-      case Some(n: Number) => n.longValue()
-      case _               => 0L
-    }
-    val now = System.currentTimeMillis()
-    val parents = parentSegments.map(_.toString)
-    val metricRows = segStats.map { st =>
-      TinyParquet.MetricRow(buildId, st.segmentId, st.nDocs,
-        obsLong(s"nt_${st.segmentId}"), obsLong(s"pb_${st.segmentId}"),
-        mergeDepth, parents, now)
-    }
-    TinyParquet.appendMetrics(
-      spark.sparkContext.hadoopConfiguration, s"$indexDir/metrics", metricRows)
-    Await.result(fieldstatsJob, Duration.Inf)
-    segIds.sorted
+    val createdAt = System.currentTimeMillis() * 1000L
+    TinyParquet.append(conf, s"$indexDir/metrics", TinyParquet.metrics, segStats.map { st =>
+      val t = totals(st.segmentId)
+      Seq(buildId, st.segmentId, st.nDocs, t.numTerms, t.postingBytes, mergeDepth,
+        parentSegments.map(_.toString), createdAt)
+    })
+    segStats.map(_.segmentId).sorted
   }
 
   /** Fresh full build: build all segments from `pages` and publish snapshot

@@ -24,9 +24,10 @@ object Maintenance {
     *  2. postings: the assignment becomes one `old_doc → new_doc` array per
     *     merged segment (−1 for a dropped doc), broadcast to a map side that
     *     re-blocks every old posting block into fragments of the new blocks
-    *     ([[reblock]]); the build's [[IndexBuilder.reduceFragments]] merges
-    *     them into blocks byte-identical to a single-pass pack, and the
-    *     build's postings write stores them;
+    *     ([[reblock]]); the build's postings write
+    *     ([[IndexBuilder.writePostings]]) merges them into blocks
+    *     byte-identical to a single-pass pack, stores them and counts the
+    *     new segment's terms and posting bytes;
     *  3. stats: the build's [[IndexBuilder.writeStats]], with the parents'
     *     deepest `merge_depth` + 1 and the merged segment ids as lineage.
     *
@@ -50,6 +51,10 @@ object Maintenance {
     val newSeg = live.max + 1
     val parts = conf.partitions(spark)
     val segCond = col("segment_id").isin(segIds.map(Integer.valueOf): _*)
+    val parentDepth = reader.metrics
+      .filter(segCond)
+      .agg(max("merge_depth"))
+      .collect()(0).getInt(0)
 
     // 1. merged docs: drop tombstones, re-rank keys into the new segment
     val oldDocs = reader.applyDeletes(reader.docs.filter(segCond))
@@ -85,24 +90,17 @@ object Maintenance {
 
     // 2. postings: re-block the old blocks through the build's reduce
     val remap = spark.sparkContext.broadcast(remapArrays(withIds))
-    IndexBuilder.writePostings(
-      IndexBuilder.reduceFragments(
-        reblock(reader.postings.filter(segCond), remap, newSeg, conf.blockBits,
-          schema.recordPositions),
-        parts),
-      indexDir)
+    val totals = IndexBuilder.writePostings(
+      reblock(reader.postings.filter(segCond), remap, newSeg, conf.blockBits, schema.recordPositions),
+      parts, indexDir, Seq(newSeg))
     remap.destroy()
 
     // 3. per-segment stats + lineage for the new segment (no pass-1 row when
     //    every merged doc was tombstoned: the segment is empty)
-    val parentDepth = reader.metrics
-      .filter(segCond)
-      .agg(max("merge_depth"))
-      .collect()(0).getInt(0)
     val segStat = IndexBuilder.segStats(schema, segAggs).headOption.getOrElse(
       IndexBuilder.SegStat(newSeg, 0L, schema.fields.map(_.name -> 0L).toMap))
     IndexBuilder.writeStats(spark, schema, indexDir, buildId, Seq(segStat), conf.blockBits,
-      parentDepth + 1, segIds)
+      totals, parentDepth + 1, segIds)
 
     // 4. atomic publish FIRST: the new snapshot retires the merged segments.
     //    Only then drop their tombstones — if the clear fails or a reader

@@ -4,34 +4,29 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.types.StructType
 
-/** Driver-side writer for the per-segment metrics lineage append.
+/** Driver-side writer for the stats tail of both segment writers: the
+  * per-segment metrics lineage append and the fieldstats partitions.
   *
-  * The metrics table gains `numSegments` rows per build — launching a Spark
-  * job (parallelize → write) for that append costs a full job-scheduling
-  * round-trip (~0.2 s), which is pure FIXED build tail: the same price at
-  * every core count, so it taxes the N→4N scaling-efficiency evidence
-  * directly. A plain parquet-mr writer appends the handful of rows in
-  * single-digit milliseconds with no job at all.
+  * Each gains a handful of rows per segment — launching a Spark job
+  * (parallelize → write) for them costs a full job-scheduling round-trip
+  * (~0.2 s), which is pure FIXED build tail: the same price at every core
+  * count, so it taxes the N→4N scaling-efficiency evidence directly. A
+  * plain parquet-mr writer writes the handful of rows in single-digit
+  * milliseconds with no job at all.
   *
-  * Layout matches Spark's own parquet writer conventions (all fields
-  * optional, standard 3-level LIST, INT64 micros timestamp) so directories
-  * mixing Spark-written and driver-written files read back uniformly.
+  * Layout matches Spark's own parquet writer conventions (standard 3-level
+  * LIST, INT64 micros timestamp, hive-style `segment_id=N` partition
+  * directories) so directories mixing Spark-written and driver-written
+  * files read back uniformly.
   */
 private[index] object TinyParquet {
 
-  final case class MetricRow(
-      buildId: String,
-      segmentId: Int,
-      numDocs: Long,
-      numTerms: Long,
-      postingBytes: Long,
-      mergeDepth: Int,
-      parentSegments: Seq[String],
-      createdAtMillis: Long)
-
-  private val schema = MessageTypeParser.parseMessageType(
+  /** The `metrics` table: `created_at` in microseconds. */
+  val metrics: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
       |  optional binary build_id (UTF8);
       |  optional int32 segment_id;
@@ -47,8 +42,18 @@ private[index] object TinyParquet {
       |  optional int64 created_at (TIMESTAMP(MICROS,true));
       |}""".stripMargin)
 
-  /** Append `rows` as one new parquet file under `dir` (created if absent). */
-  def appendMetrics(conf: Configuration, dir: String, rows: Seq[MetricRow]): Unit = {
+  /** One `fieldstats` partition: `IndexBuilder.fieldStatsSchema` without
+    * its partition column, converted as Spark's own parquet writer does.
+    */
+  val fieldStats: MessageType = new SparkToParquetSchemaConverter().convert(
+    StructType(IndexBuilder.fieldStatsSchema.filterNot(_.name == "segment_id")))
+
+  /** Write `rows` as one new parquet file of `schema` under `dir` (created
+    * if absent). Each row holds a value per column in the schema's order:
+    * an `Int` for int32, a `Long` for int64, a `String` for UTF8 and a
+    * `Seq[String]` for a string list.
+    */
+  def append(conf: Configuration, dir: String, schema: MessageType, rows: Seq[Seq[Any]]): Unit = {
     val file = new Path(dir, s"part-${java.util.UUID.randomUUID()}.parquet")
     val writer = ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
@@ -56,20 +61,27 @@ private[index] object TinyParquet {
       .withConf(conf)
       .build()
     val factory = new SimpleGroupFactory(schema)
-    try {
-      rows.foreach { r =>
-        val g = factory.newGroup()
-        g.append("build_id", r.buildId)
-        g.append("segment_id", r.segmentId)
-        g.append("num_docs", r.numDocs)
-        g.append("num_terms", r.numTerms)
-        g.append("posting_bytes", r.postingBytes)
-        g.append("merge_depth", r.mergeDepth)
-        val lst = g.addGroup("parent_segments")
-        r.parentSegments.foreach(p => lst.addGroup("list").append("element", p))
-        g.append("created_at", r.createdAtMillis * 1000L)
-        writer.write(g)
+    try rows.foreach { row =>
+      val g = factory.newGroup()
+      row.zipWithIndex.foreach {
+        case (v: Int, i)     => g.add(i, v)
+        case (v: Long, i)    => g.add(i, v)
+        case (v: String, i)  => g.add(i, v)
+        case (vs: Seq[_], i) => val l = g.addGroup(i); vs.foreach(v => l.addGroup(0).add(0, v.toString))
+        case (v, i)          => sys.error(s"${schema.getFieldName(i)}: unsupported value $v")
       }
-    } finally writer.close()
+      writer.write(g)
+    }
+    finally writer.close()
+  }
+
+  /** Replace partition `segment_id=segmentId` of the table at `dir` with
+    * `rows`; other partitions are untouched.
+    */
+  def replacePartition(conf: Configuration, dir: String, segmentId: Int, schema: MessageType,
+      rows: Seq[Seq[Any]]): Unit = {
+    val part = new Path(dir, s"segment_id=$segmentId")
+    part.getFileSystem(conf).delete(part, true)
+    append(conf, part.toString, schema, rows)
   }
 }

@@ -42,7 +42,7 @@ final class BlockStore private (val rdd: RDD[BlockStore.Terms]) {
       f: ((String, String), Array[StoredBlock]) => U): Seq[U] = {
     val byPart = pairs.distinct.groupBy(partitioner.getPartition)
     if (byPart.isEmpty) return Nil
-    rdd.sparkContext.runJob(rdd, BlockStore.task(byPart, f), byPart.keys.toSeq.sorted).toSeq.flatten
+    rdd.sparkContext.runJob(rdd, new BlockStore.Lookup(byPart, f), byPart.keys.toSeq.sorted).toSeq.flatten
   }
 
   /** The live blocks of `pairs` as [[IndexReader.blockCols]] rows, projected
@@ -51,7 +51,7 @@ final class BlockStore private (val rdd: RDD[BlockStore.Terms]) {
   def blocks(pairs: Seq[(String, String)], withPositions: Boolean): Array[Row] =
     lookup(pairs)((k, bs) => bs.map(_.row(k, withPositions))).flatten.toArray
 
-  /** Σ `doc_count` over each present term's blocks: its termstats df. */
+  /** Σ `doc_count` over each present term's blocks: its df. */
   def dfs(pairs: Seq[(String, String)]): Map[(String, String), Long] =
     lookup(pairs)((k, bs) => k -> bs.iterator.map(_.docCount.toLong).sum).toMap
 
@@ -66,15 +66,19 @@ object BlockStore {
   type Terms = java.util.HashMap[(String, String), Array[StoredBlock]]
 
   /** The task of a lookup: `f` of each wanted term present in its
-    * partition's map.
+    * partition's map. A named function class, not a lambda, so that
+    * `SparkContext.clean` returns at once instead of reading a closure's
+    * class file with ASM on every lookup.
     */
-  private def task[U: ClassTag](
+  private final class Lookup[U: ClassTag](
       byPart: Map[Int, Seq[(String, String)]],
-      f: ((String, String), Array[StoredBlock]) => U): (TaskContext, Iterator[Terms]) => Array[U] =
-    (ctx, maps) => {
+      f: ((String, String), Array[StoredBlock]) => U)
+      extends ((TaskContext, Iterator[Terms]) => Array[U]) with Serializable {
+    def apply(ctx: TaskContext, maps: Iterator[Terms]): Array[U] = {
       val keys = byPart(ctx.partitionId())
       maps.flatMap(m => keys.flatMap(k => Option(m.get(k)).map(f(k, _)))).toArray
     }
+  }
 
   /** Routes a `(partition id, row)` record to its partition. */
   private final class PartitionIdPassthrough(override val numPartitions: Int) extends Partitioner {

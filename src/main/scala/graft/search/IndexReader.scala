@@ -46,7 +46,15 @@ class IndexReader(
   // not re-listed on every query
   lazy val postings: DataFrame = liveFilter(spark.read.parquet(s"$indexDir/postings"))
   lazy val docs: DataFrame = liveFilter(spark.read.parquet(s"$indexDir/docs"))
-  lazy val termStatsDf: DataFrame = liveFilter(spark.read.parquet(s"$indexDir/termstats"))
+  /** Per-segment term statistics `(field, term, df, total_tf, segment_id)`,
+    * a view over the live posting blocks: `df` = Σ `doc_count` and
+    * `total_tf` = Σ `sum_tf` over each term's blocks in a segment (summa's
+    * term dictionary keeps doc_freq next to the postings the same way).
+    */
+  lazy val termStatsDf: DataFrame = postings
+    .groupBy("segment_id", "field", "term")
+    .agg(sum("doc_count").cast("long").as("df"), sum("sum_tf").as("total_tf"))
+    .select("field", "term", "df", "total_tf", "segment_id")
   lazy val metrics: DataFrame = spark.read.parquet(s"$indexDir/metrics")
 
   /** Tombstones `(segment_id, doc_id)` as written, if any deletes were
@@ -128,11 +136,11 @@ class IndexReader(
 
   /** Batch df lookup for all terms of a query, summed over live segments;
     * an absent term has no entry. Deleted docs intentionally still count
-    * toward df until merged out (tantivy semantics). On a primed reader it
-    * is Σ `doc_count` over each term's stored blocks (the sum every writer
-    * stores as termstats df), one lookup job; on a fresh reader one
-    * pushed-down scan of the term-sorted per-segment stats whose matching
-    * rows (at most #segments × #terms) are collected and summed on the
+    * toward df until merged out (tantivy semantics). It is Σ `doc_count`
+    * over each term's live posting blocks: on a primed reader over its
+    * stored blocks, one lookup job; on a fresh reader over the blocks'
+    * `doc_count` column, read by a pushed-down scan of the term-sorted
+    * posting table whose matching rows are collected and summed on the
     * driver, one job with no Exchange. Either way idf becomes a plan
     * literal, like tantivy's per-query Weight.
     */
@@ -141,11 +149,11 @@ class IndexReader(
     else store match {
       case Some(s) => s.dfs(pairs)
       case None =>
-        termStatsDf
+        postings
           .filter(termsFilter(pairs))
-          .select("field", "term", "df")
+          .select("field", "term", "doc_count")
           .collect()
-          .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getLong(2))(_ + _)
+          .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getInt(2).toLong)(_ + _)
     }
 }
 

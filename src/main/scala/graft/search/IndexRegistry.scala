@@ -122,11 +122,12 @@ object Reflection {
       .select(col("__export_key").as("key"), to_json(struct(emit.map(col): _*)).as("doc_json"))
   }
 
-  /** Warm-up (W10, `index_holder.rs:329-375`): prime postings + stats. */
+  /** Warm-up (W10, `index_holder.rs:329-375`): read the field stats and
+    * list and touch the posting table (term stats are a view over it).
+    */
   def warmup(reader: IndexReader): Unit = {
     reader.fieldStats // forces stats read
     reader.postings.select(count(lit(1))).collect()
-    reader.termStatsDf.select(count(lit(1))).collect()
   }
 
   /** Hotcache-style priming (reference: the mmap'd hotcache keeps index
@@ -139,8 +140,8 @@ object Reflection {
     * InMemoryRelation instead of parquet — no query-side change needed. The
     * same pass that fills the postings cache builds the reader's
     * term-addressed [[BlockStore]] (one partition per default-parallelism
-    * slot), which the top-k walk and `termDfs` then look terms up in; so
-    * termstats, which only `termDfs` read on the query path, stay on disk.
+    * slot), which the top-k walk and `termDfs` then look terms up in; term
+    * stats are a view over the postings, so `termStatsDf` reads their cache.
     * MEMORY_AND_DISK keeps cold segments spillable; `unprime` releases.
     */
   def prime(reader: IndexReader): Unit = {

@@ -402,12 +402,12 @@ class Searcher(
   }
 
   /** Matched-doc count (C4). Closed-form fast path: a single TermQuery on a
-    * tombstone-free index is answered straight from the per-segment termstats
-    * — df summed over live segments IS the matched-doc count (each doc
-    * containing the term contributes exactly 1 to its segment's df, and with
-    * no deletes there is nothing to subtract), for posting-backed and raw
-    * fast-path fields alike. One pruned stats probe, zero posting IO or
-    * decode. Any other query shape, or any tombstones, falls back to
+    * tombstone-free index is answered straight from `termDfs` — df summed
+    * over live segments IS the matched-doc count (each doc containing the
+    * term contributes exactly 1 to its segment's df, and with no deletes
+    * there is nothing to subtract), for posting-backed and raw fast-path
+    * fields alike. One pruned probe of the blocks' `doc_count` column, no
+    * posting decode. Any other query shape, or any tombstones, falls back to
     * counting the scored doc-set (identical by the argument above, pinned in
     * SearchSpec).
     */

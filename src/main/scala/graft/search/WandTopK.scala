@@ -41,8 +41,8 @@ import graft.index.{FieldNorm, PostingCodec}
   *
   * Top-k ([[run]]) of a [[walkable]] tree: one job, no Exchange. The plan's
   * live posting blocks (not postings!) are collected; df is Σ `doc_count`
-  * over all of a term's blocks (with or without positions), the sum every
-  * writer stores as termstats `df` — deleted docs included, until a merge
+  * over all of a term's blocks (with or without positions), as
+  * `IndexReader.termDfs` sums it — deleted docs included, until a merge
   * removes them. The driver walks the groups in order with one top-k heap
   * (per-segment collect + `merge_fruits` in one pass), decoding a group
   * only if its score bound reaches the running threshold, and never offers
@@ -456,7 +456,7 @@ object WandTopK {
 
   /** Every hit of `plan` (any tree with a leaf) as `(segment_id, doc_id,
     * score)`, tombstoned docs included (the caller applies deletes). `dfs`
-    * are the termstats dfs of the plan's terms.
+    * are the `IndexReader.termDfs` of the plan's terms.
     */
   def hits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): DataFrame = {
     val k = kernel(searcher, plan, dfs)
@@ -559,7 +559,7 @@ object WandTopK {
   /** `hits` (`(segment_id, doc_id, score)` rows of `plan` in rank order) as
     * `explainSchema` rows, each explained in its group `(segment_id, doc_id
     * >>> block_bits)`: one job collects the [[groupRows]] of the hits'
-    * groups. `dfs` are the termstats dfs of the plan's terms.
+    * groups. `dfs` are the `IndexReader.termDfs` of the plan's terms.
     */
   def explainHits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long], hits: Seq[Row]): Seq[Row] = {
     if (hits.isEmpty) return Nil

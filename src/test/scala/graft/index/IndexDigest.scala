@@ -42,7 +42,7 @@ object IndexDigest {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  val tables: Seq[String] = Seq("docs", "postings", "termstats", "fieldstats", "metrics")
+  val tables: Seq[String] = Seq("docs", "postings", "fieldstats", "metrics")
 
   /** Digest of one index table, read straight from its directory (every
     * segment partition on disk, retired ones included).

@@ -65,48 +65,53 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(m.getSeq[String](m.fieldIndex("parent_segments")).map(_.toInt).sorted == live0.take(2).sorted)
   }
 
-  /** Σ doc_count over each sampled term's live posting blocks, and termstats
-    * df summed over live segments: the WAND route takes df from the former.
+  /** Each sampled term's df, from `termDfs` and from the `termStatsDf` view
+    * summed over segments, against the corpus side: the count of `texts`
+    * (every doc in the live segments, tombstoned ones included until a
+    * merge removes them) that contain the term. Absent terms have no entry.
     */
-  private def assertBlockDfsMatchStats(dir: String, terms: Seq[String]): Unit = {
+  private def assertDfsMatchCorpus(dir: String, terms: Seq[String], texts: Seq[String]): Unit = {
+    val want = terms.map(t => t -> texts.count(_.split(' ').contains(t)).toLong).filter(_._2 > 0).toMap
+    assert(want.nonEmpty)
     val r = new IndexReader(spark, dir)
-    def dfs(table: org.apache.spark.sql.DataFrame, c: String): Map[String, Long] =
-      table.filter(col("field") === "text" && col("term").isin(terms: _*))
-        .groupBy("term").agg(sum(c).cast("long"))
-        .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    val fromBlocks = dfs(r.postings, "doc_count")
-    assert(fromBlocks.nonEmpty)
-    assert(fromBlocks == dfs(r.termStatsDf, "df"))
+    assert(r.termDfs(terms.map(("text", _))).map { case ((_, t), n) => t -> n } == want)
+    val view = r.termStatsDf.filter(col("field") === "text" && col("term").isin(terms: _*))
+      .groupBy("term").agg(sum("df").cast("long"))
+      .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(view == want)
   }
 
-  test("df identity: live posting blocks' doc_count sums equal termstats df") {
+  test("df: termDfs and the termStatsDf view equal corpus doc counts; tombstones count until a merge") {
     val dir = Files.createTempDirectory("graft-dfid").toString
     val sample = vocab :+ "nosuchterm"
     val conf = IndexBuilder.BuildConf(numSegments = 3, blockBits = 4)
-    IndexBuilder.build(spark, corpus(200, 11).toDF("doc_id", "text"), schema, dir, "b0", conf)
-    assertBlockDfsMatchStats(dir, sample)
+    val built = corpus(200, 11)
+    IndexBuilder.build(spark, built.toDF("doc_id", "text"), schema, dir, "b0", conf)
+    assertDfsMatchCorpus(dir, sample, built.map(_._2))
 
-    // an upsert that replaces some keys and adds new ones
-    val batch = corpus(260, 12).drop(150).toDF("doc_id", "text")
-    Maintenance.addDocuments(spark, dir, schema, batch, "up1",
+    // an upsert that replaces keys 150..199 and adds 200..259: the replaced
+    // docs are tombstoned, so both versions count
+    val batch = corpus(260, 12).drop(150)
+    Maintenance.addDocuments(spark, dir, schema, batch.toDF("doc_id", "text"), "up1",
       Maintenance.ConflictStrategy.Overwrite, conf.copy(numSegments = 1))
-    assertBlockDfsMatchStats(dir, sample)
+    assertDfsMatchCorpus(dir, sample, (built ++ batch).map(_._2))
 
-    // deleted docs still count toward df on both sides until a merge
-    // removes them: the delete-aware block route takes df from the blocks
-    val window = Seq(("text", "window"))
+    // deleting 20 live docs that contain "window" leaves every df as it was
     val s1 = new Searcher(new IndexReader(spark, dir), schema)
-    val dfBefore = s1.reader.termDfs(window)
-    assert(Maintenance.deleteDocs(spark, dir, s1.search(TermQuery("text", "window")).limit(20)) == 20)
-    val r2 = new IndexReader(spark, dir)
-    assert(r2.tombstones.nonEmpty && r2.termDfs(window) == dfBefore)
-    assertBlockDfsMatchStats(dir, sample)
-    val liveWindow = new Searcher(r2, schema).count(TermQuery("text", "window"))
+    val victims = s1.reader.docs
+      .join(s1.search(TermQuery("text", "window")).limit(20), Seq("segment_id", "doc_id"))
+      .select("segment_id", "doc_id", "key").collect()
+    assert(Maintenance.deleteDocs(spark, dir,
+      victims.map(v => (v.getInt(0), v.getInt(1))).toSeq.toDF("segment_id", "doc_id")) == 20)
+    assert(new IndexReader(spark, dir).tombstones.nonEmpty)
+    assertDfsMatchCorpus(dir, sample, (built ++ batch).map(_._2))
 
+    // a merge of every segment drops the tombstoned docs: only live keys count
     Maintenance.mergeSegments(spark, dir, schema, Snapshots.latest(spark, dir).get.segments, "m1", conf)
     assert(Snapshots.latest(spark, dir).get.segments.size == 1)
-    assertBlockDfsMatchStats(dir, sample)
-    assert(new IndexReader(spark, dir).termDfs(window).values.sum == liveWindow)
+    val deleted = victims.map(_.getString(2).toLong).toSet
+    val live = (built.take(150) ++ batch).filterNot(d => deleted.contains(d._1))
+    assertDfsMatchCorpus(dir, sample, live.map(_._2))
   }
 
   test("merge re-blocks postings exactly as the per-occurrence oracle: small blocks, tombstones, three record kinds") {
@@ -197,8 +202,10 @@ class MaintenanceSpec extends AnyFunSuite {
     Maintenance.deleteDocs(spark, dir,
       r0.docs.filter(col("segment_id").isin(gone.map(Integer.valueOf): _*)))
 
+    val oldLive = MergeCheck.liveDocs(new IndexReader(spark, dir), gone)
     val newSeg = Maintenance.mergeSegments(spark, dir, schema, gone, "m1", conf)
     assert(Snapshots.latest(spark, dir).get.segments.sorted == Seq(segs(2), newSeg))
+    MergeCheck.assertMatchesOracle(spark, dir, schema, gone, newSeg, oldLive, conf.blockBits)
     // zero tokens: a null total (the sum over no docs) reads as 0
     val fs = spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)
       .select(col("field"), col("n_docs"), coalesce(col("total_tokens"), lit(0L))).collect()
@@ -579,14 +586,29 @@ class CompactionSpec extends org.scalatest.funsuite.AnyFunSuite {
 }
 
 /** Checks a merged segment against [[MergeOracle]], the per-occurrence
-  * merge path: its `postings` rows (every column, binaries as hex), and its
-  * `termstats` and `fieldstats` rows against sums over those rows and over
-  * the merged docs. Keys must be unique among the merged live docs, since
-  * the oracle's `(old_seg, old_doc) → new_doc` mapping is a join on key.
+  * merge path: its `postings` rows (every column, binaries as hex), its
+  * metrics row against those rows and its `fieldstats` rows against sums
+  * over the merged docs. Keys must be unique among the merged live docs,
+  * since the oracle's `(old_seg, old_doc) → new_doc` mapping is a join on
+  * key.
   */
 private object MergeCheck {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.scalatest.Assertions._
+
+  /** Segment `seg`'s one metrics row, whose counts the postings write
+    * observed, against `blocks`, the posting rows expected for it:
+    * `num_terms` is their distinct `(field, term)` count and `posting_bytes`
+    * their summed `posting_bytes` (0 and 0 for no blocks).
+    */
+  def assertMetricsMatch(spark: SparkSession, dir: String, seg: Int, blocks: DataFrame): Unit = {
+    val m = spark.read.parquet(s"$dir/metrics").filter(col("segment_id") === seg)
+      .select("num_terms", "posting_bytes").collect()
+    assert(m.length == 1, s"segment $seg: ${m.length} metrics rows")
+    val want = blocks.agg(countDistinct("field", "term"), coalesce(sum("posting_bytes"), lit(0L))).head()
+    assert((m.head.getLong(0), m.head.getLong(1)) == (want.getLong(0), want.getLong(1)),
+      s"segment $seg metrics (num_terms, posting_bytes)")
+  }
 
   /** `(old_seg, old_doc, key)` of the given segments' live docs, collected
     * (tombstones of merged segments are cleared by the merge).
@@ -626,13 +648,10 @@ private object MergeCheck {
     assert(a == e, s"segment $newSeg postings differ from the oracle: " +
       s"${a.diff(e).take(3)} not expected, ${e.diff(a).take(3)} missing")
 
-    val termstats = expected.groupBy("segment_id", "field", "term").agg(
-      sum("doc_count").cast("long").as("df"), sum("sum_tf").as("total_tf"))
-    assert(IndexDigest(spark.read.parquet(s"$dir/termstats").filter(col("segment_id") === newSeg)) ==
-      IndexDigest(termstats), s"segment $newSeg termstats")
+    assertMetricsMatch(spark, dir, newSeg, expected)
     val fieldstats = schema.fields.map(f => newDocs.agg(
       lit(f.name).as("field"), count(lit(1)).as("n_docs"),
-      sum(col(s"len_${f.name}")).cast("long").as("total_tokens"),
+      coalesce(sum(col(s"len_${f.name}")).cast("long"), lit(0L)).as("total_tokens"),
       lit(blockBits).as("block_bits"), lit(newSeg).as("segment_id"))).reduce(_ unionByName _)
     assert(IndexDigest(spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)) ==
       IndexDigest(fieldstats), s"segment $newSeg fieldstats")

@@ -404,15 +404,18 @@ class FastTermSpec extends AnyFunSuite {
     storedFields = Seq("lang")
   )
 
-  private lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("graft-fastterm").toString
-    import spark.implicits._
+  private val rows: Vector[(Long, String, String)] = {
     val langs = Vector("en", "de", "fr", "zh")
     val rnd = new scala.util.Random(7)
-    val rows = Vector.tabulate(400) { i =>
+    Vector.tabulate(400) { i =>
       val words = Vector.fill(5 + rnd.nextInt(30))(Vector("spark", "merge", "scan", "the")(rnd.nextInt(4)))
       (i.toLong, words.mkString(" "), langs(rnd.nextInt(langs.size)))
     }
+  }
+
+  private lazy val indexDir: String = {
+    val dir = Files.createTempDirectory("graft-fastterm").toString
+    import spark.implicits._
     IndexBuilder.build(spark, rows.toDF("doc_id", "text", "lang"), schemaFast, dir,
       "fastterm", IndexBuilder.BuildConf(numSegments = 3, blockBits = 4))
     dir
@@ -461,16 +464,28 @@ class FastTermSpec extends AnyFunSuite {
     assert(searcher.search(TermQuery("lang", "nope")).collect().isEmpty)
   }
 
-  test("termDfs: driver-summed dfs equal a Spark-side groupBy over termstats") {
+  private val dfPairs = Seq(("text", "spark"), ("text", "merge"), ("text", "no_such_term"),
+    ("lang", "en"), ("lang", "de"), ("lang", "no_such_term"))
+
+  test("termDfs: driver-summed dfs equal the corpus's doc counts") {
     val reader = new IndexReader(spark, indexDir)
-    val pairs = Seq(("text", "spark"), ("text", "merge"), ("text", "no_such_term"),
-      ("lang", "en"), ("lang", "de"), ("lang", "no_such_term"))
-    val want = reader.termStatsDf
-      .filter(pairs.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _))
+    // the corpus side: docs whose text has the word, or whose lang is the value
+    val want = dfPairs.map { case (f, t) =>
+      (f, t) -> rows.count { case (_, text, lang) =>
+        if (f == "text") text.split(' ').contains(t) else lang == t }.toLong
+    }.filter(_._2 > 0).toMap
+    assert(want.keySet.map(_._1) == Set("text", "lang"))
+    assert(reader.termDfs(dfPairs) == want)
+    val view = reader.termStatsDf
+      .filter(dfPairs.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _))
       .groupBy("field", "term").agg(sum("df"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(want.keySet.map(_._1) == Set("text", "lang"))
-    assert(reader.termDfs(pairs) == want)
-    assert(!reader.termDfs(pairs).contains(("text", "no_such_term")))
+    assert(view == want)
+  }
+
+  test("termDfs on a fresh reader: one job, no Exchange") {
+    val reader = new IndexReader(spark, indexDir)
+    reader.postings // lists the table's files
+    assert(TestSpark.jobStages { reader.termDfs(dfPairs); () } == Seq(1))
   }
 }

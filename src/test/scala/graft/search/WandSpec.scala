@@ -1,12 +1,11 @@
 package graft.search
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -212,33 +211,6 @@ class WandSpec extends AnyFunSuite {
     assert(searcher.topDocs(TermQuery("text", "w0"), 0).collect().isEmpty)
   }
 
-  /** Stage count of every job `body` starts, seen by a listener scoped to a
-    * job group; a marker job in a second group flushes the listener queue.
-    */
-  private def jobStages(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    val group = s"wand-shape-${System.nanoTime()}"
-    val stages = new ConcurrentLinkedQueue[Integer]()
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => stages.add(e.stageInfos.size)
-          case Some(g) if g == s"$group-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "wand route shape")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-flush", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener flush job never seen")
-    } finally sc.removeSparkListener(listener)
-    stages.asScala.map(_.intValue).toSeq
-  }
-
   test("routed shapes run as one job with no shuffle-map stage") {
     val shapes = Seq[Query](
       TermQuery("text", "w0"),
@@ -255,7 +227,7 @@ class WandSpec extends AnyFunSuite {
     for (q <- shapes) {
       assert(WandTopK.eligible(q).nonEmpty)
       searcher.topDocs(q, 10).collect() // first use reads the stats and lists files
-      val stages = jobStages { searcher.topDocs(q, 10).collect(); () }
+      val stages = TestSpark.jobStages { searcher.topDocs(q, 10).collect(); () }
       // one job whose only stage is its result stage: no Exchange anywhere
       assert(stages == Seq(1), s"$q: stages per job $stages")
     }
@@ -264,7 +236,7 @@ class WandSpec extends AnyFunSuite {
       (Occur.Must, TermQuery("lang", "en")), (Occur.Should, TermQuery("text", "w3"))))
     assert(WandTopK.eligible(head).nonEmpty)
     langSearcher.topDocs(head, 10).collect()
-    val headStages = jobStages { langSearcher.topDocs(head, 10).collect(); () }
+    val headStages = TestSpark.jobStages { langSearcher.topDocs(head, 10).collect(); () }
     assert(headStages == Seq(1), s"$head: stages per job $headStages")
   }
 
@@ -458,7 +430,7 @@ class WandSpec extends AnyFunSuite {
     val s = new Searcher(new IndexReader(spark, tombSearcher.reader.indexDir), schema)
     val q = bags(2)
     s.topDocs(q, 10).collect()
-    val stages = jobStages { s.topDocs(q, 10).collect(); () }
+    val stages = TestSpark.jobStages { s.topDocs(q, 10).collect(); () }
     assert(stages == Seq(1), s"stages per job $stages")
   }
 
@@ -547,7 +519,7 @@ class WandSpec extends AnyFunSuite {
   test("a block-routed explainTopDocs starts exactly 1 job") {
     for (q <- Seq(trees.head, phrase(Seq("w0", "w1"), 1), bags(2))) {
       searcher.explainTopDocs(q, 10).collect()
-      val stages = jobStages { searcher.explainTopDocs(q, 10).collect(); () }
+      val stages = TestSpark.jobStages { searcher.explainTopDocs(q, 10).collect(); () }
       assert(stages.size == 1, s"$q: stages per job $stages")
     }
   }
@@ -663,7 +635,7 @@ class WandSpec extends AnyFunSuite {
       .select("segment_id", "block_bits").collect().map(r => (r.getInt(0), r.getInt(1)))
     assert(written.length == want.size * schema.fields.size && written.toMap == want)
     // opening a reader and reading its field stats: one job, no Exchange
-    assert(jobStages { new IndexReader(spark, dir).fieldStats; () } == Seq(1))
+    assert(TestSpark.jobStages { new IndexReader(spark, dir).fieldStats; () } == Seq(1))
     val s = new Searcher(new IndexReader(spark, dir), schema)
     assert(s.reader.blockBits == want)
     docsTrees.foreach { q => assertDocsTree(s, q); assertSameSearch(s, q) }
