@@ -81,7 +81,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(view == want)
   }
 
-  test("df: termDfs and the termStatsDf view equal corpus doc counts; tombstones count until a merge") {
+  test("df: termDfs and termStatsDf equal corpus doc counts until a merge") {
     val dir = Files.createTempDirectory("graft-dfid").toString
     val sample = vocab :+ "nosuchterm"
     val conf = IndexBuilder.BuildConf(numSegments = 3, blockBits = 4)
