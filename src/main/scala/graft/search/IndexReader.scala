@@ -123,8 +123,9 @@ class IndexReader(
   @transient @volatile private[search] var store: Option[BlockStore] = None
 
   /** The live posting blocks of `pairs` as [[IndexReader.blockCols]] rows,
-    * in no particular order: on a primed reader one lookup job over just the
-    * store partitions of `pairs`, else a filter of the posting table.
+    * in no particular order: on a primed reader a lookup of just the store
+    * partitions of `pairs` (in-process on the partitions the driver holds,
+    * one job over the rest), else a filter of the posting table.
     */
   private[search] def postingBlocks(pairs: Seq[(String, String)], withPositions: Boolean): Array[Row] =
     if (pairs.isEmpty) Array.empty
@@ -138,11 +139,12 @@ class IndexReader(
     * an absent term has no entry. Deleted docs intentionally still count
     * toward df until merged out (tantivy semantics). It is Σ `doc_count`
     * over each term's live posting blocks: on a primed reader over its
-    * stored blocks, one lookup job; on a fresh reader over the blocks'
-    * `doc_count` column, read by a pushed-down scan of the term-sorted
-    * posting table whose matching rows are collected and summed on the
-    * driver, one job with no Exchange. Either way idf becomes a plan
-    * literal, like tantivy's per-query Weight.
+    * stored blocks (in-process on the partitions the driver holds, one job
+    * over the rest); on a fresh reader over the blocks' `doc_count`
+    * column, read by a pushed-down scan of the term-sorted posting table
+    * whose matching rows are collected and summed on the driver, one job
+    * with no Exchange. Either way idf becomes a plan literal, like
+    * tantivy's per-query Weight.
     */
   def termDfs(pairs: Seq[(String, String)]): Map[(String, String), Long] =
     if (pairs.isEmpty) Map.empty

@@ -140,8 +140,10 @@ object Reflection {
     * InMemoryRelation instead of parquet — no query-side change needed. The
     * same pass that fills the postings cache builds the reader's
     * term-addressed [[BlockStore]] (one partition per default-parallelism
-    * slot), which the top-k walk and `termDfs` then look terms up in; term
-    * stats are a view over the postings, so `termStatsDf` reads their cache.
+    * slot), which the top-k walk and `termDfs` then look terms up in:
+    * in-process on the partitions the driver holds (so no job at all on a
+    * local master), one job over the rest. Term stats are a view over the
+    * postings, so `termStatsDf` reads their cache.
     * MEMORY_AND_DISK keeps cold segments spillable; `unprime` releases.
     */
   def prime(reader: IndexReader): Unit = {

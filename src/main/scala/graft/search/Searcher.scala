@@ -355,7 +355,7 @@ class Searcher(
   def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
     val rq = resolve(q)
     blockPlan(rq) match {
-      // a walkable tree takes block-max WAND: one job collects the plan's
+      // a walkable tree takes block-max WAND: one lookup collects the plan's
       // posting blocks, the driver prunes, scores, drops tombstoned docs and
       // pages them, and the hits come back as a local relation (a pure
       // optimization: result-identical, verified in tests)
@@ -466,7 +466,7 @@ class Searcher(
     * tieBreaker in their boost. A docs-table leaf is one `const` row scored
     * by its own plan (a docs-scan raw term one `term` row). Routed by
     * [[blockPlan]]: a walkable tree is explained from the blocks its top-k
-    * walk decoded, in that walk's one job; any other query's top-k hits are
+    * walk decoded, in that walk's one lookup; any other query's top-k hits are
     * explained in their block groups by [[WandTopK.explainHits]].
     */
   def explainTopDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {

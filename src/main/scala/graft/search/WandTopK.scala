@@ -39,8 +39,9 @@ import graft.index.{FieldNorm, PostingCodec}
   * Scores use the per-occurrence plan's operation order, so they equal it
   * to the last bits or close to it (verified at 1e-12 in tests).
   *
-  * Top-k ([[run]]) of a [[walkable]] tree: one job, no Exchange. The plan's
-  * live posting blocks (not postings!) are collected; df is Σ `doc_count`
+  * Top-k ([[run]]) of a [[walkable]] tree: at most one job (none on a
+  * primed reader whose store partitions the driver holds), no Exchange. The
+  * plan's live posting blocks (not postings!) are collected; df is Σ `doc_count`
   * over all of a term's blocks (with or without positions), as
   * `IndexReader.termDfs` sums it — deleted docs included, until a merge
   * removes them. The driver walks the groups in order with one top-k heap
@@ -49,7 +50,7 @@ import graft.index.{FieldNorm, PostingCodec}
   * a hit whose doc is in the reader's tombstones. The hits return as a
   * local relation, so collecting them starts no job. [[explain]] is the
   * same walk; each hit is explained from its group's blocks, so it starts
-  * no second job.
+  * no second lookup.
   *
   * Full results ([[hits]]) of any tree: the kernel runs per group inside
   * one aggregation — posting blocks ∪ Opaque leaf rows `→ group by
@@ -493,7 +494,7 @@ object WandTopK {
   private val NoTombstones = new java.util.BitSet(0)
 
   /** The k best hits of `plan` in rank order, and the groups seen and
-    * decoded: one job collects the plan's live blocks
+    * decoded: one lookup collects the plan's live blocks
     * ([[IndexReader.postingBlocks]]: a store lookup on a primed reader, a
     * posting-table filter on a fresh one), one top-k heap walks the
     * doc-aligned groups in order on the driver, offering no tombstoned doc.
@@ -501,7 +502,7 @@ object WandTopK {
   private def walk(searcher: Searcher, plan: Plan, k: Int): (Seq[Hit], Int, Int) = {
     if (k <= 0) return (Nil, 0, 0)
     val reader = searcher.reader
-    // the one job: every live block of the plan's terms. Positions are not
+    // the one lookup: every live block of the plan's terms. Positions are not
     // filtered on: df must cover all of a term's blocks
     val blocks = reader.postingBlocks(plan.pairs, withPositions(plan))
       .sortBy(r => (r.getInt(Seg), r.getInt(Block)))
@@ -544,7 +545,7 @@ object WandTopK {
     (heap.asScala.toSeq.sorted(hitOrd), seen, decoded)
   }
 
-  /** Block-max top-k of `plan` in one job (see the object doc). */
+  /** Block-max top-k of `plan` in one lookup (see the object doc). */
   def run(searcher: Searcher, plan: Plan, k: Int): Result = {
     val (top, seen, decoded) = walk(searcher, plan, k)
     Result(top.map(h => Row(h.seg, h.doc, h.score)), seen, decoded)

@@ -4,9 +4,13 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.HashPartitioner
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.{HashPartitioner, SparkEnv}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -116,14 +120,15 @@ class RegistrySpec extends AnyFunSuite {
       assert(physical(TermQuery("text", "spark")).contains("InMemoryTableScan"))
       val hits = s.search(TermQuery("text", "spark")).collect()
       assert(hits.length == 2)
-      // a walkable top-k is one store lookup: one job, no SQL execution, one
-      // task per store partition its terms hash to
+      // on a local master the driver holds every store partition, so a
+      // walkable top-k and a df probe read them in-process: no job, no task,
+      // no SQL execution
       assert(spark.sparkContext.getPersistentRDDs.contains(storeRdd.id))
       walked.map { q =>
-        val parts = new HashPartitioner(storeRdd.getNumPartitions)
-        val wanted = WandTopK.eligible(q).get.pairs.map(parts.getPartition).distinct.size
-        val (jobs, tasks, sql) = traffic { s.topDocs(q, 10); () }
-        assert(jobs == 1 && sql == 0 && tasks <= wanted, s"$q: $jobs jobs, $tasks tasks ($wanted wanted), $sql SQL")
+        val walk = traffic { s.topDocs(q, 10); () }
+        assert(walk == ((0, 0, 0)), s"$q: (jobs, tasks, SQL) of the walk $walk")
+        val dfs = traffic { s.reader.termDfs(WandTopK.eligible(q).get.pairs); () }
+        assert(dfs == ((0, 0, 0)), s"$q: (jobs, tasks, SQL) of termDfs $dfs")
         top(q)
       }
     } finally Reflection.unprime(s.reader)
@@ -131,6 +136,64 @@ class RegistrySpec extends AnyFunSuite {
     assert(s.reader.store.isEmpty && !spark.sparkContext.getPersistentRDDs.contains(storeRdd.id))
     // the posting-table route returns the same rows
     assert(walked.map(top) == primedTop && primedTop.head.size == 2)
+  }
+
+  private val lookupDocs = Seq((1L, "spark window"), (2L, "merge table"), (3L, "spark scan"),
+    (4L, "window merge scan"), (5L, "table spark filter"), (6L, "filter window"))
+
+  private def bits(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getInt(0), r.getInt(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+
+  test("prime: store partitions the driver lost are read by one job, with the fresh reader's answers") {
+    val dir = Files.createTempDirectory("graft-reg-lost").toString
+    IndexBuilder.build(spark, lookupDocs.toDF("doc_id", "text"), schema, dir, "lost",
+      IndexBuilder.BuildConf(numSegments = 2))
+    val fresh = new Searcher(new IndexReader(spark, dir), schema)
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    val q = BooleanQuery(Seq("spark", "window", "merge", "table", "scan", "filter")
+      .map(t => (Occur.Should, TermQuery("text", t): Query)))
+    val pairs = WandTopK.eligible(s.resolve(q)).get.pairs
+    val want = (bits(fresh.topDocs(q, 10)), fresh.reader.termDfs(pairs))
+    Reflection.prime(s.reader)
+    try {
+      val store = s.reader.store.get
+      val parts = new HashPartitioner(store.rdd.getNumPartitions)
+      val wanted = pairs.map(parts.getPartition).distinct.sorted
+      assert(wanted.size >= 2, s"the query's terms hash to $wanted")
+      // the first wanted partition stays in-process; the job recomputes the
+      // others from the store's shuffle and caches them again, so they are
+      // dropped again before each lookup
+      val lost = wanted.tail
+      def dropLost(): Unit =
+        lost.foreach(p => SparkEnv.get.blockManager.removeBlock(RDDBlockId(store.rdd.id, p)))
+      dropLost()
+      var top: org.apache.spark.sql.DataFrame = null
+      val walk = traffic { top = s.topDocs(q, 10); () }
+      dropLost()
+      var dfs = Map.empty[(String, String), Long]
+      val probe = traffic { dfs = s.reader.termDfs(pairs); () }
+      Seq(walk, probe).foreach(t => assert(t == ((1, lost.size, 0)), s"(jobs, tasks, SQL) $t, ${lost.size} lost"))
+      assert((bits(top), dfs) == want)
+      assert(want._1.nonEmpty && want._2.size == pairs.size)
+    } finally Reflection.unprime(s.reader)
+  }
+
+  test("prime: a lookup whose body throws releases its partitions' read locks") {
+    val dir = Files.createTempDirectory("graft-reg-lock").toString
+    IndexBuilder.build(spark, lookupDocs.toDF("doc_id", "text"), schema, dir, "lock",
+      IndexBuilder.BuildConf(numSegments = 1))
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    Reflection.prime(s.reader)
+    try {
+      val store = s.reader.store.get
+      val pairs = Seq("spark", "window", "merge").map(t => ("text", t))
+      intercept[IllegalStateException] {
+        store.lookup[Int](pairs)((_, _) => throw new IllegalStateException("lookup body"))
+      }
+      // a leaked read lock makes a blocking unpersist wait for ever
+      val unpersisted = Future(store.rdd.unpersist(blocking = true))(ExecutionContext.global)
+      Await.result(unpersisted, 60.seconds)
+    } finally Reflection.unprime(s.reader)
   }
 
   test("exportNamedJson: multi_fields render as arrays, others collapse (golden)") {
