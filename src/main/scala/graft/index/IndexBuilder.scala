@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -33,15 +33,18 @@ import graft.analysis.Analyzers
   *     needs no global rank and a head term (stop-word-scale df) shards
   *     across thousands of `(term, block_id)` shuffle keys — block keying IS
   *     the skew salt; pack groups are bounded by the block doc-range;
-  *  5. outputs written sorted by `(field, term)` within each segment dir so
-  *     Parquet row-group stats give FST-like term-range pruning for free;
+  *  5. postings written segment-aligned: a segment's terms are hash buckets,
+  *     one file each (`max(parts, segments)` files per write), each sorted by
+  *     `(field, term, block_id)` so Parquet row-group stats give FST-like
+  *     term-range pruning for free;
   *  6. visibility via [[Snapshots]] (Iceberg-style atomic version commit);
   *     stats are per-segment so merges/deletes never rewrite global state.
   *
   * Layout under `indexDir/`:
   * {{{
   *   docs/segment_id=N/       one row per doc: key, stored fields, per-field len+norm
-  *   postings/segment_id=N/   packed posting blocks, term-sorted
+  *   postings/segment_id=N/   packed posting blocks, one term-sorted file per
+  *                            hash bucket of the segment's terms
   *   fieldstats/segment_id=N/ (field, n_docs, total_tokens, block_bits) per segment
   *   deletes/segment_id=N/    tombstone doc_ids; merges drop whole partitions
   *   metrics/                 append-only lineage: one row per (build_id, segment_id)
@@ -821,8 +824,8 @@ object IndexBuilder {
     *
     * A block whose docId range straddles an input-partition boundary yields
     * one fragment per partition; [[writePostings]] merges them through
-    * [[reduceFragments]] (the reduce segment merges share) after a hash
-    * shuffle on (segment, field, term). A build's fragments never interleave
+    * [[reduceFragments]] (the reduce segment merges share) after a
+    * segment-aligned hash shuffle. A build's fragments never interleave
     * (partitions hold disjoint contiguous doc ranges), so they concatenate
     * into block bytes IDENTICAL to a single-pass pack: only the absolute
     * first docId varint of each later run is rewritten as a delta.
@@ -947,24 +950,29 @@ object IndexBuilder {
 
   /** The fragment reduce both segment writers share (builds from
     * [[packFromAnalyzed]], merges from `Maintenance.mergeSegments`):
-    * HASH-shuffle [[packSchema]] fragments on (segment, field, term), sort
-    * each partition by (segment, field, term, block, first_doc), and merge
-    * each run of one (segment, field, term, block) with [[mergeFragments]];
-    * single-fragment blocks pass through with zero decode. Hash, not range:
-    * RangePartitioning runs a sampling job that would EXECUTE THE ENTIRE
-    * MAP SIDE A SECOND TIME just to pick bounds. Hash keeps all of a term's
-    * blocks in one file per segment, and the within-partition sort keeps
-    * row-group min/max stats tight for term-predicate pruning — the pruning
-    * queries actually use; only cross-FILE range locality is given up.
+    * shuffle [[packSchema]] fragments SEGMENT-ALIGNED ([[reducePartition]]),
+    * sort each partition by (segment, field, term, block, first_doc), and
+    * merge each run of one (segment, field, term, block) with
+    * [[mergeFragments]]; single-fragment blocks pass through with zero
+    * decode. A segment's terms are hash buckets over the partitions it
+    * owns, so a segment's files are those buckets — `max(parts, S)` posting
+    * files for S segments, not `parts × S`: a fresh reader pays per file it
+    * opens, not per byte. Hash, not range: RangePartitioning runs a sampling
+    * job that would EXECUTE THE ENTIRE MAP SIDE A SECOND TIME just to pick
+    * bounds. Hash keeps all of a term's blocks in one file, and the
+    * within-partition sort keeps row-group min/max stats tight for
+    * term-predicate pruning — the pruning queries actually use; only
+    * cross-FILE range locality is given up.
     *
     * Each output block adds its `posting_bytes` to its segment's `totals`
-    * and, when it is the first block of its (segment, field, term) run (the
-    * block after a change of term, in the sorted order), one term.
+    * (the segments written, by id) and, when it is the first block of its
+    * (segment, field, term) run (the block after a change of term, in the
+    * sorted order), one term.
     */
   private[index] def reduceFragments(
       fragments: DataFrame, parts: Int, totals: Map[Int, (LongAccumulator, LongAccumulator)]): DataFrame =
     fragments
-      .repartition(parts, col("segment_id"), col("field"), col("term"))
+      .repartitionById(parts, reducePartition(totals.keys.toSeq, parts))
       .sortWithinPartitions("segment_id", "field", "term", "block_id", "first_doc")
       .mapPartitions { rows =>
         val it = rows.buffered
@@ -988,6 +996,27 @@ object IndexBuilder {
           }
         }
       }(Encoders.row(packSchema))
+
+  /** A fragment's reduce partition among `parts`, from its segment's rank i
+    * among the S sorted `segIds`: with S < parts, segment i owns partitions
+    * [i·parts/S, (i+1)·parts/S) and splits its terms over them by
+    * `pmod(hash(field, term), width)`; with S ≥ parts, the whole segment
+    * goes to partition i·parts/S. A fragment of any other segment fails the
+    * task rather than land in some partition.
+    */
+  private def reducePartition(segIds: Seq[Int], parts: Int): Column = {
+    val unknown = raise_error(concat(
+      lit("posting fragment of a segment outside the write: segment_id="), col("segment_id").cast(StringType)))
+    val s = segIds.sorted
+    s.zipWithIndex.map { case (seg, i) =>
+      val lo = (i.toLong * parts / s.size).toInt
+      val width = math.max((i + 1).toLong * parts / s.size - lo, 1L).toInt
+      (col("segment_id") === seg, lit(lo) + pmod(hash(col("field"), col("term")), lit(width)))
+    } match {
+      case Seq() => unknown
+      case (c0, p0) +: rest => rest.foldLeft(when(c0, p0)) { case (w, (c, p)) => w.when(c, p) }.otherwise(unknown)
+    }
+  }
 
   private def sameTerm(a: Row, b: Row): Boolean =
     a.getInt(2) == b.getInt(2) && a.getString(0) == b.getString(0) && a.getString(1) == b.getString(1)

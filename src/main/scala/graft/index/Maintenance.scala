@@ -209,7 +209,10 @@ object Maintenance {
     * `searcher.search(query)` output).
     */
   def deleteDocs(spark: SparkSession, indexDir: String, hits: DataFrame): Long = {
-    val rows = hits.select("segment_id", "doc_id").distinct().persist()
+    // shuffled by segment alone (the distinct needs no second shuffle), so
+    // each call adds one file per segment it touches: a fresh reader's
+    // tombstone collect opens every file
+    val rows = hits.select("segment_id", "doc_id").repartition(col("segment_id")).distinct().persist()
     val n = rows.count()
     // tombstones are hive-partitioned by segment_id so that retiring a
     // merged segment's deletes is a metadata-only partition drop — no

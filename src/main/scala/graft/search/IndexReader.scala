@@ -1,8 +1,13 @@
 package graft.search
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.index.{IndexBuilder, Snapshots}
 
@@ -42,10 +47,46 @@ class IndexReader(
     case None    => df
   }
 
-  // lazy vals: the file index (listing + schema) is built once per reader,
-  // not re-listed on every query
-  lazy val postings: DataFrame = liveFilter(spark.read.parquet(s"$indexDir/postings"))
-  lazy val docs: DataFrame = liveFilter(spark.read.parquet(s"$indexDir/docs"))
+  /** The schema Spark's non-merging parquet inference would give the
+    * table `name` — `ParquetFileFormat.readSchemaFromFooter` of one data
+    * file, plus the `segment_id` partition column of a partitioned table —
+    * read on the driver from the footer of one file, a live segment's where
+    * there is one, so opening a table starts no schema-inference job. None
+    * when the table has no data file.
+    */
+  private def tableSchema(name: String): Option[StructType] = {
+    val root = new Path(s"$indexDir/$name")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    def isData(f: FileStatus): Boolean = {
+      val n = f.getPath.getName
+      f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (!fs.exists(root)) return None
+    val (segDirs, top) = fs.listStatus(root).toSeq
+      .partition(f => f.isDirectory && f.getPath.getName.startsWith("segment_id="))
+    val live = snapshot.fold(Set.empty[String])(_.segments.map(s => s"segment_id=$s").toSet)
+    val file = top.find(isData).map(_ -> false).orElse(
+      segDirs.sortBy(d => !live(d.getPath.getName)).iterator
+        .flatMap(d => fs.listStatus(d.getPath).find(isData)).nextOption().map(_ -> true))
+    file.map { case (f, partitioned) =>
+      val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
+      val data = ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      if (partitioned) data.add(StructField("segment_id", IntegerType)) else data
+    }
+  }
+
+  /** Table `name` read with its [[tableSchema]] (a table with no data file
+    * is left to Spark's inference).
+    */
+  private def table(name: String): DataFrame =
+    tableSchema(name).fold(spark.read)(spark.read.schema).parquet(s"$indexDir/$name")
+
+  // lazy vals: each table's file index (listing) and schema are built once
+  // per reader, not on every query; the schema costs a footer read on the
+  // driver, not a Spark job
+  lazy val postings: DataFrame = liveFilter(table("postings"))
+  lazy val docs: DataFrame = liveFilter(table("docs"))
   /** Per-segment term statistics `(field, term, df, total_tf, segment_id)`,
     * a view over the live posting blocks: `df` = Σ `doc_count` and
     * `total_tf` = Σ `sum_tf` over each term's blocks in a segment (summa's
@@ -55,22 +96,17 @@ class IndexReader(
     .groupBy("segment_id", "field", "term")
     .agg(sum("doc_count").cast("long").as("df"), sum("sum_tf").as("total_tf"))
     .select("field", "term", "df", "total_tf", "segment_id")
-  lazy val metrics: DataFrame = spark.read.parquet(s"$indexDir/metrics")
+  lazy val metrics: DataFrame = table("metrics")
 
   /** Tombstones `(segment_id, doc_id)` as written, if any deletes were
     * issued since the segments were built.
     */
-  lazy val deletes: Option[DataFrame] = {
-    val p = new Path(s"$indexDir/deletes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  lazy val deletes: Option[DataFrame] =
     // tombstones are hive-partitioned by segment_id; after a merge clears
-    // every partition the root may hold only a _SUCCESS marker — treat that
-    // as tombstone-free
-    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("segment_id=")))
-      Some(spark.read.parquet(s"$indexDir/deletes")
-        .select(col("segment_id").cast("int").as("segment_id"), col("doc_id")))
-    else None
-  }
+    // every partition the root may hold only a _SUCCESS marker — no data
+    // file, tombstone-free
+    tableSchema("deletes").map(s =>
+      spark.read.schema(s).parquet(s"$indexDir/deletes").select("segment_id", "doc_id"))
 
   /** Tombstoned doc ids per segment (empty when there are none), collected
     * once per reader in one job with no shuffle — the alive bitsets the

@@ -42,6 +42,30 @@ class BuildSpec extends AnyFunSuite {
     segs.foreach(s => MergeCheck.assertMetricsMatch(spark, dir, s, postings.filter(col("segment_id") === s)))
   }
 
+  test("postings are segment-aligned: max(parts, segments) files per build, parts per merge") {
+    def files(dir: String, seg: Int): Int = IndexDigest.files(spark, dir, s"postings/segment_id=$seg")
+    def build(numSegments: Int): (String, Seq[Int], IndexBuilder.BuildConf) = {
+      val dir = Files.createTempDirectory(s"graft-build-layout$numSegments").toString
+      val conf = IndexBuilder.BuildConf(numSegments = numSegments, buildPartitions = 4)
+      IndexBuilder.build(spark, corpus(300, 7), schema, dir, "b0", conf)
+      val segs = Snapshots.latest(spark, dir).get.segments
+      assert(segs.size == numSegments)
+      (dir, segs, conf)
+    }
+    val (d8, segs8, _) = build(8)
+    assert(segs8.map(files(d8, _)) == Seq.fill(8)(1))
+    val (d2, segs2, conf2) = build(2)
+    assert(segs2.map(files(d2, _)) == Seq(2, 2))
+    val merged = Maintenance.mergeSegments(spark, d2, schema, segs2, "m0", conf2)
+    assert(files(d2, merged) == 4)
+    // a fragment of a segment the write was not given fails the write
+    val fragments = spark.read.parquet(s"$d8/postings").select(IndexBuilder.packSchema.fieldNames.map(col): _*)
+    val e = intercept[Exception](IndexBuilder.writePostings(fragments, 4,
+      Files.createTempDirectory("graft-build-stray").toString, segs8.take(1)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("posting fragment of a segment outside the write")))
+  }
+
   test("a build starts no Spark job after its postings write") {
     val dir = Files.createTempDirectory("graft-build-tail").toString
     // in the order the listener saw them: SQL execution starts (id, plan)

@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.BinaryType
   * rows, whatever their file layout, partitioning or row order.
   *
   * As a main it digests the index tables of one or more index directories,
-  * one line per (table, directory), so two directories built by two versions
-  * of the code can be compared table by table:
+  * one line per (table, directory): `table, digest, parquet file count,
+  * directory`. Two directories built by two versions of the code can be
+  * compared table by table, and a layout change shows as equal digests with
+  * different file counts:
   * {{{
   * java ... -cp target/scala-2.13/classes:target/scala-2.13/test-classes:$SPARK_HOME/jars/'*' \
   *   graft.index.IndexDigest /tmp/a/index /tmp/b/index
@@ -51,12 +53,24 @@ object IndexDigest {
     apply(spark.read.parquet(s"$indexDir/$name"),
       if (name == "metrics") Seq("build_id", "created_at") else Nil)
 
+  /** The number of parquet files under `indexDir/name` (a table, or one
+    * of its segment partitions), every partition on disk included.
+    */
+  def files(spark: SparkSession, indexDir: String, name: String): Int = {
+    val root = new org.apache.hadoop.fs.Path(s"$indexDir/$name")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(root, true)
+    var n = 0
+    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: IndexDigest <indexDir> [<indexDir> ...]")
     val spark = SparkSession.builder().master(sys.props.getOrElse("spark.master", "local[4]"))
       .appName("index-digest").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    for (t <- tables; d <- args) println(s"$t\t${table(spark, d, t)}\t$d")
+    for (t <- tables; d <- args) println(s"$t\t${table(spark, d, t)}\t${files(spark, d, t)}\t$d")
     spark.stop()
   }
 }

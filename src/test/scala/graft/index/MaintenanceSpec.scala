@@ -262,6 +262,30 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(r2.docs.count() == 100 - bothDocs)
   }
 
+  test("deleteDocs adds one tombstone file per segment it touches") {
+    val dir = Files.createTempDirectory("graft-del-files").toString
+    IndexBuilder.build(spark, corpus(200, 9).toDF("doc_id", "text"), schema, dir, "b0",
+      IndexBuilder.BuildConf(numSegments = 4))
+    val segs = Snapshots.latest(spark, dir).get.segments.sorted
+    def files(): Int = IndexDigest.files(spark, dir, "deletes")
+    val docs = new IndexReader(spark, dir).docs.select("segment_id", "doc_id")
+    def hits(ss: Seq[Int], rem: Int) =
+      docs.filter(col("segment_id").isin(ss.map(Integer.valueOf): _*) && col("doc_id") % 3 === rem)
+    // three segments, each hit twice; then two, one of them touched before
+    val first = hits(segs.take(3), 0)
+    val second = hits(segs.drop(2), 1)
+    assert(Maintenance.deleteDocs(spark, dir, first.union(first)) == first.count())
+    assert(files() == 3)
+    assert(Maintenance.deleteDocs(spark, dir, second) == second.count())
+    assert(files() == 5)
+    val want = first.union(second).collect().groupBy(_.getInt(0)).map { case (seg, rs) =>
+      val b = new java.util.BitSet
+      rs.foreach(r => b.set(r.getInt(1)))
+      seg -> b
+    }
+    assert(want.size == 4 && new IndexReader(spark, dir).tombstones == want)
+  }
+
   test("upsert addDocuments: all four reference conflict strategies") {
     val dir = Files.createTempDirectory("graft-upsert").toString
     val df = Seq((1L, "spark window"), (2L, "merge table"), (3L, "scan filter"))

@@ -1,11 +1,12 @@
 package graft.search
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{HashPartitioner, SparkEnv}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
@@ -14,7 +15,7 @@ import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.index.{FieldDef, IndexBuilder, IndexSchema}
+import graft.index.{FieldDef, IndexBuilder, IndexSchema, Maintenance}
 
 class RegistrySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -176,6 +177,43 @@ class RegistrySpec extends AnyFunSuite {
       assert((bits(top), dfs) == want)
       assert(want._1.nonEmpty && want._2.size == pairs.size)
     } finally Reflection.unprime(s.reader)
+  }
+
+  test("fresh reader: an open and a first walk start only the fieldstats, posting and tombstone reads") {
+    val dir = Files.createTempDirectory("graft-reg-fresh").toString
+    val words = Vector("spark", "window", "merge", "table", "scan", "filter")
+    val docs = Seq.tabulate(60)(i => (i.toLong, Seq.tabulate(3 + i % 4)(j => words((i * 7 + j * 5) % 6)).mkString(" ")))
+    IndexBuilder.build(spark, docs.toDF("doc_id", "text"), schema, dir, "fresh",
+      IndexBuilder.BuildConf(numSegments = 3))
+    Maintenance.deleteDocs(spark, dir, new IndexReader(spark, dir).docs.filter($"doc_id" % 4 === 0))
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    val q = BooleanQuery(Seq((Occur.Should, TermQuery("text", "spark")), (Occur.Should, TermQuery("text", "scan"))))
+    val sc = spark.sparkContext
+    val group = s"fresh-${System.nanoTime()}"
+    // each job's SQL execution id (-1: none, e.g. a schema-inference job),
+    // and each SQL execution's physical plan
+    val jobs = new ConcurrentLinkedQueue[java.lang.Long]()
+    val plans = new ConcurrentHashMap[Long, String]()
+    TestSpark.listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(group))
+          jobs.add(Option(e.properties.getProperty("spark.sql.execution.id")).fold(-1L)(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.put(x.executionId, x.physicalPlanDescription)
+        case _                                 =>
+      }
+    }) {
+      sc.setJobGroup(group, "fresh reader")
+      try {
+        s.reader.snapshot; s.reader.fieldStats; s.reader.deletes
+        assert(s.topDocs(q, 10).collect().length == 10)
+      } finally sc.clearJobGroup()
+    }
+    assert(s.reader.tombstones.nonEmpty)
+    val read = jobs.asScala.toSeq.map(id => Option(plans.get(id.longValue)).fold(s"job $id outside SQL") { p =>
+      Seq("fieldstats", "postings", "deletes", "docs").filter(t => p.contains(s"$dir/$t]")).mkString("+")
+    })
+    assert(read.sorted == Seq("deletes", "fieldstats", "postings"), s"the jobs' tables: $read")
   }
 
   test("prime: a lookup whose body throws releases its partitions' read locks") {
