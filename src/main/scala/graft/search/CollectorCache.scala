@@ -90,6 +90,7 @@ final class CollectorCache(maxEntries: Int = 128, ttlMillis: Long = 120000L) {
     * through to a direct uncached fetch when the window spans blocks.
     */
   def topDocs(searcher: Searcher, q: Query, limit: Int, offset: Int = 0): (Array[Row], Boolean) = {
+    Searcher.windowEnd(limit, offset)
     if (!isCacheable(limit, offset)) {
       val page = Collectors.topDocs(searcher, q, limit, offset)
       return (page.rows, page.hasNext)

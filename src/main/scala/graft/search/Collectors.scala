@@ -19,7 +19,7 @@ object Collectors {
 
   def topDocs(searcher: Searcher, q: Query, limit: Int, offset: Int): TopDocsPage = {
     val got = searcher
-      .topDocs(q, limit + 1, offset) // limit+1 trick
+      .topDocs(q, Searcher.windowEnd(limit, 1), offset) // limit+1 trick, checked
       .collect()
     TopDocsPage(got.take(limit), got.length > limit)
   }

@@ -80,8 +80,9 @@ object PostingUdfs {
 
 /** Plans a [[Query]] into a DataFrame of `(segment_id, doc_id, score)` and
   * runs collectors over it. The per-segment collect + merge of the reference
-  * (`index_holder.rs:394-402`) maps to partition parallelism + Spark's
-  * partial/final aggregation and `TakeOrderedAndProject`.
+  * (`index_holder.rs:394-402`) maps to the driver's top-k walk over
+  * doc-aligned block groups for top-k and explain, and to partition
+  * parallelism + Spark's partial/final aggregation for full results.
   */
 class Searcher(
     val reader: IndexReader,
@@ -103,16 +104,6 @@ class Searcher(
     reader.fieldStats.get(field).map(_.avgdl).getOrElse(0.0)
   private def totalDocs(field: String): Long =
     reader.fieldStats.get(field).map(_.nDocs).getOrElse(0L)
-
-  /** All (field, term) pairs needed to score a resolved query tree. */
-  private def collectTerms(q: Query): Seq[(String, String)] = q match {
-    case TermQuery(f, v)       => Seq((f, v))
-    case PhraseQuery(f, ts, _) => ts.map { case (_, t) => (f, t) }
-    case BooleanQuery(cs, _)   => cs.flatMap { case (_, c) => collectTerms(c) }
-    case BoostQuery(c, _)      => collectTerms(c)
-    case DisjunctionMaxQuery(ds, _) => ds.flatMap(collectTerms)
-    case _                     => Nil
-  }
 
   /** Rewrite parse-time nodes into the executable algebra: MatchQuery runs
     * the SummaQL parser; MoreLikeThis extracts salient terms and becomes a
@@ -195,44 +186,14 @@ class Searcher(
         case f if f.analyzer == "raw_ci" => true
       }
 
-  /** Scored docs of one term on a `raw`/`raw_ci` field whose value is
-    * stored in the docs table ([[fastTermCi]]), in a tree whose terms all
-    * are ([[blockPlan]]): answered from the docs scan, not the posting blocks.
-    * Score-identical by construction: a raw field has exactly one token per
-    * non-empty value, so tf = 1 and the quantized fieldnorm length is 1 for
-    * every match; df/N/avgdl come from the same stats tables and the score is
-    * the same [[BM25.scoreCol]] op sequence (SearchSpec pins bitwise equality
-    * vs the posting plan). On a head term (lang:en, ~25% of all docs) this
-    * replaces the engine's densest posting-block scan with a pruned,
-    * cache-primed column filter — the difference between a
-    * bandwidth-fragile multi-second scan and a sub-second probe at 800k
-    * pages, compounding at 100x.
-    */
-  private def rawTermHits(field: String, term: String, dfs: Map[(String, String), Long]): DataFrame = {
-    val df = dfs.getOrElse((field, term), 0L)
-    if (df == 0L) return emptyHits
-    // df > 0 guarantees the term was indexed, so matches are exactly the
-    // docs whose (optionally lowercased) stored value equals the term;
-    // null/empty stored values can never equal a non-empty indexed term.
-    val pred = if (fastTermCi(field).contains(true)) lower(col(field)) === term else col(field) === term
-    reader.docs
-      .filter(pred)
-      .select(
-        col("segment_id"),
-        col("doc_id"),
-        BM25.scoreCol(lit(1), lit(graft.index.FieldNorm.encode(1L)), BM25.idf(df, totalDocs(field)),
-          avgdl(field), fieldnorms).as("score"))
-  }
-
-  /** `q`'s one routing decision, its kernel tree ([[WandTopK.tree]]):
-    * terms and phrases are posting leaves, every other leaf (range, exists,
-    * all, empty, regex, term-range) is an [[WandTopK.Opaque]] leaf scored by
-    * its own plan ([[leafHits]]) — and so is every term when all of them sit
-    * on raw stored fields, whose docs-scan fast path in rawTermHits is a
-    * pruned column filter, cheaper than the posting block walk. [[topDocs]],
-    * [[plan]] and [[explainTopDocs]] route on it: a bare Opaque leaf runs its
-    * own plan, a [[WandTopK.walkable]] tree the driver walk, and any other
-    * tree the kernel's full-result plan.
+  /** `q`'s kernel tree ([[WandTopK.tree]]): terms and phrases are posting
+    * leaves, every other leaf (range, exists, all, empty, regex, term-range)
+    * is an [[WandTopK.Opaque]] docs-table leaf with a constant score — and so
+    * is every term when all of them sit on raw stored fields, whose
+    * docs-scan ([[leafDocs]]) is a pruned column filter, cheaper than the
+    * posting block walk. [[topDocs]] and [[explainTopDocs]] walk it; [[plan]]
+    * runs a bare Opaque leaf's own plan and any other tree the kernel's
+    * full-result plan.
     */
   private def blockPlan(q: Query): WandTopK.Plan = {
     val p = WandTopK.tree(q, WandTopK.postingLeaf)
@@ -253,50 +214,96 @@ class Searcher(
     (lo.toSeq ++ hi.toSeq).reduceOption(_ && _).getOrElse(lit(true))
   }
 
-  private def constHits(pred: Column): DataFrame =
-    reader.docs.filter(pred).select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
-
   /** `q`'s scored doc set `(segment_id, doc_id, score)`, tombstoned docs
     * included: a bare docs-table leaf's own plan ([[leafHits]]), or the block
     * kernel's ([[WandTopK.hits]]) for every tree (see [[blockPlan]]).
     */
-  def plan(q: Query, dfs: Map[(String, String), Long]): DataFrame = blockPlan(q) match {
-    case WandTopK.Opaque(leaf)                     => leafHits(leaf, dfs)
-    case p if p.pairs.isEmpty && p.opaques.isEmpty => emptyHits // a tree without leaves
-    case p                                         => WandTopK.hits(this, p, dfs)
+  def plan(q: Query, dfs: Map[(String, String), Long]): DataFrame = blockPlan(resolve(q)) match {
+    case WandTopK.Opaque(leaf) => leafHits(leaf, dfs)
+    case p                     => WandTopK.hits(this, p, dfs)
   }
 
-  /** The direct plan of a docs-table leaf (a raw term: the docs-scan fast path). */
-  private[search] def leafHits(q: Query, dfs: Map[(String, String), Long]): DataFrame = q match {
-    case AllQuery        => reader.docs.select(col("segment_id"), col("doc_id"), lit(1.0).as("score"))
-    case TermQuery(f, v) => rawTermHits(f, v, dfs)
-    case rq: RangeQuery  => constHits(rangePredicate(rq))
-    case TermRangeQuery(f, lo, hi, il, iu) =>
-      val t = col("term")
-      val conds = Seq(Some(col("field") === f),
-        lo.map(v => if (il) t >= v else t > v),
-        hi.map(v => if (iu) t <= v else t < v)).flatten
-      postingDocs(conds.reduce(_ && _))
-    case ExistsQuery(f) =>
-      val docsSchema = reader.docs.schema.fieldNames.toSet
-      if (docsSchema.contains(s"len_$f")) constHits(col(s"len_$f") > 0)
-      else if (docsSchema.contains(f)) constHits(col(f).isNotNull)
-      else emptyHits
-    case RegexQuery(f, pat)     => postingDocs(col("field") === f && col("term").rlike(pat))
-    case mq: MatchQuery         => plan(resolve(mq), dfs)
-    case mlt: MoreLikeThisQuery => plan(resolve(mlt), dfs)
-    case _                      => emptyHits // EmptyQuery, a phrase without terms
+  /** The docs `(segment_id, doc_id)` of a docs-table leaf, tombstoned docs
+    * included; None when it has none. A term-range or regex leaf lists a
+    * doc once per matching term it holds. A docs-scan raw term ([[blockPlan]])
+    * is a pruned column filter instead of a scan of its posting blocks (on a
+    * head term like lang:en, the densest ones); its field has one token per
+    * non-empty value, so every match has tf 1 and length 1.
+    */
+  private def leafDocs(q: Query, dfs: Map[(String, String), Long]): Option[DataFrame] = {
+    def where(pred: Column) = Some(reader.docs.filter(pred).select(keys.map(col): _*))
+    q match {
+      case AllQuery => Some(reader.docs.select(keys.map(col): _*))
+      // df > 0 guarantees the term was indexed, so matches are exactly the
+      // docs whose (optionally lowercased) stored value equals the term;
+      // null/empty stored values can never equal a non-empty indexed term
+      case TermQuery(f, v) =>
+        if (dfs.getOrElse((f, v), 0L) == 0L) None
+        else where(if (fastTermCi(f).contains(true)) lower(col(f)) === v else col(f) === v)
+      case rq: RangeQuery => where(rangePredicate(rq))
+      case TermRangeQuery(f, lo, hi, il, iu) =>
+        val t = col("term")
+        val conds = Seq(Some(col("field") === f),
+          lo.map(v => if (il) t >= v else t > v),
+          hi.map(v => if (iu) t <= v else t < v)).flatten
+        Some(postingDocs(conds.reduce(_ && _)))
+      case ExistsQuery(f) =>
+        val docsSchema = reader.docs.schema.fieldNames.toSet
+        if (docsSchema.contains(s"len_$f")) where(col(s"len_$f") > 0)
+        else if (docsSchema.contains(f)) where(col(f).isNotNull)
+        else None
+      case RegexQuery(f, pat) => Some(postingDocs(col("field") === f && col("term").rlike(pat)))
+      case _                  => None // EmptyQuery, a phrase without terms
+    }
   }
 
-  /** The docs holding any term the `terms` predicate matches, const-scored:
-    * an ids-only posting decode.
+  /** The direct plan of a docs-table leaf: its [[leafDocs]], each once, at
+    * its constant score — a docs-scan raw term's is the posting plan's
+    * [[BM25.scoreCol]] at tf 1 and length 1 (SearchSpec pins it bitwise),
+    * every other leaf's 1.0.
+    */
+  private[search] def leafHits(q: Query, dfs: Map[(String, String), Long]): DataFrame =
+    leafDocs(q, dfs).fold(emptyHits)(docs => q match {
+      case TermQuery(f, v) =>
+        docs.withColumn("score", BM25.scoreCol(lit(1), lit(graft.index.FieldNorm.encode(1L)),
+          BM25.idf(dfs((f, v)), totalDocs(f)), avgdl(f), fieldnorms))
+      case _: TermRangeQuery | _: RegexQuery => docs.distinct().withColumn("score", lit(1.0))
+      case _                                 => docs.withColumn("score", lit(1.0))
+    })
+
+  /** The docs holding any term the `terms` predicate matches: an ids-only
+    * posting decode, a doc once per term.
     */
   private def postingDocs(terms: Column): DataFrame =
     reader.postings
       .filter(terms)
       .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-      .distinct()
-      .withColumn("score", lit(1.0))
+
+  /** Each of `leaves`' docs as per-segment bitsets, in `leaves` order: one
+    * job with no Exchange over their [[leafDocs]] (none if no leaf has docs);
+    * tasks set bits and the driver ORs them, so no doc-id row is collected.
+    */
+  private[search] def leafBits(leaves: Seq[Query], dfs: Map[(String, String), Long])
+      : IndexedSeq[Map[Int, java.util.BitSet]] = {
+    val merged = scala.collection.mutable.HashMap[(Int, Int), java.util.BitSet]()
+    val rows = leaves.zipWithIndex.flatMap { case (q, i) =>
+      leafDocs(q, dfs).map(_.select(lit(i).as("leaf"), col("segment_id"), col("doc_id")))
+    }
+    if (rows.nonEmpty) rows.reduce(_ union _).queryExecution.toRdd.mapPartitions { it =>
+      val bits = scala.collection.mutable.HashMap[(Int, Int), java.util.BitSet]()
+      var (leaf, seg, cur) = (-1, -1, null: java.util.BitSet)
+      it.foreach { r =>
+        // a partition's rows come in runs of one leaf and one segment
+        if (r.getInt(0) != leaf || r.getInt(1) != seg) {
+          leaf = r.getInt(0); seg = r.getInt(1)
+          cur = bits.getOrElseUpdate((leaf, seg), new java.util.BitSet)
+        }
+        cur.set(r.getInt(2))
+      }
+      bits.iterator
+    }.collect().foreach { case (k, b) => merged.get(k).fold(merged(k) = b)(_.or(b)) }
+    IndexedSeq.tabulate(leaves.size)(i => merged.collect { case ((`i`, seg), b) => seg -> b }.toMap)
+  }
 
   /** Scored doc-set of a query: (segment_id, doc_id, score), tombstoned docs
     * excluded (reference: delete-by-query tombstones,
@@ -304,8 +311,7 @@ class Searcher(
     */
   def search(q: Query): DataFrame = {
     val rq = resolve(q)
-    val dfs = reader.termDfs(collectTerms(rq).distinct)
-    reader.applyDeletes(plan(rq, dfs))
+    reader.applyDeletes(plan(rq, reader.termDfs(WandTopK.tree(rq, WandTopK.postingLeaf).pairs)))
   }
 
   /** Hits joined with the docs table (fast fields + stored columns) — the
@@ -347,36 +353,13 @@ class Searcher(
   }
 
   /** Top-k by BM25 with the reference tie-break (score desc, then doc
-    * address asc — `fruit_extractors.rs:101-122`). The exhaustive route
-    * plans as TakeOrderedAndProject (per-partition top-k + driver merge);
-    * the WAND route merges on the driver in the same single pass, the
-    * reference's per-segment collect + merge_fruits.
+    * address asc — `fruit_extractors.rs:101-122`): the driver walk of
+    * [[blockPlan]]'s tree ([[WandTopK.run]]), the reference's per-segment
+    * collect + merge_fruits in one pass, paged and tombstones dropped, as a
+    * local relation. The window is checked by [[Searcher.windowEnd]].
     */
-  def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
-    val rq = resolve(q)
-    blockPlan(rq) match {
-      // a walkable tree takes block-max WAND: one lookup collects the plan's
-      // posting blocks, the driver prunes, scores, drops tombstoned docs and
-      // pages them, and the hits come back as a local relation (a pure
-      // optimization: result-identical, verified in tests)
-      case p if WandTopK.walkable(p) =>
-        WandTopK.run(this, p, offset + limit).toDF(spark, offset)
-      case _ =>
-        val top = search(rq)
-          .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
-          .limit(offset + limit)
-        if (offset == 0) top
-        else {
-          // the window only ever sees offset+limit rows (post-TakeOrdered)
-          val w = org.apache.spark.sql.expressions.Window
-            .orderBy(col("score").desc, col("segment_id").asc, col("doc_id").asc)
-          top
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") > offset)
-            .drop("__rn")
-        }
-    }
-  }
+  def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame =
+    WandTopK.run(this, blockPlan(resolve(q)), Searcher.windowEnd(limit, offset)).toDF(spark, offset)
 
   /** SERVING-path top docs: probe the collector cache before planning any
     * Spark job (the reference's probe-before-search,
@@ -414,8 +397,7 @@ class Searcher(
   def count(q: Query): Long = resolve(q) match {
     case TermQuery(f, v) if reader.tombstones.isEmpty =>
       reader.termDfs(Seq((f, v))).getOrElse((f, v), 0L)
-    case rq =>
-      reader.applyDeletes(plan(rq, reader.termDfs(collectTerms(rq).distinct))).count()
+    case rq => search(rq).count()
   }
 
   /** SERVING-path count/facets/aggregation: probe the collector cache before
@@ -464,19 +446,11 @@ class Searcher(
     * alignment count, idf = Σ term idfs, positions = the matched base-term
     * positions); under a dismax, the non-best children carry the
     * tieBreaker in their boost. A docs-table leaf is one `const` row scored
-    * by its own plan (a docs-scan raw term one `term` row). Routed by
-    * [[blockPlan]]: a walkable tree is explained from the blocks its top-k
-    * walk decoded, in that walk's one lookup; any other query's top-k hits are
-    * explained in their block groups by [[WandTopK.explainHits]].
+    * at its constant score (a docs-scan raw term one `term` row). Each hit
+    * is explained from the groups its [[topDocs]] walk decoded.
     */
   def explainTopDocs(q: Query, limit: Int, offset: Int = 0): DataFrame = {
-    val rq = resolve(q)
-    val explained = blockPlan(rq) match {
-      case p if WandTopK.walkable(p) => WandTopK.explain(this, p, offset + limit).drop(offset)
-      case p =>
-        WandTopK.explainHits(this, p, reader.termDfs(collectTerms(rq).distinct),
-          topDocs(rq, limit, offset).collect().toSeq)
-    }
+    val explained = WandTopK.explain(this, blockPlan(resolve(q)), Searcher.windowEnd(limit, offset)).drop(offset)
     spark.createDataFrame(explained.asJava, WandTopK.explainSchema)
       .select(
         col("segment_id"), col("doc_id"), col("score"),
@@ -488,6 +462,13 @@ class Searcher(
 }
 
 object Searcher {
+  /** The end `offset + limit` of a top-k window, checked (an IllegalArgumentException). */
+  def windowEnd(limit: Int, offset: Int): Int = {
+    require(limit >= 0 && offset >= 0, s"limit ($limit) and offset ($offset) must be >= 0")
+    require(limit <= Int.MaxValue - offset, s"offset $offset + limit $limit overflows an Int")
+    offset + limit
+  }
+
   /** Process-wide collector cache shared by default across searchers
     * (reference: one `CollectorCache` per index holder; keys embed index dir
     * + snapshot version, so one map serves all).

@@ -20,44 +20,46 @@ import graft.index.{FieldNorm, PostingCodec}
   * terms and phrases of ≥2 terms, each term a `(field, term)` pair scored
   * with its own field's N and avgdl, and [[Opaque]] docs-table leaves. One
   * [[Kernel]] evaluates the tree over one doc-aligned `(segment_id,
-  * block_id)` group — every doc of a group shares its block id `doc_id >>>
-  * block_bits` in every term's postings and every Opaque leaf's rows — and
-  * each node gives `viable` (can the group hold a hit at all), `bound` (an
-  * upper bound on any hit's score) and its hits:
+  * block_id)` group — the docs of a group share its block id `doc_id >>>
+  * block_bits` in every term's postings — and each node gives `viable` (can
+  * the group hold a hit at all), `bound` (an upper bound on any hit's
+  * score) and its hits:
   *  - a term scores `BM25(idf, tf, norm)`;
   *  - a phrase intersects its terms' doc ids and runs
   *    [[PostingUdfs.phraseTf]] on the positions; it scores `BM25(Σ idf,
   *    phrase_tf, first term's norm)` and is bounded by the first term's
   *    `BM25(Σ idf, block_max_tf, block_min_norm)`, safe since phrase_tf never
   *    exceeds the first term's tf;
-  *  - an Opaque leaf's hits are the rows of its own plan in the group;
+  *  - an Opaque leaf is a constant-score doc set (tantivy's `ExistsQuery`
+  *    bitset): its docs are its per-segment bitset's bits in the group, each
+  *    at its constant, which is also its bound;
   *  - a boolean sums its must scores (left to right) and the scores of the
   *    should clauses that match; dismax is `mx + tb·(sm − mx)`; a boost
   *    multiplies. A bound counts a should clause only above 0, and a negative
-  *    boost leaves its subtree unbounded, so a clause that can lower a score
-  *    never prunes a group that holds a hit.
+  *    boost or a dismax tieBreaker outside [0, 1] leaves its subtree
+  *    unbounded, so a clause that can lower a score never prunes a group
+  *    that holds a hit.
   * Scores use the per-occurrence plan's operation order, so they equal it
-  * to the last bits or close to it (verified at 1e-12 in tests).
+  * to the last bits or close to it (verified at 1e-12 in tests). A tree's
+  * groups are its posting blocks' groups and its leaf-only groups, where a
+  * docs leaf has a doc and the tree is viable without any posting block.
   *
-  * Top-k ([[run]]) of a [[walkable]] tree: at most one job (none on a
-  * primed reader whose store partitions the driver holds), no Exchange. The
-  * plan's live posting blocks (not postings!) are collected; df is Σ `doc_count`
-  * over all of a term's blocks (with or without positions), as
-  * `IndexReader.termDfs` sums it — deleted docs included, until a merge
-  * removes them. The driver walks the groups in order with one top-k heap
-  * (per-segment collect + `merge_fruits` in one pass), decoding a group
-  * only if its score bound reaches the running threshold, and never offers
-  * a hit whose doc is in the reader's tombstones. The hits return as a
-  * local relation, so collecting them starts no job. [[explain]] is the
-  * same walk; each hit is explained from its group's blocks, so it starts
-  * no second lookup.
+  * Top-k ([[run]]) of every tree: one lookup collects the plan's live
+  * posting blocks (not postings!; no job on a primed reader whose store
+  * partitions the driver holds), one job with no Exchange its docs leaves'
+  * bitsets. df is Σ `doc_count` over all of a term's blocks, as
+  * `IndexReader.termDfs` sums it — deleted docs included, until a merge.
+  * The driver walks the groups in order with one top-k heap (per-segment
+  * collect + `merge_fruits` in one pass), decoding a group only if its
+  * score bound reaches the running threshold, and never offers a tombstoned
+  * doc. The hits return as a local relation. [[explain]] is the same walk,
+  * each hit explained from its own group.
   *
   * Full results ([[hits]]) of any tree: the kernel runs per group inside
-  * one aggregation — posting blocks ∪ Opaque leaf rows `→ group by
-  * (segment_id, block_id) → kernel → explode`, one shuffle and no join; a
-  * tree of one `(field, term)` pair has one block per group and needs no
-  * shuffle at all. [[explainHits]] explains any tree's hits from the same
-  * rows.
+  * one aggregation — posting blocks ∪ leaf-only group keys `→ group by
+  * (segment_id, block_id) → kernel → explode`, one shuffle and no join, the
+  * bitsets broadcast to the kernel; a tree of one `(field, term)` pair and
+  * no leaf-only group has one block per group and needs no shuffle at all.
   */
 object WandTopK {
 
@@ -101,8 +103,9 @@ object WandTopK {
   /** `mx + tieBreaker·(sm − mx)` over the matching children. */
   final case class DisMax(children: Seq[Plan], tieBreaker: Double) extends Plan
 
-  /** A leaf postings do not score (a docs-table leaf): its hits are the rows
-    * of its own plan (`Searcher.leafHits`).
+  /** A leaf postings do not score (a docs-table leaf): a constant-score doc
+    * set, evaluated once per request into per-segment bitsets
+    * (`Searcher.leafBits`).
     */
   final case class Opaque(query: Query) extends Plan
 
@@ -241,27 +244,55 @@ object WandTopK {
     }
   }
 
-  /** One `(segment_id, block_id)` group: its posting blocks keyed by
-    * `(field, term)`, and the hits of each [[Opaque]] leaf with rows in it.
-    */
-  private final class Group(val blocks: java.util.Map[(String, String), Row], val leaves: Map[Opaque, Hits])
+  /** One `(segment_id, block_id)` group and its posting blocks by term. */
+  private final class Group(val seg: Int, val block: Int, val blocks: java.util.Map[(String, String), Row])
 
   /** The evaluator of `root` over one `(segment_id, block_id)` group.
     * `weights` holds every term and phrase leaf's weight, and a raw term
-    * leaf's for its explain row.
+    * leaf's; `leafBits` gives its Opaque leaves' docs per segment, in
+    * `Plan.opaques` order, on first use.
     */
-  private final class Kernel(val root: Plan, weights: Map[Plan, Weight]) extends Serializable {
-    private val opaques = root.opaques.toIndexedSeq
+  private final class Kernel(val root: Plan, weights: Map[Plan, Weight], blockBits: Map[Int, Int],
+      leafBits: () => IndexedSeq[Map[Int, java.util.BitSet]]) extends Serializable {
+    @transient private lazy val bits: Map[Opaque, Map[Int, java.util.BitSet]] = root.opaques.zip(leafBits()).toMap
 
-    /** A group of posting `blocks` and Opaque `leaves` rows (see [[groupRows]]). */
-    def group(blocks: Iterator[Row], leaves: Seq[Row]): Group = {
+    /** A docs leaf's constant score: a docs-scan raw term's is a posting
+      * term's at tf 1 and length 1 (its one token), every other leaf's 1.0.
+      */
+    private val constant: Map[Opaque, Double] = root.opaques.map {
+      case o @ Opaque(TermQuery(_, _)) => o -> weights(o).score(1.0, FieldNorm.encode(1L))
+      case o                           => o -> 1.0
+    }.toMap
+
+    def group(seg: Int, block: Int, blocks: Iterator[Row]): Group = {
       val byTerm = new java.util.HashMap[(String, String), Row](8)
       blocks.foreach(r => byTerm.put((r.getString(FieldCol), r.getString(TermCol)), r))
-      val hits = leaves.groupBy(_.getInt(0)).map { case (i, rs) =>
-        val sorted = rs.sortBy(_.getInt(1))
-        opaques(i) -> new Hits(sorted.map(_.getInt(1)).toArray, sorted.map(_.getDouble(2)).toArray)
+      new Group(seg, block, byTerm)
+    }
+
+    /** Leaf `o`'s first doc in `g` from `from` on, or -1. */
+    private def nextDoc(o: Opaque, g: Group, from: Int = 0): Int = {
+      val shift = blockBits(g.seg)
+      val d = bits(o).get(g.seg).fold(-1)(_.nextSetBit(math.max(from, g.block << shift)))
+      if (d >= 0 && d >>> shift == g.block) d else -1
+    }
+
+    /** The sorted `(segment_id << 32 | block_id)` keys of the groups where a
+      * leaf has a doc and `root` is viable with no posting block.
+      */
+    def leafOnlyGroups(): Array[Long] = {
+      val out = Array.newBuilder[Long]
+      val none = java.util.Collections.emptyMap[(String, String), Row]()
+      for (seg <- bits.values.flatMap(_.keys).toSeq.distinct.sorted) {
+        val shift = blockBits(seg)
+        val withDocs = new java.util.BitSet // the blocks where a leaf has a doc
+        for (leaf <- bits.values; docs <- leaf.get(seg)) {
+          var d = docs.nextSetBit(0)
+          while (d >= 0) { val b = d >>> shift; withDocs.set(b); d = docs.nextSetBit((b + 1) << shift) }
+        }
+        withDocs.stream().forEach(b => if (viable(root, new Group(seg, b, none))) out += (seg.toLong << 32) | b)
       }
-      new Group(byTerm, hits)
+      out.result()
     }
 
     /** Can the group hold a hit of `n` at all. */
@@ -273,7 +304,7 @@ object WandTopK {
         must.forall(viable(_, g)) && should.count(viable(_, g)) >= minShould
       case Boost(c, _)   => viable(c, g)
       case DisMax(cs, _) => cs.exists(viable(_, g))
-      case o: Opaque     => g.leaves.contains(o)
+      case o: Opaque     => nextDoc(o, g) >= 0
     }
 
     /** An upper bound on the score of any hit of the (viable) `n` in the group. */
@@ -291,13 +322,16 @@ object WandTopK {
         u
       case Boost(c, b) =>
         if (b > 0) b * bound(c, g) else if (b == 0) 0.0 else Double.PositiveInfinity
+      // a tieBreaker outside [0, 1] can weigh a child's score against the
+      // others' in any direction: unbounded, like a negative boost
+      case DisMax(_, tb) if !(tb >= 0.0 && tb <= 1.0) => Double.PositiveInfinity
       case DisMax(cs, tb) =>
         var sm = 0.0; var mx = Double.NegativeInfinity
         cs.foreach { c =>
           if (viable(c, g)) { val u = bound(c, g); sm += math.max(0.0, u); if (u > mx) mx = u }
         }
         if (mx == Double.PositiveInfinity) mx else mx + tb * (sm - mx)
-      case Opaque(_) => Double.PositiveInfinity
+      case o: Opaque => constant(o)
     }
 
     /** One group's evaluation: each block decoded and each node's hits
@@ -360,7 +394,12 @@ object WandTopK {
           val out = new HitsBuilder
           new Union(cs.map(hits)).foreach((d, sm, _, mx) => out.add(d, mx + tb * (sm - mx)))
           out.result
-        case o: Opaque => g.leaves(o)
+        case o: Opaque =>
+          val out = new HitsBuilder
+          val c = constant(o)
+          var d = nextDoc(o, g)
+          while (d >= 0) { out.add(d, c); d = nextDoc(o, g, d + 1) }
+          out.result
       }
 
       /** The detail rows of `doc`, a hit of the root: one per occurrence of
@@ -387,8 +426,7 @@ object WandTopK {
               mpos.length, norm, w.idf, boost, w.score(mpos.length.toDouble, norm) * boost,
               ArraySeq.unsafeWrapArray(mpos))
           case o @ Opaque(q) =>
-            val h = hits(o)
-            val contribution = h.scores(h.indexOf(doc)) * boost
+            val contribution = constant(o) * boost
             q match {
               // a docs-scan raw term: one token, so tf 1 and the norm of length 1
               case TermQuery(f, t) =>
@@ -416,8 +454,12 @@ object WandTopK {
     }
   }
 
-  /** `plan`'s kernel given its terms' dfs (a term without one is in no block). */
-  private def kernel(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): Kernel = {
+  /** `plan`'s kernel given its terms' dfs (a term without one is in no
+    * block), with its docs leaves' bitsets held on the driver, or broadcast
+    * when the kernel is `shipped` to executors.
+    */
+  private def kernel(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long],
+      shipped: Boolean): Kernel = {
     // the per-occurrence plan's weight: a field without a fieldstats row
     // scores with N = 0 and avgdl = 0
     def termWeight(f: String, t: String) = {
@@ -432,27 +474,14 @@ object WandTopK {
         val ws = ts.map(termWeight(f, _))
         n -> ws.head.copy(idf = ws.map(_.idf).sum)
     }.toMap
-    new Kernel(plan, weights)
-  }
-
-  /** The rows of `plan`'s groups, `(segment_id, block_id, block, leaf)`:
-    * each posting block of its terms as `block`, and each row of an Opaque
-    * leaf's own plan as `leaf` = `(index in Plan.opaques, doc_id, score)` in
-    * block `doc_id >>> block_bits`. A column no row has is left out.
-    */
-  private def groupRows(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): DataFrame = {
-    val reader = searcher.reader
-    val blocks = if (plan.pairs.isEmpty) None else Some(reader.postings
-      .filter(reader.termsFilter(plan.pairs))
-      .select(col("segment_id"), col("block_id"),
-        struct(IndexReader.blockCols(withPositions(plan)).map(col): _*).as("block")))
-    val bits = typedLit(reader.blockBits)
-    val leaves = plan.opaques.zipWithIndex.map { case (o, i) =>
-      searcher.leafHits(o.query, dfs).select(col("segment_id"),
-        call_function("shiftrightunsigned", col("doc_id"), bits(col("segment_id"))).as("block_id"),
-        struct(lit(i).as("leaf"), col("doc_id"), col("score")).as("leaf"))
-    }
-    (blocks ++ leaves).reduce(_.unionByName(_, allowMissingColumns = true))
+    val leafBits =
+      if (plan.opaques.isEmpty) () => IndexedSeq.empty
+      else {
+        val bits = searcher.leafBits(plan.opaques.map(_.query), dfs)
+        if (!shipped) () => bits
+        else { val shared = searcher.reader.spark.sparkContext.broadcast(bits); () => shared.value }
+      }
+    new Kernel(plan, weights, searcher.reader.blockBits, leafBits)
   }
 
   /** Every hit of `plan` (any tree with a leaf) as `(segment_id, doc_id,
@@ -460,27 +489,33 @@ object WandTopK {
     * are the `IndexReader.termDfs` of the plan's terms.
     */
   def hits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long]): DataFrame = {
-    val k = kernel(searcher, plan, dfs)
-    val kernelUdf = udf { (blocks: Seq[Row], leaves: Seq[Row]) =>
-      val g = k.group(Option(blocks).fold(Iterator.empty[Row])(_.iterator), Option(leaves).getOrElse(Nil))
-      val h = new k.Eval(g).hits(k.root)
+    val reader = searcher.reader
+    val spark = reader.spark
+    val k = kernel(searcher, plan, dfs, shipped = true)
+    val kernelUdf = udf { (seg: Int, block: Int, blocks: Seq[Row]) =>
+      val h = new k.Eval(k.group(seg, block, blocks.iterator)).hits(k.root)
       Seq.tabulate(h.docs.length)(i => DocScore(h.docs(i), h.scores(i)))
     }.withName("block_kernel")
-    val rows = groupRows(searcher, plan, dfs)
-    val groups =
+    val cols = IndexReader.blockCols(withPositions(plan))
+    val blocks = if (plan.pairs.isEmpty) None else Some(reader.postings
+      .filter(reader.termsFilter(plan.pairs))
+      .select(col("segment_id"), col("block_id"), struct(cols.map(col): _*).as("block")))
+    // a leaf-only group's key row has a null block, which collect_list skips
+    val keySchema = StructType(Seq(outSchema("segment_id"), StructField("block_id", IntegerType),
+      StructField("block", StructType(cols.map(reader.postings.schema(_))))))
+    val leafOnly = Some(k.leafOnlyGroups()).filter(_.nonEmpty).map(keys =>
+      spark.createDataFrame(keys.toSeq.map(g => Row((g >>> 32).toInt, g.toInt, null)).asJava, keySchema))
+    val groups = (blocks, leafOnly) match {
+      case (None, None) => return spark.createDataFrame(java.util.Collections.emptyList[Row], outSchema)
       // one (field, term) pair has one block per group: no shuffle
-      if (plan.pairs.size == 1 && plan.opaques.isEmpty)
-        rows.select(col("segment_id"), array(col("block")).as("blocks"))
-      else {
-        val lists = rows.columns.toSeq.collect {
-          case "block" => collect_list("block").as("blocks")
-          case "leaf"  => collect_list("leaf").as("leaves")
-        }
-        rows.groupBy(col("segment_id"), col("block_id")).agg(lists.head, lists.tail: _*)
-      }
-    def arg(c: String) = if (groups.columns.contains(c)) col(c) else lit(null)
+      case (Some(b), None) if plan.pairs.size == 1 =>
+        b.select(col("segment_id"), col("block_id"), array(col("block")).as("blocks"))
+      case _ =>
+        (blocks ++ leafOnly).reduce(_ unionByName _)
+          .groupBy(col("segment_id"), col("block_id")).agg(collect_list("block").as("blocks"))
+    }
     groups
-      .select(col("segment_id"), explode(kernelUdf(arg("blocks"), arg("leaves"))).as("h"))
+      .select(col("segment_id"), explode(kernelUdf(col("segment_id"), col("block_id"), col("blocks"))).as("h"))
       .select(col("segment_id"), col("h.doc_id").as("doc_id"), col("h.score").as("score"))
   }
 
@@ -496,7 +531,8 @@ object WandTopK {
   /** The k best hits of `plan` in rank order, and the groups seen and
     * decoded: one lookup collects the plan's live blocks
     * ([[IndexReader.postingBlocks]]: a store lookup on a primed reader, a
-    * posting-table filter on a fresh one), one top-k heap walks the
+    * posting-table filter on a fresh one), one job its docs leaves'
+    * bitsets (`Searcher.leafBits`), and one top-k heap walks the
     * doc-aligned groups in order on the driver, offering no tombstoned doc.
     */
   private def walk(searcher: Searcher, plan: Plan, k: Int): (Seq[Hit], Int, Int) = {
@@ -506,21 +542,17 @@ object WandTopK {
     // filtered on: df must cover all of a term's blocks
     val blocks = reader.postingBlocks(plan.pairs, withPositions(plan))
       .sortBy(r => (r.getInt(Seg), r.getInt(Block)))
+    // a docs-scan raw term reads no block: its df is looked up
     val dfs: Map[(String, String), Long] =
-      blocks.groupMapReduce(r => (r.getString(FieldCol), r.getString(TermCol)))(_.getInt(Count).toLong)(_ + _)
-    val kn = kernel(searcher, plan, dfs)
+      blocks.groupMapReduce(r => (r.getString(FieldCol), r.getString(TermCol)))(_.getInt(Count).toLong)(_ + _) ++
+        reader.termDfs(plan.opaques.collect { case Opaque(TermQuery(f, t)) => (f, t) })
+    val kn = kernel(searcher, plan, dfs, shipped = false)
     val heap = new java.util.PriorityQueue[Hit](k, hitOrd.reverse) // worst on top
     def threshold = if (heap.size < k) Double.NegativeInfinity else heap.peek().score
     var seen = 0
     var decoded = 0
-    var i = 0
-    while (i < blocks.length) {
-      val seg = blocks(i).getInt(Seg)
-      val blockId = blocks(i).getInt(Block)
-      var j = i + 1
-      while (j < blocks.length && blocks(j).getInt(Seg) == seg && blocks(j).getInt(Block) == blockId)
-        j += 1
-      val g = kn.group(blocks.iterator.slice(i, j), Nil)
+    def visit(seg: Int, blockId: Int, from: Int, until: Int): Unit = {
+      val g = kn.group(seg, blockId, blocks.iterator.slice(from, until))
       seen += 1
       // decode on ub >= threshold: a block whose bound exactly ties the kth
       // score may hold a doc that wins the (segment, doc) tiebreak — prune
@@ -540,8 +572,28 @@ object WandTopK {
           d += 1
         }
       }
+    }
+    // the leaf-only groups, visited in (segment, block) order among the posting blocks' groups
+    val leafOnly = kn.leafOnlyGroups()
+    var l = 0
+    def visitLeafOnlyBelow(key: Long): Unit =
+      while (l < leafOnly.length && leafOnly(l) < key) {
+        visit((leafOnly(l) >>> 32).toInt, leafOnly(l).toInt, 0, 0); l += 1
+      }
+    var i = 0
+    while (i < blocks.length) {
+      val seg = blocks(i).getInt(Seg)
+      val blockId = blocks(i).getInt(Block)
+      var j = i + 1
+      while (j < blocks.length && blocks(j).getInt(Seg) == seg && blocks(j).getInt(Block) == blockId)
+        j += 1
+      val key = (seg.toLong << 32) | blockId
+      visitLeafOnlyBelow(key)
+      if (l < leafOnly.length && leafOnly(l) == key) l += 1 // a group with posting blocks too
+      visit(seg, blockId, i, j)
       i = j
     }
+    visitLeafOnlyBelow(Long.MaxValue)
     (heap.asScala.toSeq.sorted(hitOrd), seen, decoded)
   }
 
@@ -556,33 +608,6 @@ object WandTopK {
     */
   def explain(searcher: Searcher, plan: Plan, k: Int): Seq[Row] =
     walk(searcher, plan, k)._1.map(h => Row(h.seg, h.doc, h.score, h.eval.details(h.doc)))
-
-  /** `hits` (`(segment_id, doc_id, score)` rows of `plan` in rank order) as
-    * `explainSchema` rows, each explained in its group `(segment_id, doc_id
-    * >>> block_bits)`: one job collects the [[groupRows]] of the hits'
-    * groups. `dfs` are the `IndexReader.termDfs` of the plan's terms.
-    */
-  def explainHits(searcher: Searcher, plan: Plan, dfs: Map[(String, String), Long], hits: Seq[Row]): Seq[Row] = {
-    if (hits.isEmpty) return Nil
-    val kn = kernel(searcher, plan, dfs)
-    val bits = searcher.reader.blockBits
-    def groupOf(h: Row): (Int, Int) = (h.getInt(0), h.getInt(1) >>> bits(h.getInt(0)))
-    val wanted = hits.map(groupOf)
-    val rows = groupRows(searcher, plan, dfs)
-    val collected = rows
-      .filter(col("segment_id").isin(wanted.map(_._1): _*) &&
-        (shiftleft(col("segment_id").cast(LongType), 32) + col("block_id"))
-          .isin(wanted.map { case (sg, b) => (sg.toLong << 32) + b }: _*))
-      .collect()
-    def structs(rs: Array[Row], c: String): Seq[Row] = {
-      val i = rows.columns.indexOf(c)
-      if (i < 0) Nil else rs.toSeq.collect { case r if !r.isNullAt(i) => r.getStruct(i) }
-    }
-    val evals = collected.groupBy(r => (r.getInt(0), r.getInt(1))).map { case (g, rs) =>
-      g -> new kn.Eval(kn.group(structs(rs, "block").iterator, structs(rs, "leaf")))
-    }
-    hits.map(h => Row(h.getInt(0), h.getInt(1), h.getDouble(2), evals(groupOf(h)).details(h.getInt(1))))
-  }
 
   /** `q` as a kernel tree: booleans, boosts and dismax are its nodes, and
     * `leaf` maps every other query.
@@ -613,18 +638,8 @@ object WandTopK {
     case _                              => Opaque(q)
   }
 
-  /** Can the driver walk ([[run]], [[explain]]) take `plan`: it reads a
-    * term, has no [[Opaque]] leaf and every dismax tieBreaker lies in [0, 1],
-    * so every node's bound is safe.
+  /** `q`'s kernel tree of posting leaves ([[postingLeaf]]): the tree every
+    * top-k walks, whatever its leaves.
     */
-  def walkable(plan: Plan): Boolean = plan.pairs.nonEmpty && plan.nodes.forall {
-    case Opaque(_)     => false
-    case DisMax(_, tb) => tb >= 0.0 && tb <= 1.0
-    case _             => true
-  }
-
-  /** Recognize a block-max-eligible query: its tree of posting leaves, when
-    * [[walkable]].
-    */
-  def eligible(q: Query): Option[Plan] = Some(tree(q, postingLeaf)).filter(walkable)
+  def eligible(q: Query): Option[Plan] = Some(tree(q, postingLeaf))
 }

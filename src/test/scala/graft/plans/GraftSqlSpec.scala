@@ -54,6 +54,17 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("search_top rejects a negative k or offset and an overflowing window") {
+    GraftSql.install(spark)
+    for ((k, offset) <- Seq((10, -5), (-1, 0), (1, Int.MaxValue))) {
+      val err = intercept[Exception] {
+        spark.sql(s"SELECT key FROM search_top('$indexDir', 'spark window', $k, $offset)").collect()
+      }
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.isInstanceOf[IllegalArgumentException]), s"k $k offset $offset: $err")
+    }
+  }
+
   test("search('name', ...) resolves the shared registry and aggregates in SQL") {
     GraftSql.install(spark)
     GraftSql.registry.register("sqlidx", searcher)

@@ -266,6 +266,19 @@ class SearchSpec extends AnyFunSuite {
     assert(next5.toSeq == all.slice(5, 10).toSeq)
   }
 
+  test("a negative limit or offset, or an overflowing window, is rejected") {
+    val bad = Seq((10, -5), (-1, 0), (1, Int.MaxValue), (Int.MaxValue, 1))
+    for (q <- Seq[Query](TermQuery("text", "spark"), AllQuery); (limit, offset) <- bad) {
+      intercept[IllegalArgumentException](searcher.topDocs(q, limit, offset))
+      intercept[IllegalArgumentException](searcher.explainTopDocs(q, limit, offset))
+      intercept[IllegalArgumentException](Collectors.topDocs(searcher, q, limit, offset))
+      intercept[IllegalArgumentException](searcher.collectTopDocs(q, limit, offset))
+    }
+    // the has_next row of limit Int.MaxValue overflows too
+    intercept[IllegalArgumentException](Collectors.topDocs(searcher, AllQuery, Int.MaxValue, 0))
+    assert(searcher.topDocs(AllQuery, 0).collect().isEmpty)
+  }
+
   test("docIds are deterministic across build parallelism (scaling invariant)") {
     import spark.implicits._
     val dir2 = Files.createTempDirectory("graft-searchspec2").toString

@@ -184,12 +184,13 @@ class WandSpec extends AnyFunSuite {
     assert(WandTopK.eligible(crossField).nonEmpty)
     assertSame(viaWand(crossField, 10), exhaustive(crossField, 10))
     // a docs-table clause
-    assert(WandTopK.eligible(BooleanQuery(Seq(
+    val regex = BooleanQuery(Seq(
       (Occur.Must, TermQuery("text", "w0")),
-      (Occur.Should, RegexQuery("text", "w1.*"))))).isEmpty)
+      (Occur.Should, RegexQuery("text", "w1.*"))))
+    assertSame(viaWand(regex, 10), exhaustive(regex, 10))
     // dismax with out-of-range tieBreaker
-    assert(WandTopK.eligible(DisjunctionMaxQuery(
-      Seq(TermQuery("text", "w0"), TermQuery("text", "w3")), 1.5)).isEmpty)
+    val wideTie = DisjunctionMaxQuery(Seq(TermQuery("text", "w0"), TermQuery("text", "w3")), 1.5)
+    assertSame(viaWand(wideTie, 10), exhaustive(wideTie, 10))
   }
 
   test("missing must term yields empty; missing should term is dropped") {
@@ -605,12 +606,13 @@ class WandSpec extends AnyFunSuite {
     docsTrees.foreach(assertDocsTree(off, _))
   }
 
-  test("docs-leaf trees take the kernel; a term + range tree plans one Exchange and no Join") {
+  test("docs-leaf trees take the kernel; a must term + range tree plans no Exchange") {
     docsTrees.foreach(assertSameSearch(searcher, _))
+    // the term is required, so the tree has no leaf-only group
     val plan = searcher.plan(docsTrees.head, searcher.reader.termDfs(Seq(("text", "w0"))))
       .queryExecution.executedPlan.toString
     assert(plan.contains("block_kernel"), plan)
-    assert(plan.split("\n").count(_.contains("Exchange")) == 1, plan)
+    assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("Join"), plan)
   }
 
@@ -747,6 +749,34 @@ class WandSpec extends AnyFunSuite {
     val mixedSearcher = new Searcher(new IndexReader(spark, mixed._1), schema)
     for (s <- Seq(tombSearcher, off, mixedSearcher))
       withPrimed(s)((fresh, primed) => walkedShapes.foreach(assertPrimedSame(fresh, primed, _)))
+  }
+
+  test("primed reader: docs-leaf trees equal the fresh reader, bit for bit") {
+    // plain, with tombstones, with fieldnorms off and with mixed block_bits
+    val off = new Searcher(searcher.reader, schema, fieldnorms = false)
+    val mixedSearcher = new Searcher(new IndexReader(spark, mixed._1), schema)
+    for (s <- Seq(searcher, tombSearcher, off, mixedSearcher))
+      withPrimed(s)((fresh, primed) => docsTrees.foreach(assertPrimedSame(fresh, primed, _)))
+  }
+
+  test("docs-leaf trees: top-k and explain start at most 2 jobs, no shuffle") {
+    def requests(s: Searcher, q: Query) = Seq(
+      () => { s.topDocs(q, 10).collect(); () }, () => { s.explainTopDocs(q, 10).collect(); () })
+    val withLeaves = docsTrees.filter(q => WandTopK.eligible(q).get.opaques.nonEmpty)
+    val fresh = new Searcher(new IndexReader(spark, searcher.reader.indexDir), schema)
+    for (q <- withLeaves; req <- requests(fresh, q)) {
+      req() // first use reads the stats and lists files
+      val stages = TestSpark.jobStages(req())
+      assert(stages.nonEmpty && stages.size <= 2 && stages.forall(_ == 1), s"fresh, $q: stages per job $stages")
+    }
+    // a primed reader looks its blocks up in-process: the bitsets are the one job
+    withPrimed(searcher) { (_, primed) =>
+      for (q <- withLeaves; req <- requests(primed, q)) {
+        req()
+        val stages = TestSpark.jobStages(req())
+        assert(stages == Seq(1), s"primed, $q: stages per job $stages")
+      }
+    }
   }
 
   test("primed reader: four threads' top-k answers equal the serial answers") {
