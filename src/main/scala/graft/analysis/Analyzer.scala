@@ -7,12 +7,17 @@ package graft.analysis
   *   - `LowerCase` applies full Unicode lowercasing;
   *   - `StopWords` drops tokens in the fixed 321-entry list, **preserving the
   *     positions of survivors** (phrase adjacency is pre-filter).
+  *
+  * `fusedKind` names the [[FusedTokenize]] kind that streams `base`'s tokens
+  * allocation-free (the indexing hot path, which applies the same three
+  * filters); [[FusedTokenize.KindNone]] for bases it cannot express.
   */
 final case class Analyzer(
     base: String => IndexedSeq[Token],
     removeLongLimit: Int = 0, // 0 = disabled
     lowerCase: Boolean = false,
-    stopWords: Boolean = false
+    stopWords: Boolean = false,
+    fusedKind: Int = FusedTokenize.KindNone
 ) extends Serializable {
   def tokenize(text: String): IndexedSeq[Token] = {
     var ts = base(text)
@@ -40,17 +45,18 @@ object Analyzers {
     if (text.isEmpty) Vector.empty
     else Vector(Token(text, 0, 0, text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length))
 
-  val summa: Analyzer =
-    Analyzer(SummaTokenizer.tokenize(_), removeLongLimit = 100, lowerCase = true, stopWords = true)
+  val summa: Analyzer = Analyzer(SummaTokenizer.tokenize(_), removeLongLimit = 100,
+    lowerCase = true, stopWords = true, fusedKind = FusedTokenize.KindSumma)
   val summaHtml: Analyzer =
     Analyzer(HtmlTokenizer.tokenize(_), removeLongLimit = 100, lowerCase = true, stopWords = true)
   val summaMmd: Analyzer =
     Analyzer(MmdTokenizer.tokenize(_), removeLongLimit = 100, lowerCase = true, stopWords = true)
-  val summaWithoutStopWords: Analyzer =
-    Analyzer(SummaTokenizer.tokenize(_), removeLongLimit = 100, lowerCase = true)
-  val default: Analyzer =
-    Analyzer(SimpleWordTokenizer.tokenize(_), removeLongLimit = 100, lowerCase = true, stopWords = true)
-  val whitespace: Analyzer = Analyzer(WhitespaceTokenizer.tokenize(_), lowerCase = true)
+  val summaWithoutStopWords: Analyzer = Analyzer(SummaTokenizer.tokenize(_), removeLongLimit = 100,
+    lowerCase = true, fusedKind = FusedTokenize.KindSumma)
+  val default: Analyzer = Analyzer(SimpleWordTokenizer.tokenize(_), removeLongLimit = 100,
+    lowerCase = true, stopWords = true, fusedKind = FusedTokenize.KindSimple)
+  val whitespace: Analyzer =
+    Analyzer(WhitespaceTokenizer.tokenize(_), lowerCase = true, fusedKind = FusedTokenize.KindWhitespace)
   val summaDict: Analyzer = Analyzer(DictTokenizer.drugs.tokenize(_))
   val rawAnalyzer: Analyzer = Analyzer(raw(_))
   val rawCi: Analyzer = Analyzer(raw(_), lowerCase = true)
@@ -69,19 +75,4 @@ object Analyzers {
 
   def apply(name: String): Analyzer =
     byName.getOrElse(name, throw new IllegalArgumentException(s"unknown analyzer: $name"))
-
-  /** Analyzers whose base is a plain word-run tokenizer, expressible through
-    * the allocation-free [[FusedTokenize]] stream (the indexing hot path).
-    * Complex bases (html/mmd/dict) and the raw analyzers are not listed —
-    * raw gets its own single-token fast path, the rest go through the legacy
-    * `tokenize` chain.
-    */
-  final case class FusedSpec(kind: Int, removeLong: Int, lower: Boolean, stop: Boolean)
-  val fusedByName: Map[String, FusedSpec] = Map(
-    "summa" -> FusedSpec(FusedTokenize.KindSumma, 100, lower = true, stop = true),
-    "summa_without_stop_words" ->
-      FusedSpec(FusedTokenize.KindSumma, 100, lower = true, stop = false),
-    "default" -> FusedSpec(FusedTokenize.KindSimple, 100, lower = true, stop = true),
-    "whitespace" -> FusedSpec(FusedTokenize.KindWhitespace, 0, lower = true, stop = false)
-  )
 }

@@ -24,11 +24,13 @@ trait TokenSink {
   * memory-bandwidth tax of the wide build phase).
   *
   * Byte offsets are not produced (indexing never reads them); position and
-  * UTF-8 length semantics are pinned equal to the legacy tokenizers by
+  * UTF-8 length semantics are pinned equal to the `Token`-vector tokenizers by
   * FusedAnalyzeSpec.
   */
 object FusedTokenize {
 
+  /** [[Analyzer.fusedKind]] of a base this object does not stream. */
+  final val KindNone = -1
   final val KindSumma = 0
   final val KindSimple = 1
   final val KindWhitespace = 2

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
 
-import graft.analysis.Analyzers
+import graft.analysis.{Analyzer, Analyzers, FusedTokenize}
 
 /** Distributed inverted-index builder.
   *
@@ -86,10 +86,10 @@ object IndexBuilder {
   /** The analyzed-field shape the build pipeline carries for every field
     * kind (text, json, bytes/ip, pre-tokenized): primitive byte blobs
     * instead of an array of per-term structs. Catalyst encodes this far
-    * faster than a nested shape, and building it directly from the
-    * accumulator map allocates no intermediate per-term objects —
-    * allocation churn is the memory-bandwidth tax the wide build pays
-    * hardest. Terms travel as ONE UTF-8 blob + offsets rather than
+    * faster than a nested shape, and building it straight from the
+    * [[TokenGrouper]]'s term table allocates no intermediate per-term
+    * objects — allocation churn is the memory-bandwidth tax the wide build
+    * pays hardest. Terms travel as ONE UTF-8 blob + offsets rather than
     * `array<string>`, and ALL int arrays (term offsets, tfs, position
     * offsets) travel packed inside the varint `meta` section rather than
     * `array<int>` columns: an `array<int>` crosses the external-Row boundary
@@ -208,51 +208,7 @@ object IndexBuilder {
     p + 1
   }
 
-  /** Assemble a [[TokFlat]] from decoded terms + parallel arrays (the
-    * shared tail of every producer path): sizes both varint sections, then
-    * writes header, meta, term bytes and positions into ONE exact-size
-    * blob — a single allocation per (doc, field) on the analyze side to
-    * mirror the single copy on the pack side.
-    */
-  private def mkTokFlat(len: Int, norm: Int, terms: Array[String],
-      tfs: Array[Int], posFlat: Array[Byte], posOff: Array[Int]): TokFlat = {
-    val k = terms.length
-    val parts = new Array[Array[Byte]](k)
-    var metaLen = varIntLen(k)
-    var termsLen = 0
-    var i = 0
-    while (i < k) {
-      val b = terms(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      parts(i) = b
-      metaLen += varIntLen(b.length) + varIntLen(tfs(i)) +
-        varIntLen(posOff(i + 1) - posOff(i))
-      termsLen += b.length
-      i += 1
-    }
-    val posLen = posOff(k)
-    val blob = new Array[Byte](
-      varIntLen(metaLen) + varIntLen(termsLen) + metaLen + termsLen + posLen)
-    var p = putVarInt(blob, 0, metaLen)
-    p = putVarInt(blob, p, termsLen)
-    p = putVarInt(blob, p, k)
-    i = 0
-    while (i < k) {
-      p = putVarInt(blob, p, parts(i).length)
-      p = putVarInt(blob, p, tfs(i))
-      p = putVarInt(blob, p, posOff(i + 1) - posOff(i))
-      i += 1
-    }
-    i = 0
-    while (i < k) {
-      System.arraycopy(parts(i), 0, blob, p, parts(i).length)
-      p += parts(i).length
-      i += 1
-    }
-    System.arraycopy(posFlat, 0, blob, p, posLen)
-    TokFlat(len, norm, blob)
-  }
-
-  /** Per-term accumulator for the token groupers: tf + the delta-varint
+  /** Per-term accumulator of the [[TokenGrouper]]: tf + the delta-varint
     * position bytes written INCREMENTALLY (byte-identical to
     * [[PostingCodec.packDocPositions]] over the collected array). Avoids the
     * per-token churn of the naive TreeMap[String, ArrayBuffer[Int]] grouping
@@ -265,7 +221,7 @@ object IndexBuilder {
     var len = 0
     private var lastPos = 0
     var tf = 0
-    /** Re-arm for reuse from the [[FusedAcc]] pool (buf capacity is kept). */
+    /** Re-arm for reuse from the [[TokenGrouper]] pool (buf capacity is kept). */
     def reset(): Unit = { len = 0; lastPos = 0; tf = 0 }
     def addPos(p: Int): Unit = {
       var v = if (tf == 0) p else p - lastPos
@@ -294,90 +250,71 @@ object IndexBuilder {
     // the position delta-varint accumulator requires non-decreasing
     // positions per term; tokens normally arrive in position order (tantivy
     // contract) but caller input is sorted defensively
-    val arr = toks.filter(t => t != null && t.text != null).sortBy(_.position).toIndexedSeq
-    groupTokensFlat(arr.length, i => arr(i).text, i => arr(i).position)
+    val arr = toks.filter(t => t != null && t.text != null).sortBy(_.position)
+    group(add => arr.foreach(t => add(t.text, t.position)))
   }
 
-  private def accumulate(
-      n: Int, text: Int => String, pos: Int => Int): java.util.HashMap[String, TermAcc] = {
-    val m = new java.util.HashMap[String, TermAcc]()
-    var i = 0
-    while (i < n) {
-      val t = text(i)
-      var acc = m.get(t)
-      if (acc == null) { acc = new TermAcc; m.put(t, acc) }
-      acc.addPos(pos(i))
-      i += 1
-    }
-    m
-  }
-
-  private def sortedTerms(m: java.util.HashMap[String, TermAcc]): Array[String] = {
-    val terms = m.keySet().toArray(new Array[String](m.size))
-    java.util.Arrays.sort(terms.asInstanceOf[Array[AnyRef]])
-    terms
-  }
-
-  private[index] val EmptyTokFlat =
-    mkTokFlat(0, 0, Array.empty, Array.empty, Array.empty, Array(0))
+  private[index] val EmptyTokFlat = new TokenGrouper().result()
 
   /** A single-term field (len 1, the term at position 0) — raw fields and
     * typed `bytes`/`ip` values; `None` is the empty field.
     */
   def singleTermFlat(term: Option[String]): TokFlat = term match {
-    // single token at position 0: packed position delta-varint = [0x00]
-    case Some(t) =>
-      mkTokFlat(1, FieldNorm.encode(1L), Array(t), Array(1), Array(0.toByte), Array(0, 1))
+    case Some(t) => group(_(t, 0))
     case None => EmptyTokFlat
   }
 
-  /** Flat-shape tokenize for the build's hot path: same grouping semantics
-    * as [[analyzeFieldFlatLegacy]] (positions in token order, byte-identical
-    * packed deltas) with zero intermediate group objects.
+  /** Group the already-analyzed (term, position) pairs `feed` emits through
+    * this thread's [[TokenGrouper]]: html/mmd/dict analyzer output,
+    * pre-tokenized input, JSON path terms and single-term fields. Per-term
+    * positions must arrive non-decreasing; the fieldnorm counts the pairs.
+    */
+  private[index] def group(feed: ((String, Int) => Unit) => Unit): TokFlat = {
+    val g = grouperTL.get()
+    g.reset()
+    feed(g.add)
+    g.result()
+  }
+
+  /** Flat-shape tokenize for the build's hot path (positions in token
+    * order, packed deltas, term order free), with zero intermediate group
+    * objects.
     *
-    * Word-run analyzers stream through the [[graft.analysis.FusedTokenize]] /
-    * [[FusedAcc]] pair (no Token objects, no filter-chain Vector copies, a
-    * generation-stamped term table reused across documents); raw analyzers
-    * take a closed-form single-token path; everything else (html/mmd/dict
-    * bases, whose tokenizers need offsets and skip ranges) falls back to the
-    * legacy chain. FusedAnalyzeSpec pins output equality across all routes.
+    * Analyzers with a [[graft.analysis.Analyzer.fusedKind]] stream through
+    * the [[graft.analysis.FusedTokenize]] / [[TokenGrouper]] pair (no Token
+    * objects, no filter-chain Vector copies, a generation-stamped term table
+    * reused across documents); raw analyzers take a closed-form single-token
+    * path; everything else (html/mmd/dict bases, whose tokenizers need
+    * offsets and skip ranges) tokenizes through `Analyzer.tokenize` and
+    * feeds the grouper its tokens. FusedAnalyzeSpec pins every route against
+    * the sorted oracle in src/test.
     */
   def analyzeFieldFlat(analyzerName: String, value: String): TokFlat = {
     if (value == null) return EmptyTokFlat
-    Analyzers.fusedByName.get(analyzerName) match {
-      case Some(spec) =>
-        val acc = fusedAccFor(analyzerName, spec)
-        acc.reset()
-        graft.analysis.FusedTokenize.run(spec.kind, value, acc)
-        acc.result()
-      case None if analyzerName == "raw" || analyzerName == "raw_ci" =>
-        if (value.isEmpty) EmptyTokFlat
-        else singleTermFlat(Some(if (analyzerName == "raw_ci") value.toLowerCase else value))
-      case None => analyzeFieldFlatLegacy(analyzerName, value)
+    val a = Analyzers(analyzerName)
+    if (a.fusedKind != FusedTokenize.KindNone) {
+      val g = fusedGrouper(a)
+      FusedTokenize.run(a.fusedKind, value, g)
+      g.result()
+    } else if (analyzerName == "raw" || analyzerName == "raw_ci") {
+      if (value.isEmpty) EmptyTokFlat
+      else singleTermFlat(Some(if (analyzerName == "raw_ci") value.toLowerCase else value))
+    } else {
+      val toks = a.tokenize(value)
+      group(add => toks.foreach(t => add(t.text, t.position)))
     }
   }
 
-  /** The pre-fusion flat tokenize (materializes the `Token` vector through
-    * the full filter chain) — kept as the semantic reference for the fused
-    * path and the route for complex tokenizer bases.
-    */
-  def analyzeFieldFlatLegacy(analyzerName: String, value: String): TokFlat = {
-    if (value == null) return EmptyTokFlat
-    val toks = Analyzers(analyzerName).tokenize(value)
-    groupTokensFlat(toks.length, i => toks(i).text, i => toks(i).position)
-  }
+  // the grouper is stateful and reused per thread — UDF lambdas run on
+  // executor task threads, so a ThreadLocal gives each task its own table
+  // with zero cross-doc allocation
+  private val grouperTL: ThreadLocal[TokenGrouper] =
+    ThreadLocal.withInitial(() => new TokenGrouper)
 
-  // fused accumulators are stateful and reused per (thread, analyzer) — UDF
-  // lambdas run on executor task threads, so a ThreadLocal registry gives
-  // each task its own table with zero cross-doc allocation
-  private val fusedTL: ThreadLocal[java.util.HashMap[String, FusedAcc]] =
-    ThreadLocal.withInitial(() => new java.util.HashMap[String, FusedAcc]())
-
-  private def fusedAccFor(name: String, spec: Analyzers.FusedSpec): FusedAcc = {
-    val m = fusedTL.get()
-    var acc = m.get(name)
-    if (acc == null) { acc = new FusedAcc(spec); m.put(name, acc) }
-    acc
+  private def fusedGrouper(a: Analyzer): TokenGrouper = {
+    val g = grouperTL.get()
+    g.reset(a)
+    g
   }
 
   // reused copy target for the zero-String tokenize path (one buffer per
@@ -395,24 +332,21 @@ object IndexBuilder {
     */
   def analyzeFieldFlatUtf8(analyzerName: String, value: UTF8String): TokFlat = {
     if (value == null) return EmptyTokFlat
-    Analyzers.fusedByName.get(analyzerName) match {
-      case Some(spec) =>
-        val n = value.numBytes
-        var buf = asciiBytesTL.get()
-        if (buf.length < n) {
-          // doubled-power-of-two growth overflows to negative past 2^30 input
-          // bytes — allocate exactly n for such (>1 GiB single-field) values
-          val doubled = java.lang.Integer.highestOneBit(math.max(n - 1, 1)) * 2
-          buf = new Array[Byte](if (doubled >= n) doubled else n)
-          asciiBytesTL.set(buf)
-        }
-        value.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET)
-        val acc = fusedAccFor(analyzerName, spec)
-        acc.reset()
-        if (graft.analysis.FusedTokenize.runAscii(buf, n, spec.kind, acc)) acc.result()
-        else analyzeFieldFlat(analyzerName, value.toString)
-      case None => analyzeFieldFlat(analyzerName, value.toString)
+    val a = Analyzers(analyzerName)
+    if (a.fusedKind == FusedTokenize.KindNone) return analyzeFieldFlat(analyzerName, value.toString)
+    val n = value.numBytes
+    var buf = asciiBytesTL.get()
+    if (buf.length < n) {
+      // doubled-power-of-two growth overflows to negative past 2^30 input
+      // bytes — allocate exactly n for such (>1 GiB single-field) values
+      val doubled = java.lang.Integer.highestOneBit(math.max(n - 1, 1)) * 2
+      buf = new Array[Byte](if (doubled >= n) doubled else n)
+      asciiBytesTL.set(buf)
     }
+    value.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET)
+    val g = fusedGrouper(a)
+    if (FusedTokenize.runAscii(buf, n, a.fusedKind, g)) g.result()
+    else analyzeFieldFlat(analyzerName, value.toString)
   }
 
   private[index] val TokFlatType: StructType = StructType(Seq(
@@ -454,35 +388,50 @@ object IndexBuilder {
       copy(child = newChild)
   }
 
-  /** Streaming token accumulator fed directly by [[graft.analysis
-    * .FusedTokenize]]: term ids come from a [[SliceIds]] table reused across
-    * documents, and `accs(id)` is term `id`'s [[TermAcc]] (the array is also
-    * the TermAcc pool). Per steady-state document it allocates ONLY the
-    * output blob: term keys live as byte slices in the table's reused pool (a
-    * String key per first-seen distinct term plus its UTF-8 re-encode in the
-    * blob assembler were a measured ~13% of build allocation volume, and
-    * allocation churn is the memory-bandwidth tax the wide build pays
-    * hardest).
+  /** The build's one token grouper: term ids come from a [[SliceIds]]
+    * table reused across documents, and `accs(id)` is term `id`'s
+    * [[TermAcc]] (the array is also the TermAcc pool). Per steady-state
+    * document it allocates ONLY the output blob: term keys live as byte
+    * slices in the table's reused pool (a String key per first-seen
+    * distinct term plus its UTF-8 re-encode in the blob assembler were a
+    * measured ~13% of build allocation volume, and allocation churn is the
+    * memory-bandwidth tax the wide build pays hardest).
     *
-    * ASCII tokens lowercase in place (exactly `String.toLowerCase` for
-    * ASCII input under any non-Turkic default locale — guarded below) and
-    * take the ASCII char lookup; non-ASCII tokens fall back to the
-    * String-based chain, preserving locale/special-casing semantics
-    * bit-for-bit with the legacy path, and take the byte lookup. Both
-    * lookups key the same table, so a term reachable via both routes (e.g.
-    * Kelvin-sign K lowercasing to ASCII `k`) lands in one accumulator.
+    * Two feeds. [[token]] is the fused route: [[graft.analysis
+    * .FusedTokenize]] pushes raw tokens and the filters of the analyzer
+    * given to `reset(a)` apply. ASCII tokens lowercase in place (exactly
+    * `String.toLowerCase` for ASCII input under any non-Turkic default
+    * locale — guarded below) and take the ASCII char lookup; non-ASCII
+    * tokens fall back to the String-based chain, preserving
+    * locale/special-casing semantics bit-for-bit with `Analyzer.tokenize`,
+    * and take the byte lookup. [[add]] takes one already-analyzed token and
+    * applies no filter. Both lookups key the same table, so a term reachable
+    * via both routes (e.g. Kelvin-sign K lowercasing to ASCII `k`) lands in
+    * one accumulator.
+    *
+    * A thread holds one grouper ([[grouperTL]]): a feed must reach
+    * [[result]] before another grouping starts on the same thread.
     */
-  private final class FusedAcc(spec: Analyzers.FusedSpec) extends graft.analysis.TokenSink {
+  private final class TokenGrouper extends graft.analysis.TokenSink {
     import graft.analysis.FusedTokenize.StopChars
 
     private val ids = new SliceIds
     private var accs = new Array[TermAcc](256)
     private var live = 0 // accs(0 until live) are armed for this document
     private var survivors = 0
+    // the fused route's filters, set by reset(a)
+    private var removeLong = 0
+    private var lower = false
+    private var stop = false
 
     def reset(): Unit = { ids.clear(); live = 0; survivors = 0 }
 
-    private def add(id: Int, pos: Int): Unit = {
+    def reset(a: Analyzer): Unit = {
+      reset()
+      removeLong = a.removeLongLimit; lower = a.lowerCase; stop = a.stopWords
+    }
+
+    private def addId(id: Int, pos: Int): Unit = {
       if (id == live) { // ids are dense: a new term takes the next id
         if (id == accs.length) accs = java.util.Arrays.copyOf(accs, id * 2)
         if (accs(id) == null) accs(id) = new TermAcc else accs(id).reset()
@@ -491,10 +440,17 @@ object IndexBuilder {
       accs(id).addPos(pos)
     }
 
+    /** One already-analyzed token at `pos`, looked up by its UTF-8 bytes. */
+    def add(term: String, pos: Int): Unit = {
+      survivors += 1
+      val b = term.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      addId(ids.id(b, 0, b.length), pos)
+    }
+
     override def token(buf: Array[Char], len: Int, rawBytes: Int, pos: Int, ascii: Boolean): Unit = {
-      if (spec.removeLong > 0 && rawBytes >= spec.removeLong) return
-      if (ascii && FusedAcc.asciiLowerSafe) {
-        if (spec.lower) {
+      if (removeLong > 0 && rawBytes >= removeLong) return
+      if (ascii && TokenGrouper.asciiLowerSafe) {
+        if (lower) {
           var i = 0
           while (i < len) {
             val c = buf(i)
@@ -503,16 +459,14 @@ object IndexBuilder {
           }
         }
         val h = StopChars.hashOf(buf, len)
-        if (spec.stop && StopChars.contains(buf, len, h)) return
+        if (stop && StopChars.contains(buf, len, h)) return
         survivors += 1
-        add(ids.idAscii(buf, len, h), pos)
+        addId(ids.idAscii(buf, len, h), pos)
       } else {
         var s = new String(buf, 0, len)
-        if (spec.lower) s = s.toLowerCase
-        if (spec.stop && graft.analysis.StopWords.All.contains(s)) return
-        survivors += 1
-        val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        add(ids.id(b, 0, b.length), pos)
+        if (lower) s = s.toLowerCase
+        if (stop && graft.analysis.StopWords.All.contains(s)) return
+        add(s, pos)
       }
     }
 
@@ -525,12 +479,10 @@ object IndexBuilder {
       * either way; fieldstats and metrics are order-free aggregates. Skipping
       * the per-doc `Arrays.sort` + sorted-order re-probe was a measured ~6%
       * of build task cpu. FusedAnalyzeSpec pins semantic equality with the
-      * (sorted) legacy chain via canonicalized compare.
+      * sorted oracle in src/test via canonicalized compare.
       */
     def result(): TokFlat = {
       val k = ids.size
-      if (k == 0) return mkTokFlat(survivors, FieldNorm.encode(survivors.toLong),
-        Array.empty, Array.empty, Array.empty, Array(0))
       // pass 1: size every blob section — the blob below is the ONE
       // allocation of a steady-state doc
       var metaLen = varIntLen(k)
@@ -543,7 +495,7 @@ object IndexBuilder {
         i += 1
       }
       // keys sit back to back in id order: the term section is one copy
-      val termsLen = ids.keyOff(k - 1) + ids.keyLen(k - 1)
+      val termsLen = if (k == 0) 0 else ids.keyOff(k - 1) + ids.keyLen(k - 1)
       val blob = new Array[Byte](
         varIntLen(metaLen) + varIntLen(termsLen) + metaLen + termsLen + posLen)
       var p = putVarInt(blob, 0, metaLen)
@@ -569,7 +521,7 @@ object IndexBuilder {
     }
   }
 
-  private object FusedAcc {
+  private object TokenGrouper {
     /** In-place ASCII lowercasing equals `String.toLowerCase` under every
       * default locale except Turkic ones (tr/az map dotted/dotless I
       * specially even for ASCII input).
@@ -578,36 +530,6 @@ object IndexBuilder {
       val l = java.util.Locale.getDefault.getLanguage
       l != "tr" && l != "az"
     }
-  }
-
-  /** The sorted reference grouper for every non-fused producer (legacy
-    * analyzer chain, pre-tokenized input, json path terms): `n` tokens,
-    * terms in `String` order, positions in token order, fieldnorm over `n`.
-    */
-  private[index] def groupTokensFlat(n: Int, text: Int => String, pos: Int => Int): TokFlat = {
-    val m = accumulate(n, text, pos)
-    val terms = sortedTerms(m)
-    val k = terms.length
-    val tfs = new Array[Int](k)
-    val posOff = new Array[Int](k + 1)
-    var total = 0
-    var i = 0
-    while (i < k) {
-      val acc = m.get(terms(i))
-      tfs(i) = acc.tf
-      posOff(i) = total
-      total += acc.len
-      i += 1
-    }
-    posOff(k) = total
-    val posFlat = new Array[Byte](total)
-    i = 0
-    while (i < k) {
-      val acc = m.get(terms(i))
-      System.arraycopy(acc.buf, 0, posFlat, posOff(i), acc.len)
-      i += 1
-    }
-    mkTokFlat(n, FieldNorm.encode(n.toLong), terms, tfs, posFlat, posOff)
   }
 
   /** The canonical doc-order shuffle feeding [[assignDocIds]]: range

@@ -118,20 +118,19 @@ object JsonField {
     * [[IndexBuilder.TokFlat]] shape (same as text fields: per-term tf +
     * positions + a quantized fieldnorm over the total token count).
     */
-  def analyzeJson(analyzerName: String, json: String): IndexBuilder.TokFlat = {
-    if (json == null || json.isEmpty) return IndexBuilder.EmptyTokFlat
+  def analyzeJson(analyzerName: String, json: String): IndexBuilder.TokFlat =
+    IndexBuilder.group(pathTerms(analyzerName, json, _))
+
+  /** Emit every (path term, within-path position) of one json document
+    * value in walk order; nothing for null, empty or invalid json.
+    */
+  private[index] def pathTerms(analyzerName: String, json: String, emit: (String, Int) => Unit): Unit = {
+    if (json == null || json.isEmpty) return
     val node =
       try mapper.readTree(json)
-      catch { case _: Exception => return IndexBuilder.EmptyTokFlat }
+      catch { case _: Exception => return }
     val analyzer = Analyzers(analyzerName)
-    val terms = mutable.ArrayBuffer.empty[String]
-    val positions = mutable.ArrayBuffer.empty[Int]
     val pathPos = mutable.Map.empty[String, Int] // per-path position offset
-
-    def add(term: String, pos: Int): Unit = {
-      terms += term
-      positions += pos
-    }
 
     def walk(n: JsonNode, path: String): Unit = {
       if (n == null || n.isNull) ()
@@ -148,27 +147,26 @@ object JsonField {
       } else if (n.isTextual) {
         val toks = analyzer.tokenize(n.asText())
         val off = pathPos.getOrElse(path, 0)
-        toks.foreach(t => add(strTerm(path, t.text), off + t.position))
+        toks.foreach(t => emit(strTerm(path, t.text), off + t.position))
         // advance past this leaf's pre-filter span so a following leaf under
         // the same path (array of strings) continues, not overlaps
         val span = toks.lastOption.map(_.position + 1).getOrElse(0)
         pathPos(path) = off + span
       } else if (n.isIntegralNumber) {
         val off = pathPos.getOrElse(path, 0)
-        add(i64Term(path, n.asLong()), off)
+        emit(i64Term(path, n.asLong()), off)
         pathPos(path) = off + 1
       } else if (n.isNumber) {
         val off = pathPos.getOrElse(path, 0)
-        add(f64Term(path, n.asDouble()), off)
+        emit(f64Term(path, n.asDouble()), off)
         pathPos(path) = off + 1
       } else if (n.isBoolean) {
         val off = pathPos.getOrElse(path, 0)
-        add(boolTerm(path, n.asBoolean()), off)
+        emit(boolTerm(path, n.asBoolean()), off)
         pathPos(path) = off + 1
       }
     }
 
     walk(node, "")
-    IndexBuilder.groupTokensFlat(terms.length, terms, positions)
   }
 }

@@ -50,9 +50,10 @@ import graft.index.{FieldNorm, PostingCodec}
   * bitsets. df is Σ `doc_count` over all of a term's blocks, as
   * `IndexReader.termDfs` sums it — deleted docs included, until a merge.
   * The driver walks the groups in order with one top-k heap (per-segment
-  * collect + `merge_fruits` in one pass), decoding a group only if its
-  * score bound reaches the running threshold, and never offers a tombstoned
-  * doc. The hits return as a local relation. [[explain]] is the same walk,
+  * collect + `merge_fruits` in one pass), decoding a group only while the
+  * heap has room or its score bound exceeds the kth score (a later doc
+  * that ties it loses the address tie-break), and never offers a
+  * tombstoned doc. The hits return as a local relation. [[explain]] is the same walk,
   * each hit explained from its own group.
   *
   * Full results ([[hits]]) of any tree: the kernel runs per group inside
@@ -548,16 +549,16 @@ object WandTopK {
         reader.termDfs(plan.opaques.collect { case Opaque(TermQuery(f, t)) => (f, t) })
     val kn = kernel(searcher, plan, dfs, shipped = false)
     val heap = new java.util.PriorityQueue[Hit](k, hitOrd.reverse) // worst on top
-    def threshold = if (heap.size < k) Double.NegativeInfinity else heap.peek().score
     var seen = 0
     var decoded = 0
     def visit(seg: Int, blockId: Int, from: Int, until: Int): Unit = {
       val g = kn.group(seg, blockId, blocks.iterator.slice(from, until))
       seen += 1
-      // decode on ub >= threshold: a block whose bound exactly ties the kth
-      // score may hold a doc that wins the (segment, doc) tiebreak — prune
-      // only on strict inferiority to stay result-identical
-      if (kn.viable(kn.root, g) && kn.bound(kn.root, g) >= threshold) {
+      // groups are visited in ascending (segment, block) order, so every hit
+      // in a full heap precedes this group's docs: a doc that only ties the
+      // kth score loses the (segment, doc) tie-break. Once the heap is full,
+      // decode only on a bound strictly above the kth score
+      if (kn.viable(kn.root, g) && (heap.size < k || kn.bound(kn.root, g) > heap.peek().score)) {
         decoded += 1
         val dead = reader.tombstones.getOrElse(seg, NoTombstones)
         val e = new kn.Eval(g)

@@ -2,23 +2,26 @@ package graft.analysis
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.IndexBuilder
-import graft.index.IndexBuilder.TokFlat
+import graft.index.{AnalyzeOracle, IndexBuilder, JsonField}
+import graft.index.IndexBuilder.{PreToken, TokFlat}
 
-/** The fused tokenize→accumulate path must be SEMANTICALLY IDENTICAL to the
-  * legacy Token-vector chain for every analyzer it claims (plus the raw fast
-  * path): same survivor count/fieldnorm and the same (term → tf, packed
-  * position deltas) map. Per-doc term ORDER is deliberately unconstrained —
-  * the fused path emits in hash-table scan order because no build consumer
-  * depends on it (see `FusedAcc.result` scaladoc); comparison canonicalizes
-  * both sides by term. The battery covers ASCII, CJK, Turkic/Greek casing,
+/** Every analyze route of the build — the fused tokenize→group stream, its
+  * `UTF8String` byte scan, the raw single-token path, the html/mmd/dict
+  * analyzers fed token by token, JSON path terms and pre-tokenized input —
+  * must be SEMANTICALLY IDENTICAL to the sorted oracle in src/test
+  * ([[AnalyzeOracle]]: `Analyzer.tokenize`, a `TreeMap`, the codec pack):
+  * same survivor count/fieldnorm and the same (term → tf, packed position
+  * deltas) map. Per-doc term ORDER is deliberately unconstrained — the
+  * grouper emits in first-seen order because no build consumer depends on
+  * it (see `TokenGrouper.result` scaladoc); comparison canonicalizes both
+  * sides by term. The battery covers ASCII, CJK, Turkic/Greek casing,
   * supplementary planes, stopword casing, remove-long UTF-8 boundaries,
-  * table-growth sizes and accumulator reuse across calls.
+  * table-growth sizes and grouper reuse across calls, over every analyzer
+  * in `Analyzers.byName`.
   */
 class FusedAnalyzeSpec extends AnyFunSuite {
 
-  private val analyzers =
-    Seq("summa", "summa_without_stop_words", "default", "whitespace", "raw", "raw_ci")
+  private val analyzers = graft.analysis.Analyzers.byName.keys.toSeq.sorted
 
   private val battery: Seq[String] = Seq(
     "",
@@ -79,14 +82,14 @@ class FusedAnalyzeSpec extends AnyFunSuite {
     for (name <- analyzers; input <- battery)
       assertSame(name, input,
         IndexBuilder.analyzeFieldFlat(name, input),
-        IndexBuilder.analyzeFieldFlatLegacy(name, input))
+        AnalyzeOracle.analyze(name, input))
   }
 
   test("null input yields the empty TokFlat on both paths") {
     for (name <- analyzers)
       assertSame(name, "<null>",
         IndexBuilder.analyzeFieldFlat(name, null),
-        IndexBuilder.analyzeFieldFlatLegacy(name, null))
+        AnalyzeOracle.analyze(name, null))
   }
 
   test("accumulator reuse across many documents on one thread stays correct") {
@@ -97,7 +100,7 @@ class FusedAnalyzeSpec extends AnyFunSuite {
     for (input <- docs)
       assertSame("summa", input,
         IndexBuilder.analyzeFieldFlat("summa", input),
-        IndexBuilder.analyzeFieldFlatLegacy("summa", input))
+        AnalyzeOracle.analyze("summa", input))
   }
 
   test("utf8 byte path is output-identical to the legacy chain on the full battery") {
@@ -105,17 +108,44 @@ class FusedAnalyzeSpec extends AnyFunSuite {
     for (name <- analyzers; input <- battery)
       assertSame(name, input,
         IndexBuilder.analyzeFieldFlatUtf8(name, UTF8String.fromString(input)),
-        IndexBuilder.analyzeFieldFlatLegacy(name, input))
+        AnalyzeOracle.analyze(name, input))
     for (name <- analyzers)
       assertSame(name, "<null>",
         IndexBuilder.analyzeFieldFlatUtf8(name, null),
-        IndexBuilder.analyzeFieldFlatLegacy(name, null))
+        AnalyzeOracle.analyze(name, null))
   }
 
   test("complex bases still route through the legacy chain unchanged") {
     val html = "<p>link<sup>1</sup>2 and <b>bold</b> text</p>"
     assertSame("summa_html", html,
       IndexBuilder.analyzeFieldFlat("summa_html", html),
-      IndexBuilder.analyzeFieldFlatLegacy("summa_html", html))
+      AnalyzeOracle.analyze("summa_html", html))
+  }
+
+  test("json fields group like the oracle: nested objects, string arrays, numbers and bools") {
+    val docs = Seq(
+      """{"id": 7, "tags": ["red fox", "fox"], "meta": {"year": 2020, "ok": true}}""",
+      """{"a": {"b": {"c": "deep text here", "d": [1, 2, 2.5, false]}}, "a.b": {"c": "dotted text"}}""",
+      """{"tags": ["the fox", "The FOX jumps", "", "fox fox"], "n": [-1, 0, 1e300, -0.0]}""",
+      """{"x": null, "y": [], "z": {}, "w": [[{"v": "nested array"}], "café ΣΊΣΥΦΟΣ 查询"]}""",
+      """{"flags": [true, false, true], "big": 9223372036854775807}""",
+      "{}", "", "not json", "[1, 2]")
+    for (name <- Seq("summa", "default", "raw", "summa_html"); doc <- docs)
+      assertSame(name, doc, JsonField.analyzeJson(name, doc), AnalyzeOracle.json(name, doc))
+    assertSame("summa", "<null>", JsonField.analyzeJson("summa", null), AnalyzeOracle.json("summa", null))
+  }
+
+  test("pre-tokenized fields group like the oracle: unsorted input, repeated terms, null text") {
+    val inputs: Seq[Seq[PreToken]] = Seq(
+      Nil,
+      Seq(PreToken(5, "b"), PreToken(0, "a"), PreToken(1, "b")),
+      Seq(PreToken(9, "x"), PreToken(3, "y"), PreToken(7, "x"), PreToken(1, "x"), PreToken(3, "x")),
+      Seq(PreToken(0, "a"), PreToken(1, null), null, PreToken(2, "a")),
+      Seq(null, PreToken(4, null)),
+      Seq(PreToken(300, "Café"), PreToken(2, "café"), PreToken(100000, "Café"), PreToken(0, "查")),
+      (0 until 400).reverse.map(i => PreToken(i, s"t${i % 37}")))
+    for (toks <- inputs)
+      assertSame("pre-tokenized", toks.mkString(","),
+        IndexBuilder.analyzePreTokenized(toks), AnalyzeOracle.preTokenized(toks))
   }
 }

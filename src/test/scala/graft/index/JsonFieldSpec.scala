@@ -62,9 +62,15 @@ class JsonFieldSpec extends AnyFunSuite {
     assert(terms(JsonField.strTerm("tags", "fox")) == ((2, Seq(1, 2))))
     // total tokens: id(1) + red,fox,fox(3) + year(1) + ok(1) = 6
     assert(tok.len == 6)
-    // byte-level golden of the grouped blob (term-sorted, packed positions)
+    // byte-level golden of the sorted oracle's blob (term-sorted, packed
+    // positions); the grouper's blob holds the same terms in first-seen order
     assert(tok.norm == 6)
-    assert(TypedFields.toHex(tok.blob) ==
+    val sorted = AnalyzeOracle.json(
+      "summa", """{"id": 7, "tags": ["red fox", "fox"], "meta": {"year": 2020, "ok": true}}""")
+    assert((sorted.len, sorted.norm) == ((tok.len, tok.norm)))
+    assert((0 until sorted.termCount).map(i => sorted.term(i) -> ((sorted.tf(i), sorted.posSlice(i).toSeq))).toMap ==
+      (0 until tok.termCount).map(i => tok.term(i) -> ((tok.tf(i), tok.posSlice(i).toSeq))).toMap)
+    assert(TypedFields.toHex(sorted.blob) ==
       "104b051401010a01011b010109020209010169640169383030303030303030303030303030376d6574612e6f6b" +
         "0162746d6574612e79656172016938303030303030303030303030376534746167730173666f78746167730173" +
         "726564000000010100")

@@ -27,20 +27,20 @@ class PreTokenizedSpec extends AnyFunSuite {
       IndexBuilder.PreToken(5, "Hello"))) // gap positions preserved
     assert(tf.len == 3)
     assert(tf.norm == FieldNorm.encode(3L))
-    assert(tf.termsDecoded.toSeq == Seq("Hello", "world")) // term-sorted
+    assert(tf.termsDecoded.toSeq == Seq("Hello", "world")) // first-seen (position) order
     val hello = tf.termsDecoded.indexOf("Hello")
     assert(tf.tf(hello) == 2)
     assert(PostingCodec.unpackPositions(tf.posSlice(hello), Array(2)).head.toSeq == Seq(0, 5))
-    // equivalence with the analyzed path when tokens match what the
-    // analyzer would emit
-    val analyzed = IndexBuilder.analyzeFieldFlatLegacy("summa", "hello world")
+    // equivalence with the analyzed path (the sorted oracle) when tokens
+    // match what the analyzer would emit
+    val analyzed = AnalyzeOracle.analyze("summa", "hello world")
     val pre = IndexBuilder.analyzePreTokenized(Seq(
       IndexBuilder.PreToken(0, "hello"), IndexBuilder.PreToken(1, "world")))
     assert(pre.len == analyzed.len && pre.norm == analyzed.norm)
     assert((0 until pre.termCount).map(i => (pre.term(i), pre.tf(i))) ==
       (0 until analyzed.termCount).map(i => (analyzed.term(i), analyzed.tf(i))))
-    // byte-level golden of the grouped blob: unsorted input, a repeated term
-    val golden = IndexBuilder.analyzePreTokenized(Seq(
+    // byte-level golden of the sorted oracle's blob: unsorted input, a repeated term
+    val golden = AnalyzeOracle.preTokenized(Seq(
       IndexBuilder.PreToken(5, "b"), IndexBuilder.PreToken(0, "a"), IndexBuilder.PreToken(1, "b")))
     assert(golden.len == 3)
     assert(TypedFields.toHex(golden.blob) == "0702020101010102026162000104")

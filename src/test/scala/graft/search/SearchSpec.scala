@@ -294,8 +294,8 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("analyzeField: sorted terms, position bytes identical to the codec pack") {
-    import graft.index.PostingCodec
-    val tf = IndexBuilder.analyzeFieldFlatLegacy("summa", "spark window spark the merge spark window")
+    import graft.index.{AnalyzeOracle, PostingCodec}
+    val tf = AnalyzeOracle.analyze("summa", "spark window spark the merge spark window")
     val terms = tf.termsDecoded.toSeq
     assert(terms == terms.sorted)
     val byTerm = terms.zipWithIndex.toMap
@@ -306,7 +306,7 @@ class SearchSpec extends AnyFunSuite {
     assert(tf.posSlice(byTerm("merge")) sameElements PostingCodec.packDocPositions(Array(4)))
     assert(!byTerm.contains("the"))
     // large positions exercise multi-byte varints
-    val big = IndexBuilder.analyzeFieldFlatLegacy("summa", ("w " * 200) + "rare")
+    val big = AnalyzeOracle.analyze("summa", ("w " * 200) + "rare")
     assert(big.posSlice(big.termsDecoded.indexOf("rare"))
       sameElements PostingCodec.packDocPositions(Array(200)))
   }

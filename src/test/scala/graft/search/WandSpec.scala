@@ -250,6 +250,30 @@ class WandSpec extends AnyFunSuite {
       exhaustive(q, 3))
   }
 
+  private def bits(a: Array[(Int, Int, Double)]): Seq[(Int, Int, Long)] =
+    a.toSeq.map { case (sg, d, sc) => (sg, d, java.lang.Double.doubleToRawLongBits(sc)) }
+
+  private val allBut7 = BooleanQuery(Seq((Occur.Must, AllQuery), (Occur.MustNot, TermQuery("text", "w7"))))
+
+  test("a full heap skips groups whose bound only ties its kth score: *:* -w7 top-10") {
+    val r = WandTopK.run(searcher, WandTopK.eligible(allBut7).get, 10)
+    assert(r.groupsDecoded < r.groupsSeen, s"decoded ${r.groupsDecoded} of ${r.groupsSeen} groups")
+    assert(bits(rows(r.toDF(spark))) == bits(exhaustive(allBut7, 10)))
+  }
+
+  test("equal scores across several groups keep the (segment, doc) tie-break") {
+    // every hit scores one constant, so the order is the address order alone
+    val qs = Seq(allBut7,
+      BooleanQuery(Seq((Occur.Must, ExistsQuery("text")), (Occur.MustNot, TermQuery("text", "w20")))))
+    for (s <- Seq(searcher, tombSearcher); q <- qs; k <- Seq(30, 50)) {
+      val want = exhaustive(q, k, s)
+      assert(want.length == k && want.map(_._3).distinct.length == 1, s"$q: not $k tied hits")
+      assert(want.map { case (sg, d, _) => (sg, d >> 5) }.distinct.length > 1, s"$q: one group")
+      assert(bits(rows(WandTopK.run(s, WandTopK.eligible(q).get, k).toDF(spark))) == bits(want))
+      assert(bits(rows(s.topDocs(q, 10, offset = k - 10))) == bits(want.drop(k - 10)))
+    }
+  }
+
   // ---- phrases ----
 
   private def phrase(terms: Seq[String], slop: Int): Query =
