@@ -1185,17 +1185,19 @@ object IndexBuilder {
     segs
   }
 
-  // zstd effort for the bulk index writes: posting payloads are already
+  // zstd effort for the bulk index writes. The writes take their codec from
+  // the session's `spark.sql.parquet.compression.codec`, so the level
+  // applies only where that is zstd (`Bench`, `BenchPhase`); under Spark's
+  // default, snappy, the option is ignored. Posting payloads are already
   // entropy-packed varints, so zstd's default level 3 buys ~2% size over
-  // level 1 at ~25% of the write stage's cpu — level 1 is the right
-  // default for the hot build path (callers can override the option via
-  // the standard hadoop conf)
+  // level 1 at ~25% of the write stage's cpu
   private val zstdLevel = "parquet.compression.codec.zstd.level"
 
   /** Write docs-table rows (`segment_id`, `doc_id`, `key`, stored columns,
     * `len_`/`norm_` per field) into the `docs` table, replacing only the
     * segment partitions present (dynamic partition overwrite) — the docs
-    * write of both segment writers.
+    * write of both segment writers. The codec is the session's; the zstd
+    * level ([[zstdLevel]]) applies only where that is zstd.
     *
     * (Near-)distinct columns make the parquet dictionary writer hash every
     * value only to overflow its 1 MB page and fall back to plain — the
@@ -1234,7 +1236,8 @@ object IndexBuilder {
     * of each of `segIds` are counted by the write's own tasks in
     * accumulators: the reduce runs in the write's result stage, so each
     * partition counts once and the counts are whole when the write
-    * returns; nothing reads the blocks back.
+    * returns; nothing reads the blocks back. The codec is the session's, as
+    * in [[writeDocs]].
     */
   private[index] def writePostings(
       fragments: DataFrame,

@@ -41,13 +41,6 @@ final case class IndexSchema(
         col(keyField).cast(org.apache.spark.sql.types.StringType)
     }
   }
-
-  /** Source columns the key extraction reads. */
-  def keyInputColumns: Seq[String] = {
-    val jsonBase = fields.find(f =>
-      f.fieldType == "json" && keyField.startsWith(f.name + "."))
-    Seq(jsonBase.map(_.name).getOrElse(keyField))
-  }
 }
 
 /** @param record "basic" (docs only), "freq" (docs+tf), "position" (docs+tf+positions)

@@ -16,13 +16,6 @@ object TextStats {
   def tokenCount(text: Column): Column =
     when(length(trim(text)) === 0, lit(0)).otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword unit count: letter runs, digit runs, and individual
-    * punctuation marks each count as a token (a cheap stand-in for a real
-    * byte-pair vocabulary when budgeting training tokens).
-    */
-  def subwordCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[\\p{L}]+|[0-9]+|[^\\p{L}0-9\\s]"), lit(0)))
-
   /** Stop-word ratio over whitespace tokens (the classic quality signal).
     *
     * Compiled loop UDF (r6): the former column form ran an interpreted

@@ -60,8 +60,7 @@ object GraftSql {
     * the TTL ([[probeTtlMillis]]) only bounds staleness against commits from
     * OTHER processes. [[invalidate]] drops the memo immediately.
     */
-  private val probeTtlMillis: Long =
-    sys.env.get("GRAFT_TVF_REFRESH_MS").map(_.toLong).getOrElse(2000L)
+  private val probeTtlMillis = 2000L
   private val latestProbe = TrieMap[String, (Long, Long, Option[Int])]()
 
   private def latestVersion(

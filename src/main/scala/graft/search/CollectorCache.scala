@@ -91,10 +91,7 @@ final class CollectorCache(maxEntries: Int = 128, ttlMillis: Long = 120000L) {
     */
   def topDocs(searcher: Searcher, q: Query, limit: Int, offset: Int = 0): (Array[Row], Boolean) = {
     Searcher.windowEnd(limit, offset)
-    if (!isCacheable(limit, offset)) {
-      val page = Collectors.topDocs(searcher, q, limit, offset)
-      return (page.rows, page.hasNext)
-    }
+    if (!isCacheable(limit, offset)) return fetch(searcher, q, limit, offset)
     val blockStart = offset - offset % BlockSize
     val k = key(searcher, q, BlockSize, blockStart)
     val entry = synchronized {
@@ -103,8 +100,8 @@ final class CollectorCache(maxEntries: Int = 128, ttlMillis: Long = 120000L) {
       case Some(e) => e
       case None =>
         // fetch the whole block and its block-level has_next
-        val page = Collectors.topDocs(searcher, q, BlockSize, blockStart)
-        val e = Entry(page.rows, page.hasNext, now())
+        val (rows, hasNext) = fetch(searcher, q, BlockSize, blockStart)
+        val e = Entry(rows, hasNext, now())
         synchronized { cache.put(k, e); () }
         e
     }
@@ -113,6 +110,15 @@ final class CollectorCache(maxEntries: Int = 128, ttlMillis: Long = 120000L) {
     val slice = entry.rows.slice(inBlockOffset, inBlockOffset + limit)
     val hasNext = entry.blockHasNext || entry.rows.length > inBlockOffset + limit
     (slice, hasNext)
+  }
+
+  /** The walk's `limit` rows from `offset` and whether a row follows them:
+    * the reference's has_next asks for one row more
+    * (`fruit_extractors.rs:109,219-241`); `limit + 1` is checked.
+    */
+  private def fetch(searcher: Searcher, q: Query, limit: Int, offset: Int): (Array[Row], Boolean) = {
+    val rows = searcher.topRows(q, Searcher.windowEnd(limit, 1), offset)
+    (rows.take(limit).toArray, rows.length > limit)
   }
 
   def size: Int = synchronized(cache.size())

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Result collectors (SURVEY.md §2.5). Each maps a scored doc-set DataFrame
@@ -9,20 +9,6 @@ import org.apache.spark.sql.functions._
   * partial/final aggregation and driver merges.
   */
 object Collectors {
-
-  // ------------------------------------------------------------ TopDocs C1
-
-  /** TopDocs page with the reference's `has_next` contract: one extra row is
-    * requested beyond limit+offset (`fruit_extractors.rs:109,219-241`).
-    */
-  final case class TopDocsPage(rows: Array[Row], hasNext: Boolean)
-
-  def topDocs(searcher: Searcher, q: Query, limit: Int, offset: Int): TopDocsPage = {
-    val got = searcher
-      .topDocs(q, Searcher.windowEnd(limit, 1), offset) // limit+1 trick, checked
-      .collect()
-    TopDocsPage(got.take(limit), got.length > limit)
-  }
 
   // ------------------------------------------------- ReservoirSampling C7
 

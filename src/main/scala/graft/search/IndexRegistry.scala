@@ -22,17 +22,6 @@ class IndexRegistry {
     searchers.getOrElse(aliases.getOrElse(nameOrAlias, nameOrAlias),
       throw new IllegalArgumentException(s"unknown index: $nameOrAlias"))
 
-  /** Paged serving entry: resolve alias → probe the searcher's collector
-    * cache → search only on miss (`index_holder.rs:460-505`). Returns
-    * (rows, has_next).
-    */
-  def topDocsPage(
-      nameOrAlias: String,
-      q: Query,
-      limit: Int,
-      offset: Int = 0): (Array[org.apache.spark.sql.Row], Boolean) =
-    resolve(nameOrAlias).collectTopDocs(q, limit, offset)
-
   /** Search several indices, merge top-k by score (reference
     * `finalize_extraction` merge shape).
     */

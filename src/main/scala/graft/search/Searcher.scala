@@ -2,7 +2,7 @@ package graft.search
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -88,13 +88,7 @@ class Searcher(
     val reader: IndexReader,
     val schema: IndexSchema,
     /** per-search fieldnorms toggle (reference `query.proto:52`) */
-    val fieldnorms: Boolean = true,
-    /** collector cache probed by [[collectTopDocs]] before planning a search
-      * (reference `index_holder.rs:460-505` probe-before-search); None
-      * disables. Defaults to the process-wide shared cache — entries key on
-      * (indexDir, snapshot version, query, window), so sharing is safe.
-      */
-    val collectorCache: Option[CollectorCache] = Some(Searcher.sharedCache)
+    val fieldnorms: Boolean = true
 ) {
   import PostingUdfs._
 
@@ -171,7 +165,7 @@ class Searcher(
   private val keys = Seq("segment_id", "doc_id")
 
   private def emptyHits: DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row], WandTopK.outSchema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row], WandTopK.outSchema)
 
   /** Is `field` a single-token (`raw`/`raw_ci`) field whose exact value is
     * also stored in the docs table? Some(caseInsensitive) when the docs-scan
@@ -355,24 +349,23 @@ class Searcher(
   /** Top-k by BM25 with the reference tie-break (score desc, then doc
     * address asc — `fruit_extractors.rs:101-122`): the driver walk of
     * [[blockPlan]]'s tree ([[WandTopK.run]]), the reference's per-segment
-    * collect + merge_fruits in one pass, paged and tombstones dropped, as a
-    * local relation. The window is checked by [[Searcher.windowEnd]].
+    * collect + merge_fruits in one pass, paged and tombstones dropped, as
+    * `WandTopK.outSchema` rows. The window is checked by [[Searcher.windowEnd]].
     */
-  def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame =
-    WandTopK.run(this, blockPlan(resolve(q)), Searcher.windowEnd(limit, offset)).toDF(spark, offset)
+  private[search] def topRows(q: Query, limit: Int, offset: Int): Seq[Row] =
+    WandTopK.run(this, blockPlan(resolve(q)), Searcher.windowEnd(limit, offset)).hits.drop(offset)
 
-  /** SERVING-path top docs: probe the collector cache before planning any
-    * Spark job (the reference's probe-before-search,
+  /** [[topRows]] as a local relation: collecting it starts no job. */
+  def topDocs(q: Query, limit: Int, offset: Int = 0): DataFrame =
+    spark.createDataFrame(topRows(q, limit, offset).asJava, WandTopK.outSchema)
+
+  /** SERVING-path top docs: probe the shared collector cache before planning
+    * any Spark job (the reference's probe-before-search,
     * `index_holder.rs:460-505`); a repeated query inside the TTL returns the
     * cached block slice with zero jobs. Returns (rows, has_next).
     */
-  def collectTopDocs(q: Query, limit: Int, offset: Int = 0): (Array[org.apache.spark.sql.Row], Boolean) =
-    collectorCache match {
-      case Some(c) => c.topDocs(this, q, limit, offset)
-      case None =>
-        val page = Collectors.topDocs(this, q, limit, offset)
-        (page.rows, page.hasNext)
-    }
+  def collectTopDocs(q: Query, limit: Int, offset: Int = 0): (Array[Row], Boolean) =
+    Searcher.sharedCache.topDocs(this, q, limit, offset)
 
   /** Top-k joined back to the doc store (broadcast lookup join — reference
     * analog `index_registry.rs:131-213` fetching stored docs for k hits).
@@ -407,34 +400,21 @@ class Searcher(
     * Repeated requests inside the TTL return the stored fruit with zero
     * jobs; a commit invalidates via the snapshot-versioned key.
     */
-  def collectCount(q: Query): Long = collectorCache match {
-    case Some(c) =>
-      c.fruit(this, q, "Count") {
-        Array(org.apache.spark.sql.Row(count(q)))
-      }.head.getLong(0)
-    case None => count(q)
-  }
+  def collectCount(q: Query): Long =
+    Searcher.sharedCache.fruit(this, q, "Count")(Array(Row(count(q)))).head.getLong(0)
 
   /** Cached facet counts fruit (rows of `(path, cnt)`). */
-  def collectFacetCounts(q: Query, facetField: String, root: String): Array[org.apache.spark.sql.Row] =
-    collectorCache match {
-      case Some(c) =>
-        c.fruit(this, q, s"Facet{$facetField,$root}") {
-          Collectors.facetCounts(searchWithDocs(q), facetField, root).collect()
-        }
-      case None => Collectors.facetCounts(searchWithDocs(q), facetField, root).collect()
+  def collectFacetCounts(q: Query, facetField: String, root: String): Array[Row] =
+    Searcher.sharedCache.fruit(this, q, s"Facet{$facetField,$root}") {
+      Collectors.facetCounts(searchWithDocs(q), facetField, root).collect()
     }
 
   /** Cached aggregation fruit — the Agg case class's structural toString is
     * the collector descriptor, exactly the reference's per-collector key.
     */
-  def collectAggregate(q: Query, agg: Collectors.Agg): Array[org.apache.spark.sql.Row] =
-    collectorCache match {
-      case Some(c) =>
-        c.fruit(this, q, s"Agg{$agg}") {
-          Collectors.aggregate(searchWithDocs(q), agg).collect()
-        }
-      case None => Collectors.aggregate(searchWithDocs(q), agg).collect()
+  def collectAggregate(q: Query, agg: Collectors.Agg): Array[Row] =
+    Searcher.sharedCache.fruit(this, q, s"Agg{$agg}") {
+      Collectors.aggregate(searchWithDocs(q), agg).collect()
     }
 
   /** Top-k with a per-hit `explain` JSON column (reference: the
@@ -469,7 +449,7 @@ object Searcher {
     offset + limit
   }
 
-  /** Process-wide collector cache shared by default across searchers
+  /** Process-wide collector cache every searcher's `collect*` entries probe
     * (reference: one `CollectorCache` per index holder; keys embed index dir
     * + snapshot version, so one map serves all).
     */

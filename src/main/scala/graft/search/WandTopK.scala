@@ -4,6 +4,7 @@ import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -53,7 +54,7 @@ import graft.index.{FieldNorm, PostingCodec}
   * collect + `merge_fruits` in one pass), decoding a group only while the
   * heap has room or its score bound exceeds the kth score (a later doc
   * that ties it loses the address tie-break), and never offers a
-  * tombstoned doc. The hits return as a local relation. [[explain]] is the same walk,
+  * tombstoned doc. The hits return as `outSchema` rows. [[explain]] is the same walk,
   * each hit explained from its own group.
   *
   * Full results ([[hits]]) of any tree: the kernel runs per group inside
@@ -110,7 +111,8 @@ object WandTopK {
     */
   final case class Opaque(query: Query) extends Plan
 
-  /** The k best `(segment_id, doc_id, score)` rows in rank order, and how
+  /** The k best `(segment_id, doc_id, score)` rows in rank order (with
+    * [[outSchema]], so they equal a collected `toDF` row), and how
     * many doc-aligned block groups the walk saw and how many it decoded
     * (the rest were pruned, structurally or by their score bound).
     */
@@ -601,7 +603,7 @@ object WandTopK {
   /** Block-max top-k of `plan` in one lookup (see the object doc). */
   def run(searcher: Searcher, plan: Plan, k: Int): Result = {
     val (top, seen, decoded) = walk(searcher, plan, k)
-    Result(top.map(h => Row(h.seg, h.doc, h.score)), seen, decoded)
+    Result(top.map(h => new GenericRowWithSchema(Array(h.seg, h.doc, h.score), outSchema)), seen, decoded)
   }
 
   /** [[run]]'s k best hits as `explainSchema` rows, each explained from the

@@ -86,8 +86,17 @@ class CollectorCacheSpec extends AnyFunSuite {
   }
 
   test("count/facet/agg fruits cache: repeated requests trigger NO Spark job") {
-    val dir = buildIndex(120)
-    val s = new Searcher(new IndexReader(spark, dir), schema) // shared cache
+    // the index of buildIndex(120) plus a stored array<string> facet column
+    val dir = Files.createTempDirectory("graft-ccache-facets").toString
+    val facetSchema = schema.copy(storedFields = Seq("facets"))
+    val rnd = new scala.util.Random(5)
+    val vocab = Vector("spark", "window", "merge", "table", "scan")
+    val docs = Vector.tabulate(120)(i =>
+      (i.toLong, ("spark " * (1 + i % 3)) + Vector.fill(10)(vocab(rnd.nextInt(5))).mkString(" "),
+        Seq("/kind", s"/kind/k${i % 4}") ++ (if (i % 5 == 0) Seq("/lang", "/lang/en") else Nil)))
+    IndexBuilder.build(spark, docs.toDF("doc_id", "text", "facets"), facetSchema, dir, "ccf",
+      IndexBuilder.BuildConf(numSegments = 2))
+    val s = new Searcher(new IndexReader(spark, dir), facetSchema) // shared cache
     val q = TermQuery("text", "merge")
     // populate all three fruits
     val n = s.collectCount(q)
@@ -95,15 +104,21 @@ class CollectorCacheSpec extends AnyFunSuite {
     val agg = Collectors.StatsAgg("doc_id")
     val aggFirst = s.collectAggregate(q, agg)
     assert(aggFirst.nonEmpty)
+    val facetsFirst = s.collectFacetCounts(q, "facets", "/kind")
+    assert(facetsFirst.toSeq ==
+      Collectors.facetCounts(s.searchWithDocs(q), "facets", "/kind").collect().toSeq)
+    assert(facetsFirst.map(_.getString(0)).toSet.subsetOf(Set.tabulate(4)(k => s"/kind/k$k")) &&
+      facetsFirst.map(_.getLong(1)).sum == n)
     val sc = spark.sparkContext
     sc.setJobGroup("cc-fruit-probe", "fruit cache probe", interruptOnCancel = false)
     try {
       assert(s.collectCount(q) == n)
       assert(s.collectAggregate(q, agg).toSeq == aggFirst.toSeq)
+      assert(s.collectFacetCounts(q, "facets", "/kind").toSeq == facetsFirst.toSeq)
     } finally sc.clearJobGroup()
     Thread.sleep(500)
     assert(sc.statusTracker.getJobIdsForGroup("cc-fruit-probe").isEmpty,
-      "a repeated count/agg request must not plan or run any Spark job")
+      "a repeated count/facet/agg request must not plan or run any Spark job")
     // a different collector descriptor over the same query is a distinct key
     val agg2 = Collectors.TermsAgg("doc_id", 3)
     assert(s.collectAggregate(q, agg2).nonEmpty)

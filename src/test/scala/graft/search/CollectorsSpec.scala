@@ -38,12 +38,15 @@ class CollectorsSpec extends AnyFunSuite {
   test("topDocs has_next contract (limit+1 trick)") {
     val total = searcher.count(TermQuery("text", "spark")).toInt
     assert(total > 12)
-    val p1 = Collectors.topDocs(searcher, TermQuery("text", "spark"), 10, 0)
-    assert(p1.rows.length == 10 && p1.hasNext)
-    val last = Collectors.topDocs(searcher, TermQuery("text", "spark"), 10, total - 5)
-    assert(last.rows.length == 5 && !last.hasNext)
-    val exact = Collectors.topDocs(searcher, TermQuery("text", "spark"), total, 0)
-    assert(exact.rows.length == total && !exact.hasNext)
+    // a window inside one 100-doc block pages the cached block
+    val (p1, p1Next) = searcher.collectTopDocs(TermQuery("text", "spark"), 10, 0)
+    assert(p1.length == 10 && p1Next)
+    val (last, lastNext) = searcher.collectTopDocs(TermQuery("text", "spark"), 10, total - 5)
+    assert(last.length == 5 && !lastNext)
+    // a window past the first block spans blocks and is fetched uncached
+    assert(total > 100)
+    val (exact, exactNext) = searcher.collectTopDocs(TermQuery("text", "spark"), total, 0)
+    assert(exact.length == total && !exactNext)
   }
 
   test("reservoir sampling: k bounds, subset property, determinism, rough uniformity") {

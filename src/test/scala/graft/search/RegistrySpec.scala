@@ -139,6 +139,24 @@ class RegistrySpec extends AnyFunSuite {
     assert(walked.map(top) == primedTop && primedTop.head.size == 2)
   }
 
+  test("prime: a collector-cache miss pages the walk's rows with no job, task or SQL execution") {
+    val dir = Files.createTempDirectory("graft-reg-miss").toString
+    IndexBuilder.build(spark,
+      Seq((1L, "spark window"), (2L, "merge table"), (3L, "spark scan"), (4L, "spark spark merge"))
+        .toDF("doc_id", "text"),
+      schema, dir, "miss", IndexBuilder.BuildConf(numSegments = 2))
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    val q = BooleanQuery(Seq((Occur.Should, TermQuery("text", "spark")), (Occur.Should, TermQuery("text", "merge"))))
+    Reflection.prime(s.reader)
+    try {
+      val want = s.topDocs(q, 10).collect().toSeq // the first request reads the reader's stats
+      var page = (Array.empty[org.apache.spark.sql.Row], true)
+      val miss = traffic { page = new CollectorCache().topDocs(s, q, 10, 0); () }
+      assert(miss == ((0, 0, 0)), s"(jobs, tasks, SQL) of a cache miss $miss")
+      assert(page._1.toSeq == want && want.size == 4 && !page._2)
+    } finally Reflection.unprime(s.reader)
+  }
+
   private val lookupDocs = Seq((1L, "spark window"), (2L, "merge table"), (3L, "spark scan"),
     (4L, "window merge scan"), (5L, "table spark filter"), (6L, "filter window"))
 

@@ -271,11 +271,10 @@ class SearchSpec extends AnyFunSuite {
     for (q <- Seq[Query](TermQuery("text", "spark"), AllQuery); (limit, offset) <- bad) {
       intercept[IllegalArgumentException](searcher.topDocs(q, limit, offset))
       intercept[IllegalArgumentException](searcher.explainTopDocs(q, limit, offset))
-      intercept[IllegalArgumentException](Collectors.topDocs(searcher, q, limit, offset))
       intercept[IllegalArgumentException](searcher.collectTopDocs(q, limit, offset))
     }
     // the has_next row of limit Int.MaxValue overflows too
-    intercept[IllegalArgumentException](Collectors.topDocs(searcher, AllQuery, Int.MaxValue, 0))
+    intercept[IllegalArgumentException](searcher.collectTopDocs(AllQuery, Int.MaxValue, 0))
     assert(searcher.topDocs(AllQuery, 0).collect().isEmpty)
   }
 

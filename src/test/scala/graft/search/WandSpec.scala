@@ -822,6 +822,44 @@ class WandSpec extends AnyFunSuite {
       assert(errors.isEmpty, errors.asScala.take(3).mkString("; "))
     }
   }
+
+  // ---- the collector cache pages the walk's rows ----
+
+  /** Each `page(limit, offset)` of `q` on `s` equals `topDocs(q, limit,
+    * offset)`, rows with their schema and scores as raw bits, and its
+    * has_next says whether row `offset + limit` exists. The windows, in
+    * paging order: a block miss, a hit in the cached block, k = 0, a window
+    * inside the second block, two that span blocks, and the last 5 hits.
+    */
+  private def assertPages(s: Searcher, q: Query)(page: (Int, Int) => (Array[org.apache.spark.sql.Row], Boolean)): Unit = {
+    val ranked = s.topDocs(q, 1000).collect() // every hit of the 500-doc corpus
+    assert(ranked.length > 105, s"$q: ${ranked.length} hits")
+    for ((limit, offset) <- Seq((10, 0), (10, 5), (0, 0), (20, 100), (10, 95), (30, 180), (10, ranked.length - 5))) {
+      val (got, hasNext) = page(limit, offset)
+      val want = s.topDocs(q, limit, offset)
+      assert(rowBits(got) == bits(want), s"$q at limit $limit offset $offset")
+      assert(got.forall(_.schema == want.schema), s"$q: ${got.headOption.map(_.schema)}")
+      assert(hasNext == (ranked.length > offset + limit), s"$q at limit $limit offset $offset: has_next $hasNext")
+    }
+  }
+
+  private def rowBits(rs: Array[org.apache.spark.sql.Row]) =
+    rs.map(r => (r.getInt(0), r.getInt(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+
+  test("collector-cache pages equal topDocs windows, fresh and primed, with tombstones and fieldnorms off") {
+    val shapes = Seq[Query](t("w0"), bool((Occur.Must, "w0"), (Occur.Should, "w5"), (Occur.MustNot, "w49")),
+      phrase(Seq("w0", "w1"), 2), docsTrees.head)
+    val off = new Searcher(searcher.reader, schema, fieldnorms = false)
+    for (s <- Seq(searcher, tombSearcher, off)) withPrimed(s) { (fresh, primed) =>
+      // the fresh reader pages through the shared cache; the primed one, on
+      // the same index and so the same cache keys, through its own cache
+      val own = new CollectorCache()
+      for (q <- shapes) {
+        assertPages(fresh, q)(fresh.collectTopDocs(q, _, _))
+        assertPages(primed, q)(own.topDocs(primed, q, _, _))
+      }
+    }
+  }
 }
 
 object WandSpec {
