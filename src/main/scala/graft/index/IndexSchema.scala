@@ -1,5 +1,11 @@
 package graft.index
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+
 /** Index schema: which input columns are indexed, with which analyzer
   * (reference analog: the YAML tantivy schema parsed at
   * `/root/reference/summa-core/src/validators.rs:5-7`; field options
@@ -62,67 +68,36 @@ object IndexSchema {
     * Stored at `indexDir/_schema.json` so an index is self-describing: SQL
     * table functions and multi-session readers need no caller-side schema.
     */
-  def toJson(s: IndexSchema): String = {
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
-    def arr(xs: Seq[String]) = xs.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
-    val fields = s.fields.map(f =>
-      s"""{"name":"${esc(f.name)}","analyzer":"${esc(f.analyzer)}",""" +
-        s""""record":"${esc(f.record)}","type":"${esc(f.fieldType)}"}""").mkString("[", ",", "]")
-    s"""{"key_field":"${esc(s.keyField)}","fields":$fields,""" +
-      s""""default_fields":${arr(s.defaultFields)},"stored_fields":${arr(s.storedFields)}}"""
-  }
+  def toJson(s: IndexSchema): String = MetaFiles.mapper.writeValueAsString(node(s))
 
-  def fromJson(json: String): IndexSchema = {
-    def strField(name: String): String =
-      (s""""$name":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(json)
-        .map(m => unesc(m.group(1)))
-        .getOrElse(sys.error(s"bad schema json (missing $name): $json"))
-    def unesc(v: String) = v.replace("\\\"", "\"").replace("\\\\", "\\")
-    def strArr(name: String): Seq[String] =
-      (s""""$name":\\[([^\\]]*)\\]""").r.findFirstMatchIn(json).map { m =>
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1)).map(g => unesc(g.group(1))).toSeq
-      }.getOrElse(Nil)
-    val fieldObjs = """"fields":\[(.*?)\],"default_fields"""".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse(sys.error(s"bad schema json: $json"))
-    val fields = """\{[^}]*\}""".r.findAllIn(fieldObjs).map { o =>
-      def f(n: String) = (s""""$n":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(o)
-        .map(m => unesc(m.group(1))).getOrElse(sys.error(s"bad field json: $o"))
-      FieldDef(f("name"), f("analyzer"), f("record"), f("type"))
+  def fromJson(json: String): IndexSchema = decode(MetaFiles.mapper.readTree(json))
+
+  private def node(s: IndexSchema): JsonNode =
+    MetaFiles.obj("key_field" -> s.keyField,
+      "fields" -> s.fields.map(f => MetaFiles.obj(
+        "name" -> f.name, "analyzer" -> f.analyzer, "record" -> f.record, "type" -> f.fieldType)),
+      "default_fields" -> s.defaultFields, "stored_fields" -> s.storedFields)
+
+  private def decode(n: JsonNode): IndexSchema = {
+    def strs(key: String) = n.path(key).asScala.map(_.asText).toSeq
+    val fields = n.required("fields").asScala.map { f =>
+      def str(key: String) = f.required(key).asText
+      FieldDef(str("name"), str("analyzer"), str("record"), str("type"))
     }.toSeq
-    IndexSchema(strField("key_field"), fields, strArr("default_fields"), strArr("stored_fields"))
+    IndexSchema(n.required("key_field").asText, fields, strs("default_fields"), strs("stored_fields"))
   }
 
-  /** Persist at `indexDir/_schema.json` (atomic tmp+rename, same discipline
-    * as [[Snapshots.commit]]; last writer wins — the schema is immutable for
-    * a given index in practice).
+  private def path(indexDir: String) = new Path(indexDir, "_schema.json")
+
+  /** Persist at `indexDir/_schema.json` (atomic publish; last writer wins —
+    * the schema is immutable for a given index in practice).
     */
-  def write(spark: org.apache.spark.sql.SparkSession, indexDir: String, schema: IndexSchema): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".tmp-schema-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, true)
-    out.write(toJson(schema).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, "_schema.json")
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) { fs.delete(tmp, false); sys.error(s"schema publish failed at $dst") }
-  }
+  def write(spark: SparkSession, indexDir: String, schema: IndexSchema): Unit =
+    MetaFiles.publish(MetaFiles.fs(spark, indexDir), path(indexDir), node(schema))
 
   /** Load the persisted schema of an index dir, if present. */
-  def load(spark: org.apache.spark.sql.SparkSession, indexDir: String): Option[IndexSchema] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_schema.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-      in.close()
-      Some(fromJson(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
-    }
-  }
+  def load(spark: SparkSession, indexDir: String): Option[IndexSchema] =
+    MetaFiles.read(MetaFiles.fs(spark, indexDir), path(indexDir))(decode)
 
   /** Schema for the Common-Crawl-style pages table from BASELINE input_hint:
     * `(url string, warc_ts timestamp, html binary, text string, lang string)`.

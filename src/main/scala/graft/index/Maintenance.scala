@@ -481,6 +481,7 @@ object Maintenance {
     val segs = IndexBuilder.buildSegments(
       spark, toIndex, schema, indexDir, buildId, conf, segOffset)
     deferredTombstones.foreach(deleteDocs(spark, indexDir, _))
+    if (live.isEmpty) IndexSchema.write(spark, indexDir, schema)
     Snapshots.commit(spark, indexDir, live ++ segs, buildId)
     segs
   }

@@ -97,21 +97,6 @@ object PostingCodec {
     buf.toArray
   }
 
-  /** positions per doc, deltas within each doc's list. */
-  def packPositions(positionsPerDoc: Array[Array[Int]]): Array[Byte] = {
-    val buf = new ByteVec(16)
-    positionsPerDoc.foreach { ps =>
-      var prev = 0
-      var first = true
-      ps.foreach { p =>
-        buf.addVarInt(if (first) p else p - prev)
-        prev = p
-        first = false
-      }
-    }
-    buf.toArray
-  }
-
   /** Pack ONE doc's position list (absolute first, then deltas) — the
     * per-doc unit of the block layout above. Because each doc's run restarts
     * its delta base, a posting block's `positions` bytes are EXACTLY the

@@ -1,7 +1,5 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,38 +17,17 @@ import org.apache.spark.sql.functions._
   */
 object ResumableBuild {
 
-  private def ckDir(indexDir: String) = s"$indexDir/_checkpoints"
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def markerPath(indexDir: String, wave: Int) =
-    new Path(s"${ckDir(indexDir)}/wave_$wave.json")
+    new Path(s"$indexDir/_checkpoints/wave_$wave.json")
 
   /** Segments recorded by a completed wave, if its checkpoint exists. */
-  def waveCheckpoint(spark: SparkSession, indexDir: String, wave: Int): Option[Seq[Int]] = {
-    val f = fs(spark, indexDir)
-    val p = markerPath(indexDir, wave)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val s = new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-      in.close()
-      val body = """\[([0-9, ]*)\]""".r.findFirstMatchIn(s).map(_.group(1).trim).getOrElse("")
-      Some(if (body.isEmpty) Nil else body.split(',').map(_.trim.toInt).toSeq)
-    }
-  }
+  def waveCheckpoint(spark: SparkSession, indexDir: String, wave: Int): Option[Seq[Int]] =
+    MetaFiles.read(MetaFiles.fs(spark, indexDir), markerPath(indexDir, wave))(
+      n => MetaFiles.ints(n.required("segments")))
 
-  private def writeCheckpoint(spark: SparkSession, indexDir: String, wave: Int, segs: Seq[Int]): Unit = {
-    val f = fs(spark, indexDir)
-    f.mkdirs(new Path(ckDir(indexDir)))
-    val tmp = new Path(s"${ckDir(indexDir)}/wave_$wave.json.tmp")
-    val out = f.create(tmp, true)
-    out.write(s"""{"wave":$wave,"segments":[${segs.mkString(",")}]}""".getBytes(UTF_8))
-    out.close()
-    f.delete(markerPath(indexDir, wave), false)
-    require(f.rename(tmp, markerPath(indexDir, wave)), s"checkpoint write failed: wave $wave")
-  }
+  private[index] def writeCheckpoint(spark: SparkSession, indexDir: String, wave: Int, segs: Seq[Int]): Unit =
+    MetaFiles.publish(MetaFiles.fs(spark, indexDir), markerPath(indexDir, wave),
+      MetaFiles.obj("wave" -> wave, "segments" -> segs))
 
   /** Build (or resume) the index in `waves` independent passes. Returns all
     * segment ids and publishes the snapshot.
@@ -77,6 +54,7 @@ object ResumableBuild {
           segs
       }
     }
+    IndexSchema.write(spark, indexDir, schema)
     Snapshots.commit(spark, indexDir, allSegs, buildId)
     allSegs
   }

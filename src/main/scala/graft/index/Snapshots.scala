@@ -1,8 +1,7 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Snapshot-based visibility (the Iceberg-style commit discipline of
@@ -30,38 +29,23 @@ final case class Snapshot(
 
 object Snapshots {
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
   private def snapDir(indexDir: String) = new Path(s"$indexDir/_snapshots")
 
   def latest(spark: SparkSession, indexDir: String): Option[Snapshot] = {
-    val f = fs(spark, indexDir)
+    val f = MetaFiles.fs(spark, indexDir)
     val d = snapDir(indexDir)
     if (!f.exists(d)) return None
     val versions = f.listStatus(d).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.endsWith(".json"))
       .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
     if (versions.isEmpty) None
-    else {
-      val v = versions.max
-      val in = f.open(new Path(d, f"v$v%06d.json"))
-      val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-      in.close()
-      Some(parse(new String(bytes, UTF_8)))
-    }
+    else MetaFiles.read(f, new Path(d, f"v${versions.max}%06d.json"))(parse)
   }
 
   /** Read a specific snapshot version (time travel). */
-  def at(spark: SparkSession, indexDir: String, version: Int): Snapshot = {
-    val f = fs(spark, indexDir)
-    val p = new Path(snapDir(indexDir), f"v$version%06d.json")
-    require(f.exists(p), s"no snapshot version $version at $indexDir")
-    val in = f.open(p)
-    val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-    in.close()
-    parse(new String(bytes, UTF_8))
-  }
+  def at(spark: SparkSession, indexDir: String, version: Int): Snapshot =
+    MetaFiles.read(MetaFiles.fs(spark, indexDir), new Path(snapDir(indexDir), f"v$version%06d.json"))(parse)
+      .getOrElse(throw new IllegalArgumentException(s"no snapshot version $version at $indexDir"))
 
   /** Publish the next snapshot version. The snapshot body is written to a
     * hidden tmp file and RENAMED into place, so readers either see a complete
@@ -97,7 +81,7 @@ object Snapshots {
       buildId: String,
       freeze: Set[Int] = Set.empty,
       unfreeze: Set[Int] = Set.empty): Snapshot = {
-    val f = fs(spark, indexDir)
+    val f = MetaFiles.fs(spark, indexDir)
     val d = snapDir(indexDir)
     f.mkdirs(d)
     val prev = latest(spark, indexDir)
@@ -157,7 +141,7 @@ object Snapshots {
           val snap =
             Snapshot(next, segments.sorted, buildId, System.currentTimeMillis(), frozen)
           val out = f.create(tmp, true)
-          out.write(render(snap).getBytes(UTF_8))
+          out.write(MetaFiles.mapper.writeValueAsBytes(render(snap)))
           out.close()
           if (f.rename(tmp, dst)) {
             f.delete(lock, false)
@@ -199,28 +183,15 @@ object Snapshots {
   private val commitEpochs =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
-  private def render(s: Snapshot): String =
-    s"""{"version":${s.version},"segments":[${s.segments.mkString(",")}],""" +
-      s""""frozen":[${s.frozen.toSeq.sorted.mkString(",")}],""" +
-      s""""build_id":"${s.buildId.replace("\"", "")}","created_at":${s.createdAt}}"""
+  /** One compact line; `frozen` is absent in pre-frozen snapshots, read as
+    * none frozen.
+    */
+  private[index] def render(s: Snapshot): JsonNode =
+    MetaFiles.obj("version" -> s.version, "segments" -> s.segments,
+      "frozen" -> s.frozen.toSeq.sorted, "build_id" -> s.buildId, "created_at" -> s.createdAt)
 
-  private[index] def parse(json: String): Snapshot = {
-    def longField(name: String): Long = {
-      val m = (s""""$name":(-?\\d+)""").r.findFirstMatchIn(json)
-      m.map(_.group(1).toLong).getOrElse(sys.error(s"bad snapshot json: $json"))
-    }
-    val segs = {
-      val m = """"segments":\[([0-9, ]*)\]""".r.findFirstMatchIn(json)
-        .getOrElse(sys.error(s"bad snapshot json: $json"))
-      val body = m.group(1).trim
-      if (body.isEmpty) Seq.empty[Int] else body.split(',').map(_.trim.toInt).toSeq
-    }
-    val buildId = """"build_id":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-    // absent in pre-frozen snapshots — default to none frozen
-    val frozen = """"frozen":\[([0-9, ]*)\]""".r.findFirstMatchIn(json).map { m =>
-      val body = m.group(1).trim
-      if (body.isEmpty) Set.empty[Int] else body.split(',').map(_.trim.toInt).toSet
-    }.getOrElse(Set.empty[Int])
-    Snapshot(longField("version").toInt, segs, buildId, longField("created_at"), frozen)
-  }
+  private[index] def parse(n: JsonNode): Snapshot =
+    Snapshot(n.required("version").asInt, MetaFiles.ints(n.required("segments")),
+      n.path("build_id").asText, n.required("created_at").asLong,
+      MetaFiles.ints(n.path("frozen")).toSet)
 }

@@ -57,16 +57,26 @@ object Similarity {
       vecCol: String,
       query: Array[Double],
       k: Int
-  ): DataFrame = {
-    val q = typedLit(query.toSeq)
+  ): DataFrame = exactTopK(df, col(idCol), asDouble(col(vecCol)), query, k)
+
+  /** Exact-cosine top-k ending every ANN path: `(vec_id, cosine)`, cosine to 4 places, ties by id. */
+  private def exactTopK(df: DataFrame, id: Column, v: Column, query: Array[Double], k: Int): DataFrame = {
     val qn = math.sqrt(query.map(x => x * x).sum)
-    val v = asDouble(col(vecCol))
-    df.select(
-        col(idCol).as("vec_id"),
-        round(dot(v, q) / (norm(v) * lit(qn)), 4).as("cosine"))
+    df.select(id.as("vec_id"), round(dot(v, typedLit(query.toSeq)) / (norm(v) * lit(qn)), 4).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
   }
+
+  /** Per LSH table: its planes, and the query's bucket with its hamming-1 neighbours. */
+  private def probeBuckets(query: Array[Double], nTables: Int, nPlanes: Int, seed: Long) =
+    (0 until nTables).map { t =>
+      val planes = hyperplanes(nPlanes, query.length, seed + 1000L * t)
+      val qSig = planes.zipWithIndex.foldLeft(0L) { case (acc, (p, i)) =>
+        val d = p.zip(query).map { case (a, b) => a * b }.sum
+        if (d >= 0) acc | (1L << i) else acc
+      }
+      (planes, (qSig +: Array.tabulate(nPlanes)(i => qSig ^ (1L << i))).toSeq.map(java.lang.Long.valueOf))
+    }
 
   /** Deterministic pseudo-random hyperplanes (seeded, data-free), from an
     * ORACLE-PORTABLE hash family: coefficient (i, j) maps its linear index
@@ -120,16 +130,8 @@ object Similarity {
       nPlanes: Int = 8,
       seed: Long = 42L
   ): DataFrame = {
-    val dim = query.length
-    val tableConds = (0 until nTables).map { t =>
-      val planes = hyperplanes(nPlanes, dim, seed + 1000L * t)
-      val qSig = planes.zipWithIndex.foldLeft(0L) { case (acc, (p, i)) =>
-        val d = p.zip(query).map { case (a, b) => a * b }.sum
-        if (d >= 0) acc | (1L << i) else acc
-      }
-      val probes = qSig +: Array.tabulate(nPlanes)(i => qSig ^ (1L << i))
-      bucketCol(col(vecCol), planes).isin(probes.map(java.lang.Long.valueOf): _*)
-    }
+    val tableConds = probeBuckets(query, nTables, nPlanes, seed)
+      .map { case (planes, probes) => bucketCol(col(vecCol), planes).isin(probes: _*) }
     cosineTopK(df.filter(tableConds.reduce(_ || _)), idCol, vecCol, query, k)
   }
 
@@ -181,27 +183,14 @@ object Similarity {
       nPlanes: Int = 8,
       seed: Long = 42L
   ): DataFrame = {
-    val dim = query.length
-    val probeConds = (0 until nTables).map { t =>
-      val planes = hyperplanes(nPlanes, dim, seed + 1000L * t)
-      val qSig = planes.zipWithIndex.foldLeft(0L) { case (acc, (p, i)) =>
-        val d = p.zip(query).map { case (a, b) => a * b }.sum
-        if (d >= 0) acc | (1L << i) else acc
-      }
-      val probes = qSig +: Array.tabulate(nPlanes)(i => qSig ^ (1L << i))
-      col("lsh_table") === t && col("bucket").isin(probes.map(java.lang.Long.valueOf): _*)
+    val probeConds = probeBuckets(query, nTables, nPlanes, seed).zipWithIndex.map {
+      case ((_, probes), t) => col("lsh_table") === t && col("bucket").isin(probes: _*)
     }
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val qc = typedLit(query.toSeq)
-    spark.read.parquet(indexDir)
+    val candidates = spark.read.parquet(indexDir)
       .filter(probeConds.reduce(_ || _)) // partition filters only → pruned listing
       .select(col("id"), col("v"))
       .dropDuplicates("id") // a vector can match in several tables
-      .select(
-        col("id").as("vec_id"),
-        round(dot(col("v"), qc) / (norm(col("v")) * lit(qn)), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    exactTopK(candidates, col("id"), col("v"), query, k)
   }
 
   /** IVF (inverted-file) ANN: a k-means coarse quantizer assigns every vector
@@ -265,21 +254,14 @@ object Similarity {
   }
 
   def ivfTopK(ivf: IvfIndex, query: Array[Double], k: Int, nprobe: Int = 2): DataFrame = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
     def dist2(c: Array[Double]): Double =
       c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum
     val probes = ivf.centroids.zipWithIndex
       .sortBy { case (c, _) => dist2(c) }
       .take(nprobe)
       .map(_._2)
-    val qc = typedLit(query.toSeq)
-    ivf.assigned
-      .filter(col("centroid_id").isin(probes.map(Integer.valueOf): _*))
-      .select(
-        col("id").as("vec_id"),
-        round(dot(col("v"), qc) / (norm(col("v")) * lit(qn)), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    exactTopK(ivf.assigned.filter(col("centroid_id").isin(probes.map(Integer.valueOf): _*)),
+      col("id"), col("v"), query, k)
   }
 
   /** Scale path for embedding near-dup pairs: bucket by hyperplane signature

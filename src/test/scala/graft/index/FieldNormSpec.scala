@@ -35,7 +35,7 @@ class PostingCodecSpec extends AnyFunSuite {
   test("positions round trip with per-doc tfs") {
     val pos = Array(Array(0, 3, 9), Array(5), Array(2, 4, 6, 8))
     val tfs = pos.map(_.length)
-    val rt = PostingCodec.unpackPositions(PostingCodec.packPositions(pos), tfs)
+    val rt = PostingCodec.unpackPositions(pos.flatMap(PostingCodec.packDocPositions), tfs)
     assert(rt.map(_.toSeq).toSeq == pos.map(_.toSeq).toSeq)
   }
   test("random round trips") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.index.{FieldDef, IndexBuilder, IndexSchema}
+import graft.index.{FieldDef, IndexBuilder, IndexSchema, ResumableBuild}
 import graft.search.{IndexReader, MatchQuery, Searcher}
 
 /** SQL table functions (`search` / `search_top` / `index_docs`) and the
@@ -24,16 +24,18 @@ class GraftSqlSpec extends AnyFunSuite {
   )
 
   private val vocab = Vector("spark", "window", "merge", "table", "scan", "join", "query")
-  private lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("graft-sqlspec").toString
+  private lazy val rows = {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    val rows = Vector.tabulate(150) { i =>
+    Vector.tabulate(150) { i =>
       val n = 4 + rnd.nextInt(30)
       val text = Vector.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
       (i.toLong, text, if (i % 3 == 0) "en" else "de", n)
-    }
-    IndexBuilder.build(spark, rows.toDF("doc_id", "text", "lang", "n"), schema, dir,
+    }.toDF("doc_id", "text", "lang", "n")
+  }
+  private lazy val indexDir: String = {
+    val dir = Files.createTempDirectory("graft-sqlspec").toString
+    IndexBuilder.build(spark, rows, schema, dir,
       "sql-spec", IndexBuilder.BuildConf(numSegments = 2, blockBits = 4))
     dir
   }
@@ -43,6 +45,15 @@ class GraftSqlSpec extends AnyFunSuite {
     val json = IndexSchema.toJson(schema)
     assert(IndexSchema.fromJson(json) == schema)
     assert(IndexSchema.load(spark, indexDir).contains(schema))
+  }
+
+  test("search('dir', ...) over a two-wave ResumableBuild index counts the IndexBuilder.build hits") {
+    val dir = Files.createTempDirectory("graft-sql-resumable").toString
+    ResumableBuild.build(spark, rows, schema, dir, "sql-resumable",
+      IndexBuilder.BuildConf(numSegments = 2, blockBits = 4), waves = 2)
+    GraftSql.install(spark)
+    def hits(d: String) = spark.sql(s"SELECT count(*) FROM search('$d', 'spark')").collect()(0).getLong(0)
+    assert(hits(dir) == hits(indexDir) && hits(dir) > 0)
   }
 
   test("search_top('dir', ...) matches Searcher.topDocsWithKeys via _schema.json") {

@@ -50,6 +50,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(Snapshots.latest(spark, idx).get.version >= 2)
   }
 
+  test("search('dir', ...) over a Trigger.AvailableNow index counts the IndexBuilder.build hits") {
+    val work = Files.createTempDirectory("graft-stream-sql").toString
+    val docs = Seq((1L, "spark window"), (2L, "merge table"), (3L, "spark spark scan")).toDF("doc_id", "text")
+    docs.coalesce(1).write.parquet(s"$work/src")
+    StreamingIngest.start(spark, s"$work/src", docs.schema, s"$work/index", schema, s"$work/ck")
+      .awaitTermination()
+    IndexBuilder.build(spark, docs, schema, s"$work/built", "built")
+    graft.plans.GraftSql.install(spark)
+    def hits(d: String) = spark.sql(s"SELECT count(*) FROM search('$d', 'spark')").collect()(0).getLong(0)
+    assert(hits(s"$work/index") == hits(s"$work/built") && hits(s"$work/built") == 2L)
+  }
+
   test("compaction scheduling: segments merge down during ingestion, results intact") {
     val work = Files.createTempDirectory("graft-stream-compact").toString
     val src = s"$work/src"
