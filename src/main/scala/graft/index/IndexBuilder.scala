@@ -3,9 +3,10 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, Murmur3Hash, Pmod, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
@@ -36,7 +37,8 @@ import graft.analysis.{Analyzer, Analyzers, FusedTokenize}
   *  5. postings written segment-aligned: a segment's terms are hash buckets,
   *     one file each (`max(parts, segments)` files per write), each sorted by
   *     `(field, term, block_id)` so Parquet row-group stats give FST-like
-  *     term-range pruning for free;
+  *     term-range pruning for free; fieldstats records each segment's
+  *     bucket layout, so a reader opens only its terms' files;
   *  6. visibility via [[Snapshots]] (Iceberg-style atomic version commit);
   *     stats are per-segment so merges/deletes never rewrite global state.
   *
@@ -45,7 +47,10 @@ import graft.analysis.{Analyzer, Analyzers, FusedTokenize}
   *   docs/segment_id=N/       one row per doc: key, stored fields, per-field len+norm
   *   postings/segment_id=N/   packed posting blocks, one term-sorted file per
   *                            hash bucket of the segment's terms
-  *   fieldstats/segment_id=N/ (field, n_docs, total_tokens, block_bits) per segment
+  *   fieldstats/segment_id=N/ (field, n_docs, total_tokens, block_bits, bucket_lo,
+  *                            bucket_width) per segment: the term `(f, t)`'s
+  *                            blocks are in the posting file `part-<bucket_lo +
+  *                            termBucket(f, t, bucket_width)>-…`, if any
   *   deletes/segment_id=N/    tombstone doc_ids; merges drop whole partitions
   *   metrics/                 append-only lineage: one row per (build_id, segment_id)
   *   _snapshots/vNNNNNN.json  live-segment snapshot versions
@@ -892,9 +897,10 @@ object IndexBuilder {
     * sorted order), one term.
     */
   private[index] def reduceFragments(
-      fragments: DataFrame, parts: Int, totals: Map[Int, (LongAccumulator, LongAccumulator)]): DataFrame =
+      fragments: DataFrame, parts: Int, layout: Map[Int, (Int, Int)],
+      totals: Map[Int, (LongAccumulator, LongAccumulator)]): DataFrame =
     fragments
-      .repartitionById(parts, reducePartition(totals.keys.toSeq, parts))
+      .repartitionById(parts, reducePartition(layout))
       .sortWithinPartitions("segment_id", "field", "term", "block_id", "first_doc")
       .mapPartitions { rows =>
         val it = rows.buffered
@@ -919,21 +925,45 @@ object IndexBuilder {
         }
       }(Encoders.row(packSchema))
 
-  /** A fragment's reduce partition among `parts`, from its segment's rank i
-    * among the S sorted `segIds`: with S < parts, segment i owns partitions
-    * [i·parts/S, (i+1)·parts/S) and splits its terms over them by
-    * `pmod(hash(field, term), width)`; with S ≥ parts, the whole segment
-    * goes to partition i·parts/S. A fragment of any other segment fails the
-    * task rather than land in some partition.
+  /** The posting-file layout of a write of the segments `segIds` over
+    * `parts` reduce partitions, `segment_id -> (lo, width)`: with S < parts,
+    * segment i of the S sorted ids owns partitions [i·parts/S,
+    * (i+1)·parts/S); with S ≥ parts, the whole segment goes to partition
+    * i·parts/S (width 1). A term's blocks go to partition `lo +
+    * termBucket(field, term, width)` ([[reducePartition]]), and Spark names
+    * each task's file after its partition (`part-<id>-…`; the by-id shuffle
+    * is one AQE does not coalesce), so the layout names the one file of a
+    * segment that can hold a term.
     */
-  private def reducePartition(segIds: Seq[Int], parts: Int): Column = {
-    val unknown = raise_error(concat(
-      lit("posting fragment of a segment outside the write: segment_id="), col("segment_id").cast(StringType)))
+  private[index] def bucketLayout(segIds: Seq[Int], parts: Int): Map[Int, (Int, Int)] = {
     val s = segIds.sorted
     s.zipWithIndex.map { case (seg, i) =>
       val lo = (i.toLong * parts / s.size).toInt
-      val width = math.max((i + 1).toLong * parts / s.size - lo, 1L).toInt
-      (col("segment_id") === seg, lit(lo) + pmod(hash(col("field"), col("term")), lit(width)))
+      seg -> (lo, math.max((i + 1).toLong * parts / s.size - lo, 1L).toInt)
+    }.toMap
+  }
+
+  /** The bucket among `width` that holds the term `(field, term)`:
+    * `pmod(hash(field, term), width)`. The postings reduce evaluates it on
+    * the rows ([[reducePartition]]), readers on literals ([[termBucket(String,String,Int)]]).
+    */
+  private[graft] def termBucket(field: Expression, term: Expression, width: Int): Expression =
+    Pmod(new Murmur3Hash(Seq(field, term)), Literal(width))
+
+  /** [[termBucket]] of one term, evaluated on the driver. */
+  private[graft] def termBucket(field: String, term: String, width: Int): Int =
+    termBucket(Literal(field), Literal(term), width).eval().asInstanceOf[Int]
+
+  /** A fragment's reduce partition by its segment's `layout` entry `(lo,
+    * width)`: `lo + termBucket(field, term, width)`. A fragment of any other
+    * segment fails the task rather than land in some partition.
+    */
+  private def reducePartition(layout: Map[Int, (Int, Int)]): Column = {
+    val unknown = raise_error(concat(
+      lit("posting fragment of a segment outside the write: segment_id="), col("segment_id").cast(StringType)))
+    val (field, term) = (ColumnBridge.expression(col("field")), ColumnBridge.expression(col("term")))
+    layout.toSeq.sorted.map { case (seg, (lo, width)) =>
+      (col("segment_id") === seg, lit(lo) + ColumnBridge.column(termBucket(field, term, width)))
     } match {
       case Seq() => unknown
       case (c0, p0) +: rest => rest.foldLeft(when(c0, p0)) { case (w, (c, p)) => w.when(c, p) }.otherwise(unknown)
@@ -1227,12 +1257,15 @@ object IndexBuilder {
       .parquet(s"$indexDir/docs")
   }
 
-  /** A segment's distinct `(field, term)` count and summed `posting_bytes`. */
-  private[index] final case class PostingTotals(numTerms: Long, postingBytes: Long)
+  /** A segment's distinct `(field, term)` count, summed `posting_bytes` and
+    * posting-file layout ([[bucketLayout]]).
+    */
+  private[index] final case class PostingTotals(numTerms: Long, postingBytes: Long, bucketLo: Int, bucketWidth: Int)
 
   /** Merge packed [[packSchema]] fragments into blocks ([[reduceFragments]])
     * and write them into the `postings` table, replacing only the segment
-    * partitions present (dynamic partition overwrite). The [[PostingTotals]]
+    * partitions present (dynamic partition overwrite), laid out by
+    * [[bucketLayout]]. The [[PostingTotals]]
     * of each of `segIds` are counted by the write's own tasks in
     * accumulators: the reduce runs in the write's result stage, so each
     * partition counts once and the counts are whole when the write
@@ -1247,7 +1280,8 @@ object IndexBuilder {
   ): Map[Int, PostingTotals] = {
     val sc = fragments.sparkSession.sparkContext
     val totals = segIds.map(s => s -> (sc.longAccumulator, sc.longAccumulator)).toMap
-    reduceFragments(fragments, parts, totals)
+    val layout = bucketLayout(segIds, parts)
+    reduceFragments(fragments, parts, layout, totals)
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -1270,23 +1304,31 @@ object IndexBuilder {
       .option("parquet.enable.dictionary#posting_bytes", "false")
       .partitionBy("segment_id")
       .parquet(s"$indexDir/postings")
-    totals.map { case (s, (terms, bytes)) => s -> PostingTotals(terms.value, bytes.value) }
+    totals.map { case (s, (terms, bytes)) =>
+      s -> PostingTotals(terms.value, bytes.value, layout(s)._1, layout(s)._2)
+    }
   }
 
-  /** The `fieldstats` table's rows, `segment_id` its partition column. */
+  /** The `fieldstats` table's rows, `segment_id` its partition column. The
+    * segment's posting-file layout ([[bucketLayout]]) repeats on each of its
+    * rows; segments written before fieldstats held it read it as null.
+    */
   val fieldStatsSchema: StructType = StructType(Seq(
     StructField("field", StringType, false),
     StructField("n_docs", LongType, false),
     StructField("total_tokens", LongType, true),
     StructField("block_bits", IntegerType, false),
+    StructField("bucket_lo", IntegerType, true),
+    StructField("bucket_width", IntegerType, true),
     StructField("segment_id", IntegerType, false)))
 
   /** The stats tail of both segment writers, with no Spark job: fieldstats
     * from the doc-id pass's piggy-backed aggregates (`segStats`) with the
     * `blockBits` the postings were blocked at (`block_id = doc_id >>>
     * block_bits`, a fact readers align docs-table rows to posting blocks
-    * with), and an append-only metrics lineage row per segment from the
-    * postings write's `totals`. Both are a few rows per segment,
+    * with) and the postings write's bucket layout (the posting file of
+    * each term), and an append-only metrics lineage row per segment from
+    * the postings write's `totals`. Both are a few rows per segment,
     * written by the driver ([[TinyParquet]]). Builds pass depth 0 and no
     * parents, merges their parents' depth + 1 and the merged segment ids.
     * Term statistics are no table of their own: `IndexReader.termStatsDf`
@@ -1309,8 +1351,9 @@ object IndexBuilder {
   ): Seq[Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
     segStats.foreach { st =>
+      val t = totals(st.segmentId)
       TinyParquet.replacePartition(conf, s"$indexDir/fieldstats", st.segmentId, TinyParquet.fieldStats,
-        schema.fields.map(f => Seq(f.name, st.nDocs, st.tokensByField(f.name), blockBits)))
+        schema.fields.map(f => Seq(f.name, st.nDocs, st.tokensByField(f.name), blockBits, t.bucketLo, t.bucketWidth)))
     }
     val createdAt = System.currentTimeMillis() * 1000L
     TinyParquet.append(conf, s"$indexDir/metrics", TinyParquet.metrics, segStats.map { st =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.index.{IndexBuilder, Snapshots}
+import graft.index.{IndexBuilder, Snapshots, TinyParquet}
 
 /** Read-side handle on a committed index (reference analog: `IndexHolder`
   * over a tantivy `Searcher`,
@@ -19,6 +19,11 @@ import graft.index.{IndexBuilder, Snapshots}
   * filter `segment_id` to the snapshot's live set (partition-pruned), so
   * concurrent merges/commits don't affect an open reader — the Spark
   * equivalent of tantivy's reload-on-commit searcher generation.
+  *
+  * Until a reader is primed, its fieldstats, tombstones and term lookups
+  * read the live segments' files on the driver and start no Spark job; a
+  * lookup opens only the posting files that can hold its terms, as a
+  * tantivy term dictionary seeks straight to a term's postings.
   *
   * Global statistics (N, avgdl, per-term df) are aggregated over live
   * segments and bound once per query at plan time — the Spark equivalent of
@@ -47,6 +52,13 @@ class IndexReader(
     case None    => df
   }
 
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  private def isData(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+  }
+
   /** The schema Spark's non-merging parquet inference would give the
     * table `name` — `ParquetFileFormat.readSchemaFromFooter` of one data
     * file, plus the `segment_id` partition column of a partitioned table —
@@ -56,12 +68,7 @@ class IndexReader(
     */
   private def tableSchema(name: String): Option[StructType] = {
     val root = new Path(s"$indexDir/$name")
-    val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
-    def isData(f: FileStatus): Boolean = {
-      val n = f.getPath.getName
-      f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
     if (!fs.exists(root)) return None
     val (segDirs, top) = fs.listStatus(root).toSeq
       .partition(f => f.isDirectory && f.getPath.getName.startsWith("segment_id="))
@@ -108,16 +115,52 @@ class IndexReader(
     tableSchema("deletes").map(s =>
       spark.read.schema(s).parquet(s"$indexDir/deletes").select("segment_id", "doc_id"))
 
-  /** Tombstoned doc ids per segment (empty when there are none), collected
-    * once per reader in one job with no shuffle — the alive bitsets the
-    * block route's top-k walk checks its hits against.
+  /** The data files of table `name` with their live segment (every
+    * segment of a pre-snapshot index), in segment order, listed on the
+    * driver: one listing per segment directory, none for a segment without
+    * one.
+    */
+  private def segmentFiles(name: String): Seq[(Int, FileStatus)] = {
+    val root = new Path(s"$indexDir/$name")
+    val fs = root.getFileSystem(conf)
+    val dirs = snapshot match {
+      case Some(s) => s.segments.map(seg => seg -> new Path(root, s"segment_id=$seg"))
+      case None =>
+        if (!fs.exists(root)) Nil
+        else fs.listStatus(root).toSeq.map(_.getPath).collect {
+          case d if d.getName.startsWith("segment_id=") => d.getName.stripPrefix("segment_id=").toInt -> d
+        }
+    }
+    dirs.sortBy(_._1).flatMap { case (seg, d) =>
+      try fs.listStatus(d).toSeq.filter(isData).map(seg -> _)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+  }
+
+  /** `read` of each of `xs`, concurrently on the driver when there are
+    * several (one file read each).
+    */
+  private def readEach[A, B](xs: Seq[A])(read: A => B): Seq[B] =
+    if (xs.size <= 1) xs.map(read)
+    else {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      xs.map(x => Future(read(x))).map(Await.result(_, Duration.Inf))
+    }
+
+  /** Tombstoned doc ids per live segment (empty when there are none), read
+    * once per reader on the driver from the live segments' tombstone files
+    * — the alive bitsets the block route's top-k walk checks its hits
+    * against.
     */
   lazy val tombstones: Map[Int, java.util.BitSet] =
-    deletes.fold(Map.empty[Int, java.util.BitSet]) { d =>
-      val bits = scala.collection.mutable.HashMap[Int, java.util.BitSet]()
-      d.collect().foreach(r => bits.getOrElseUpdate(r.getInt(0), new java.util.BitSet).set(r.getInt(1)))
-      bits.toMap
-    }
+    if (deletes.isEmpty) Map.empty
+    else readEach(segmentFiles("deletes")) { case (seg, f) =>
+      val bits = new java.util.BitSet
+      TinyParquet.read(conf, f, Seq("doc_id")).foreach(v => bits.set(v(0).asInstanceOf[Int]))
+      seg -> bits
+    }.groupMapReduce(_._1)(_._2) { (a, b) => a.or(b); a }.filter(!_._2.isEmpty)
 
   /** Anti-join tombstones out of a (segment_id, doc_id, …) doc-set (a
     * repeated tombstone changes nothing, so none are deduplicated).
@@ -127,25 +170,34 @@ class IndexReader(
     case None    => hits
   }
 
-  /** The live segments' fieldstats rows `(segment_id, field, n_docs,
-    * total_tokens, block_bits)`: read with the writer's schema (no inference
-    * job), collected in one job with no Exchange (at most #fields ×
-    * #segments rows) and reduced on the driver.
+  /** The live segments' fieldstats rows, each `(segment_id, Array(field,
+    * n_docs, total_tokens, block_bits, bucket_lo, bucket_width))`: at most
+    * #fields × #segments rows, read on the driver. A segment written before
+    * fieldstats held its bucket layout reads null there.
     */
-  private lazy val fieldStatRows =
-    liveFilter(spark.read.schema(IndexBuilder.fieldStatsSchema).parquet(s"$indexDir/fieldstats"))
-      .select("segment_id", "field", "n_docs", "total_tokens", "block_bits")
-      .collect()
+  @transient private lazy val fieldStatRows: Seq[(Int, Array[Any])] =
+    readEach(segmentFiles("fieldstats")) { case (seg, f) =>
+      TinyParquet.read(conf, f, Seq("field", "n_docs", "total_tokens", "block_bits", "bucket_lo", "bucket_width"))
+        .map(seg -> _)
+    }.flatten
 
   lazy val fieldStats: Map[String, FieldStat] =
-    fieldStatRows.groupMapReduce(_.getString(1))(r =>
-      FieldStat(r.getLong(2), if (r.isNullAt(3)) 0L else r.getLong(3)))((a, b) =>
-      FieldStat(a.nDocs + b.nDocs, a.totalTokens + b.totalTokens))
+    fieldStatRows.groupMapReduce(_._2(0).asInstanceOf[String]) { case (_, r) =>
+      FieldStat(r(1).asInstanceOf[Long], Option(r(2)).fold(0L)(_.asInstanceOf[Long]))
+    }((a, b) => FieldStat(a.nDocs + b.nDocs, a.totalTokens + b.totalTokens))
 
   /** Each live segment's posting block size as a shift: `block_id = doc_id
     * >>> blockBits(segment_id)`, as its writer stored it.
     */
-  lazy val blockBits: Map[Int, Int] = fieldStatRows.map(r => r.getInt(0) -> r.getInt(4)).toMap
+  lazy val blockBits: Map[Int, Int] = fieldStatRows.map { case (seg, r) => seg -> r(3).asInstanceOf[Int] }.toMap
+
+  /** Each live segment's posting-file layout `(lo, width)` as its writer
+    * recorded it (`IndexBuilder.bucketLayout`); a segment written before
+    * fieldstats held one has no entry.
+    */
+  private lazy val bucketLayout: Map[Int, (Int, Int)] = fieldStatRows.collect {
+    case (seg, r) if r(4) != null && r(5) != null => seg -> (r(4).asInstanceOf[Int], r(5).asInstanceOf[Int])
+  }.toMap
 
   /** `field = f AND term IN (…)`, OR-ed over the fields of `pairs`. */
   private[search] def termsFilter(pairs: Seq[(String, String)]): Column =
@@ -158,17 +210,57 @@ class IndexReader(
     */
   @transient @volatile private[search] var store: Option[BlockStore] = None
 
+  /** The live posting files with their segment, listed once per reader. */
+  @transient private lazy val postingFileIndex: Seq[(Int, FileStatus)] = segmentFiles("postings")
+
+  /** The live posting files that can hold `pairs`, each with the pairs it
+    * can hold, in segment order: in a segment with a recorded layout
+    * `(lo, width)` the file of each pair's bucket, `part-<lo +
+    * IndexBuilder.termBucket(field, term, width)>-…` (none if the bucket
+    * wrote no file: the term is not in the segment); every file of a
+    * segment with no recorded layout.
+    */
+  private[search] def postingFiles(pairs: Seq[(String, String)]): Seq[(Int, FileStatus, Seq[(String, String)])] = {
+    // each segment's pairs by the reduce partition that wrote their bucket
+    val byPart = bucketLayout.map { case (seg, (lo, width)) =>
+      seg -> pairs.groupBy { case (f, t) => lo + IndexBuilder.termBucket(f, t, width) }
+    }
+    postingFileIndex.flatMap { case (seg, f) =>
+      byPart.get(seg) match {
+        case None        => Some((seg, f, pairs))
+        case Some(parts) => IndexReader.writerPartition(f.getPath.getName).flatMap(parts.get).map(ps => (seg, f, ps))
+      }
+    }
+  }
+
+  /** The live posting rows of `pairs`, columns `field`, `term`,
+    * `segment_id` and then `more`, read on the driver from just the files
+    * that can hold them ([[postingFiles]]). Each read pushes `field IN (…)
+    * AND term IN (…)` into the parquet reader, which decodes no other
+    * column of a row it drops, and only exact `(field, term)` matches are
+    * kept.
+    */
+  private def readPostings(pairs: Seq[(String, String)], more: Seq[String]): Seq[Row] =
+    readEach(postingFiles(pairs)) { case (seg, file, ps) =>
+      val wanted = ps.toSet
+      TinyParquet.read(conf, file, Seq("field", "term") ++ more,
+        Map("field" -> ps.map(_._1).toSet, "term" -> ps.map(_._2).toSet)).collect {
+        case v if wanted((v(0).asInstanceOf[String], v(1).asInstanceOf[String])) =>
+          Row.fromSeq(v(0) +: v(1) +: seg +: v.drop(2).toSeq)
+      }
+    }.flatten
+
   /** The live posting blocks of `pairs` as [[IndexReader.blockCols]] rows,
     * in no particular order: on a primed reader a lookup of just the store
     * partitions of `pairs` (in-process on the partitions the driver holds,
-    * one job over the rest), else a filter of the posting table.
+    * one job over the rest), else a driver-side read of just the posting
+    * files that can hold them ([[postingFiles]]), with no Spark job.
     */
   private[search] def postingBlocks(pairs: Seq[(String, String)], withPositions: Boolean): Array[Row] =
     if (pairs.isEmpty) Array.empty
     else store match {
       case Some(s) => s.blocks(pairs, withPositions)
-      case None =>
-        postings.filter(termsFilter(pairs)).select(IndexReader.blockCols(withPositions).map(col): _*).collect()
+      case None    => readPostings(pairs, IndexReader.blockCols(withPositions).drop(3)).toArray
     }
 
   /** Batch df lookup for all terms of a query, summed over live segments;
@@ -176,22 +268,18 @@ class IndexReader(
     * toward df until merged out (tantivy semantics). It is Σ `doc_count`
     * over each term's live posting blocks: on a primed reader over its
     * stored blocks (in-process on the partitions the driver holds, one job
-    * over the rest); on a fresh reader over the blocks' `doc_count`
-    * column, read by a pushed-down scan of the term-sorted posting table
-    * whose matching rows are collected and summed on the driver, one job
-    * with no Exchange. Either way idf becomes a plan literal, like
-    * tantivy's per-query Weight.
+    * over the rest); on a fresh reader over the blocks' `doc_count` column,
+    * read on the driver from just the posting files that can hold the
+    * terms ([[postingFiles]]), with no Spark job. Either way idf becomes a
+    * plan literal, like tantivy's per-query Weight.
     */
   def termDfs(pairs: Seq[(String, String)]): Map[(String, String), Long] =
     if (pairs.isEmpty) Map.empty
     else store match {
       case Some(s) => s.dfs(pairs)
       case None =>
-        postings
-          .filter(termsFilter(pairs))
-          .select("field", "term", "doc_count")
-          .collect()
-          .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getInt(2).toLong)(_ + _)
+        readPostings(pairs, Seq("doc_count"))
+          .groupMapReduce(r => (r.getString(0), r.getString(1)))(_.getInt(3).toLong)(_ + _)
     }
 }
 
@@ -202,4 +290,11 @@ object IndexReader {
   def blockCols(withPositions: Boolean): Seq[String] =
     Seq("field", "term", "segment_id", "block_id", "doc_count", "block_max_tf", "block_min_norm",
       "doc_ids", "tfs", "norms") ++ (if (withPositions) Seq("positions") else Nil)
+
+  /** The reduce partition whose task wrote the data file named `name`:
+    * Spark names a task's output files `part-<partition id>-…`.
+    */
+  private[search] def writerPartition(name: String): Option[Int] =
+    if (!name.startsWith("part-")) None
+    else name.drop(5).takeWhile(_ != '-').toIntOption
 }

@@ -676,7 +676,10 @@ private object MergeCheck {
     val fieldstats = schema.fields.map(f => newDocs.agg(
       lit(f.name).as("field"), count(lit(1)).as("n_docs"),
       coalesce(sum(col(s"len_${f.name}")).cast("long"), lit(0L)).as("total_tokens"),
-      lit(blockBits).as("block_bits"), lit(newSeg).as("segment_id"))).reduce(_ unionByName _)
+      lit(blockBits).as("block_bits"),
+      // a merge writes one segment over all its reduce partitions
+      lit(0).as("bucket_lo"), lit(IndexBuilder.BuildConf().partitions(spark)).as("bucket_width"),
+      lit(newSeg).as("segment_id"))).reduce(_ unionByName _)
     assert(IndexDigest(spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)) ==
       IndexDigest(fieldstats), s"segment $newSeg fieldstats")
   }

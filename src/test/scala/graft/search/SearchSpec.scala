@@ -498,6 +498,7 @@ class FastTermSpec extends AnyFunSuite {
   test("termDfs on a fresh reader: one job, no Exchange") {
     val reader = new IndexReader(spark, indexDir)
     reader.postings // lists the table's files
-    assert(TestSpark.jobStages { reader.termDfs(dfPairs); () } == Seq(1))
+    // the terms' posting files are read on the driver
+    assert(TestSpark.jobStages { reader.termDfs(dfPairs); () } == Nil)
   }
 }

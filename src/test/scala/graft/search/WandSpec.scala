@@ -13,6 +13,7 @@ import graft.index.{FieldDef, IndexBuilder, IndexSchema}
 
 /** Block-max WAND must be result-identical to the exhaustive plan. */
 class WandSpec extends AnyFunSuite {
+  import WandSpec.{assertPrimedSame, withPrimed}
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -229,8 +230,9 @@ class WandSpec extends AnyFunSuite {
       assert(WandTopK.eligible(q).nonEmpty)
       searcher.topDocs(q, 10).collect() // first use reads the stats and lists files
       val stages = TestSpark.jobStages { searcher.topDocs(q, 10).collect(); () }
-      // one job whose only stage is its result stage: no Exchange anywhere
-      assert(stages == Seq(1), s"$q: stages per job $stages")
+      // a fresh reader reads its terms' posting files on the driver: no
+      // job, so no Exchange either
+      assert(stages == Nil, s"$q: stages per job $stages")
     }
     // the head shape: a raw stored field's must term plus a text should term
     val head = BooleanQuery(Seq(
@@ -238,7 +240,7 @@ class WandSpec extends AnyFunSuite {
     assert(WandTopK.eligible(head).nonEmpty)
     langSearcher.topDocs(head, 10).collect()
     val headStages = TestSpark.jobStages { langSearcher.topDocs(head, 10).collect(); () }
-    assert(headStages == Seq(1), s"$head: stages per job $headStages")
+    assert(headStages == Nil, s"$head: stages per job $headStages")
   }
 
   test("block-max bound prunes block groups on a skewed should-bag") {
@@ -455,8 +457,9 @@ class WandSpec extends AnyFunSuite {
     val s = new Searcher(new IndexReader(spark, tombSearcher.reader.indexDir), schema)
     val q = bags(2)
     s.topDocs(q, 10).collect()
+    // tombstones and posting files are read on the driver: no job
     val stages = TestSpark.jobStages { s.topDocs(q, 10).collect(); () }
-    assert(stages == Seq(1), s"stages per job $stages")
+    assert(stages == Nil, s"stages per job $stages")
   }
 
   test("fieldnorms off: should and must+should bags equal the oracle via topDocs and search") {
@@ -544,8 +547,9 @@ class WandSpec extends AnyFunSuite {
   test("a block-routed explainTopDocs starts exactly 1 job") {
     for (q <- Seq(trees.head, phrase(Seq("w0", "w1"), 1), bags(2))) {
       searcher.explainTopDocs(q, 10).collect()
+      // the walk reads its posting files on the driver: no job
       val stages = TestSpark.jobStages { searcher.explainTopDocs(q, 10).collect(); () }
-      assert(stages.size == 1, s"$q: stages per job $stages")
+      assert(stages == Nil, s"$q: stages per job $stages")
     }
   }
 
@@ -660,8 +664,8 @@ class WandSpec extends AnyFunSuite {
       .filter(col("segment_id").isin(want.keys.toSeq.map(Integer.valueOf): _*))
       .select("segment_id", "block_bits").collect().map(r => (r.getInt(0), r.getInt(1)))
     assert(written.length == want.size * schema.fields.size && written.toMap == want)
-    // opening a reader and reading its field stats: one job, no Exchange
-    assert(TestSpark.jobStages { new IndexReader(spark, dir).fieldStats; () } == Seq(1))
+    // opening a reader and reading its field stats: on the driver, no job
+    assert(TestSpark.jobStages { new IndexReader(spark, dir).fieldStats; () } == Nil)
     val s = new Searcher(new IndexReader(spark, dir), schema)
     assert(s.reader.blockBits == want)
     docsTrees.foreach { q => assertDocsTree(s, q); assertSameSearch(s, q) }
@@ -709,39 +713,10 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  // ---- primed readers: the block store route equals the posting-table route ----
+  // ---- primed readers: the block store route equals the fresh reader's bucket-file reads ----
 
   /** `(segment_id, doc_id, raw score bits)` of each row, in order. */
-  private def bits(df: org.apache.spark.sql.DataFrame) =
-    rows(df).map { case (sg, d, sc) => (sg, d, java.lang.Double.doubleToRawLongBits(sc)) }.toSeq
-
-  /** `body(fresh, primed)`: two new searchers over `s`'s index with its
-    * schema and fieldnorms toggle, the second primed for the call.
-    */
-  private def withPrimed(s: Searcher)(body: (Searcher, Searcher) => Unit): Unit = {
-    def open() = new Searcher(new IndexReader(spark, s.reader.indexDir), s.schema, s.fieldnorms)
-    val (fresh, primed) = (open(), open())
-    Reflection.prime(primed.reader)
-    try {
-      assert(primed.reader.store.nonEmpty && fresh.reader.store.isEmpty)
-      body(fresh, primed)
-    } finally Reflection.unprime(primed.reader)
-  }
-
-  /** Walkable `q` gives the same top-k (k = 10, offset 5, k = 0), explain
-    * and term dfs on a primed reader as on a fresh one, scores as raw bits.
-    */
-  private def assertPrimedSame(fresh: Searcher, primed: Searcher, q: Query): Unit = {
-    val plan = WandTopK.eligible(primed.resolve(q))
-    assert(plan.nonEmpty, s"expected $q to be walkable")
-    for ((k, offset) <- Seq((10, 0), (10, 5), (0, 0)))
-      assert(bits(primed.topDocs(q, k, offset)) == bits(fresh.topDocs(q, k, offset)), s"$q at k $k offset $offset")
-    def explained(s: Searcher) = s.explainTopDocs(q, 10).collect()
-      .map(r => (r.getInt(0), r.getInt(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getString(3))).toSeq
-    assert(explained(primed) == explained(fresh), s"$q: explain differs")
-    val pairs = plan.get.pairs :+ ("text", "nosuchterm")
-    assert(primed.reader.termDfs(pairs) == fresh.reader.termDfs(pairs), s"$q: dfs differ")
-  }
+  private def bits(df: org.apache.spark.sql.DataFrame) = WandSpec.bits(df)
 
   /** The walkable shapes of the text-only corpus, the edge cases included. */
   private val walkedShapes: Seq[Query] = Seq[Query](
@@ -790,8 +765,9 @@ class WandSpec extends AnyFunSuite {
     val fresh = new Searcher(new IndexReader(spark, searcher.reader.indexDir), schema)
     for (q <- withLeaves; req <- requests(fresh, q)) {
       req() // first use reads the stats and lists files
+      // the posting files are read on the driver: the bitsets are the one job
       val stages = TestSpark.jobStages(req())
-      assert(stages.nonEmpty && stages.size <= 2 && stages.forall(_ == 1), s"fresh, $q: stages per job $stages")
+      assert(stages == Seq(1), s"fresh, $q: stages per job $stages")
     }
     // a primed reader looks its blocks up in-process: the bitsets are the one job
     withPrimed(searcher) { (_, primed) =>
@@ -863,6 +839,40 @@ class WandSpec extends AnyFunSuite {
 }
 
 object WandSpec {
+  import org.scalatest.Assertions._
+
   /** `q`'s scored doc set by the per-occurrence oracle, tombstones applied. */
   def perOccurrence(s: Searcher, q: Query): org.apache.spark.sql.DataFrame = PerOccurrence.search(s, q)
+
+  /** `(segment_id, doc_id, raw score bits)` of each row, in order. */
+  def bits(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, Long)] =
+    df.collect().map(r => (r.getInt(0), r.getInt(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+
+  /** `body(fresh, primed)`: two new searchers over `s`'s index with its
+    * schema and fieldnorms toggle, the second primed for the call.
+    */
+  def withPrimed(s: Searcher)(body: (Searcher, Searcher) => Unit): Unit = {
+    def open() = new Searcher(new IndexReader(s.reader.spark, s.reader.indexDir), s.schema, s.fieldnorms)
+    val (fresh, primed) = (open(), open())
+    Reflection.prime(primed.reader)
+    try {
+      assert(primed.reader.store.nonEmpty && fresh.reader.store.isEmpty)
+      body(fresh, primed)
+    } finally Reflection.unprime(primed.reader)
+  }
+
+  /** Walkable `q` gives the same top-k (k = 10, offset 5, k = 0), explain
+    * and term dfs on a primed reader as on a fresh one, scores as raw bits.
+    */
+  def assertPrimedSame(fresh: Searcher, primed: Searcher, q: Query): Unit = {
+    val plan = WandTopK.eligible(primed.resolve(q))
+    assert(plan.nonEmpty, s"expected $q to be walkable")
+    for ((k, offset) <- Seq((10, 0), (10, 5), (0, 0)))
+      assert(bits(primed.topDocs(q, k, offset)) == bits(fresh.topDocs(q, k, offset)), s"$q at k $k offset $offset")
+    def explained(s: Searcher) = s.explainTopDocs(q, 10).collect()
+      .map(r => (r.getInt(0), r.getInt(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getString(3))).toSeq
+    assert(explained(primed) == explained(fresh), s"$q: explain differs")
+    val pairs = plan.get.pairs :+ ("text", "nosuchterm")
+    assert(primed.reader.termDfs(pairs) == fresh.reader.termDfs(pairs), s"$q: dfs differ")
+  }
 }
